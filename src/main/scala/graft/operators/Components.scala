@@ -217,7 +217,9 @@ object Components {
     * retries, and partitionings (no float accumulation order).
     * Dangling-node mass is dropped, not redistributed (pinned
     * semantics; total mass is then not conserved, which is irrelevant
-    * for ranking and keeps the per-iteration plan to one join).
+    * for ranking and keeps the per-iteration plan to one join). An
+    * edge list with no non-loop edges ranks no nodes: the result is
+    * an empty `(node, rank_ppm)` frame.
     *
     * Scale shape (100 TB): the BSP/Pregel shape — per iteration one
     * equi-join of the edge list with the current ranks on the source
@@ -238,8 +240,8 @@ object Components {
     * exact-integer recurrence as [[pageRank]] with the base term
     * gated per node: `r' = ((1000−d)·base·[v∈seeds] + d·Σ r/outdeg)
     * div 1000`, `base = 1e6 div |seeds∩nodes|`. Seeds outside the
-    * graph are ignored; a seed set disjoint from the graph raises
-    * (div-by-zero — loud, never a silent all-zero ranking). */
+    * graph are ignored; a seed set disjoint from the graph fails a
+    * `require` — loud, never a silent all-zero ranking. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int, dampingPermille: Int = 850): DataFrame =
@@ -284,9 +286,10 @@ object Components {
     // over the node-sized checkpoint, held on the driver like the
     // k-means centroids — embedding it as a literal removes the
     // 1-row aggregate+broadcast subtree the lazy plan otherwise
-    // re-evaluated once per iteration (2 Exchanges each). A disjoint
-    // seed set makes the count 0 and the integral divide raises
-    // loudly before any iteration runs.
+    // re-evaluated once per iteration (2 Exchanges each). With no
+    // edges there are no nodes and the count is NULL: the ranking is
+    // empty. A disjoint seed set makes the count 0 and fails before
+    // any iteration runs, whatever the ANSI setting.
     //
     // All arithmetic is BIGINT, and that is EXACT, not approximate:
     // the initial total rank mass is N·(10⁶ div N) ≤ 10⁶, and every
@@ -298,9 +301,10 @@ object Components {
     // magnitude under 2⁶³. BIGINT stays inside whole-stage codegen
     // where DECIMAL(38,0) falls out to BigDecimal ops — a measured
     // ~2× cut on the q205 supplier-part graph at the gate config.
-    val base: Long = nodes.agg(sum(col("__seed")).as("__n"))
-      .select(expr("1000000L div __n").as("__base"))
-      .head().getLong(0)
+    val n = nodes.agg(sum(col("__seed"))).head()
+    if (n.isNullAt(0)) return nodes.select(col("node"), lit(0L).as("rank_ppm"))
+    require(n.getLong(0) > 0, "seed set is disjoint from the graph")
+    val base: Long = 1000000L / n.getLong(0)
     // Edges with their source degree attached, ONCE — static across
     // rounds, so each round is a single edge⨝ranks join + one
     // destination-keyed sum, not two big joins. Materialized

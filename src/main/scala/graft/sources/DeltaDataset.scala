@@ -2303,24 +2303,8 @@ object DeltaWriter {
     // deletion on it would turn that writer's transient crash into
     // permanent log corruption. delta-spark's metadata cleanup only
     // deletes below the latest COMPLETE checkpoint; so do we.
-    val classicByVersion: Map[Long, Seq[Option[(Int, Int)]]] =
-      entries.map(_.getPath.getName).collect {
-        case DeltaReader.CheckpointName(v, suffix) =>
-          // suffix `.PPPPPPPPPP.NNNNNNNNNN` = part P of N; absent on
-          // single-file checkpoints
-          v.toLong -> Option(suffix).map { s =>
-            val parts = s.stripPrefix(".").split("\\.")
-            (parts(0).toInt, parts(1).toInt)
-          }
-      }.groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSeq }
-    val completeClassic: Set[Long] = classicByVersion.collect {
-      case (v, parts) if parts.contains(None) => v // single-file lands whole
-      case (v, parts) if {
-        val mp = parts.flatten
-        mp.nonEmpty && mp.map(_._2).distinct.sizeIs == 1 &&
-          mp.map(_._1).toSet == (1 to mp.head._2).toSet
-      } => v
-    }.toSet
+    val completeClassic: Set[Long] =
+      DeltaReader.completeClassicCheckpoints(entries.toSeq).keySet
     // every v2 manifest's sidecar pointers, read ONCE up front
     // (manifest-count bounded; also feeds sidecar retention below)
     val sidecarSchema = StructType(Seq(StructField("sidecar", StructType(Seq(

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,7 +61,10 @@ import org.apache.spark.sql.types._
   *    mapping mode, reader feature or version — raises loudly rather
   *    than mis-reading.
   *
-  * Scale shape (100 TB): the log replay is ONE distributed
+  * Scale shape (100 TB): a log whose newest usable classic checkpoint
+  * plus JSON tail fit under [[FastReplayMaxBytes]] replays on the
+  * driver with zero Spark jobs; past that (or when a v2 manifest
+  * anchors), the log replay is ONE distributed
   * `spark.read.json` over the commit files (+ one parquet read of the
   * newest checkpoint ≤ the requested version) and one path-keyed
   * max-version aggregation — a multi-year log with tens of thousands
@@ -216,6 +220,37 @@ object DeltaReader {
   // carry TWO dot-separated numeric parts before `.parquet`.
   private[sources] val V2CheckpointName =
     """(\d{20})\.checkpoint\.([A-Za-z0-9_-]+)\.(json|parquet)""".r
+
+  /** Every COMPLETE classic checkpoint in one `_delta_log` listing,
+    * version → the part files that hold its state. A multi-part
+    * checkpoint counts iff all N declared parts landed — a foreign
+    * writer's partial landing (crash mid-upload) must be ignored, not
+    * replayed as truncated state (delta-spark's checkpoint selection
+    * does the same). When a single-file checkpoint coexists with a
+    * multi-part landing at the same version, only the single file is
+    * returned: mixing in stray parts would duplicate rows. Anchor
+    * choice and part selection come from the same listing, so a
+    * checkpoint landing mid-replay cannot make them disagree. */
+  private[sources] def completeClassicCheckpoints(statuses: Seq[FileStatus])
+      : Map[Long, Seq[FileStatus]] =
+    statuses.flatMap { st =>
+      st.getPath.getName match {
+        case CheckpointName(v, suffix) => Some((v.toLong, Option(suffix), st))
+        case _ => None
+      }
+    }.groupBy(_._1).flatMap { case (v, found) =>
+      val (single, multi) = found.partition(_._2.isEmpty)
+      // suffix `.PPPPPPPPPP.NNNNNNNNNN` = part P of N
+      val parts = multi.map { case (_, s, _) =>
+        val p = s.get.stripPrefix(".").split("\\.")
+        (p(0).toInt, p(1).toInt)
+      }
+      if (single.nonEmpty) Some(v -> single.map(_._3))
+      else if (parts.map(_._2).distinct.sizeIs == 1 &&
+          parts.map(_._1).toSet == (1 to parts.head._2).toSet)
+        Some(v -> multi.map(_._3).sortBy(_.getPath.getName))
+      else None
+    }
 
   /** Actions parsed from commit JSON — explicit schema: inference
     * over a long log would cost a pre-pass and could widen types. */
@@ -434,14 +469,15 @@ object DeltaReader {
       qualifiedBase.toString, txns, domains))
   }
 
-  /** Total bytes under which a checkpoint-less JSON tail replays
-    * DRIVER-SIDE (plain Jackson parse, zero Spark jobs) instead of
-    * through the distributed reader. Every write/scan round trip on a
-    * young table costs several snapshot resolutions; at this size the
-    * log is far smaller than one task's scheduling overhead. The
-    * distributed path remains the one a checkpoint-anchored or
-    * multi-MiB log takes — and the parity spec pins the two paths
-    * field-identical. */
+  /** Total bytes — the anchoring classic checkpoint's parts plus the
+    * JSON tail after it — under which a log replays DRIVER-SIDE
+    * (parquet-mr checkpoint read + Jackson commit parse, zero Spark
+    * jobs) instead of through the distributed reader. Every
+    * write/scan round trip costs several snapshot resolutions; at
+    * this size the log is far smaller than one task's scheduling
+    * overhead. The distributed path remains the one a multi-MiB or
+    * v2-checkpoint-anchored log takes — and the parity spec pins the
+    * two paths field-identical. */
   private[sources] val FastReplayMaxBytes: Long = 4L * 1024 * 1024
 
   /** Snapshot as of `version` (time travel); None when the table does
@@ -456,37 +492,21 @@ object DeltaReader {
                 (implicit spark: SparkSession): Option[DeltaSnapshot] = {
     val cleanUrl = url.stripSuffix("/")
     val logDir = new Path(cleanUrl, "_delta_log")
-    val fs: FileSystem = logDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs: FileSystem = logDir.getFileSystem(hadoopConf)
     if (!fs.exists(logDir)) return None
-    val statuses = fs.listStatus(logDir)
+    val statuses = fs.listStatus(logDir).toSeq
     val entries = statuses.map(_.getPath.getName)
     val commits = entries.collect { case CommitName(v) => v.toLong }.sorted
-    // only COMPLETE classic checkpoints anchor a replay: a multi-part
-    // checkpoint is usable iff all N declared parts landed — a foreign
-    // writer's partial landing (crash mid-upload) must be ignored, not
-    // replayed as truncated state (delta-spark's checkpoint selection
-    // does the same)
-    val classicCps = entries.collect {
-      case CheckpointName(v, suffix) =>
-        v.toLong -> Option(suffix).map { s =>
-          val p = s.stripPrefix(".").split("\\.")
-          (p(0).toInt, p(1).toInt)
-        }
-    }.groupBy(_._1).collect {
-      case (v, parts) if parts.exists(_._2.isEmpty) => v
-      case (v, parts) if {
-        val mp = parts.flatMap(_._2)
-        mp.nonEmpty && mp.map(_._2).distinct.sizeIs == 1 &&
-          mp.map(_._1).toSet == (1 to mp.head._2).toSet
-      } => v
-    }.toSeq.distinct.sorted
+    // only COMPLETE classic checkpoints anchor a replay
+    val classicCps = completeClassicCheckpoints(statuses)
     // several v2 manifests may exist per version (one per writing
     // attempt — the spec makes them equivalent); pick the
     // lexicographically first for determinism
     val v2Cps: Map[Long, String] = entries.collect {
       case n @ V2CheckpointName(v, _, _) => (v.toLong, n)
     }.groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2).min }
-    val checkpoints = (classicCps ++ v2Cps.keys).distinct.sorted
+    val checkpoints = (classicCps.keys ++ v2Cps.keys).toSeq.distinct.sorted
     if (commits.isEmpty && checkpoints.isEmpty) return None
     val head = (commits ++ checkpoints).max
     val target = asOfVersion.getOrElse(head)
@@ -505,54 +525,44 @@ object DeltaReader {
           .mkString(",")} missing from $logDir — log truncated past " +
           "the newest usable checkpoint")
 
-    def commitPath(v: Long) = new Path(logDir, f"$v%020d.json").toString
-    // SMALL-LOG FAST PATH: a checkpoint-less tail under
-    // [[FastReplayMaxBytes]] replays driver-side — plain JSON parse,
-    // zero Spark jobs. Every Delta write/scan resolves snapshots
-    // several times; on a young table this is the difference between
-    // milliseconds and a scheduler round trip per resolution.
-    if (!forceDistributed && cp.isEmpty) {
-      val tailSet = tail.map(v => f"$v%020d.json").toSet
-      val tailBytes = statuses.filter(st => tailSet(st.getPath.getName))
-        .map(_.getLen).sum
-      if (tailBytes <= FastReplayMaxBytes)
-        return fastReplay(fs, logDir, cleanUrl, tail, target)
+    val byName = statuses.map(st => st.getPath.getName -> st).toMap
+    val tailFiles = tail.map(v => byName(f"$v%020d.json"))
+    // classic (single or multi-part) wins when both forms exist at the
+    // anchor — either is complete; a v2 manifest anchors otherwise
+    // (the anchor may owe its completeness to a v2 manifest while a
+    // partial classic landing sits alongside: no classic parts then)
+    val cpParts = cp.flatMap(classicCps.get).getOrElse(Seq.empty)
+    // SMALL-LOG FAST PATH: an empty or classic-checkpoint anchor whose
+    // parts plus JSON tail fit under [[FastReplayMaxBytes]] replays
+    // driver-side — zero Spark jobs. Every Delta write/scan resolves
+    // snapshots several times; on a young table this is the
+    // difference between milliseconds and a scheduler round trip per
+    // resolution.
+    if (!forceDistributed && (cp.isEmpty || cpParts.nonEmpty) &&
+        (cpParts ++ tailFiles).map(_.getLen).sum <= FastReplayMaxBytes) {
+      val cpRecords = for (v <- cp.toSeq; part <- cpParts;
+                           rec <- checkpointRecords(hadoopConf, part.getPath))
+        yield v -> rec
+      val tailRecords = tail.zip(tailFiles).flatMap { case (v, st) =>
+        commitRecords(fs, st).map(v -> _)
+      }
+      return fastReplay(fs, logDir, cleanUrl, cpRecords ++ tailRecords, target)
     }
     val jsonActions =
       if (tail.isEmpty) None
-      else Some(spark.read.schema(actionSchema).json(tail.map(commitPath): _*)
+      else Some(spark.read.schema(actionSchema)
+        .json(tailFiles.map(_.getPath.toString): _*)
         .withColumn("__v", regexp_extract(input_file_name(),
           "(\\d{20})\\.json", 1).cast("long")))
     val cpActions = cp.map { v =>
-      val allClassic = fs.listStatus(logDir).map(_.getPath).filter { p =>
-        p.getName match {
-          case CheckpointName(cv, _) => cv.toLong == v
-          case _ => false
-        }
-      }
-      // when a single-file checkpoint coexists with a (possibly
-      // partial) multi-part landing at the same version, read ONLY
-      // the single file — mixing in stray parts would duplicate rows
-      val single = allClassic.filter(_.getName match {
-        case CheckpointName(_, suffix) => suffix == null
-        case _ => false
-      })
-      // classic wins only when COMPLETE at this version (the anchor
-      // may owe its completeness to a v2 manifest while a partial
-      // classic landing sits alongside — reading the stray parts
-      // would replay truncated state)
-      val parts =
-        if (!classicCps.contains(v)) Array.empty[Path]
-        else if (single.nonEmpty) single else allClassic
-      // classic (single or multi-part) wins when both forms exist —
-      // either is complete; v2 manifests anchor otherwise. The
-      // explicit schema clips checkpoints' extra columns (txn,
+      // the explicit schema clips checkpoints' extra columns (txn,
       // stats structs, wider add/remove) AND null-fills fields absent
       // from older checkpoints (readerFeatures predates nothing a
       // v1-era checkpoint wrote)
-      if (parts.nonEmpty)
+      if (cpParts.nonEmpty)
         normalizeActions(
-          spark.read.schema(actionSchema).parquet(parts.map(_.toString): _*)
+          spark.read.schema(actionSchema)
+            .parquet(cpParts.map(_.getPath.toString): _*)
             .withColumn("__v", lit(v)))
       else readV2Checkpoint(logDir, v, v2Cps(v))
     }
@@ -658,33 +668,95 @@ object DeltaReader {
       protocolInfo, metaVals, latestPaths, txns, domains)
   }
 
-  /** Driver-side replay of a small checkpoint-less JSON tail: the
-    * same reduction the distributed path runs — newest protocol,
-    * newest metaData, per-path latest action with the add winning a
-    * same-version tie, per-appId newest SetTransaction — over
-    * Jackson-parsed commit lines. [[finishSnapshot]] assembles both
-    * paths' results, and `DeltaReaderSpec`'s parity case pins them
-    * field-identical. */
-  private def fastReplay(fs: FileSystem, logDir: Path, cleanUrl: String,
-                         tail: Seq[Long], target: Long)
-                        (implicit spark: SparkSession): Option[DeltaSnapshot] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def txt(n: com.fasterxml.jackson.databind.JsonNode, f: String): String =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asText).orNull
-    def lng(n: com.fasterxml.jackson.databind.JsonNode, f: String,
-            dflt: Long): Long =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asLong).getOrElse(dflt)
-    // (version, lineIndex, action) in commit order
-    val lines: Seq[(Long, com.fasterxml.jackson.databind.JsonNode)] =
-      tail.sorted.flatMap { v =>
-        val p = new Path(logDir, f"$v%020d.json")
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        val in = fs.open(p)
-        try in.readFully(0L, bytes) finally in.close()
-        new String(bytes, "UTF-8").split("\n").iterator
-          .map(_.trim).filter(_.nonEmpty)
-          .map(l => v -> om.readTree(l)).toSeq
+  private val actionMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** One commit file's action lines, Jackson-parsed, in file order. */
+  private def commitRecords(fs: FileSystem, st: FileStatus): Seq[JsonNode] = {
+    val bytes = new Array[Byte](st.getLen.toInt)
+    val in = fs.open(st.getPath)
+    try in.readFully(0L, bytes) finally in.close()
+    new String(bytes, "UTF-8").split("\n").iterator
+      .map(_.trim).filter(_.nonEmpty).map(actionMapper.readTree).toVector
+  }
+
+  /** One classic checkpoint part's rows, read on the driver with
+    * parquet-mr and rendered as the JSON action records a commit line
+    * parses to: a null field is left out (as commit JSON leaves it
+    * out), MAP groups become objects, LIST groups arrays. Columns the
+    * reducer never reads (`add.stats_parsed`, `add.tags`, ...) ride
+    * along unread; columns a checkpoint lacks are simply absent —
+    * the same clip/null-fill the distributed path's explicit schema
+    * applies. */
+  private def checkpointRecords(conf: org.apache.hadoop.conf.Configuration,
+                                part: Path): Seq[JsonNode] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{
+      ListLogicalTypeAnnotation, MapLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val nf = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
+    def obj(g: Group): JsonNode = {
+      val node = nf.objectNode()
+      (0 until g.getType.getFieldCount).foreach { i =>
+        if (g.getFieldRepetitionCount(i) > 0)
+          node.set[JsonNode](g.getType.getFieldName(i), value(g, i, 0))
       }
+      node
+    }
+    def valueOrNull(g: Group, i: Int): JsonNode =
+      if (g.getFieldRepetitionCount(i) > 0) value(g, i, 0) else nf.nullNode()
+    def value(g: Group, i: Int, j: Int): JsonNode = {
+      val t = g.getType.getType(i)
+      if (t.isPrimitive) t.asPrimitiveType.getPrimitiveTypeName match {
+        case BOOLEAN => nf.booleanNode(g.getBoolean(i, j))
+        case INT32 => nf.numberNode(g.getInteger(i, j))
+        case INT64 => nf.numberNode(g.getLong(i, j))
+        case FLOAT => nf.numberNode(g.getFloat(i, j))
+        case DOUBLE => nf.numberNode(g.getDouble(i, j))
+        case BINARY => nf.textNode(g.getString(i, j))
+        case _ => nf.textNode(g.getValueToString(i, j)) // INT96 / FIXED
+      } else {
+        val sub = g.getGroup(i, j)
+        def reps = 0 until sub.getFieldRepetitionCount(0)
+        t.getLogicalTypeAnnotation match {
+          case _: MapLogicalTypeAnnotation =>
+            // repeated group key_value { key; optional value }
+            val m = nf.objectNode()
+            reps.foreach { k =>
+              val kv = sub.getGroup(0, k)
+              m.set[JsonNode](kv.getString(0, 0), valueOrNull(kv, 1))
+            }
+            m
+          case _: ListLogicalTypeAnnotation =>
+            // repeated group list { optional element }
+            val arr = nf.arrayNode()
+            reps.foreach(k => arr.add(valueOrNull(sub.getGroup(0, k), 0)))
+            arr
+          case _ => obj(sub)
+        }
+      }
+    }
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), part)
+      .withConf(conf).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map(obj).toVector
+    finally reader.close()
+  }
+
+  /** Driver-side replay of a small log: the same reduction the
+    * distributed path runs — newest protocol, newest metaData,
+    * per-path latest action with the add winning a same-version tie,
+    * per-appId newest SetTransaction — over `(version, action)`
+    * records in log order: a classic checkpoint's rows (tagged with
+    * its version) first, then the Jackson-parsed commit lines after
+    * it. [[finishSnapshot]] assembles both paths' results, and
+    * `DeltaReaderSpec`'s parity case pins them field-identical. */
+  private def fastReplay(fs: FileSystem, logDir: Path, cleanUrl: String,
+                         lines: Seq[(Long, JsonNode)], target: Long)
+                        (implicit spark: SparkSession): Option[DeltaSnapshot] = {
+    def txt(n: JsonNode, f: String): String =
+      Option(n.get(f)).filterNot(_.isNull).map(_.asText).orNull
+    def lng(n: JsonNode, f: String, dflt: Long): Long =
+      Option(n.get(f)).filterNot(_.isNull).map(_.asLong).getOrElse(dflt)
     def newest(field: String) = lines.reverseIterator
       .map { case (v, n) => (v, Option(n.get(field)).filterNot(_.isNull)) }
       .collectFirst { case (v, Some(n)) => (v, n) }

@@ -2609,6 +2609,35 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("pageRank: an empty edge list ranks nothing; a disjoint seed set fails the same way with ANSI off") {
+    import spark.implicits._
+    val none = Seq.empty[(String, String)].toDF("s", "d")
+    val ranked = graft.operators.Components.pageRank(none, "s", "d", iters = 2)
+    assert(ranked.columns.toSeq == Seq("node", "rank_ppm"))
+    assert(ranked.collect().isEmpty)
+    // self-loops are dropped, so a loops-only edge list is empty too
+    val loops = Seq(("a", "a")).toDF("s", "d")
+    assert(graft.operators.Components.personalizedPageRank(loops, "s", "d",
+      Seq("a").toDF("n"), "n", iters = 1).collect().isEmpty)
+    // under ANSI off an integral divide by zero yields NULL instead of
+    // raising — the disjoint-seed failure must not depend on it
+    val e = Seq(("a", "h"), ("h", "a")).toDF("s", "d")
+    val prior = spark.conf.getOption("spark.sql.ansi.enabled")
+    try {
+      Seq("true", "false").foreach { ansi =>
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        val err = intercept[IllegalArgumentException](
+          graft.operators.Components.personalizedPageRank(e, "s", "d",
+            Seq("zz").toDF("n"), "n", iters = 1).collect())
+        assert(err.getMessage.contains("seed set is disjoint from the graph"),
+          s"ansi=$ansi: ${err.getMessage}")
+      }
+    } finally prior match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("pageRank: hand-checked star graph; mass flows to the hub; partition-invariant") {
     import spark.implicits._
     // Directed star: three leaves all point at the hub h; h points at a.

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 // checkpoint-row shapes (top-level so Spark can derive Encoders)
 private[sources] case class CpAdd(path: String,
@@ -498,14 +499,54 @@ class DeltaReaderSpec extends SparkSpec {
     }
   }
 
+  /** Replace `table`'s version-10 classic checkpoint with `parts`
+    * (one frame = a single-file checkpoint, several = a complete
+    * multi-part one), exactly as a foreign writer would land them. */
+  private def replaceCheckpoint10(table: String, parts: Seq[DataFrame]): Unit = {
+    val logDir = Paths.get(table, "_delta_log")
+    Files.delete(logDir.resolve(f"${10L}%020d.checkpoint.parquet"))
+    Files.deleteIfExists(logDir.resolve(f".${10L}%020d.checkpoint.parquet.crc"))
+    if (parts.size == 1)
+      writeOneParquet(parts.head, logDir.resolve(f"${10L}%020d.checkpoint.parquet"))
+    else parts.zipWithIndex.foreach { case (df, i) =>
+      writeOneParquet(df, logDir.resolve(
+        f"${10L}%020d.checkpoint.${i + 1}%010d.${parts.size}%010d.parquet"))
+    }
+  }
+
+  /** `table`'s version-10 checkpoint rows, held in memory so the file
+    * can be replaced under them. */
+  private def checkpoint10(table: String): DataFrame = {
+    val cp = spark.read.parquet(Paths.get(table, "_delta_log",
+      f"${10L}%020d.checkpoint.parquet").toString)
+    spark.createDataFrame(cp.collect().toSeq.asJava, cp.schema)
+  }
+
   test("small-log fast replay is field-identical to the distributed replay at every version") {
     withTempDir { dir =>
+      import org.apache.spark.sql.functions.{col, lit, map, struct, when}
+      def assertParity(table: String, versions: Seq[Long]): Unit = {
+        versions.foreach { v =>
+          val fast = DeltaReader.snapshotAt(table, Some(v)).get
+          val dist = DeltaReader.snapshotAtImpl(table, Some(v),
+            forceDistributed = true).get
+          assert(fast == dist, s"fast vs distributed replay diverged at " +
+            s"$table v$v:\nfast: $fast\ndist: $dist")
+          assert(fast.files.nonEmpty, s"$table v$v snapshot empty?")
+        }
+        // both paths scan to the same rows at the head
+        assertSameData(
+          DeltaReader.assembleSnapshot(DeltaReader.snapshotAt(table, None).get),
+          DeltaReader.assembleSnapshot(DeltaReader.snapshotAtImpl(table, None,
+            forceDistributed = true).get))
+      }
       val table = s"$dir/t"
       val ds = new DeltaDataset(table, Seq("p"))
       // a history exercising every state field: partitioned writes
       // (stats + partition values), append, DV delete (descriptor +
       // protocol upgrade), overwrite (tombstones), restore (re-adds),
-      // and a SetTransaction-keyed write (txns)
+      // SetTransaction-keyed writes (txns) and a merge — crossing the
+      // version-10 checkpoint, so v10+ replay anchored on it
       ds.write((1L to 6L).map(i => (i, if (i <= 3) "A" else "B"))
         .toDF("v", "p").coalesce(1))                       // v0
       ds.append(Seq((7L, "A")).toDF("v", "p"))             // v1
@@ -514,19 +555,93 @@ class DeltaReaderSpec extends SparkSpec {
       ds.restore(2L)                                       // v4
       DeltaWriter.write(table, Seq((50L, "A")).toDF("v", "p"),
         Seq("p"), overwrite = false, txn = Some(("parity-app", 17L)))  // v5
-      (0L to 5L).foreach { v =>
-        val fast = DeltaReader.snapshotAt(table, Some(v)).get
-        val dist = DeltaReader.snapshotAtImpl(table, Some(v),
-          forceDistributed = true).get
-        assert(fast == dist, s"fast vs distributed replay diverged at v$v:" +
-          s"\nfast: $fast\ndist: $dist")
-        assert(fast.files.nonEmpty || v > 10, s"v$v snapshot empty?")
+      (6L to 9L).foreach(i =>
+        ds.append(Seq((100L + i, "B")).toDF("v", "p")))    // v6-v9
+      ds.merge(Seq((7L, "A"), (60L, "C")).toDF("v", "p"), Seq("v"))  // v10
+      ds.delete($"v" === 50L)                              // v11
+      DeltaWriter.write(table, Seq((51L, "A")).toDF("v", "p"),
+        Seq("p"), overwrite = false, txn = Some(("parity-app", 18L)))  // v12
+      ds.append(Seq((61L, "C")).toDF("v", "p"))            // v13
+      assert(Files.exists(Paths.get(table, "_delta_log",
+        f"${10L}%020d.checkpoint.parquet")), "no checkpoint at v10")
+      assertParity(table, 0L to 13L)
+
+      // the same log, its checkpoint landed by a foreign writer as a
+      // complete multi-part checkpoint, then with extra columns, then
+      // with columns missing
+      val cp = checkpoint10(table)
+      val variants = Seq(
+        "multipart" -> Seq(cp.where(col("add").isNull),
+          cp.where(col("add").isNotNull)),
+        "extra" -> Seq(cp.withColumn("add", when(col("add").isNotNull,
+          col("add")
+            .withField("tags", map(lit("INSERTION_TIME"), lit("1700000000000")))
+            .withField("stats_parsed", struct(lit(1L).as("numRecords"),
+              struct(col("add.size").as("v")).as("minValues")))))),
+        "missing" -> Seq(cp.drop("txn", "domainMetadata")
+          .withColumn("add", when(col("add").isNotNull,
+            col("add").dropFields("baseRowId")))))
+      variants.foreach { case (name, parts) =>
+        val copy = s"$dir/$name"
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(table), new java.io.File(copy))
+        replaceCheckpoint10(copy, parts)
+        assertParity(copy, 10L to 13L)
       }
-      // both paths scan to the same rows at the head
-      assertSameData(
-        DeltaReader.assembleSnapshot(DeltaReader.snapshotAt(table, None).get),
-        DeltaReader.assembleSnapshot(DeltaReader.snapshotAtImpl(table, None,
-          forceDistributed = true).get))
+    }
+  }
+
+  test("a checkpoint-anchored log under the fast-replay gate resolves snapshots with zero Spark jobs") {
+    withTempDir { dir =>
+      val table = s"$dir/t"
+      val ds = new DeltaDataset(table, Seq("p"))
+      (0L to 11L).foreach(i =>
+        ds.append(Seq((i, if (i % 2 == 0) "A" else "B")).toDF("v", "p")))
+      val logDir = Paths.get(table, "_delta_log")
+      assert(Files.exists(logDir.resolve(f"${10L}%020d.checkpoint.parquet")))
+      val logBytes = Files.list(logDir).iterator().asScala
+        .filter(_.getFileName.toString.matches("""\d{20}\.(json|checkpoint\.parquet)"""))
+        .map(Files.size).sum
+      assert(logBytes < DeltaReader.FastReplayMaxBytes)
+
+      /** Spark jobs `body` starts, counted by a listener; a sentinel
+        * job run after it drains the (in-order) listener bus. */
+      def jobsOf[T](body: => T): (Int, T) = {
+        val sc = spark.sparkContext
+        val tag = java.util.UUID.randomUUID.toString
+        val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            Option(j.properties).flatMap(p => Option(p.getProperty("graft.probe")))
+              .foreach(jobs.add)
+        }
+        sc.addSparkListener(listener)
+        try {
+          sc.setLocalProperty("graft.probe", tag)
+          val out = try body finally sc.setLocalProperty("graft.probe", s"$tag-end")
+          try sc.parallelize(Seq(1), 1).count()
+          finally sc.setLocalProperty("graft.probe", null)
+          val deadline = System.currentTimeMillis + 30000
+          while (!jobs.contains(s"$tag-end") && System.currentTimeMillis < deadline)
+            Thread.sleep(10)
+          assert(jobs.contains(s"$tag-end"), "listener bus never drained")
+          (jobs.asScala.count(_ == tag), out)
+        } finally sc.removeSparkListener(listener)
+      }
+      // the probe sees jobs: the distributed replay of the same log runs some
+      val (distJobs, _) = jobsOf(DeltaReader.snapshotAtImpl(table, None,
+        forceDistributed = true))
+      assert(distJobs > 0)
+      val (headJobs, head) = jobsOf(DeltaReader.snapshot(table))
+      assert(head.get.version == 11L && head.get.files.size == 12)
+      assert(headJobs == 0, s"snapshot ran $headJobs jobs")
+      val (atJobs, at) = jobsOf(DeltaReader.snapshotAt(table, Some(11L)))
+      assert(at.get.files.size == 12)
+      assert(atJobs == 0, s"snapshotAt past the checkpoint ran $atJobs jobs")
+      val (prunedJobs, pruned) = jobsOf(
+        DeltaReader.prunedSnapshot(table, Seq(("v", "3", "5"))))
+      assert(pruned.get.files.size == 3)
+      assert(prunedJobs == 0, s"prunedSnapshot ran $prunedJobs jobs")
     }
   }
 }
