@@ -1,5 +1,6 @@
 package graft.functions.catalyst
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -200,6 +201,38 @@ object HashOps {
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** Bigram repetition counts of a token array in one pass: with the
+    * bigrams `t(i) + " " + t(i+1)` (a null token nulls its bigram),
+    * `(n_bigrams, n_dup_bigrams, top_bigram_n)` — exactly the HOF
+    * rendering `size(bg)`, `size(bg) - size(array_distinct(bg))` and
+    * `array_max(transform(array_distinct(bg), g -> size(filter(bg,
+    * x -> x = g))))` over
+    * `transform(sequence(1, n - 1), i -> concat(t[i], ' ', t[i + 1]))`.
+    * A null bigram counts once as distinct and 0 toward the top count
+    * (`x = null` never holds); a null array, and any array under two
+    * tokens, has no bigrams and gives zeros. Where the HOF form rescans
+    * the bigram array once per distinct bigram, this hashes each bigram
+    * once. */
+  def bigramStats(toks: ArrayData): InternalRow = {
+    val nb = if (toks == null) 0 else math.max(0, toks.numElements() - 1)
+    val counts = new java.util.HashMap[UTF8String, Integer]()
+    var nullBigrams = 0
+    var top = 0
+    var i = 0
+    while (i < nb) {
+      if (toks.isNullAt(i) || toks.isNullAt(i + 1)) nullBigrams += 1
+      else {
+        val c = counts.merge(UTF8String.concat(toks.getUTF8String(i), ShingleSep,
+          toks.getUTF8String(i + 1)), 1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
+        if (c > top) top = c
+      }
+      i += 1
+    }
+    val distinct = counts.size + (if (nullBigrams > 0) 1 else 0)
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](nb.toLong, (nb - distinct).toLong, top.toLong))
   }
 
   /** Byte offsets of each code-point start in `s`, plus an end
@@ -1079,4 +1112,44 @@ case class AdjacentPairs(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): AdjacentPairs =
     copy(left = l, right = r)
+}
+
+/** `graft_bigram_stats(array<string>) ->
+  * struct<n_bigrams, n_dup_bigrams, top_bigram_n>` (non-null bigints)
+  * — the repetition-gate bigram counts in one generated pass (see
+  * [[HashOps.bigramStats]]). NOT null-propagating: a NULL token array
+  * gives zeros, matching the CASE in the HOF rendering. */
+case class BigramStats(child: Expression)
+  extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_bigrams", LongType, nullable = false),
+    StructField("n_dup_bigrams", LongType, nullable = false),
+    StructField("top_bigram_n", LongType, nullable = false)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bigram_stats"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val t = child.eval(input)
+    HashOps.bigramStats(if (t == null) null else t.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+    val t = child.genCode(ctx)
+    val resultCode =
+      code"""
+        ${t.code}
+        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
+          graft.functions.catalyst.HashOps.bigramStats(${t.isNull} ? null : ${t.value});
+      """
+    ev.copy(code = resultCode, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BigramStats =
+    copy(child = newChild)
 }

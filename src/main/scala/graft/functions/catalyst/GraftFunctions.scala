@@ -77,6 +77,9 @@ object GraftFunctions {
     ("graft_adjacent_pairs",
       info("graft_adjacent_pairs", "canonicalized (a<=b) token pairs within maxDist positions of array<string> (args: toks, max_dist)"),
       (args: Seq[Expression]) => AdjacentPairs(args(0), args(1))),
+    ("graft_bigram_stats",
+      info("graft_bigram_stats", "one-pass bigram repetition counts of array<string> -> struct<n_bigrams, n_dup_bigrams, top_bigram_n> (zeros for a null array)"),
+      (args: Seq[Expression]) => BigramStats(args.head)),
     ("graft_bottom_k",
       info("graft_bottom_k", "bounded bottom-k of any orderable value: k-heap per partition, merged per group — array<typeof(value)> sorted ascending (args: value, k)"),
       (args: Seq[Expression]) => BottomK(args(0), args(1))),

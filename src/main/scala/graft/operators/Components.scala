@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.util.Checkpoints
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Connected components over an undirected pair list — the step that
   * turns near-dup PAIRS (MinHash/SimHash/embedding candidates, e.g.
@@ -25,13 +29,26 @@ import org.apache.spark.sql.functions._
   * never grows beyond one row per (node, current root) pair. Each
   * round's frame is localCheckpointed: rounds would otherwise stack
   * 2 joins + 2 aggregations of lineage per iteration and re-analyze
-  * the whole tree each round (checkpoint blocks are reclaimed when the
-  * frames are GC'd). Duplicate-cluster graphs are almost all tiny
-  * cliques, so real corpora converge in 2–3 rounds; `maxRounds` bounds
-  * the adversarial tail and failure is loud, never a silent partial
-  * clustering.
+  * the whole tree each round; the previous round's blocks are freed
+  * as soon as the next round is materialized. Duplicate-cluster graphs
+  * are almost all tiny cliques, so real corpora converge in 2–3 rounds;
+  * `maxRounds` bounds the adversarial tail and failure is loud, never a
+  * silent partial clustering.
+  *
+  * Small graphs (at most [[DriverMaxEdges]] canonical edges, which the
+  * first fingerprint scan counts) skip the distributed rounds: that scan
+  * also ships the edges, and the same rounds run on the driver, so a
+  * near-dup graph of a few dozen pairs costs two Spark jobs (the
+  * canonicalizing shuffle and the scan) instead of several per round.
+  * Above the budget the scan ships nothing and the rounds run as Spark
+  * jobs.
   */
 object Components {
+
+  /** Canonical edge count at or below which [[connectedComponents]]
+    * runs its rounds on the driver: 2^18 (u, v) long pairs are 4 MiB,
+    * the same budget as the driver-side Delta log replay. */
+  val DriverMaxEdges: Long = 1L << 18
 
   /** Cluster assignment for every id that appears in `pairs`:
     * one row per node, `(id, cluster_id)` with `cluster_id` = the
@@ -41,58 +58,127 @@ object Components {
     * never enter `pairs`, so callers union them back as their own
     * singletons when needed. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxRounds: Int = 25): DataFrame = {
+                          maxRounds: Int = 25): DataFrame =
+    connectedComponentsImpl(pairs, aCol, bCol, maxRounds, DriverMaxEdges)
+
+  /** [[connectedComponents]] with the driver-side edge budget as a
+    * parameter: specs pass 0 to force the distributed rounds, the
+    * parity reference for the driver path. */
+  private[graft] def connectedComponentsImpl(pairs: DataFrame, aCol: String, bCol: String,
+                                             maxRounds: Int, driverMaxEdges: Long): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be positive")
     // Canonical downward orientation (u > v), self-loops dropped.
     // Checkpoints here are LAZY: a lazy localCheckpoint truncates the
     // logical plan immediately (LogicalRDD) but defers block
-    // materialization to the first action — which is the checksum
-    // aggregation the convergence loop runs anyway. Eager checkpoints
-    // paid TWO driver-paced jobs per round (materialize + checksum);
-    // fusing them into the checksum's job halves the round count's
-    // fixed job overhead without changing what is computed (the
-    // checksum fully materializes every partition, so each round
-    // still reads the previous round's cached blocks, never re-runs
-    // its lineage).
-    var edges = pairs
+    // materialization to the first action — which is the fingerprint
+    // scan the convergence loop runs anyway. Eager checkpoints paid
+    // TWO driver-paced jobs per round (materialize + fingerprint);
+    // fusing them into the scan's job halves the round count's fixed
+    // job overhead without changing what is computed (the scan fully
+    // materializes every partition, so each round still reads the
+    // previous round's cached blocks, never re-runs its lineage).
+    val first = pairs
       .select(col(aCol).cast("long").as("__ea"), col(bCol).cast("long").as("__eb"))
       .where(col("__ea") =!= col("__eb"))
       .select(greatest(col("__ea"), col("__eb")).as("u"),
         least(col("__ea"), col("__eb")).as("v"))
       .dropDuplicates("u", "v")
       .localCheckpoint(eager = false)
+    val (fingerprint, shipped) = scan(first, driverMaxEdges)
+    if (driverMaxEdges > 0 && fingerprint._1 <= driverMaxEdges) {
+      // an uneven partitioning can keep a small edge set from shipping
+      val local = shipped.getOrElse(first.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
+      val schema = assignments(smallStar(largeStar(first))).schema
+      Checkpoints.free(first)
+      driverComponents(local.toSet, maxRounds, schema, first.sparkSession)
+    } else distributedComponents(first, fingerprint, maxRounds)
+  }
 
-    var sum = checksum(edges)
+  /** The rounds as Spark jobs over checkpointed edge frames. */
+  private def distributedComponents(first: DataFrame, firstFingerprint: (Long, Long),
+                                    maxRounds: Int): DataFrame = {
+    var edges = first
+    var fingerprint = firstFingerprint
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
-      val nextSum = checksum(next)
+      val nextFingerprint = scan(next, 0)._1
       // Star ops never grow a component past its minimum, so an equal
       // (count, hash-sum) fingerprint means the edge set is fixed —
       // deterministic run to run; a 64-bit sum collision on differing
       // same-size sets is the negligible-probability caveat.
-      converged = nextSum == sum
-      // The new round is materialized (checksum above is an action),
+      converged = nextFingerprint == fingerprint
+      // The new round is materialized (the scan above is an action),
       // so the PREVIOUS round's checkpoint blocks are dead — free
       // them now instead of waiting for GC: a long-lived driver
       // running many clusterings would otherwise accumulate one
       // edge-frame of executor storage per round (spec-pinned).
-      freeCheckpoint(edges)
+      Checkpoints.free(edges)
       edges = next
-      sum = nextSum
+      fingerprint = nextFingerprint
       round += 1
     }
+    requireConverged(converged, maxRounds)
+    assignments(edges)
+  }
+
+  private def requireConverged(converged: Boolean, maxRounds: Int): Unit =
     require(converged,
       s"connectedComponents did not converge in $maxRounds rounds — " +
         "raise maxRounds (adversarial-diameter graph) instead of trusting a partial clustering")
 
-    // Fixed point is a star per component: every edge is
-    // (member, root). Roots appear only on the v side.
+  /** Fixed point is a star per component: every edge is
+    * (member, root). Roots appear only on the v side. */
+  private def assignments(edges: DataFrame): DataFrame =
     edges.select(col("u").as("id"), col("v").as("cluster_id"))
       .unionAll(edges.select(col("v").as("id"), col("v").as("cluster_id")))
       .groupBy("id").agg(min(col("cluster_id")).as("cluster_id"))
+
+  /** The rounds on the driver, returned as a local frame with the
+    * `schema` of the distributed path's result. */
+  private def driverComponents(first: Set[(Long, Long)], maxRounds: Int, schema: StructType,
+                               spark: SparkSession): DataFrame = {
+    val rows = driverAssignments(driverRounds(first, maxRounds))
+      .iterator.map { case (id, root) => Row(id, root) }.toSeq
+    spark.createDataFrame(rows.asJava, schema)
   }
+
+  /** The distributed loop's rounds on a driver-side edge set: the same
+    * [[largeStar]]/[[smallStar]] steps, with exact set equality as the
+    * convergence test and the same round budget. */
+  private def driverRounds(first: Set[(Long, Long)], maxRounds: Int): Set[(Long, Long)] = {
+    var edges = first
+    var converged = false
+    var round = 0
+    while (!converged && round < maxRounds) {
+      val next = driverSmallStar(driverLargeStar(edges))
+      converged = next == edges
+      edges = next
+      round += 1
+    }
+    requireConverged(converged, maxRounds)
+    edges
+  }
+
+  /** [[largeStar]] on a driver-side edge set. */
+  private def driverLargeStar(e: Set[(Long, Long)]): Set[(Long, Long)] = {
+    val nb = e.toSeq.flatMap { case (u, v) => Seq((u, v), (v, u)) }
+    val mins = nb.groupMapReduce(_._1)(_._2)(math.min)
+    nb.collect { case (u, v) if v > u => (v, math.min(u, mins(u))) }
+      .filter { case (u, v) => u != v }.toSet
+  }
+
+  /** [[smallStar]] on a driver-side edge set. */
+  private def driverSmallStar(e: Set[(Long, Long)]): Set[(Long, Long)] = {
+    val mins = e.groupMapReduce(_._1)(_._2)(math.min)
+    (e.iterator.map { case (u, v) => (v, mins(u)) } ++ mins.iterator)
+      .filter { case (u, v) => u != v }.toSet
+  }
+
+  /** [[assignments]] on a driver-side edge set. */
+  private def driverAssignments(e: Set[(Long, Long)]): Map[Long, Long] =
+    e.toSeq.flatMap { case (u, v) => Seq((u, v), (v, v)) }.groupMapReduce(_._1)(_._2)(math.min)
 
   /** Large-star: for each node, point every LARGER neighbor at the
     * minimum of the closed neighborhood. Both edge directions
@@ -401,7 +487,7 @@ object Components {
       spent += counts
     }
     val out = labels.localCheckpoint()
-    spent.foreach(freeCheckpoint)
+    spent.foreach(Checkpoints.free(_))
     out
   }
 
@@ -465,7 +551,7 @@ object Components {
     val out = live.groupBy(col("__a").as("node"))
       .agg(count(lit(1)).cast("bigint").as("core_degree"))
       .localCheckpoint()
-    spent.foreach(freeCheckpoint)
+    spent.foreach(Checkpoints.free(_))
     out
   }
 
@@ -573,7 +659,7 @@ object Components {
       frontier = next
     }
     val out = visited.localCheckpoint()
-    spent.foreach(freeCheckpoint)
+    spent.foreach(Checkpoints.free(_))
     out
   }
 
@@ -764,7 +850,7 @@ object Components {
     // the final a/h checkpoints stay live inside `out`'s plan; only
     // strictly-interior half-step frames are freed here (a is still
     // referenced — excluded above)
-    spent.foreach(freeCheckpoint)
+    spent.foreach(Checkpoints.free(_))
     out
   }
 
@@ -814,32 +900,36 @@ object Components {
         .localCheckpoint()
     }
     val out = dist.localCheckpoint()
-    spent.foreach(freeCheckpoint)
+    spent.foreach(Checkpoints.free(_))
     out
   }
 
-  /** Release a `localCheckpoint`ed frame's cached blocks eagerly.
-    * A checkpointed Dataset's plan is a LogicalRDD over the
-    * materialized RDD; unpersisting that RDD frees its storage now
-    * rather than at ContextCleaner GC time. No-op on non-checkpointed
-    * plans. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Order-insensitive edge-set fingerprint: (row count, exact
-    * decimal sum of per-edge xxhash64 — long sums overflow under ANSI
-    * mode). One cheap aggregation job per round on a checkpointed
-    * frame. */
-  private def checksum(e: DataFrame): (Long, String) = {
-    val r = e.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)")).as("h")).head()
-    (r.getLong(0), String.valueOf(r.getDecimal(1)))
+  /** One job over an edge frame (filling its lazy checkpoint): the
+    * order-insensitive fingerprint `(edge count, sum of per-edge
+    * xxhash64 mod 2^64)`, and the edges themselves when the frame holds
+    * at most `keepUpTo` of them and every partition at most its even
+    * share of that. Partitions ship before the total is known, so a
+    * graph over the budget can still send up to `keepUpTo` edges that
+    * are dropped. A plain RDD pass, so unlike a SQL aggregate it adds
+    * no shuffle stage, which adaptive execution would run as a job of
+    * its own. */
+  private def scan(e: DataFrame, keepUpTo: Long): ((Long, Long), Option[Seq[(Long, Long)]]) = {
+    val rows = e.select(col("u"), col("v"), xxhash64(col("u"), col("v"))).queryExecution.toRdd
+    val share = keepUpTo / math.max(1, rows.getNumPartitions)
+    val parts = rows.mapPartitions { it =>
+      var n = 0L
+      var h = 0L
+      val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      it.foreach { r =>
+        n += 1
+        h += r.getLong(2)
+        if (n <= share) kept += ((r.getLong(0), r.getLong(1)))
+      }
+      Iterator((n, h, if (n <= share) Some(kept.toSeq) else None))
+    }.collect()
+    // every partition within its share puts the total within keepUpTo
+    val edges = if (parts.forall(_._3.isDefined)) Some(parts.flatMap(_._3.get).toSeq) else None
+    ((parts.map(_._1).sum, parts.map(_._2).sum), edges)
   }
 
   /** Newman modularity of a node partition over an undirected edge

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextHash
+import graft.util.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -599,7 +600,7 @@ object DedupOps {
     // avoids re-running the band self-joins per reference, and the
     // blocks are reclaimed when the frame is GC'd instead of pinning
     // the cache manager until a caller clears it (the round-2 leak).
-    (0 until bands).map { b =>
+    val cands = (0 until bands).map { b =>
       val banded = Blocking.withSubBlock(
         sigs.select(col("id"), col(s"band$b").as("bk")),
         col("bk"), "id", maxBucketSize, "__sub", salt = Some(b))
@@ -608,6 +609,9 @@ object DedupOps {
       x.join(y, Seq("bk", "__sub")).where(col("a_id") < col("b_id"))
         .select("a_id", "b_id")
     }.reduce(_ unionAll _).distinct().localCheckpoint()
+    // the eager checkpoint above has read the signatures for the last time
+    Checkpoints.free(sigs)
+    cands
   }
 
   /** Asymmetric near-CONTAINMENT pairs: C(A→B) = |A∩B| / |A| over
@@ -816,6 +820,10 @@ object DedupOps {
                          keepBestBy: Option[String] = None): DataFrame = {
     val pairs = lshNearDupPairs(df, idCol, textCol, bands, rowsPerBand, minJaccard)
     val clusters = Components.connectedComponents(pairs, "a_id", "b_id")
+    // The clustering has materialized its own edges, so nothing reads
+    // the pair pipeline's checkpoints (candidate pairs, shingle sets)
+    // again; the caller's corpus keeps any checkpoint of its own.
+    Checkpoints.free(pairs, df)
     val dropIds = keepBestBy match {
       case None =>
         clusters.where(col("id") =!= col("cluster_id"))

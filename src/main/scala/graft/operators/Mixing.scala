@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextHash
+import graft.util.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -1120,16 +1121,7 @@ object Mixing {
         ck
       }
     }
-    spent.foreach(freeCheckpoint)
+    spent.foreach(Checkpoints.free(_))
     out
   }
-
-  /** Release a localCheckpoint's blocks once no live plan reads it
-    * (the Components.freeCheckpoint hygiene, replicated here). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

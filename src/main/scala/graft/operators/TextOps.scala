@@ -111,10 +111,11 @@ object TextOps {
     * (exact integers) and `dup_tok_frac`, `dup_bigram_frac`,
     * `top_bigram_frac` (single-division doubles).
     *
-    * Scale: a pure per-row HOF pipeline — no shuffle, no UDF. The
-    * top-bigram scan is O(distinct · len) per document, bounded by
-    * document length and independent of corpus size, so the whole
-    * operator is one codegen'd map over the corpus. */
+    * Scale: a per-row map — no shuffle, no UDF, no interpreted lambda,
+    * independent of corpus size. The token counts are built-in array
+    * functions; the bigram counts come from the native
+    * `graft_bigram_stats` kernel, one hashing pass over a document's
+    * bigrams (expected O(len)). */
   def withRepetitionStats(df: DataFrame, textCol: String): DataFrame = {
     val reserved = Set("__toks", "__bg", "n_toks", "n_dup_toks", "n_dup_bigrams",
       "top_bigram_n", "dup_tok_frac", "dup_bigram_frac", "top_bigram_frac")
@@ -123,26 +124,18 @@ object TextOps {
       s"withRepetitionStats reserves column names ${reserved.mkString(", ")}; " +
         s"rename the colliding input columns: ${collisions.mkString(", ")}")
     withTokens(df, textCol, "__toks")
-      // sequence(1, 0) would step BACKWARD in Spark, so the n < 2 case
-      // must short-circuit to an empty array explicitly
-      .withColumn("__bg", expr(
-        "CASE WHEN size(__toks) >= 2 THEN transform(sequence(1, size(__toks) - 1), " +
-          "bi -> concat(element_at(__toks, bi), ' ', element_at(__toks, bi + 1))) " +
-          "ELSE CAST(array() AS array<string>) END"))
+      .withColumn("__bg", expr("graft_bigram_stats(__toks)"))
       .withColumn("n_toks", size(col("__toks")).cast("bigint"))
       .withColumn("n_dup_toks",
         (size(col("__toks")) - size(array_distinct(col("__toks")))).cast("bigint"))
-      .withColumn("n_dup_bigrams",
-        (size(col("__bg")) - size(array_distinct(col("__bg")))).cast("bigint"))
-      .withColumn("top_bigram_n", expr(
-        "CASE WHEN size(__bg) = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE CAST(array_max(transform(array_distinct(__bg), g -> size(filter(__bg, x -> x = g)))) AS BIGINT) END"))
+      .withColumn("n_dup_bigrams", col("__bg.n_dup_bigrams"))
+      .withColumn("top_bigram_n", col("__bg.top_bigram_n"))
       .withColumn("dup_tok_frac",
         when(col("n_toks") === 0, lit(0.0))
           .otherwise(col("n_dup_toks").cast("double") / col("n_toks").cast("double")))
       .withColumn("dup_bigram_frac",
-        when(size(col("__bg")) === 0, lit(0.0))
-          .otherwise(col("n_dup_bigrams").cast("double") / size(col("__bg")).cast("double")))
+        when(col("__bg.n_bigrams") === 0, lit(0.0))
+          .otherwise(col("n_dup_bigrams").cast("double") / col("__bg.n_bigrams").cast("double")))
       .withColumn("top_bigram_frac",
         when(col("n_toks") === 0, lit(0.0))
           .otherwise(col("top_bigram_n").cast("double") * lit(2.0) / col("n_toks").cast("double")))

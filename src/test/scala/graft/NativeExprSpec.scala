@@ -251,4 +251,80 @@ class NativeExprSpec extends SparkSpec {
       assert(diff.count() == 0, s"maxDist=$maxDist")
     }
   }
+
+  /** The bigram columns of `TextOps.withRepetitionStats` as they were
+    * rendered before `graft_bigram_stats`: interpreted HOFs over the
+    * bigram array `bg` of a token array `t`. */
+  private def bigramsHof(t: String): String =
+    s"CASE WHEN size($t) >= 2 THEN transform(sequence(1, size($t) - 1), " +
+      s"bi -> concat(element_at($t, bi), ' ', element_at($t, bi + 1))) " +
+      "ELSE CAST(array() AS array<string>) END"
+  private val dupBigramsHof = "(size(bg) - size(array_distinct(bg)))"
+  private val topBigramHof =
+    "CASE WHEN size(bg) = 0 THEN CAST(0 AS BIGINT) " +
+      "ELSE CAST(array_max(transform(array_distinct(bg), g -> size(filter(bg, x -> x = g)))) AS BIGINT) END"
+
+  /** `withRepetitionStats` in full, with the HOF bigram columns. */
+  private def repetitionStatsHof(df: org.apache.spark.sql.DataFrame, textCol: String) =
+    df.withColumn("__toks", expr(H.tokens(textCol)))
+      .withColumn("__bg", expr(bigramsHof("__toks")))
+      .withColumn("n_toks", size(col("__toks")).cast("bigint"))
+      .withColumn("n_dup_toks",
+        (size(col("__toks")) - size(array_distinct(col("__toks")))).cast("bigint"))
+      .withColumn("n_dup_bigrams", expr(dupBigramsHof.replace("bg", "__bg")).cast("bigint"))
+      .withColumn("top_bigram_n", expr(topBigramHof.replace("bg", "__bg")))
+      .withColumn("dup_tok_frac",
+        when(col("n_toks") === 0, lit(0.0))
+          .otherwise(col("n_dup_toks").cast("double") / col("n_toks").cast("double")))
+      .withColumn("dup_bigram_frac",
+        when(size(col("__bg")) === 0, lit(0.0))
+          .otherwise(col("n_dup_bigrams").cast("double") / size(col("__bg")).cast("double")))
+      .withColumn("top_bigram_frac",
+        when(col("n_toks") === 0, lit(0.0))
+          .otherwise(col("top_bigram_n").cast("double") * lit(2.0) / col("n_toks").cast("double")))
+      .drop("__toks", "__bg")
+
+  test("native bigram stats == HOF bigram counts (null array and elements, short arrays, joined keys)") {
+    import spark.implicits._
+    val extra = Seq(
+      (90001L, null.asInstanceOf[Seq[String]]), (90002L, Seq("")), (90003L, Seq("one")),
+      (90004L, Seq("a", "b", "a", "b", "a")), (90005L, Seq("x", null, "y", "x", null)),
+      (90006L, Seq(null, null, null)), (90007L, Seq("a b", "c", "a", "b c"))).toDF("doc_id", "toks")
+    val base = docs.select(col("doc_id"), expr(H.tokens("text")).as("toks"))
+      .unionByName(extra)
+      .withColumn("bg", expr(bigramsHof("toks")))
+      .withColumn("k", expr("graft_bigram_stats(toks)"))
+    val diff = base.where(
+      col("k.n_bigrams") =!= size(col("bg")) ||
+        col("k.n_dup_bigrams") =!= expr(dupBigramsHof) ||
+        col("k.top_bigram_n") =!= expr(topBigramHof))
+    assert(diff.count() == 0)
+    val byId = base.where(col("doc_id") >= 90001L).select("doc_id", "k.*").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(byId(90001L) == ((0L, 0L, 0L)) && byId(90002L) == ((0L, 0L, 0L)))
+    assert(byId(90003L) == ((0L, 0L, 0L)))
+    assert(byId(90004L) == ((4L, 2L, 2L)))
+    // null bigrams count once as distinct and never toward the top
+    assert(byId(90005L) == ((4L, 2L, 1L)) && byId(90006L) == ((2L, 1L, 0L)))
+    // "a b" + "c" and "a" + "b c" are the same key "a b c"
+    assert(byId(90007L) == ((3L, 1L, 2L)))
+  }
+
+  test("withRepetitionStats == its HOF rendering, ANSI on and off") {
+    import spark.implicits._
+    val extra = Seq((90001L, null.asInstanceOf[String]), (90002L, ""), (90003L, "one"),
+      (90004L, "a b a b a"), (90005L, "x  y  x")).toDF("doc_id", "text")
+    val base = docs.select("doc_id", "text").unionAll(extra)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      for (mode <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.ansi.enabled", mode)
+        val native = graft.operators.TextOps.withRepetitionStats(base, "text")
+        assert(!native.queryExecution.optimizedPlan.flatMap(_.expressions).exists(
+          _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction])),
+          "withRepetitionStats must not run interpreted lambdas")
+        assertSameData(native, repetitionStatsHof(base, "text"))
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
 }

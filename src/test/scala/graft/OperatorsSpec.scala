@@ -936,6 +936,66 @@ class OperatorsSpec extends SparkSpec {
     assert(got == (1L to 64L).map(_ -> 1L).toMap)
   }
 
+  test("connected components: driver rounds equal the distributed rounds, rows and schema") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val random = Seq.fill(300)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+    val graphs: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "chain" -> (1L to 40L).map(i => (i, i + 1)).toDF("a_id", "b_id"),
+      "cliques" -> (for {
+        base <- Seq(0L, 100L, 200L); size = base / 50 + 3
+        i <- 0L until size; j <- 0L until size if i != j
+      } yield (base + i, base + j)).toDF("a_id", "b_id"),
+      "random" -> random.toDF("a_id", "b_id"),
+      "empty" -> Seq.empty[(Long, Long)].toDF("a_id", "b_id"),
+      "self-loops only" -> Seq((1L, 1L), (2L, 2L)).toDF("a_id", "b_id"),
+      "null ids" -> Seq[(Option[Long], Option[Long])]((None, Some(1L)), (Some(1L), Some(2L)),
+        (Some(2L), None), (None, None), (Some(5L), Some(3L))).toDF("a_id", "b_id"),
+      "string ids" -> Seq(("10", "11"), ("12", "11"), ("31", "30"), ("7", null))
+        .toDF("a_id", "b_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1))).toSeq.sortBy(_.toString)
+    for ((name, pairs) <- graphs) {
+      val local = Components.connectedComponentsImpl(pairs, "a_id", "b_id", 25,
+        Components.DriverMaxEdges)
+      val dist = Components.connectedComponentsImpl(pairs, "a_id", "b_id", 25, 0L)
+      assert(local.schema == dist.schema, s"$name: schema")
+      assert(rows(local) == rows(dist), s"$name: rows")
+    }
+    // a budget of exactly the edge count over 4 uneven partitions: some
+    // partition holds more than its share, so the scan ships nothing and
+    // the driver path collects the edges with one more job
+    val n = random.collect { case (a, b) if a != b => (a.max(b), a.min(b)) }.distinct.size
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      val df = random.toDF("a_id", "b_id")
+      val (jobs, got) = jobsOf(Components.connectedComponentsImpl(df, "a_id", "b_id", 25, n.toLong)
+        .collect().map(r => (r.get(0), r.get(1))).toSeq.sortBy(_.toString))
+      assert(got == rows(Components.connectedComponentsImpl(df, "a_id", "b_id", 25, 0L)))
+      assert(jobs == 3, s"expected the collect fallback, ran $jobs jobs")
+    } finally spark.conf.set(coalesce, before)
+    // the same round budget and the same failure on both paths
+    val chain = (1L to 63L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val msgs = Seq(Components.DriverMaxEdges, 0L).map { budget =>
+      intercept[IllegalArgumentException](
+        Components.connectedComponentsImpl(chain, "a_id", "b_id", 1, budget)).getMessage
+    }
+    assert(msgs.distinct.size == 1 && msgs.head.contains("converge"))
+  }
+
+  test("connected components on a small pair list runs at most 2 Spark jobs") {
+    import spark.implicits._
+    // a 64-edge chain needs ~7 star rounds; run as Spark jobs, each
+    // round costs several
+    val pairs = (1L to 64L).map(i => (i, i + 1)).toDF("a_id", "b_id").localCheckpoint()
+    val (jobs, got) = jobsOf(
+      Components.connectedComponents(pairs, "a_id", "b_id").collect())
+    assert(got.map(_.getLong(1)).toSet == Set(1L) && got.length == 65)
+    assert(jobs <= 2, s"connectedComponents ran $jobs jobs")
+  }
+
   test("multimodal decode stub: deterministic metadata, payload preserved") {
     import spark.implicits._
     val bin = Seq((1L, Array[Byte](0, 10, 20, 30)), (2L, Array[Byte](1, 1, 1, 1)))

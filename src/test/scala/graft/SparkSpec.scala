@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Shared-session ScalaTest base. One session per suite. */
 trait SparkSpec extends AnyFunSuite {
@@ -12,6 +13,31 @@ trait SparkSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-test").toFile
     try f(dir.getAbsolutePath)
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  /** Spark jobs `body` starts, counted by a listener; a sentinel
+    * job run after it drains the (in-order) listener bus. */
+  def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("graft.probe")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.probe", tag)
+      val out = try body finally sc.setLocalProperty("graft.probe", s"$tag-end")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.probe", null)
+      val deadline = System.currentTimeMillis + 30000
+      while (!jobs.contains(s"$tag-end") && System.currentTimeMillis < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains(s"$tag-end"), "listener bus never drained")
+      (jobs.asScala.count(_ == tag), out)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Canonical-form equality, mirroring the reference's assert_equal

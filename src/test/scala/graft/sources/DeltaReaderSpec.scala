@@ -604,30 +604,6 @@ class DeltaReaderSpec extends SparkSpec {
         .map(Files.size).sum
       assert(logBytes < DeltaReader.FastReplayMaxBytes)
 
-      /** Spark jobs `body` starts, counted by a listener; a sentinel
-        * job run after it drains the (in-order) listener bus. */
-      def jobsOf[T](body: => T): (Int, T) = {
-        val sc = spark.sparkContext
-        val tag = java.util.UUID.randomUUID.toString
-        val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            Option(j.properties).flatMap(p => Option(p.getProperty("graft.probe")))
-              .foreach(jobs.add)
-        }
-        sc.addSparkListener(listener)
-        try {
-          sc.setLocalProperty("graft.probe", tag)
-          val out = try body finally sc.setLocalProperty("graft.probe", s"$tag-end")
-          try sc.parallelize(Seq(1), 1).count()
-          finally sc.setLocalProperty("graft.probe", null)
-          val deadline = System.currentTimeMillis + 30000
-          while (!jobs.contains(s"$tag-end") && System.currentTimeMillis < deadline)
-            Thread.sleep(10)
-          assert(jobs.contains(s"$tag-end"), "listener bus never drained")
-          (jobs.asScala.count(_ == tag), out)
-        } finally sc.removeSparkListener(listener)
-      }
       // the probe sees jobs: the distributed replay of the same log runs some
       val (distJobs, _) = jobsOf(DeltaReader.snapshotAtImpl(table, None,
         forceDistributed = true))
