@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *  - exact: hash-groupBy on a content digest (one shuffle on the
   *    digest — the minimum possible);
   *  - MinHash+LSH: shingle → signature (per-row, codegen'd) → band
-  *    keys → self-join per band key (shuffle hash join on band key;
-  *    candidate pairs only within identical-band buckets, the standard
+  *    keys → ONE self-join on (band, band key) for all bands
+  *    (candidate pairs only within identical-band buckets, the standard
   *    LSH guarantee), then exact Jaccard verification restricted to
   *    candidates;
   *  - blocked Jaccard: equality-blocking on a cheap prefix key.
@@ -410,31 +410,25 @@ object DedupOps {
     * gate: a daily drop is checked against N accumulated documents
     * at cost proportional to the DROP, not the corpus.
     *
-    * Scale shape: the batch's band keys are tiny and BROADCAST into
-    * each per-band join, so the corpus signature frame never
-    * shuffles; exact verification explodes shingles only for
-    * candidate ids ([[pairShingleStats]]' semi-join prune). At
-    * steady state the corpus band keys are a PERSISTED dataset
-    * (computed once per corpus version, read per drop) — recomputed
-    * inline here for witness parity. Ids must be disjoint across the
-    * two frames (they share one id space downstream).
+    * Scale shape: the batch's `(band, key)` rows ([[bandKeys]]) are
+    * tiny and BROADCAST into ONE join with the corpus's, so the corpus
+    * signature frame never shuffles; exact verification builds shingle
+    * sets only for candidate ids ([[pairShingleStats]]). At steady
+    * state the corpus band keys are a PERSISTED dataset (computed once
+    * per corpus version, read per drop) — recomputed inline here for
+    * witness parity. Ids must be disjoint across the two frames (they
+    * share one id space downstream).
     *
     * Output: `(a_id = batch doc, b_id = corpus doc, jaccard)`. */
   def lshNearDupAgainstCorpus(batch: DataFrame, corpus: DataFrame,
                               idCol: String, textCol: String,
                               bands: Int = 2, rowsPerBand: Int = 4,
                               minJaccard: Double = 0.5): DataFrame = {
-    def sigKeys(df: DataFrame) =
-      signatures(df, idCol, textCol, bands, rowsPerBand)
-        .select(col(idCol).as("id") +: (0 until bands).map(b => col(s"band$b")): _*)
-        .localCheckpoint()
-    val bs = sigKeys(batch)
-    val cs = sigKeys(corpus)
-    val cands = (0 until bands).map { b =>
-      broadcast(bs.select(col("id").as("a_id"), col(s"band$b").as("bk")))
-        .join(cs.select(col("id").as("b_id"), col(s"band$b").as("bk")), "bk")
-        .select("a_id", "b_id")
-    }.reduce(_ unionAll _).distinct().localCheckpoint()
+    def keys(df: DataFrame, id: String) =
+      bandKeys(df, idCol, textCol, bands, rowsPerBand).withColumnRenamed("id", id)
+    val cands = broadcast(keys(batch, "a_id"))
+      .join(keys(corpus, "b_id"), Seq("band", "bk"))
+      .select("a_id", "b_id").distinct().localCheckpoint()
     val union = batch.select(col(idCol), col(textCol))
       .unionByName(corpus.select(col(idCol), col(textCol)))
     verifyJaccard(union, idCol, textCol, cands, minJaccard)
@@ -497,6 +491,13 @@ object DedupOps {
     }
   }
 
+  /** `(id, band, bk)` rows: every band key of a doc, `band` its index. */
+  private def bandKeys(df: DataFrame, idCol: String, textCol: String,
+                       bands: Int, rowsPerBand: Int): DataFrame =
+    signatures(df, idCol, textCol, bands, rowsPerBand)
+      .select(col(idCol).as("id"),
+        posexplode(array((0 until bands).map(b => col(s"band$b")): _*)).as(Seq("band", "bk")))
+
   /** b-bit minhash Jaccard estimation (Li & König, WWW 2010) over
     * LSH candidate pairs: store only the LOW `bBits` of each
     * signature component (a 64→b-bit storage cut — the memory lever
@@ -524,7 +525,7 @@ object DedupOps {
         (0 until n).map(i => col(s"m$i")) :+ col("band0"): _*)
       .localCheckpoint()
     // hot-bucket guard, the [[lshCandidatePairs]] cap
-    val sub = Blocking.withSubBlock(sigs, col("band0"), "id",
+    val sub = Blocking.withSubBlock(sigs, Seq(col("band0")), "id",
       maxBucketSize, "__sub")
     val x = sub.select(col("id").as("a_id") +:
       (0 until n).map(i => col(s"m$i").as(s"xa$i")) :+
@@ -552,7 +553,8 @@ object DedupOps {
     * [[lshCandidatePairs]]): a band bucket larger than it — a massive
     * boilerplate cluster hashing every member to the same band key —
     * is sub-blocked so candidate fan-out stays ~maxBucketSize²/2 per
-    * bucket instead of N². */
+    * bucket instead of N². Scale shape: [[lshCandidatePairs]], then
+    * [[pairShingleStats]], then one `(a_id, b_id)` sort. */
   def lshNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                       bands: Int = 2, rowsPerBand: Int = 4,
                       minJaccard: Double = 0.5,
@@ -571,47 +573,26 @@ object DedupOps {
     * shared generator for [[lshNearDupPairs]] (symmetric Jaccard) and
     * [[containmentPairs]] (asymmetric containment).
     *
-    * Hot-bucket guard: each band bucket larger than `maxBucketSize`
-    * is split into deterministic sub-blocks ([[Blocking.withSubBlock]]
-    * — the [[blockedJaccardPairs]] cap, ported here per the round-12
-    * review) and the self-join keys on (band, sub-block), so one
-    * dominant band key costs Θ(size·maxBucketSize) candidates, never
-    * Θ(size²). Pairs straddling sub-blocks of an OVERSIZE bucket are
-    * skipped — the bounded-blocking recall tradeoff, documented not
-    * silent; buckets at or under the cap compare exhaustively
-    * (exact results, the test-scale regime). */
-  private def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-                                bands: Int, rowsPerBand: Int,
-                                maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    // The signature frame feeds both sides of every per-band self-join
-    // (2*bands plan references). localCheckpoint (not just persist)
-    // both computes the char-level hashing once AND truncates the
-    // lineage, so the optimizer/codegen never re-analyze the large
-    // signature expression trees once per join branch — that analysis
-    // cost dominated first-run latency. Small (id, band keys)
-    // projection — safe to materialize.
-    val sigs = signatures(df, idCol, textCol, bands, rowsPerBand)
-      .select(col(idCol).as("id") +: (0 until bands).map(b => col(s"band$b")): _*)
-      .localCheckpoint()
-
-    // Candidate pairs: same band value in any band, deduplicated.
-    // localCheckpoint (not persist): referenced by candIds, the
-    // common-shingle join, and the output join — tiny (pairs only),
-    // avoids re-running the band self-joins per reference, and the
-    // blocks are reclaimed when the frame is GC'd instead of pinning
-    // the cache manager until a caller clears it (the round-2 leak).
-    val cands = (0 until bands).map { b =>
-      val banded = Blocking.withSubBlock(
-        sigs.select(col("id"), col(s"band$b").as("bk")),
-        col("bk"), "id", maxBucketSize, "__sub", salt = Some(b))
-      val x = banded.select(col("id").as("a_id"), col("bk"), col("__sub"))
-      val y = banded.select(col("id").as("b_id"), col("bk"), col("__sub"))
-      x.join(y, Seq("bk", "__sub")).where(col("a_id") < col("b_id"))
-        .select("a_id", "b_id")
-    }.reduce(_ unionAll _).distinct().localCheckpoint()
-    // the eager checkpoint above has read the signatures for the last time
-    Checkpoints.free(sigs)
-    cands
+    * Scale shape: every band in ONE pass over `(band, key)` rows
+    * ([[bandKeys]]) — one window count, one self-join on `(band, key,
+    * sub-block)`, one `distinct`, one eager checkpoint (tiny: pairs
+    * only; the verification reads it twice). Hot-bucket guard: a
+    * bucket larger than `maxBucketSize` is split into deterministic
+    * sub-blocks ([[Blocking.withSubBlock]], salted by the band so each
+    * band splits it its own way), so one dominant band key costs
+    * Θ(size·maxBucketSize) candidates, never Θ(size²). Pairs
+    * straddling sub-blocks of an OVERSIZE bucket are skipped — the
+    * bounded-blocking recall tradeoff; buckets at or under the cap
+    * compare exhaustively (exact results, the test-scale regime). */
+  private[graft] def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
+                                       bands: Int, rowsPerBand: Int,
+                                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+    val banded = Blocking.withSubBlock(bandKeys(df, idCol, textCol, bands, rowsPerBand),
+      Seq(col("band"), col("bk")), "id", maxBucketSize, "__sub", salt = Some(col("band")))
+    banded.withColumnRenamed("id", "a_id")
+      .join(banded.withColumnRenamed("id", "b_id"), Seq("band", "bk", "__sub"))
+      .where(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct().localCheckpoint()
   }
 
   /** Asymmetric near-CONTAINMENT pairs: C(A→B) = |A∩B| / |A| over
@@ -647,44 +628,46 @@ object DedupOps {
       .orderBy("a_id", "b_id")
   }
 
-  /** Exact Jaccard verification over [[pairShingleStats]], filtered
-    * at `minJaccard`. Shared by every near-dup candidate generator. */
+  /** [[verifiedPairs]] ordered by `(a_id, b_id)`: the public outputs. */
   private def verifyJaccard(df: DataFrame, idCol: String, textCol: String,
+                            pairs: DataFrame, minJaccard: Double): DataFrame =
+    verifiedPairs(df, idCol, textCol, pairs, minJaccard).orderBy("a_id", "b_id")
+
+  /** Exact Jaccard verification over [[pairShingleStats]], filtered
+    * at `minJaccard`, unordered. Shared by every near-dup generator. */
+  private def verifiedPairs(df: DataFrame, idCol: String, textCol: String,
                             pairs: DataFrame, minJaccard: Double): DataFrame =
     pairShingleStats(df, idCol, textCol, pairs)
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
       .where(col("jaccard") >= minJaccard)
       .select(col("a_id"), col("b_id"), col("jaccard"))
-      .orderBy("a_id", "b_id")
 
   /** Exact distinct-3-shingle overlap stats `(a_id, b_id, n_common,
-    * n_a, n_b)` for the docs appearing in `pairs` only — the corpus
-    * is semi-join-pruned to candidates BEFORE the shingle explode, so
-    * the expensive stage scales with candidate count, not corpus
-    * size. Shared by Jaccard and containment verification. */
-  private def pairShingleStats(df: DataFrame, idCol: String, textCol: String,
-                               pairs: DataFrame): DataFrame = {
+    * n_a, n_b)` (bigint) for `pairs` sharing at least one shingle; a
+    * NULL-text doc (shingles `[NULL]`) never pairs. Scale shape: the
+    * corpus is semi-join-pruned to candidate ids, then each candidate
+    * is ONE row `(id, distinct non-null shingle array)` (codegen'd
+    * `array_except`, no explode, no lambda) joined on `a_id` and on
+    * `b_id`; `array_intersect`/`size` per pair — no shingle-keyed
+    * shuffle, no aggregate. Ids are row-unique (the dedup contract). */
+  private[graft] def pairShingleStats(df: DataFrame, idCol: String, textCol: String,
+                                      pairs: DataFrame): DataFrame = {
     val candIds = pairs.select(col("a_id").as("__cand_id"))
       .unionAll(pairs.select(col("b_id").as("__cand_id"))).distinct()
-    val pruned = df.join(candIds, col(idCol) === col("__cand_id"), "left_semi")
-    // Lineage-truncated so the shingle expression tree is analyzed
-    // once, not once per downstream join branch. (Checkpoint blocks
-    // live until the returned frame is GC'd — per-query lifetime.)
-    val sh = TextOps.withTokens(pruned, textCol, "__toks")
-      .withColumn("sh", explode(expr(H.shingles3("__toks", textCol))))
-      .select(col(idCol).as("id"), col("sh")).distinct().localCheckpoint()
-
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = pairs
-      .join(sh.select(col("id").as("a_id"), col("sh")), "a_id")
-      .join(sh.select(col("id").as("b_id"), col("sh").as("sh2")), "b_id")
-      .where(col("sh") === col("sh2"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_common"))
-
-    common
-      .join(sizes.select(col("id").as("a_id"), col("n_sh").as("n_a")), "a_id")
-      .join(sizes.select(col("id").as("b_id"), col("n_sh").as("n_b")), "b_id")
+    val pruned = df.select(col(idCol), col(textCol))
+      .join(candIds, col(idCol) === col("__cand_id"), "left_semi")
+    val sets = TextOps.withTokens(pruned, textCol, "__toks")
+      .select(col(idCol).as("id"), expr(
+        s"array_except(${H.shingles3("__toks", textCol)}, array(CAST(NULL AS STRING)))").as("sh"))
+    pairs
+      .join(sets.select(col("id").as("a_id"), col("sh").as("__sa")), "a_id")
+      .join(sets.select(col("id").as("b_id"), col("sh").as("__sb")), "b_id")
+      .select(col("a_id"), col("b_id"),
+        size(array_intersect(col("__sa"), col("__sb"))).cast("bigint").as("n_common"),
+        size(col("__sa")).cast("bigint").as("n_a"),
+        size(col("__sb")).cast("bigint").as("n_b"))
+      .where(col("n_common") > 0)
   }
 
   /** Contrastive pair mining for embedding training: POSITIVES are
@@ -802,48 +785,57 @@ object DedupOps {
     * near-duplicates, keep the highest-quality copy", the policy a
     * real curation pass wants once a quality score exists.
     *
-    * Scale shape: all the work is the pair pipeline + CC (banded
-    * equi-joins and node-id shuffles — see the component scaladocs);
-    * the final step is one id-only anti-join against the member list,
+    * Scale shape: all the work is the [[lshNearDupPairs]] pipeline,
+    * its pairs consumed UNORDERED (no sort job), + CC (node-id
+    * shuffles — see the component scaladocs); the final step is one
+    * id-only anti-join against the member list,
     * so the corpus is scanned once more and never shuffled on
     * anything wider than the id. The keep-best variant adds one
     * id-keyed join of the (small) member list against the corpus
-    * scores and two PARTIAL-AGGREGATED picks per cluster (max score,
-    * then min id at that score) — map-side combined, so a
-    * boilerplate-heavy corpus whose capped LSH pairs chain into one
-    * giant transitive cluster still collapses to one row per map
-    * partition before the shuffle, where a rank window would funnel
-    * every member through a single reducer's sort. */
+    * scores and two chained PARTIAL-AGGREGATED picks (min id per
+    * cluster and score, then max score per cluster) — map-side
+    * combined, so a boilerplate-heavy corpus whose capped LSH pairs
+    * chain into one giant transitive cluster spreads over its scores
+    * and collapses to one row per map partition before the
+    * cluster-keyed shuffle, where a rank window would funnel every
+    * member through a single reducer's sort. */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                          bands: Int = 2, rowsPerBand: Int = 4,
                          minJaccard: Double = 0.5,
                          keepBestBy: Option[String] = None): DataFrame = {
-    val pairs = lshNearDupPairs(df, idCol, textCol, bands, rowsPerBand, minJaccard)
+    val reserved = Set("__toks", "__cand_id", "__drop_id", "__cluster", "__score",
+      "__m", "__keep_id")
+    val collisions = df.columns.toSet.intersect(reserved)
+    require(collisions.isEmpty,
+      s"dropNearDuplicates reserves column names ${reserved.mkString(", ")}; " +
+        s"rename the colliding input columns: ${collisions.mkString(", ")}")
+    val pairs = verifiedPairs(df, idCol, textCol,
+      lshCandidatePairs(df, idCol, textCol, bands, rowsPerBand), minJaccard)
     val clusters = Components.connectedComponents(pairs, "a_id", "b_id")
     // The clustering has materialized its own edges, so nothing reads
-    // the pair pipeline's checkpoints (candidate pairs, shingle sets)
-    // again; the caller's corpus keeps any checkpoint of its own.
+    // the candidate-pair checkpoint again; the caller's corpus keeps
+    // any checkpoint of its own.
     Checkpoints.free(pairs, df)
     val dropIds = keepBestBy match {
       case None =>
         clusters.where(col("id") =!= col("cluster_id"))
           .select(col("id").as("__drop_id"))
       case Some(score) =>
-        // materialized: referenced three times below — without the
-        // pin each reference would re-run the corpus score join
-        val members = clusters
-          .join(df.select(col(idCol).as("id"), col(score)), Seq("id"))
-          .localCheckpoint()
-        // argmax as two partial aggregates, not a rank window:
-        // max(score) ignores nulls, so a null score only wins an
-        // all-null cluster (the window's desc-nulls-last keeper);
-        // ties then break to the min id, exactly the old orderBy
-        val keep = members
-          .groupBy(col("cluster_id")).agg(max(col(score)).as("__best"))
-          .join(members, Seq("cluster_id"))
-          .where(col(score) <=> col("__best"))
-          .groupBy(col("cluster_id")).agg(min(col("id")).as("__keep_id"))
-        members.join(keep, Seq("cluster_id"))
+        // argmax as two chained partial aggregates, not a rank window:
+        // the min id per (cluster, score), then the max (score, id)
+        // struct per cluster — one row per score, so score ties are
+        // already broken to the min id, and a null score sorts below
+        // every real one, so it only wins an all-null cluster (the
+        // window's desc-nulls-last keeper). The `__` aliases let any
+        // caller column name be the score.
+        val keep = clusters
+          .select(col("id").as("__cand_id"), col("cluster_id").as("__cluster"))
+          .join(df.select(col(idCol).as("__cand_id"), col(score).as("__score")),
+            Seq("__cand_id"))
+          .groupBy(col("__cluster"), col("__score")).agg(min(col("__cand_id")).as("__m"))
+          .groupBy(col("__cluster"))
+          .agg(max(struct(col("__score"), col("__m"))).getField("__m").as("__keep_id"))
+        clusters.join(keep, col("cluster_id") === col("__cluster"))
           .where(!(col("id") <=> col("__keep_id")))
           .select(col("id").as("__drop_id"))
     }
@@ -908,7 +900,7 @@ object DedupOps {
       df.select(col(idCol).as("id"),
         substring(col(textCol), 1, maxLen).as("__t"),
         substring(col(textCol), 1, prefixLen).as("blk")),
-      col("blk"), "id", maxBlockSize, "__sub")
+      Seq(col("blk")), "id", maxBlockSize, "__sub")
     blocked.as("x").join(blocked.as("y"), Seq("blk", "__sub"))
       .where(col("x.id") < col("y.id"))
       .withColumn("distance", levenshtein(col("x.__t"), col("y.__t")))
@@ -995,7 +987,7 @@ object DedupOps {
       val banded = Blocking.withSubBlock(
         sims.select(col("id"), col("sim"),
           expr(s"(sim div ${div}L) % ${buckets}L").as("bk")),
-        col("bk"), "id", maxBucketSize, "__sub", salt = Some(b))
+        Seq(col("bk")), "id", maxBucketSize, "__sub", salt = Some(lit(b)))
       val x = banded.select(col("id").as("a_id"), col("sim").as("sa"),
         col("bk"), col("__sub"))
       val y = banded.select(col("id").as("b_id"), col("sim").as("sb"),
@@ -1025,7 +1017,7 @@ object DedupOps {
                           maxBlockSize: Int = DefaultMaxBucketSize): DataFrame = {
     val blocked = Blocking.withSubBlock(
       df.select(col(idCol).as("id"), substring(col(textCol), 1, prefixLen).as("blk")),
-      col("blk"), "id", maxBlockSize, "__sub")
+      Seq(col("blk")), "id", maxBlockSize, "__sub")
     // Checkpointed: referenced by the candidate semi-join, the common-
     // shingle join, and the output join (tiny: pairs only; blocks live
     // until the returned frame is GC'd).

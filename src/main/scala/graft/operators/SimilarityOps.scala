@@ -1060,7 +1060,7 @@ object SimilarityOps {
         col(vecCol).as("__v"), col("__nrm").as("__nrm"))).as("__b"))
       .select(col(idCol).as("id"), col("__b.__v").as(vecCol),
         col("__b.__nrm").as("__nrm"), col("__b.cid").as("cluster"))
-    val sub = Blocking.withSubBlock(assigned, col("cluster"), "id", maxClusterSize, "__sub")
+    val sub = Blocking.withSubBlock(assigned, Seq(col("cluster")), "id", maxClusterSize, "__sub")
       .localCheckpoint() // feeds both sides of the pair self-join
     val x = sub.select(col("cluster"), col("__sub"), col("id").as("a_id"),
       col(vecCol).as("__va"), col("__nrm").as("__na"))
@@ -1589,7 +1589,7 @@ object SimilarityOps {
                        maxBlockSize: Int = 8192): DataFrame = {
     val n = Blocking.withSubBlock(
       corpus.withColumn("__nrm", expr(V.norm(vecCol))),
-      col(blockCol), idCol, maxBlockSize, "__sub")
+      Seq(col(blockCol)), idCol, maxBlockSize, "__sub")
     val x = n.select(col(blockCol).as("blk"), col("__sub"), col(idCol).as("a_id"),
       col(vecCol).as("va"), col("__nrm").as("na"))
     val y = n.select(col(blockCol).as("blk"), col("__sub"), col(idCol).as("b_id"),

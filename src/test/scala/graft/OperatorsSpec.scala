@@ -1523,6 +1523,26 @@ class OperatorsSpec extends SparkSpec {
     assert(minId == Seq(0L, 3L)) // default policy unchanged
   }
 
+  test("dropNearDuplicates keepBestBy: a score named id or cluster_id works; reserved names fail") {
+    import spark.implicits._
+    val txt = "the quick brown fox jumps over the lazy dog again and again"
+    val df = Seq((0L, txt, 5L), (1L, txt, 9L), (2L, txt, 9L),
+      (3L, "completely unrelated text about entirely different things altogether", 1L))
+      .toDF("doc_id", "text", "id")
+    def kept(d: org.apache.spark.sql.DataFrame, idCol: String, score: String) =
+      DedupOps.dropNearDuplicates(d, idCol, "text", bands = 2, rowsPerBand = 4,
+        minJaccard = 0.3, keepBestBy = Some(score))
+        .select(idCol).collect().map(_.getLong(0)).sorted.toSeq
+    assert(kept(df, "doc_id", "id") == Seq(1L, 3L))
+    assert(kept(df.withColumnRenamed("id", "cluster_id"), "doc_id", "cluster_id") == Seq(1L, 3L))
+    // the id column itself as the score: the highest id survives
+    assert(kept(df.drop("id").withColumnRenamed("doc_id", "id"), "id", "id") == Seq(2L, 3L))
+    val ex = intercept[IllegalArgumentException](
+      kept(df.withColumn("__drop_id", lit(0L)), "doc_id", "id"))
+    assert(ex.getMessage.contains("reserves column names") && ex.getMessage.contains("__drop_id"),
+      ex.getMessage)
+  }
+
   test("selectUnderBudget: equals the naive global window, without its single partition") {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
