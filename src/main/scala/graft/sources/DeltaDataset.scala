@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.util.PathUtils
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -3236,23 +3237,6 @@ object DeltaWriter {
     // additionally carry parquet field ids, attached here as
     // parquet.field.id metadata the Spark writer honors
     def physName(c: String): String = phys.get(c).map(_._1).getOrElse(c)
-    val touched: Seq[(Seq[(String, String)], Path)] =
-      if (partitionColumns.isEmpty) Seq((Seq.empty, qualifiedBase))
-      else df.select(partitionColumns.map(c => col(c).cast("string")): _*)
-        .distinct().collect().toSeq.map { r =>
-          val kvs = partitionColumns.zipWithIndex.map { case (c, i) =>
-            require(!r.isNullAt(i),
-              s"DeltaWriter: partition column '$c' contains null values")
-            val v = r.getString(i)
-            require(v.nonEmpty && ExternalCatalogUtils.escapePathName(v) == v,
-              s"DeltaWriter: partition column '$c' value '$v' is empty or " +
-                "contains characters Spark path-escapes; only path-literal " +
-                "partition values are supported")
-            physName(c) -> v
-          }
-          (kvs, kvs.foldLeft(qualifiedBase) { case (p, (c, v)) =>
-            new Path(p, s"$c=$v") })
-        }
     // nested mapped columns cast to their PHYSICAL type first: the
     // positional struct cast renames inner fields (the inverse of the
     // reader's physical→logical cast), and in id mode the target
@@ -3282,37 +3266,30 @@ object DeltaWriter {
     // The staging name carries no leading `_`/`.` on purpose: readers
     // only ever open files the log names, and a crash-orphaned
     // staging tree must stay VISIBLE to vacuum's walk so it ages out.
+    // The touched partitions, their values and the path-literal checks
+    // come from the staged listing: `df` is evaluated once, by the write.
     val staging = new Path(qualifiedBase,
       s"staging-${java.util.UUID.randomUUID}")
-    val writer = dfPhys.write.mode("append").option("compression", "snappy")
-    (if (physPartitionCols.nonEmpty)
-      writer.partitionBy(physPartitionCols: _*)
-     else writer).parquet(staging.toString)
-
-    val newFiles: Seq[(Seq[(String, String)], Path)] = touched.flatMap {
-      case (kvs, finalDir) =>
-        val stagedDir = kvs.foldLeft(staging) { case (p, (c, v)) =>
-          new Path(p, s"$c=$v") }
-        if (!fs.exists(stagedDir)) Seq.empty
-        else {
+    try {
+      val writer = dfPhys.write.mode("append").option("compression", "snappy")
+      (if (physPartitionCols.nonEmpty)
+        writer.partitionBy(physPartitionCols: _*)
+       else writer).parquet(staging.toString)
+      require(fs.exists(staging),
+        "DeltaWriter: write produced no output directory (concurrent cleanup?)")
+      PathUtils.stagedPartitions(fs, staging, physPartitionCols, "DeltaWriter: ").flatMap {
+        case (kvs, files) =>
+          val finalDir = kvs.foldLeft(qualifiedBase) { case (p, (c, v)) => new Path(p, s"$c=$v") }
           fs.mkdirs(finalDir)
-          fs.listStatus(stagedDir)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-            .map { st =>
-              val dest = new Path(finalDir, st.getPath.getName)
-              // task-UUID part names cannot collide across writers
-              require(fs.rename(st.getPath, dest),
-                s"DeltaWriter: could not move staged file ${st.getPath} " +
-                  s"into $finalDir")
-              (kvs, dest)
-            }
-        }
-    }
-    fs.delete(staging, true)
-    require(newFiles.nonEmpty || df.isEmpty,
-      "DeltaWriter: write produced no files (concurrent compaction?)")
-    newFiles
+          files.map { st =>
+            val dest = new Path(finalDir, st.getPath.getName)
+            // task-UUID part names cannot collide across writers
+            require(fs.rename(st.getPath, dest),
+              s"DeltaWriter: could not move staged file ${st.getPath} into $finalDir")
+            (kvs, dest)
+          }
+      }
+    } finally fs.delete(staging, true)
   }
 
   /** Atomic exclusive publish of `_delta_log/<v>.json` — POSIX

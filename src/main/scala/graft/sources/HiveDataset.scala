@@ -1,13 +1,15 @@
 package graft.sources
 
 import graft.util.PathUtils
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.Footer
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemas
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Hive-partitioned parquet dataset.
   *
@@ -37,18 +39,30 @@ import scala.collection.immutable.ListMap
   *    columns live only in the directory path (hive_dataset.py:
   *    209-211).
   *  - reads merge fragment schemas into a superset with nulls for
-  *    missing columns (hive_dataset.py:158-181) — Spark `mergeSchema`.
+  *    missing columns (hive_dataset.py:158-181) — the schema Spark's
+  *    `mergeSchema` inference gives.
   *  - empty dataset scans and absent partition reads return None
   *    (hive_dataset.py:314-328, 351-356).
   *
-  * Scale notes (100 TB design point): `scan()` is a plain partitioned
-  * parquet read — Catalyst partition pruning, predicate pushdown and
-  * column pruning all apply downstream; `readPartition` constructs the
-  * single partition directory path, so it is one directory listing no
-  * matter how many partitions exist; writes fan out on executors via
-  * FileFormatWriter (no driver-side data movement). The only
-  * driver-side metadata operation is partition discovery, which lists
-  * directories, not files.
+  * Scale notes (100 TB design point; at small scale, fixed per-job
+  * cost dominates, so job counts are pinned in HiveDatasetSpec):
+  *  - a write or append is ONE Spark job: a partitioned parquet write
+  *    into a private hidden staging directory, then a driver-side
+  *    publish of one rename per new file plus one listing per touched
+  *    partition. Data never moves through the driver, and the input
+  *    is evaluated once.
+  *  - `readPartition` lists the single partition directory, so it
+  *    costs the same however many partitions exist; `scan()` makes
+  *    one recursive listing of the root. Both are plain parquet reads
+  *    with an explicit schema, so partition pruning, predicate
+  *    pushdown and column pruning apply downstream. Up to
+  *    `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  *    fragments (Spark's own small-listing bound, default 32), the
+  *    schema is merged from footers read on the driver and building
+  *    the frame runs no job; above it, Spark's distributed schema
+  *    merge runs as one job.
+  *  - `compactPartition` is one job with no materialization: footers
+  *    give the schema and the row count.
   */
 case class HiveDataset(
     url: String,
@@ -98,20 +112,18 @@ case class HiveDataset(
     * (alphabetical, matching the on-disk order S12 writes) then
     * partition columns in declared order. None when empty. */
   override def scan(): Option[DataFrame] = {
-    val parts = partitionPaths()
-    if (partitionColumns.isEmpty) {
-      if (!hasParquetFiles(qualifiedBase)) None
-      else Some(orderColumns(reader().parquet(cleanUrl)))
-    } else if (parts.isEmpty) None
+    // Fragments at partition depth under `k1=*/k2=*`: the directories
+    // partitionPaths() globs, minus the empty ones.
+    val files = PathUtils.visibleParquet(fs, qualifiedBase).filter { case (dirs, _) =>
+      partitionColumns.isEmpty || dirs.length == partitionColumns.length &&
+        partitionColumns.zip(dirs).forall { case (c, d) => d.startsWith(s"$c=") }
+    }
+    if (files.isEmpty) None
     else {
-      val df = reader()
-        .option("basePath", qualifiedBase.toString)
-        .parquet(parts.map(p => new Path(qualifiedBase, p).toString): _*)
-      // Partition values always read back as strings (reference tests
-      // test_hive_dataset.py:102-105,125-128), independent of session
-      // partition-type-inference settings.
-      val cast = partitionColumns.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(StringType)))
-      Some(orderColumns(cast))
+      val dirs =
+        if (partitionColumns.isEmpty) Seq(qualifiedBase)
+        else files.map(_._1.mkString("/")).distinct.sorted.map(new Path(qualifiedBase, _))
+      Some(orderColumns(load(dirs, files.map(_._2), partitionColumns)))
     }
   }
 
@@ -131,31 +143,39 @@ case class HiveDataset(
     * one directory, re-attaches partition values as string literal
     * columns. None when absent (hive_dataset.py:314-328). */
   override def readPartition(values: Map[String, String]): Option[DataFrame] = {
-    require(
-      values.keySet == partitionColumns.toSet,
-      s"Partition column value keys ${values.keySet} do not match partition columns $partitionColumns")
-    val ordered = partitionColumns.map(k => k -> values(k))
-    val dir = new Path(qualifiedBase, PathUtils.partitionPath(ordered))
-    if (!hasParquetFiles(dir)) None
-    else {
-      val df = reader().parquet(dir.toString)
-      val withParts = ordered.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
-      Some(orderColumns(withParts))
-    }
+    val (ordered, dir) = partitionDir(values)
+    val files = PathUtils.visibleParquet(fs, dir).map(_._2)
+    if (files.isEmpty) None else Some(withValues(load(Seq(dir), files, Nil), ordered))
   }
 
-  private def reader() = spark.read.option("mergeSchema", "true")
+  /** A parquet read of `dirs` with an explicit schema, so building it
+    * runs no Spark job. The data schema is the fragments' merged
+    * footer schemas: read on the driver when there are at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them
+    * (or when `footers` are already at hand), else inferred by Spark's
+    * distributed `mergeSchema` job. Partition columns are typed
+    * string, so values read back as the strings on disk
+    * (hive_dataset.py:186-191) — type inference would turn `01`, `1`
+    * and `1.10` into `1.0`, `1.0` and `1.1`. */
+  private def load(dirs: Seq[Path], files: Seq[FileStatus], partCols: Seq[String],
+                   footers: Option[Seq[Footer]] = None): DataFrame = {
+    def at(r: DataFrameReader): DataFrame =
+      (if (partCols.isEmpty) r else r.option("basePath", qualifiedBase.toString))
+        .parquet(dirs.map(_.toString): _*)
+    val small = footers.orElse(
+      if (files.length <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+        Some(FooterSchemas.read(spark, files))
+      else None)
+    val data = small.flatMap(FooterSchemas.merged(spark, _))
+      .getOrElse(at(spark.read.option("mergeSchema", "true")).schema)
+    at(spark.read.schema(StructType(
+      data.filterNot(f => partCols.contains(f.name)) ++ partCols.map(StructField(_, StringType)))))
+  }
 
-  private def hasParquetFiles(dir: Path): Boolean =
-    fs.exists(dir) && {
-      val it = fs.listFiles(dir, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) found = true
-      }
-      found
-    }
+  /** Partition values as literal string columns, then the read-back
+    * column order. */
+  private def withValues(df: DataFrame, ordered: Seq[(String, String)]): DataFrame =
+    orderColumns(ordered.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) })
 
   /** Data columns alphabetically, then partition columns in declared
     * order — the reference's read-back layout (partition values
@@ -166,6 +186,20 @@ case class HiveDataset(
     df.select((dataCols ++ partitionColumns.filter(df.columns.contains)).map(col): _*)
   }
 
+  /** Ordered values and directory of one partition (the root for an
+    * unpartitioned dataset); validates the key set
+    * (hive_dataset.py:314-342). */
+  private def partitionDir(values: Map[String, String]): (Seq[(String, String)], Path) = {
+    require(
+      values.keySet == partitionColumns.toSet,
+      s"Partition column value keys ${values.keySet} do not match partition columns $partitionColumns")
+    val ordered = partitionColumns.map(k => k -> values(k))
+    (ordered, dirOf(ordered))
+  }
+
+  private def dirOf(ordered: Seq[(String, String)]): Path =
+    if (ordered.isEmpty) qualifiedBase else new Path(qualifiedBase, PathUtils.partitionPath(ordered))
+
   // ---------------------------------------------------------------
   // Write / append / delete
   // ---------------------------------------------------------------
@@ -173,135 +207,73 @@ case class HiveDataset(
   /** Dynamic partition overwrite: replaces exactly the partitions
     * present in `df`; other partitions survive (hive_dataset.py:
     * 412-415). */
-  override def write(df: DataFrame): Unit = writeMode(df, "overwrite")
+  override def write(df: DataFrame): Unit = writeMode(df, overwrite = true)
 
   /** Append fragments to existing partitions (hive_dataset.py:
     * 417-420). */
-  override def append(df: DataFrame): Unit = writeMode(df, "append")
+  override def append(df: DataFrame): Unit = writeMode(df, overwrite = false)
 
-  private def writeMode(df: DataFrame, mode: String): Unit = {
+  /** One partitioned parquet write into a private staging directory
+    * under the root (`_graft_staging-<uuid>`: hidden, so neither
+    * Spark's listing nor [[partitionPaths]] sees it), then a publish.
+    * The touched partitions and their values come from the staged
+    * listing, so `df` is evaluated exactly once: a nondeterministic
+    * input cannot put its rows in partitions other than those
+    * published. Every value is checked before anything is published,
+    * and the staging directory is removed whatever happens, so a
+    * failed write leaves the dataset as it was. */
+  private def writeMode(df: DataFrame, overwrite: Boolean): Unit = {
     validate(df)
-    // The partitions this write touches, computed from the frame
-    // BEFORE writing: bounded by partition cardinality (the same
-    // driver-side metadata class as the reference's partition
-    // handling, hive_dataset.py:389). The fragment-rename pass then
-    // lists ONLY these directories — metadata cost proportional to
-    // the write, not to dataset age. (The projection evaluates `df`
-    // once before the write does — persist expensive upstream frames
-    // if that matters; the reference evaluates its input eagerly too.)
-    val touched: Seq[Path] =
-      if (partitionColumns.isEmpty) Seq(qualifiedBase)
-      else df.select(partitionColumns.map(col): _*).distinct().collect().toSeq
-        .map { r =>
-          partitionColumns.zipWithIndex.foreach { case (c, i) =>
-            // Null AND empty-string partition values both land in
-            // Spark's __HIVE_DEFAULT_PARTITION__ directory, outside
-            // this dataset's k=v partition contract — reject loudly.
-            require(!r.isNullAt(i), s"Partition column '$c' contains null values")
-            val v = r.getString(i)
-            require(v.nonEmpty,
-              s"Partition column '$c' contains empty-string values " +
-                "(Spark writes these to __HIVE_DEFAULT_PARTITION__, outside the k=v layout)")
-            // Spark path-escapes characters like '=', '%', '/', and
-            // control chars when writing partition directories; the
-            // raw k=v paths this dataset reads/renames/deletes by
-            // would then miss the directories Spark actually wrote —
-            // a silent ordering/pruning corruption. Fail instead:
-            // the reference's raw-path layout (hive_dataset.py:
-            // 130-132) has no escaping either.
-            require(ExternalCatalogUtils.escapePathName(v) == v,
-              s"Partition column '$c' value '$v' contains characters Spark path-escapes; " +
-                "only path-literal partition values are supported")
-          }
-          new Path(qualifiedBase, PathUtils.partitionPath(
-            partitionColumns.zipWithIndex.map { case (c, i) => c -> r.getString(i) }))
-        }
-    repairStrandedFragments(touched)
-    val before = listParquet(touched)
-    val dataCols = (df.columns.toSet -- partitionColumns).toSeq.sorted
-    val projected = df.select((dataCols ++ partitionColumns).map(col): _*)
-    val writer = projected.write
-      .mode(mode)
-      .option("compression", compression)
-      .option("maxRecordsPerFile", maxRowsPerFragment)
-      // Overwrite only touched partitions regardless of session conf.
-      .option("partitionOverwriteMode", "dynamic")
-    (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
-      .parquet(cleanUrl)
-    renameNewFragments(touched, before)
+    val staging = new Path(qualifiedBase, s"_graft_staging-${java.util.UUID.randomUUID}")
+    try {
+      val dataCols = (df.columns.toSet -- partitionColumns).toSeq.sorted
+      val writer = df.select((dataCols ++ partitionColumns).map(col): _*).write
+        .option("compression", compression)
+        .option("maxRecordsPerFile", maxRowsPerFragment)
+      (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
+        .parquet(staging.toString)
+      PathUtils.stagedPartitions(fs, staging, partitionColumns, "HiveDataset: ")
+        .foreach { case (kvs, files) => publish(dirOf(kvs), files.map(_.getPath), overwrite) }
+    } finally fs.delete(staging, true)
   }
 
-  /** Parquet file names in each of `dirs` (fragments are direct
-    * children of a partition directory — one non-recursive listing
-    * per touched partition). */
-  private def listParquet(dirs: Seq[Path]): Map[String, Set[String]] =
-    dirs.flatMap { d =>
-      if (!fs.exists(d)) None
-      else Some(d.toString -> fs.listStatus(d)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).toSet)
-    }.toMap
-
-  /** Rename the part-files a write just produced to reference-style
-    * fragment names (`NNNNNN_<uuid>.parquet`, hive_dataset.py:51-70,
-    * 232-245), with the index continuing from the partition's highest
-    * surviving fragment — so fragments appended later always sort
-    * lexically after earlier ones, the reference's ordering contract
-    * (README.md:35-37). Dynamic overwrite clears the partition's old
-    * files first, so rewritten partitions restart at 000000.
-    *
-    * Cost model: one rename per NEW file plus one listing per TOUCHED
-    * partition — the same metadata-op order as the file-commit
-    * protocol that just ran; nothing is read or rewritten. */
-  private def renameNewFragments(dirs: Seq[Path],
-                                 before: Map[String, Set[String]]): Unit =
-    listParquet(dirs).foreach { case (dir, files) =>
-      val old = before.getOrElse(dir, Set.empty)
-      // Spark part-file names encode task order; sorting keeps index
-      // assignment deterministic per write.
-      val fresh = files.diff(old).toSeq.sorted
-      if (fresh.nonEmpty) {
-        var idx = (files.intersect(old))
-          .filter(PathUtils.isFragmentName)
-          .map(PathUtils.fragmentIndex)
-          .foldLeft(-1)(math.max) + 1
-        fresh.foreach { name =>
-          val (from, to) = (new Path(dir, name), new Path(dir, PathUtils.fragmentName(idx)))
-          // A silently failed rename would strand a part-* name that
-          // later appends sort BEFORE, breaking the ordering contract.
-          require(fs.rename(from, to), s"failed to rename fragment $from to $to")
-          idx += 1
-        }
+  /** Move staged files into partition `dir` under reference fragment
+    * names (`NNNNNN_<uuid>.parquet`, hive_dataset.py:51-70, 232-245).
+    * Overwrite first drops the partition's fragments, so indices
+    * restart at 000000. Append continues from the highest surviving
+    * index, so appended fragments always sort lexically after earlier
+    * ones, the reference's ordering contract (README.md:35-37). A
+    * parquet file in the partition without a fragment name (a Spark
+    * `part-*` file left by another writer or an interrupted rename)
+    * sorts after every numeric fragment, which would break that
+    * contract; on append it takes the next indices, ahead of this
+    * write's files. */
+  private def publish(dir: Path, staged: Seq[Path], overwrite: Boolean): Unit = {
+    fs.mkdirs(dir)
+    val existing = fs.listStatus(dir)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath).sortBy(_.getName).toSeq
+    val kept =
+      if (!overwrite) existing
+      else {
+        existing.foreach(p => require(fs.delete(p, false), s"failed to delete fragment $p"))
+        Nil
       }
+    val (fragments, stranded) = kept.partition(p => PathUtils.isFragmentName(p.getName))
+    var idx = fragments.map(p => PathUtils.fragmentIndex(p.getName)).foldLeft(-1)(math.max) + 1
+    (stranded ++ staged).foreach { from =>
+      val to = new Path(dir, PathUtils.fragmentName(idx))
+      // A silently failed rename would strand a file that later
+      // appends sort BEFORE, breaking the ordering contract.
+      require(fs.rename(from, to), s"failed to move fragment $from to $to")
+      idx += 1
     }
-
-  /** Repair fragments stranded by a previous interrupted write: a
-    * crash between the parquet commit and [[renameNewFragments]]
-    * leaves `part-*` names, which sort AFTER every numeric fragment
-    * (letters > digits) — and since later writes would see them in
-    * `before` and never rename them, the ordering violation would
-    * otherwise become permanent. Rename them into the fragment
-    * sequence (continuing from the highest surviving index, ahead of
-    * this write's new files — they committed earlier, so they keep
-    * the earlier positions). */
-  private def repairStrandedFragments(dirs: Seq[Path]): Unit =
-    listParquet(dirs).foreach { case (dir, files) =>
-      val stranded = files.filterNot(PathUtils.isFragmentName).toSeq.sorted
-      if (stranded.nonEmpty) {
-        var idx = files.filter(PathUtils.isFragmentName)
-          .map(PathUtils.fragmentIndex)
-          .foldLeft(-1)(math.max) + 1
-        stranded.foreach { name =>
-          val (from, to) = (new Path(dir, name), new Path(dir, PathUtils.fragmentName(idx)))
-          require(fs.rename(from, to), s"failed to repair stranded fragment $from to $to")
-          idx += 1
-        }
-      }
-    }
+  }
 
   /** Write-time validation, matching hive_dataset.py:358-370:
     * partition columns present, at least one data column, partition
-    * columns are strings. */
+    * columns are strings. Partition values are checked on the staged
+    * listing ([[PathUtils.stagedPartitions]]). */
   private def validate(df: DataFrame): Unit = {
     val cols = df.columns.toSet
     require(
@@ -320,46 +292,39 @@ case class HiveDataset(
 
   /** Compact one partition: read its fragments and rewrite them as
     * the minimal `maxRowsPerFragment`-chunked set (restarting at
-    * fragment 000000 — dynamic overwrite clears the old files
-    * first). The maintenance verb for append-heavy partitions: many
-    * small appends each create a fragment, and scan cost grows with
-    * file count, not bytes (the 100 TB "small files problem"); the
-    * reference exposes the same knob per write
+    * fragment 000000). The maintenance verb for append-heavy
+    * partitions: many small appends each create a fragment, and scan
+    * cost grows with file count, not bytes (the 100 TB "small files
+    * problem"); the reference exposes the same knob per write
     * (hive_dataset.py:17,255) but no rewrite verb.
     *
-    * The partition is materialized (localCheckpoint) BEFORE the
-    * overwrite deletes the files being read — storage cost is ONE
-    * partition, which is why this is per-partition: compact a big
-    * dataset partition-by-partition ([[compact]] does exactly that),
-    * never all at once. Returns false when the partition is absent.
-    * Checkpoint blocks are reclaimed at GC (per-call lifetime). */
-  def compactPartition(values: Map[String, String]): Boolean =
-    readPartition(values) match {
-      case None => false
-      case Some(df) =>
-        write(minimalChunks(df.localCheckpoint()))
-        true
+    * One Spark job: the fragments' footers, read on the driver, give
+    * both the schema and the row count, and nothing is materialized —
+    * the staged write has read every old fragment before the publish
+    * deletes any. Per-partition, so a big dataset is rewritten one
+    * partition per job ([[compact]]). Returns false when the
+    * partition is absent. */
+  def compactPartition(values: Map[String, String]): Boolean = {
+    val (ordered, dir) = partitionDir(values)
+    val files = PathUtils.visibleParquet(fs, dir).map(_._2)
+    if (files.isEmpty) false
+    else {
+      val footers = FooterSchemas.read(spark, files)
+      val rows = footers.flatMap(_.getParquetMetadata.getBlocks.asScala).map(_.getRowCount).sum
+      // `coalesce` is a NARROW dependency — no shuffle; the write's
+      // maxRecordsPerFile still caps any residual imbalance.
+      write(withValues(load(Seq(dir), files, Nil, Some(footers)), ordered)
+        .coalesce(math.max(1L, (rows + maxRowsPerFragment - 1) / maxRowsPerFragment).toInt))
+      true
     }
+  }
 
-  /** Compact every partition, one at a time (bounded storage — see
+  /** Compact every partition, one at a time (see
     * [[compactPartition]]); for an unpartitioned dataset, the whole
     * table. Returns the number of compacted units. */
   def compact(): Int =
-    if (partitionColumns.isEmpty)
-      scan().map { df => write(minimalChunks(df.localCheckpoint())); 1 }.getOrElse(0)
-    else
-      partitions().map(_.toMap).count(compactPartition)
-
-  /** Coalesce a materialized frame to the minimal fragment count
-    * (`ceil(rows / maxRowsPerFragment)`). `coalesce` is a NARROW
-    * dependency — no shuffle; the write's `maxRecordsPerFile` still
-    * caps any residual imbalance. Reading the count is free on a
-    * checkpointed frame. */
-  private def minimalChunks(snapshot: DataFrame): DataFrame = {
-    val rows = snapshot.count()
-    snapshot.coalesce(
-      math.max(1L, (rows + maxRowsPerFragment - 1) / maxRowsPerFragment).toInt)
-  }
+    (if (partitionColumns.isEmpty) Seq(Map.empty[String, String])
+     else partitions().map(_.toMap)).count(compactPartition)
 
   /** Row-level upsert (SCD-1 merge): rows of `df` REPLACE existing
     * rows carrying the same `keyCols` values; every other existing
@@ -376,9 +341,9 @@ case class HiveDataset(
     * leaves its old row behind (include the old partition's rows in
     * `df` to move keys). Key columns must exist in both schemas.
     *
-    * The merged snapshot is materialized (`localCheckpoint`) BEFORE
-    * the overwrite — the anti-join reads the very directories the
-    * write replaces. */
+    * The anti-join reads the very partitions the write replaces; the
+    * staged write reads them in full before the publish deletes any
+    * of their fragments, so nothing is materialized first. */
   def upsert(df: DataFrame, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     keyCols.foreach(k => require(df.columns.contains(k),
@@ -400,18 +365,14 @@ case class HiveDataset(
         old.join(df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
           .unionByName(df, allowMissingColumns = true)
     }
-    write(merged.localCheckpoint())
+    write(merged)
   }
 
   /** Recursively delete one partition directory; validates the key
     * set (hive_dataset.py:330-342). No-op when absent. */
   def deletePartition(values: Map[String, String]): Unit = {
-    require(
-      values.keySet == partitionColumns.toSet,
-      s"Partition column value keys ${values.keySet} do not match partition columns $partitionColumns")
-    val ordered = partitionColumns.map(k => k -> values(k))
-    val dir = new Path(qualifiedBase, PathUtils.partitionPath(ordered))
-    fs.delete(dir, true)
+    require(partitionColumns.nonEmpty, "an unpartitioned dataset has no partition to delete")
+    fs.delete(partitionDir(values)._2, true)
   }
 }
 

@@ -1,6 +1,10 @@
 package graft.util
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+
 import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
 /** Host-side path bookkeeping for Hive-partitioned datasets.
   *
@@ -77,6 +81,63 @@ object PathUtils {
     * (zero-padded index, uuid body — hive_dataset.py:51-62). */
   def isFragmentName(name: String): Boolean =
     FragmentPattern.matches(name.split("/").last)
+
+  /** Whether a path segment is one Spark's file listing skips: `.`-
+    * prefixed, or `_`-prefixed without an `=` (`_SUCCESS`, `.crc`
+    * files, staging directories — not a `_k=v` partition). */
+  private def isHidden(segment: String): Boolean =
+    segment.startsWith("_") && !segment.contains("=") || segment.startsWith(".")
+
+  /** Parquet files under `dir` (one recursive listing), each with its
+    * directory segments below `dir`, sorted by path — the files and
+    * order Spark's schema inference would read. Hidden segments are
+    * skipped as Spark's listing skips them. Empty when `dir` is absent. */
+  def visibleParquet(fs: FileSystem, dir: Path): Seq[(Seq[String], FileStatus)] = {
+    val base = fs.makeQualified(dir).toUri.getPath.stripSuffix("/") + "/"
+    val out = ArrayBuffer.empty[(Seq[String], FileStatus)]
+    try {
+      val it = fs.listFiles(dir, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val segments = f.getPath.toUri.getPath.stripPrefix(base).split("/").toSeq
+        if (f.getPath.getName.endsWith(".parquet") && !segments.exists(isHidden))
+          out += segments.init -> f
+      }
+    } catch { case _: java.io.FileNotFoundException => }
+    out.sortBy(_._2.getPath.toString).toSeq
+  }
+
+  /** Parquet files a Spark write left under the private directory
+    * `staging`, grouped by partition: the ordered `(column, value)`
+    * pairs (empty when `partitionColumns` is), then the partition's
+    * files sorted by name (Spark part-file names encode task order).
+    * Groups come in lexical path order. One recursive listing.
+    *
+    * The values are read off the directory names Spark wrote, so they
+    * are the ones the write saw, however often the input would have
+    * been evaluated. Every group is checked before any is returned:
+    * null, empty-string and literal `__HIVE_DEFAULT_PARTITION__`
+    * values all land in Spark's default-partition directory (which
+    * reads back as null), and values with characters Spark
+    * path-escapes land in a directory whose name is not the raw
+    * `k=v` path — both outside the `k=v` layout, so both fail. */
+  def stagedPartitions(fs: FileSystem, staging: Path, partitionColumns: Seq[String],
+                       who: String): Seq[(Seq[(String, String)], Seq[FileStatus])] = {
+    visibleParquet(fs, staging).groupBy(_._1).toSeq.sortBy(_._1.mkString("/")).map { case (dirs, group) =>
+      val kvs = partitionColumns.zip(dirs).map { case (c, segment) =>
+        val v = segment.substring(segment.indexOf('=') + 1)
+        require(v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME,
+          s"${who}partition column '$c' contains null values, empty-string values or the literal " +
+            s"value ${ExternalCatalogUtils.DEFAULT_PARTITION_NAME} (Spark writes all three to " +
+            "that directory and reads it back as null, outside the k=v layout)")
+        require(ExternalCatalogUtils.escapePathName(v) == v,
+          s"${who}partition column '$c' value '${ExternalCatalogUtils.unescapePathName(v)}' " +
+            "contains characters Spark path-escapes; only path-literal partition values are supported")
+        c -> v
+      }
+      kvs -> group.map(_._2).sortBy(_.getPath.getName)
+    }
+  }
 }
 
 /** `Option`-unwrap helper matching the reference's `unwrap`

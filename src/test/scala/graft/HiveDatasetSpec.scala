@@ -402,6 +402,162 @@ class HiveDatasetSpec extends SparkSpec {
     }
   }
 
+  /** Relative path → size of every file under `root`, hidden ones
+    * (checksums, staging) included. */
+  private def tree(root: String): Map[String, Long] =
+    if (!Files.exists(Paths.get(root))) Map.empty
+    else Files.walk(Paths.get(root)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isRegularFile(_))
+      .map(f => Paths.get(root).relativize(f).toString -> Files.size(f)).toMap
+
+  private def mergeSchemaRead(path: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(path)
+
+  /** `body` with session conf `key` set to `value`, restored after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body` with the footer-schema path switched off: every fragment
+    * set is over a threshold of 0. */
+  private def withDistributedSchema[T](body: => T): T =
+    withConf("spark.sql.sources.parallelPartitionDiscovery.threshold", "0")(body)
+
+  test("write, append and compactPartition run one Spark job; building reads runs none") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p1", "p2"))
+      assert(jobsOf(ds.write(exampleDf))._1 == 1)
+      assert(jobsOf(ds.append(exampleDf))._1 == 1)
+      val (scanJobs, scanned) = jobsOf(ds.scan().get)
+      val (readJobs, read) = jobsOf(ds.readPartition(Map("p1" -> "2", "p2" -> "a")).get)
+      assert(scanJobs == 0 && readJobs == 0, s"scan ran $scanJobs jobs, readPartition $readJobs")
+      assert(scanned.count() == 8 && read.count() == 4)
+      assert(jobsOf(ds.compactPartition(Map("p1" -> "2", "p2" -> "a")))._1 == 1)
+      assert(Files.list(Paths.get(dir, "ds", "p1=2", "p2=a")).toArray
+        .count(_.toString.endsWith(".parquet")) == 1)
+      assertSameData(ds.scan().get, exampleDf.union(exampleDf))
+    }
+  }
+
+  test("footer schemas match mergeSchema inference: evolution, nested structs, case-differing names") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p"))
+      ds.write(Seq(("1", "1", 1L)).toDF("p", "a", "b"))
+      ds.append(Seq(("1", 2L)).toDF("p", "b"))
+      ds.append(Seq(("2", 3L, "x", 4)).toDF("p", "b", "k", "n")
+        .select($"p", $"b", struct($"k", $"n").as("s")))
+      ds.append(Seq(("2", 5L, 6L, "y")).toDF("p", "b", "m", "k")
+        .select($"p", $"b", struct($"m", $"k").as("s")))
+      ds.append(Seq(("2", 7L)).toDF("p", "B"))
+      def check(got: DataFrame, ref: DataFrame): Unit = {
+        assert(got.schema == ref.schema, s"\n${got.schema.treeString}\nvs\n${ref.schema.treeString}")
+        assertSameData(got, ref)
+      }
+      def ordered(df: DataFrame, parts: String*): DataFrame =
+        df.select((df.columns.filterNot(parts.contains).sorted ++ parts).map(col).toSeq: _*)
+      Seq("1", "2").foreach { p =>
+        val ref = mergeSchemaRead(s"$dir/ds/p=$p").withColumn("p", lit(p))
+        check(ds.readPartition(Map("p" -> p)).get, ordered(ref, "p"))
+      }
+      val ref = mergeSchemaRead(s"$dir/ds").withColumn("p", $"p".cast("string"))
+      check(ds.scan().get, ordered(ref, "p"))
+      // the distributed path gives the same rows and schema
+      withDistributedSchema {
+        check(ds.scan().get, ordered(ref, "p"))
+        check(ds.readPartition(Map("p" -> "2")).get,
+          ordered(mergeSchemaRead(s"$dir/ds/p=2").withColumn("p", lit("2")), "p"))
+      }
+    }
+  }
+
+  test("the distributed schema path is taken over the threshold and reads the same data") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p1", "p2"))
+      ds.write(exampleDf)
+      ds.append(exampleDf.withColumn("w", lit("x")))
+      val small = ds.scan().get
+      withDistributedSchema {
+        val (jobs, big) = jobsOf(ds.scan().get)
+        assert(jobs > 0, "threshold 0 must fall back to Spark's schema-merge job")
+        assert(big.schema == small.schema)
+        assertSameData(big, small)
+        val part = ds.readPartition(Map("p1" -> "1", "p2" -> "a")).get
+        assertSameData(part, small.where($"p1" === "1" && $"p2" === "a"))
+        assert(part.schema == small.schema.copy(
+          fields = small.schema.fields.map(f => if (Seq("p1", "p2").contains(f.name)) f.copy(nullable = false) else f)))
+      }
+    }
+  }
+
+  test("scan returns partition values as the strings on disk (01, 1 and 1.10 stay apart)") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p"))
+      val df = Seq(("01", 1L), ("1", 2L), ("1.10", 3L)).toDF("p", "v")
+      ds.write(df)
+      assert(ds.partitionPaths() == Seq("p=01", "p=1", "p=1.10"))
+      // with Spark's partition-type inference on (its default; graft
+      // sessions turn it off) on both schema paths
+      withConf("spark.sql.sources.partitionColumnTypeInference.enabled", "true") {
+        assertSameData(ds.scan().get, df)
+        withDistributedSchema(assertSameData(ds.scan().get, df))
+        assert(ds.scan().get.schema("p").dataType == org.apache.spark.sql.types.StringType)
+      }
+    }
+  }
+
+  test("a nondeterministic input is evaluated once: rows land where the published partitions say") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p"))
+      HiveDatasetSpec.evaluations.set(0)
+      // "a" on the first evaluation, "b" on every later one
+      val flip = udf(() => if (HiveDatasetSpec.evaluations.getAndIncrement() == 0) "a" else "b")
+        .asNondeterministic()
+      ds.write(Seq(1L).toDF("v").withColumn("p", flip()))
+      val got = ds.scan().get.collect()
+      assert(got.length == 1)
+      val p = got.head.getAs[String]("p")
+      assert(ds.partitionPaths() == Seq(s"p=$p"))
+      val files = tree(s"$dir/ds").keys.filter(_.endsWith(".parquet")).toSeq
+      assert(files.length == 1 && files.forall(f => f.startsWith(s"p=$p/") &&
+        graft.util.PathUtils.isFragmentName(f)), s"files: $files")
+    }
+  }
+
+  test("a write whose input fails mid-job leaves the dataset unchanged and no staging behind") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p1"))
+      ds.write(Seq(("1", 1L), ("2", 2L)).toDF("p1", "v"))
+      val before = tree(s"$dir/ds")
+      val boom = udf((id: Long) => if (id == 3L) throw new IllegalStateException("boom") else id)
+        .asNondeterministic()
+      // two tasks: one commits its files to staging, the other fails
+      val bad = spark.range(0, 4, 1, 2).select(boom($"id").as("v"), ($"id" % 2).cast("string").as("p1"))
+      intercept[Exception](ds.write(bad))
+      intercept[Exception](ds.append(bad))
+      assert(tree(s"$dir/ds") == before)
+      assert(!new java.io.File(s"$dir/ds").list().exists(_.startsWith("_graft_staging")))
+      assertSameData(ds.scan().get, Seq((1L, "1"), (2L, "2")).toDF("v", "p1"))
+    }
+  }
+
+  test("null, empty-string and literal __HIVE_DEFAULT_PARTITION__ values are rejected; nothing is published") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p1"))
+      ds.write(Seq(("1", 1L)).toDF("p1", "v"))
+      val before = tree(s"$dir/ds")
+      Seq(null, "", "__HIVE_DEFAULT_PARTITION__").foreach { bad =>
+        val ex = intercept[IllegalArgumentException](
+          ds.append(Seq(("1", 2L), (bad, 3L)).toDF("p1", "v")))
+        assert(ex.getMessage.contains("null") && ex.getMessage.contains("empty-string") &&
+          ex.getMessage.contains("__HIVE_DEFAULT_PARTITION__"), ex.getMessage)
+        assert(tree(s"$dir/ds") == before, s"value '$bad' changed the dataset")
+      }
+    }
+  }
+
   test("relative dataset URLs work") {
     val rel = s"graft-rel-test-${System.nanoTime()}"
     val ds = HiveDataset(rel, Seq("p1"))
@@ -413,4 +569,10 @@ class HiveDatasetSpec extends SparkSpec {
         new java.io.File(new java.io.File(".").getCanonicalPath, rel))
     }
   }
+}
+
+object HiveDatasetSpec {
+  /** Evaluation counter for the nondeterministic-input spec: JVM-wide,
+    * so every task of a local-mode job sees it. */
+  val evaluations = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -51,6 +51,26 @@ class DeltaDatasetSpec extends SparkSpec {
     }
   }
 
+  test("a partitioned append runs one Spark job; partitions come from the staged write") {
+    withTempDir { dir =>
+      val table = s"$dir/t"
+      val ds = new DeltaDataset(table, Seq("p", "n"))
+      ds.write(Seq((1L, "A", 1)).toDF("v", "p", "n"))
+      val (jobs, v1) = jobsOf(ds.append(Seq((2L, "B", 1), (3L, "B", 2), (4L, "A", 1)).toDF("v", "p", "n")))
+      assert(jobs == 1, s"partitioned append ran $jobs jobs")
+      assert(v1 == 1L)
+      val added = DeltaReader.snapshot(table).get.files.map(_.partitionValues).toSet
+      assert(added == Set(Map("p" -> "A", "n" -> "1"), Map("p" -> "B", "n" -> "1"),
+        Map("p" -> "B", "n" -> "2")))
+      assertSameData(ds.scan().get,
+        Seq((1L, "A", 1), (2L, "B", 1), (3L, "B", 2), (4L, "A", 1)).toDF("v", "p", "n"))
+      // an empty append lands nothing and still commits
+      assert(ds.append(Seq.empty[(Long, String, Int)].toDF("v", "p", "n")) == 2L)
+      assert(DeltaReader.snapshot(table).get.files.length == 4)
+      assert(!new java.io.File(table).list().exists(_.startsWith("staging-")))
+    }
+  }
+
   test("overwrite replaces the head but time travel keeps every version") {
     withTempDir { dir =>
       val table = s"$dir/t"
