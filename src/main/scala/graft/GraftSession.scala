@@ -56,9 +56,6 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.catalyst.GraftFunctions.register(spark)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.NativeExprRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.NativeExprRewrite
     spark
   }
 }

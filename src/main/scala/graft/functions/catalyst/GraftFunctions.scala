@@ -99,8 +99,8 @@ object GraftFunctions {
     // rolling hash running as interpreted lambdas; every entry point
     // that registers the functions should also get the native-codegen
     // rewrite (NativeExprSpec proves the two paths bitwise-equal).
-    // GraftSession.local and GraftExtensions already install it; this
-    // covers sessions built straight from a builder (Bench, Verify).
+    // GraftExtensions installs it through the session extensions;
+    // this covers every other session, GraftSession.local included.
     if (!spark.experimental.extraOptimizations.contains(graft.plans.NativeExprRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.NativeExprRewrite

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32
 
@@ -102,6 +104,18 @@ object DeletionVectors {
     require(s.length == 20, s"decodeUUID: need 20 chars, got ${s.length}")
     val bb = ByteBuffer.wrap(z85Decode(s))
     new java.util.UUID(bb.getLong, bb.getLong)
+  }
+
+  /** Where a `u` descriptor's sidecar file lives: the id is
+    * `<optional random prefix><20-char Z85 uuid>`, resolved at the
+    * TABLE root as `<root>/<prefix>/deletion_vector_<uuid>.bin`. */
+  def sidecarPath(root: Path, pathOrInlineDv: String): Path = {
+    require(pathOrInlineDv.length >= 20,
+      s"deletion vector: 'u' id '$pathOrInlineDv' is shorter than its 20-char UUID")
+    val prefix = pathOrInlineDv.dropRight(20)
+    val uuid = decodeUUID(pathOrInlineDv.takeRight(20))
+    val dir = if (prefix.isEmpty) root else new Path(root, prefix)
+    new Path(dir, s"deletion_vector_$uuid.bin")
   }
 
   // ---- 64-bit RoaringBitmapArray, "portable" format ----------------

@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   *    pattern, metadata cost proportional to the write;
   *  - the commit is a JSON line file `_delta_log/<v>.json` published
   *    with the [[ManagedDataset]] first-writer-wins primitive
-  *    (POSIX link(2) on `file://`); a lost race re-reads the head,
-  *    re-validates, and retries with the SAME already-landed data
-  *    files — appends never rewrite data;
+  *    (POSIX link(2) on `file://`) by [[DeltaWriter.commitLoop]],
+  *    the one retry loop of every verb: a lost race re-reads the
+  *    head, re-validates, and retries with the SAME already-landed
+  *    data files — appends never rewrite data;
   *  - `write` is a LOG-level overwrite: one commit carrying `remove`
   *    actions for every current file plus the new `add`s — old
   *    files stay on disk, so [[DeltaReader.snapshotAt]] time travel
@@ -344,6 +345,139 @@ object DeltaWriter {
       .findFirstMatchIn(new String(bytes, "UTF-8")).map(_.group(1).toLong)
   }
 
+  /** A table's filesystem, qualified root and log directory, plus the
+    * log's path encoders — resolved once per verb. */
+  private[sources] final class TableRoot(val cleanUrl: String)
+                                         (implicit spark: SparkSession) {
+    val fs: FileSystem =
+      new Path(cleanUrl).getFileSystem(spark.sessionState.newHadoopConf())
+    val base: Path = fs.makeQualified(new Path(cleanUrl))
+    val logDir = new Path(base, "_delta_log")
+    private val basePath = base.toUri.getPath.stripSuffix("/")
+
+    /** Table-relative, RFC-2396-percent-encoded — the form the log
+      * stores and [[DeltaReader]] decodes. */
+    def rel(p: Path): String = relEncode(basePath, p)
+
+    /** [[rel]] for files under the root; files logged with ABSOLUTE
+      * paths outside it (shallow clones, `p`-mode imports) keep their
+      * absolute URI, so a remove or re-add matches the logged add. */
+    def relOrAbs(p: Path): String =
+      if (p.toUri.getPath.startsWith(basePath + "/")) rel(p)
+      else p.toUri.toString
+  }
+
+  /** The one first-writer-wins commit loop every verb publishes
+    * through. Per attempt it reads the head, lets `render` run the
+    * verb's race checks against it and render the commit's actions
+    * (`None` = nothing to commit: the head's version is returned),
+    * prepends the `commitInfo` line, publishes `<head + 1>.json` and
+    * checkpoints on the interval. A lost publish re-reads the head and
+    * tries again; data files landed before the loop stay valid across
+    * attempts, only the log lines are recomputed. */
+  private[sources] def commitLoop(t: TableRoot, verb: String, operation: String)
+      (render: Option[DeltaReader.DeltaSnapshot] => Option[Seq[String]])
+      (implicit spark: SparkSession): Long = {
+    var attempt = 0
+    while (attempt < MaxCommitAttempts) {
+      val head = DeltaReader.snapshot(t.cleanUrl)
+      val version = head.map(_.version + 1).getOrElse(0L)
+      render(head) match {
+        case None => return head.map(_.version).getOrElse(-1L)
+        case Some(actions) =>
+          val ict = ictLines(head.map(_.configuration).getOrElse(Map.empty),
+            t.fs, t.logDir, version - 1, operation)
+          if (publishCommit(t.fs, t.logDir, version,
+              (ict ++ actions).mkString("\n") + "\n")) {
+            maybeCheckpoint(t, version)
+            return version
+          }
+      }
+      attempt += 1
+    }
+    throw new IllegalStateException(
+      s"DeltaWriter.$verb: lost the commit race $MaxCommitAttempts times " +
+        s"on ${t.cleanUrl} — giving up")
+  }
+
+  /** [[commitLoop]] for verbs that need an existing table. */
+  private def commitOnHead(t: TableRoot, verb: String, operation: String)
+      (render: DeltaReader.DeltaSnapshot => Option[Seq[String]])
+      (implicit spark: SparkSession): Long =
+    commitLoop(t, verb, operation)(head => render(head.getOrElse(
+      throw new IllegalStateException(
+        s"DeltaWriter.$verb: table at ${t.cleanUrl} vanished mid-commit"))))
+
+  /** Live files keyed the way scans name them (`_metadata.file_path`). */
+  private def byFileKey(files: Seq[DeltaReader.DeltaFile])
+      : Map[String, DeltaReader.DeltaFile] =
+    files.map(f => new Path(f.path).toUri.toString -> f).toMap
+
+  /** The `remove` action retiring a live file. */
+  private def removeLine(t: TableRoot, f: DeltaReader.DeltaFile,
+                         dataChange: Boolean): String =
+    s"""{"remove":{"path":"${jsonEscape(t.relOrAbs(new Path(f.path)))}",""" +
+      s""""deletionTimestamp":${System.currentTimeMillis},""" +
+      s""""dataChange":$dataChange}}"""
+
+  /** A log `partitionValues` object; a null VALUE ({"p":null} = the
+    * null partition) is legal and renders as a JSON null. */
+  private def partitionValuesJson(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) =>
+      s""""${jsonEscape(k)}":${
+        if (v == null) "null" else s""""${jsonEscape(v)}""""}"""
+    }.mkString("{", ",", "}")
+
+  private def dvJson(d: DeltaReader.DvDescriptor): String =
+    s""","deletionVector":{"storageType":"${jsonEscape(d.storageType)}",""" +
+      s""""pathOrInlineDv":"${jsonEscape(d.pathOrInlineDv)}"""" +
+      d.offset.map(o => s""","offset":$o""").getOrElse("") +
+      s""","sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
+
+  /** The `add` action re-stating a live file under `path` with
+    * deletion vector `dv`: size, mtime, stats (file content is
+    * untouched, and Delta treats a DV'd file's bounds as sound
+    * supersets) and its row-id assignment carry through. */
+  private def liveAddLine(path: String, f: DeltaReader.DeltaFile,
+                          dv: Option[DeltaReader.DvDescriptor]): String =
+    s"""{"add":{"path":"${jsonEscape(path)}",""" +
+      s""""partitionValues":${partitionValuesJson(f.partitionValues)},""" +
+      s""""size":${f.size},"modificationTime":${f.modificationTime},""" +
+      s""""dataChange":true${dv.map(dvJson).getOrElse("")}""" +
+      f.stats.map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("") +
+      rowIdCarry(f) + "}}"
+
+  /** Footer stats and `add` lines for freshly landed files. */
+  private def landedAdds(t: TableRoot, files: Seq[(Seq[(String, String)], Path)],
+                         statsSchema: StructType, dataChange: Boolean)
+      : (Seq[String], Seq[Option[String]]) = {
+    val stats = files.map { case (_, p) => statsJson(t.fs, p, statsSchema) }
+    (files.zip(stats).map { case ((kvs, p), st) =>
+      newFileAddLine(t.fs, p, t.rel(p), kvs, dataChange, st) }, stats)
+  }
+
+  /** Record counts of landed files, for row-id stamping. */
+  private def recordCounts(files: Seq[(Seq[(String, String)], Path)],
+                           stats: Seq[Option[String]])
+                          (implicit spark: SparkSession): Seq[Long] =
+    files.zip(stats).map { case ((_, p), st) => numRecordsOf(st, p) }
+
+  /** Fresh row ids for new `adds` above `head`'s watermark, and the
+    * `delta.rowTracking` domain line advancing it — recomputed per
+    * attempt (the watermark and the commit version both move under
+    * races). */
+  private def stampRowIds(head: DeltaReader.DeltaSnapshot, adds: Seq[String],
+                          counts: Seq[Long]): (Seq[String], Seq[String]) = {
+    var next = rowIdHighWaterMark(head) + 1
+    val stamped = adds.zip(counts).map { case (line, n) =>
+      val out = spliceAddFields(line,
+        s""","baseRowId":$next,"defaultRowCommitVersion":${head.version + 1}""")
+      next += n
+      out
+    }
+    (stamped, Seq(rowTrackingDomainLine(next - 1)))
+  }
+
   /** Land `df` as one Delta commit on `url`; returns the committed
     * version. `overwrite = true` additionally removes every
     * pre-commit file from the log (not from disk).
@@ -423,10 +557,7 @@ object DeltaWriter {
       s"Dataframe should have more columns, require at least " +
         s"$partitionColumns, got ${df.columns.toSeq}")
 
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
+    val t = new TableRoot(cleanUrl)
 
     def validateAgainst(snap: DeltaReader.DeltaSnapshot): Unit = {
       enforceWritable(snap, "write")
@@ -524,23 +655,12 @@ object DeltaWriter {
           .map { case (n, sf) =>
             StructField(stampedPhysName(sf), sf.dataType, sf.nullable) })
     }
-    val newFiles = landFiles(fs, qualifiedBase, cleanUrl, df,
+    val newFiles = landFiles(t.fs, t.base, cleanUrl, df,
       partitionColumns, physW,
       snapGen.map(physTypesFor).getOrElse(Map.empty) ++ allocPhysTypes)
-    val fileStats: Seq[Option[String]] =
-      newFiles.map { case (_, p) => statsJson(fs, p, statsSchema) }
-
-    // table-relative, RFC-2396-percent-encoded — the form the log
-    // stores and [[DeltaReader]] decodes; removes must re-encode the
-    // reader's DECODED absolute paths so the strings match the adds
-    // they tombstone
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    def relEncoded(p: Path): String = relEncode(basePath, p)
-    val adds = newFiles.zip(fileStats).map { case ((kvs, p), st) =>
-      newFileAddLine(fs, p, relEncoded(p), kvs, dataChange = true, st) }
+    val (adds, fileStats) = landedAdds(t, newFiles, statsSchema, dataChange = true)
     // row-tracking stamping input, resolved once (not per retry)
-    lazy val writeRecCounts: Seq[Long] = newFiles.zip(fileStats)
-      .map { case ((_, p), st) => numRecordsOf(st, p) }
+    lazy val writeRecCounts: Seq[Long] = recordCounts(newFiles, fileStats)
 
     // identity high-watermark bookkeeping: the landed files' footer
     // stats (already computed for the adds) give each column's
@@ -594,37 +714,16 @@ object DeltaWriter {
           }),
         partitionColumns, Map.empty, System.currentTimeMillis))
 
-    // commit with first-writer-wins retries: the landed files stay
-    // valid; only the log line is recomputed per attempt
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val snap = DeltaReader.snapshot(cleanUrl)
-      snap.foreach(validateAgainst)
-      // a constraint added concurrently between the first snapshot and
-      // publish must not be committed violated: re-enforce on change
-      snap.map(checkConstraintsOf).filter(_ != enforced).foreach { _ =>
-        snap.foreach(s => enforceCheckConstraints(s, df))
-        enforced = snap.map(checkConstraintsOf).get
-      }
-      // a racing writer may have published OUR transaction id while
-      // we were landing files — abort unpublished (orphans vacuum)
-      txn.foreach { case (app, v) =>
-        snap.foreach { s =>
-          if (s.txns.get(app).exists(_ >= v)) return s.version
-        }
-      }
-      val version = snap.map(_.version + 1).getOrElse(0L)
+    // the commit body against one head: the landed files stay valid,
+    // only these lines are recomputed per attempt
+    def actions(snap: Option[DeltaReader.DeltaSnapshot]): Seq[String] = {
       val txnLine = txn.map { case (app, v) =>
         s"""{"txn":{"appId":"${jsonEscape(app)}","version":$v,""" +
           s""""lastUpdated":${System.currentTimeMillis}}}"""
       }.toSeq
       val removes =
         if (!overwrite) Seq.empty
-        else snap.toSeq.flatMap(_.files).map { f =>
-          s"""{"remove":{"path":"${jsonEscape(relEncoded(new Path(f.path)))}",""" +
-            s""""deletionTimestamp":${System.currentTimeMillis},""" +
-            """"dataChange":true}}"""
-        }
+        else snap.toSeq.flatMap(_.files).map(removeLine(t, _, dataChange = true))
       val head = if (snap.isEmpty) metaLines else Seq.empty
       // columns we ALLOCATED identity values for: the watermark we
       // allocated FROM must still be the head's, or a concurrent
@@ -719,35 +818,30 @@ object DeltaWriter {
           }
         case _ => Seq.empty
       }
-      val ict = ictLines(snap.map(_.configuration).getOrElse(Map.empty),
-        fs, logDir, version - 1, "WRITE")
       // row tracking: stamp fresh base row ids above the HEAD's high
       // watermark and advance the delta.rowTracking domain in the
-      // same commit — recomputed per attempt (the watermark and the
-      // commit version both move under races)
+      // same commit
       val (adds2, rtDomain) = snap.filter(rowTrackingOn) match {
         case None => (adds, Seq.empty[String])
-        case Some(s) =>
-          var next = rowIdHighWaterMark(s) + 1
-          val stamped = adds.zip(writeRecCounts).map { case (line, n) =>
-            val out = spliceAddFields(line,
-              s""","baseRowId":$next,"defaultRowCommitVersion":$version""")
-            next += n
-            out
-          }
-          (stamped, Seq(rowTrackingDomainLine(next - 1)))
+        case Some(s) => stampRowIds(s, adds, writeRecCounts)
       }
-      val body = (ict ++ head ++ evolution ++ txnLine ++ removes ++ adds2 ++
-        rtDomain).mkString("\n") + "\n"
-      if (publishCommit(fs, logDir, version, body)) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, version)
-        return version
-      }
-      attempt += 1
+      head ++ evolution ++ txnLine ++ removes ++ adds2 ++ rtDomain
     }
-    throw new IllegalStateException(
-      s"DeltaWriter: lost the commit race $MaxCommitAttempts times on " +
-        s"$cleanUrl — giving up (is a runaway writer looping?)")
+
+    commitLoop(t, "write", "WRITE") { snap =>
+      snap.foreach(validateAgainst)
+      // a constraint added concurrently between the first snapshot and
+      // publish must not be committed violated: re-enforce on change
+      snap.map(checkConstraintsOf).filter(_ != enforced).foreach { _ =>
+        snap.foreach(s => enforceCheckConstraints(s, df))
+        enforced = snap.map(checkConstraintsOf).get
+      }
+      // a racing writer may have published OUR transaction id while
+      // we were landing files — abort unpublished (orphans vacuum)
+      if (txn.exists { case (app, v) =>
+            snap.exists(_.txns.get(app).exists(_ >= v)) }) None
+      else Some(actions(snap))
+    }
   }
 
   /** Mask every row matching `cond` behind per-file deletion-vector
@@ -769,14 +863,12 @@ object DeltaWriter {
     *     remove+re-add of each touched file with its new descriptor
     *     (same version — [[DeltaReader]] resolves the tie to the add).
     *
-    * First-writer-wins safety: on a lost race the head is re-read and
-    * the touched files must still be live with UNCHANGED descriptors
-    * (the masks were computed against our snapshot) — anything else
-    * raises loudly; the landed sidecars are content-addressed by
-    * fresh UUIDs, so retries never collide. No match = no commit. */
+    * Steps 2-3 are [[copyOnWriteCommit]] with no inserts, published
+    * through [[commitLoop]]; its race checks apply. No match = no
+    * commit. */
   def delete(url: String, cond: org.apache.spark.sql.Column)
             (implicit spark: SparkSession): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val cleanUrl = url.stripSuffix("/")
     val snap = DeltaReader.snapshot(cleanUrl).getOrElse(
       throw new IllegalArgumentException(
@@ -787,11 +879,6 @@ object DeltaWriter {
     require(!snap.configuration.get("delta.appendOnly").contains("true"),
       s"DeltaWriter.delete: table at $cleanUrl is append-only " +
         "(delta.appendOnly=true) — DELETE refused")
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
-
     // with the change feed on, the matched rows feed BOTH the mask
     // and the cdc files: pin them so the two cannot diverge
     val cdfOn =
@@ -799,133 +886,11 @@ object DeltaWriter {
     val matchedRows0 = DeltaReader.scanWithRowIndex(snap).where(cond)
     val matchedRows =
       if (cdfOn) matchedRows0.localCheckpoint() else matchedRows0
-    val matched = matchedRows.select(col("__fp"), col("__ri"))
-    val fileKeys: Seq[String] = matched.select(col("__fp")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    if (fileKeys.isEmpty) return snap.version
-    val cdcDeleteLines =
-      if (!cdfOn) Seq.empty
-      else cdcLandAndLines(fs, qualifiedBase, cleanUrl, snap.configuration,
-        snap.partitionColumns, physColumnsFor(snap, "delete"),
-        Some(matchedRows.drop("__fp", "__ri")
-          .withColumn("_change_type", lit("delete"))), physTypesFor(snap))
-    val byKey: Map[String, DeltaReader.DeltaFile] =
-      snap.files.map(f => new Path(f.path).toUri.toString -> f).toMap
-    fileKeys.foreach(k => require(byKey.contains(k),
-      s"DeltaWriter.delete: matched file $k missing from the snapshot"))
-
-    // old masks for the touched files ride in relationally — matched
-    // rows exclude them (the scan already applied the DVs), so the
-    // union is disjoint and the new sidecar holds old ∪ new
-    import spark.implicits._
-    val keyFrame = fileKeys.toDF("__fp")
-    val oldMasks = DeltaReader.deletedRowsFrame(snap)
-      .map(_.select(col("__dv_fp").as("__fp"), col("__dv_ri").as("__ri"))
-        .join(broadcast(keyFrame), Seq("__fp"), "left_semi"))
-    val all = oldMasks.map(matched.unionByName(_)).getOrElse(matched)
-    val conf = spark.sparkContext.broadcast(
-      new DeltaReader.SerializableConf(spark.sessionState.newHadoopConf()))
-    val rootStr = qualifiedBase.toString
-    // one sidecar per touched file, serialized where the rows are
-    val descriptors: Map[String, (String, Int, Long)] = all
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (fp, it) =>
-        val idx = it.map(_._2).toArray
-        val data = DeletionVectors.serialize(idx.toSeq)
-        val uuid = java.util.UUID.randomUUID()
-        val p = new Path(rootStr, s"deletion_vector_$uuid.bin")
-        val out = p.getFileSystem(conf.value.value).create(p, false)
-        try {
-          out.write(Array(DeletionVectors.FileFormatVersion))
-          out.write(DeletionVectors.frame(data))
-        } finally out.close()
-        (fp, DeletionVectors.encodeUUID(uuid), data.length, idx.length.toLong)
-      }
-      .collect() // file-count bounded: one descriptor per touched file
-      .map { case (fp, u, n, c) => fp -> ((u, n, c)) }.toMap
-
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    // files logged with ABSOLUTE paths (shallow clones) re-serialize
-    // as absolute URIs — same leniency as checkpointRows
-    def relOrAbs(p: Path): String =
-      if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
-      else p.toUri.toString
-    def dvAddLine(f: DeltaReader.DeltaFile, d: (String, Int, Long)): String = {
-      // a null partition VALUE is legal ({"p":null} = the null
-      // partition) and must re-serialize as a JSON null, not crash
-      val pv = f.partitionValues.map { case (k, v) =>
-        s""""${jsonEscape(k)}":${
-          if (v == null) "null" else s""""${jsonEscape(v)}""""}"""
-      }.mkString(",")
-      // d._3 counts the MERGED mask (old ∪ new rows — the scan fed
-      // `matched` with old masks applied, so the union is disjoint).
-      // File content is untouched, so its stats carry through (Delta
-      // treats DV'd bounds as non-tight supersets — still sound).
-      val stats = f.stats
-        .map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("")
-      s"""{"add":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-        s""""partitionValues":{$pv},"size":${f.size},""" +
-        s""""modificationTime":${f.modificationTime},"dataChange":true,""" +
-        s""""deletionVector":{"storageType":"u",""" +
-        s""""pathOrInlineDv":"${d._1}","offset":1,"sizeInBytes":${d._2},""" +
-        s""""cardinality":${d._3}}$stats${rowIdCarry(f)}}}"""
-    }
-
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val head = DeltaReader.snapshot(cleanUrl).getOrElse(
-        throw new IllegalStateException(
-          s"DeltaWriter.delete: table at $cleanUrl vanished mid-delete"))
-      val headByKey = head.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
-      fileKeys.foreach { k =>
-        val now = headByKey.get(k)
-        require(now.exists(_.deletionVector == byKey(k).deletionVector),
-          s"DeltaWriter.delete: concurrent modification of $k — the " +
-            "row masks were computed against a stale snapshot; re-run")
-      }
-      val version = head.version + 1
-      val needsUpgrade = !(head.protocol.minReaderVersion >= 3 &&
-        head.protocol.readerFeatures.exists(_.contains("deletionVectors")))
-      val protoLine =
-        if (!needsUpgrade) Seq.empty
-        else {
-          // legacy versions imply feature sets (PROTOCOL.md's
-          // legacy-to-table-features mapping); they must ALL surface
-          // explicitly once the table goes reader 3 / writer 7, or
-          // other engines silently stop enforcing them (CHECK
-          // constraints, CDF, generated/identity columns)
-          val impliedWriter = legacyWriterFeatures(head.protocol.minWriterVersion)
-          val impliedReader =
-            if (head.protocol.minReaderVersion >= 2) Seq("columnMapping")
-            else Seq.empty
-          val rf = (head.protocol.readerFeatures.getOrElse(impliedReader) :+
-            "deletionVectors").distinct.sorted
-          val wf = (head.protocol.writerFeatures.getOrElse(impliedWriter) :+
-            "deletionVectors").distinct.sorted
-          Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":[${rf.map(x => s""""$x"""").mkString(",")}],""" +
-            s""""writerFeatures":[${wf.map(x => s""""$x"""").mkString(",")}]}}""")
-        }
-      val ict = ictLines(head.configuration, fs, logDir, head.version, "DELETE")
-      val lines = ict ++ protoLine ++ cdcDeleteLines ++ fileKeys.flatMap { k =>
-        val f = byKey(k)
-        Seq(
-          s"""{"remove":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-            s""""deletionTimestamp":${System.currentTimeMillis},""" +
-            """"dataChange":true}}""",
-          dvAddLine(f, descriptors(k)))
-      }
-      if (publishCommit(fs, logDir, version, lines.mkString("\n") + "\n")) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, version)
-        return version
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"DeltaWriter.delete: lost the commit race $MaxCommitAttempts times " +
-        s"on $cleanUrl — giving up")
+    copyOnWriteCommit(cleanUrl, snap, matchedRows.select(col("__fp"), col("__ri")),
+      None, "DELETE", cdcChanges =
+        if (!cdfOn) None
+        else Some(matchedRows.drop("__fp", "__ri")
+          .withColumn("_change_type", lit("delete"))))
   }
 
   /** MERGE INTO on a real `_delta_log` table — keyed whole-row
@@ -953,13 +918,10 @@ object DeltaWriter {
     * reads it as deletes of the old row images plus inserts of the
     * new ones — exactly a merge's CDC shape.
     *
-    * First-writer-wins safety mirrors [[delete]]: on a lost race the
-    * head is re-read and every touched file must still be live with
-    * an UNCHANGED descriptor (the masks were computed against our
-    * snapshot) — anything else raises loudly; landed files stay
-    * valid across retries, orphans of an aborted attempt are
-    * [[vacuum]] fodder. Returns the committed version, or the current
-    * one when the merge is a no-op.
+    * Published by [[copyOnWriteCommit]] through [[commitLoop]], whose
+    * race checks apply; orphans of an aborted attempt are [[vacuum]]
+    * fodder. Returns the committed version, or the current one when
+    * the merge is a no-op.
     *
     * Scale shape (100 TB): one key-keyed semi-join — source keys
     * BROADCAST when the estimated key bytes fit under
@@ -1131,7 +1093,7 @@ object DeltaWriter {
             lit(null).cast("bigint").as(mr)): _*)
         inserts.join(hinted(oldIds), keyCols, "left")
     }
-    copyOnWriteCommit(cleanUrl, snap, matched, insertsOut, "MERGE",
+    copyOnWriteCommit(cleanUrl, snap, matched, Some(insertsOut), "MERGE",
       idObserved, cdc, rtm)
   }
 
@@ -1144,8 +1106,8 @@ object DeltaWriter {
     * updating a partition column is allowed — the rewritten rows
     * simply land in their new partition directories. Returns the
     * committed version, or the current one when nothing matched.
-    * Race safety, cost shape and the change-feed reading
-    * (delete-old + insert-new) are exactly [[merge]]'s. */
+    * Cost shape and the change-feed reading (delete-old + insert-new)
+    * are [[merge]]'s; the commit is [[copyOnWriteCommit]]'s. */
   def update(url: String, cond: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column])
             (implicit spark: SparkSession): Long = {
@@ -1229,19 +1191,27 @@ object DeltaWriter {
           .unionByName(postimages
             .select(snap.schema.fieldNames.map(col).toSeq: _*)
             .withColumn("_change_type", lit("update_postimage"))))
-    copyOnWriteCommit(cleanUrl, snap, mask, postimages, "UPDATE",
+    copyOnWriteCommit(cleanUrl, snap, mask, Some(postimages), "UPDATE",
       cdcChanges = cdcU, rtNames = rtu)
   }
 
-  /** Shared [[merge]]/[[update]] tail: mask `maskRows` (`__fp`,
-    * `__ri` against `snap`'s live files) behind per-file DV sidecars,
-    * land `inserts` as new data files, publish ONE commit carrying
-    * the protocol upgrade (when needed), removes + DV re-adds and the
-    * new adds — with [[delete]]'s first-writer-wins retry contract.
-    * No mask and no insert = no commit. */
+  /** Shared [[delete]]/[[merge]]/[[update]] tail: mask `maskRows`
+    * (`__fp`, `__ri` against `snap`'s live files) behind per-file DV
+    * sidecars, land `inserts` as new data files, and publish ONE
+    * commit carrying the protocol upgrade (when needed), removes + DV
+    * re-adds and the new adds. No mask and no insert = no commit;
+    * `inserts = None` ([[delete]]) skips the insert machinery and its
+    * emptiness job altogether.
+    *
+    * Race safety ([[commitLoop]]): every touched file must still be
+    * live at the head with an UNCHANGED deletion vector (the masks were
+    * computed against `snap`), and when rows are inserted the head's
+    * schema and partitioning must be the ones they were landed for —
+    * anything else raises loudly. Sidecars are named by fresh UUIDs,
+    * so retries never collide. */
   private def copyOnWriteCommit(cleanUrl: String,
                                 snap: DeltaReader.DeltaSnapshot,
-                                maskRows: DataFrame, inserts: DataFrame,
+                                maskRows: DataFrame, inserts: Option[DataFrame],
                                 operation: String,
                                 idObserved: Map[String, Long] = Map.empty,
                                 cdcChanges: Option[DataFrame] = None,
@@ -1250,23 +1220,21 @@ object DeltaWriter {
                                (implicit spark: SparkSession): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
+    val verb = operation.toLowerCase
+    val t = new TableRoot(cleanUrl)
 
     val fileKeys: Seq[String] = maskRows.select(col("__fp")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    val insertsEmpty = inserts.isEmpty
-    if (fileKeys.isEmpty && insertsEmpty) return snap.version
-    val byKey: Map[String, DeltaReader.DeltaFile] =
-      snap.files.map(f => new Path(f.path).toUri.toString -> f).toMap
+    val toInsert = inserts.filterNot(_.isEmpty)
+    if (fileKeys.isEmpty && toInsert.isEmpty) return snap.version
+    val byKey = byFileKey(snap.files)
     fileKeys.foreach(k => require(byKey.contains(k),
-      s"DeltaWriter.$operation: matched file $k missing from the snapshot"))
+      s"DeltaWriter.$verb: matched file $k missing from the snapshot"))
 
     // merged masks = old ∪ new, disjoint (the scan already applied
-    // the old DVs) — one sidecar per touched file, executor-side
-    val descriptors: Map[String, (String, Int, Long)] =
+    // the old DVs) — one sidecar per touched file, serialized ON AN
+    // EXECUTOR; the driver only collects one descriptor per file
+    val descriptors: Map[String, DeltaReader.DvDescriptor] =
       if (fileKeys.isEmpty) Map.empty
       else {
         val keyFrame = fileKeys.toDF("__fp")
@@ -1276,7 +1244,7 @@ object DeltaWriter {
         val all = oldMasks.map(maskRows.unionByName(_)).getOrElse(maskRows)
         val conf = spark.sparkContext.broadcast(
           new DeltaReader.SerializableConf(spark.sessionState.newHadoopConf()))
-        val rootStr = qualifiedBase.toString
+        val rootStr = t.base.toString
         all.as[(String, Long)]
           .groupByKey(_._1)
           .mapGroups { (fp, it) =>
@@ -1292,72 +1260,47 @@ object DeltaWriter {
             (fp, DeletionVectors.encodeUUID(uuid), data.length, idx.length.toLong)
           }
           .collect() // file-count bounded: one descriptor per touched file
-          .map { case (fp, u, n, c) => fp -> ((u, n, c)) }.toMap
+          .map { case (fp, u, n, c) =>
+            fp -> DeltaReader.DvDescriptor("u", u, Some(1), n, c) }.toMap
       }
 
-    val physI = physColumnsFor(snap, operation)
-    val newFiles: Seq[(Seq[(String, String)], Path)] =
-      if (insertsEmpty) Seq.empty
-      else landFiles(fs, qualifiedBase, cleanUrl, inserts,
-        snap.partitionColumns, physI, physTypesFor(snap))
-    val cdcLines = cdcLandAndLines(fs, qualifiedBase, cleanUrl,
-      snap.configuration, snap.partitionColumns, physI, cdcChanges,
-      physTypesFor(snap))
-
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    def relOrAbs(p: Path): String =
-      if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
-      else p.toUri.toString
-    def dvAddLine(f: DeltaReader.DeltaFile, d: (String, Int, Long)): String = {
-      val pv = f.partitionValues.map { case (k, v) =>
-        s""""${jsonEscape(k)}":${
-          if (v == null) "null" else s""""${jsonEscape(v)}""""}"""
-      }.mkString(",")
-      val stats = f.stats
-        .map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("")
-      s"""{"add":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-        s""""partitionValues":{$pv},"size":${f.size},""" +
-        s""""modificationTime":${f.modificationTime},"dataChange":true,""" +
-        s""""deletionVector":{"storageType":"u",""" +
-        s""""pathOrInlineDv":"${d._1}","offset":1,"sizeInBytes":${d._2},""" +
-        s""""cardinality":${d._3}}$stats${rowIdCarry(f)}}}"""
-    }
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
-    val newAdds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
-      newFileAddLine(fs, p, relEncode(basePath, p), kvs, dataChange = true,
-        st) }
+    val physI = physColumnsFor(snap, verb)
+    val newFiles: Seq[(Seq[(String, String)], Path)] = toInsert.toSeq.flatMap(
+      landFiles(t.fs, t.base, cleanUrl, _, snap.partitionColumns, physI,
+        physTypesFor(snap)))
+    val cdcLines = cdcLandAndLines(t, snap.configuration, snap.partitionColumns,
+      physI, cdcChanges, physTypesFor(snap))
+    val (newAdds, newStats) = landedAdds(t, newFiles,
+      snap.physicalSchema.getOrElse(snap.schema), dataChange = true)
     // row-tracking stamping input, resolved once (not per retry)
-    lazy val cowRecCounts: Seq[Long] = newFiles.zip(newStats)
-      .map { case ((_, p), st) => numRecordsOf(st, p) }
+    lazy val cowRecCounts: Seq[Long] = recordCounts(newFiles, newStats)
 
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val head = DeltaReader.snapshot(cleanUrl).getOrElse(
-        throw new IllegalStateException(
-          s"DeltaWriter.$operation: table at $cleanUrl vanished mid-commit"))
-      require(head.partitionColumns == snap.partitionColumns &&
-        canonical(head.schema) == canonical(snap.schema),
-        s"DeltaWriter.$operation: concurrent schema/partitioning change " +
-          s"on $cleanUrl — the rewrite was planned against a stale shape; re-run")
-      val headByKey = head.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
+    commitOnHead(t, verb, operation) { head =>
+      if (inserts.isDefined)
+        require(head.partitionColumns == snap.partitionColumns &&
+          canonical(head.schema) == canonical(snap.schema),
+          s"DeltaWriter.$verb: concurrent schema/partitioning change " +
+            s"on $cleanUrl — the rewrite was planned against a stale shape; re-run")
+      val headByKey = byFileKey(head.files)
       fileKeys.foreach { k =>
-        val now = headByKey.get(k)
-        require(now.exists(_.deletionVector == byKey(k).deletionVector),
-          s"DeltaWriter.$operation: concurrent modification of $k — the " +
+        require(headByKey.get(k).exists(_.deletionVector == byKey(k).deletionVector),
+          s"DeltaWriter.$verb: concurrent modification of $k — the " +
             "row masks were computed against a stale snapshot; re-run")
       }
       // a constraint added concurrently must not be committed violated
-      if (checkConstraintsOf(head) != checkConstraintsOf(snap) && !insertsEmpty)
-        enforceCheckConstraints(head, inserts)
-      val version = head.version + 1
+      if (checkConstraintsOf(head) != checkConstraintsOf(snap))
+        toInsert.foreach(enforceCheckConstraints(head, _))
       val needsUpgrade = fileKeys.nonEmpty &&
         !(head.protocol.minReaderVersion >= 3 &&
           head.protocol.readerFeatures.exists(_.contains("deletionVectors")))
       val protoLine =
         if (!needsUpgrade) Seq.empty
         else {
+          // legacy versions imply feature sets (PROTOCOL.md's
+          // legacy-to-table-features mapping); they must ALL surface
+          // explicitly once the table goes reader 3 / writer 7, or
+          // other engines silently stop enforcing them (CHECK
+          // constraints, CDF, generated/identity columns)
           val impliedWriter = legacyWriterFeatures(head.protocol.minWriterVersion)
           val impliedReader =
             if (head.protocol.minReaderVersion >= 2) Seq("columnMapping")
@@ -1370,14 +1313,11 @@ object DeltaWriter {
             s""""readerFeatures":[${rf.map(x => s""""$x"""").mkString(",")}],""" +
             s""""writerFeatures":[${wf.map(x => s""""$x"""").mkString(",")}]}}""")
         }
-      val ict = ictLines(head.configuration, fs, logDir, head.version, operation)
+      // each new descriptor's cardinality counts the MERGED mask
       val dvLines = fileKeys.flatMap { k =>
         val f = byKey(k)
-        Seq(
-          s"""{"remove":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-            s""""deletionTimestamp":${System.currentTimeMillis},""" +
-            """"dataChange":true}}""",
-          dvAddLine(f, descriptors(k)))
+        Seq(removeLine(t, f, dataChange = true),
+          liveAddLine(t.relOrAbs(new Path(f.path)), f, Some(descriptors(k))))
       }
       // the landed replacement files materialized row ids under
       // rtNames — a concurrent first rewrite recording DIFFERENT
@@ -1389,7 +1329,7 @@ object DeltaWriter {
           head.configuration
             .get("delta.rowTracking.materializedRowCommitVersionColumnName")
             .forall(_ == mr),
-          s"DeltaWriter.$operation: a concurrent commit recorded " +
+          s"DeltaWriter.$verb: a concurrent commit recorded " +
             "different materialized row-tracking column names — re-run")
       }
       val rtExtra = rtNames.map(_._3 -- head.configuration.keySet)
@@ -1403,29 +1343,10 @@ object DeltaWriter {
       // assignment through rowIdCarry; the replacement/insert files
       // get fresh ids above the head's watermark
       val (newAdds2, rtDomain) =
-        if (!rowTrackingOn(head)) (newAdds, Seq.empty[String])
-        else {
-          var next = rowIdHighWaterMark(head) + 1
-          val stamped = newAdds.zip(cowRecCounts).map { case (line, n) =>
-            val out = spliceAddFields(line,
-              s""","baseRowId":$next,"defaultRowCommitVersion":$version""")
-            next += n
-            out
-          }
-          (stamped, if (newFiles.isEmpty) Seq.empty[String]
-                    else Seq(rowTrackingDomainLine(next - 1)))
-        }
-      val body = (ict ++ protoLine ++ metaLine ++ cdcLines ++ dvLines ++
-        newAdds2 ++ rtDomain).mkString("\n") + "\n"
-      if (publishCommit(fs, logDir, version, body)) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, version)
-        return version
-      }
-      attempt += 1
+        if (!rowTrackingOn(head) || newFiles.isEmpty) (newAdds, Seq.empty[String])
+        else stampRowIds(head, newAdds, cowRecCounts)
+      Some(protoLine ++ metaLine ++ cdcLines ++ dvLines ++ newAdds2 ++ rtDomain)
     }
-    throw new IllegalStateException(
-      s"DeltaWriter.$operation: lost the commit race $MaxCommitAttempts " +
-        s"times on $cleanUrl — giving up")
   }
 
   /** Materialize deletion vectors past `threshold` masked fraction:
@@ -1437,13 +1358,8 @@ object DeltaWriter {
     * file TOTAL row counts, computed as ONE distributed parquet scan
     * of only the DV-carrying files (metadata column only); the
     * rewrite itself is one distributed masked read + one partitioned
-    * write, driver work bounded by file/partition counts.
-    *
-    * Race safety mirrors delete(): on a lost publish race the head is
-    * re-read and every selected file must still be live with an
-    * UNCHANGED descriptor — the rewritten rows were materialized from
-    * our snapshot; anything else raises. The landed rewrite files
-    * stay valid across retries (only the log line is recomputed). */
+    * write, driver work bounded by file/partition counts. The commit
+    * is [[rewriteCommit]]'s. */
   def optimize(url: String, threshold: Double)
               (implicit spark: SparkSession): Long = {
     import org.apache.spark.sql.functions.col
@@ -1470,62 +1386,14 @@ object DeltaWriter {
         f.deletionVector.get.cardinality.toDouble / total >= threshold
     }
     if (selected.isEmpty) return snap.version
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
+    val t = new TableRoot(cleanUrl)
     // masked survivors of ONLY the selected files, partition literals
     // injected so the partitioned rewrite lands in the right dirs
     val rt = rewriteRowTracking(snap)
     val survivors = rewriteSource(snap, selected, rt)
-    val newFiles = landFiles(fs, qualifiedBase, cleanUrl, survivors,
+    val newFiles = landFiles(t.fs, t.base, cleanUrl, survivors,
       snap.partitionColumns, physO, physTypesFor(snap))
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    def relOrAbs(p: Path): String =
-      if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
-      else p.toUri.toString
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
-    val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
-      newFileAddLine(fs, p, relOrAbs(p), kvs, dataChange = false, st) }
-    // record counts for row-tracking stamping: resolved ONCE (stats
-    // parse, or one count job for a stats-less file), not per attempt
-    lazy val recCounts: Seq[Long] = newFiles.zip(newStats)
-      .map { case ((_, p), st) => numRecordsOf(st, p) }
-    val byKey = selected.map(f => new Path(f.path).toUri.toString -> f).toMap
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val head = DeltaReader.snapshot(cleanUrl).getOrElse(
-        throw new IllegalStateException(
-          s"DeltaWriter.optimize: table at $cleanUrl vanished mid-rewrite"))
-      val headByKey = head.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
-      byKey.keys.foreach { k =>
-        val now = headByKey.get(k)
-        require(now.exists(_.deletionVector == byKey(k).deletionVector),
-          s"DeltaWriter.optimize: concurrent modification of $k — the " +
-            "rewrite was materialized from a stale snapshot; re-run")
-      }
-      val removes = selected.map { f =>
-        s"""{"remove":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-          s""""deletionTimestamp":${System.currentTimeMillis},""" +
-          """"dataChange":false}}"""
-      }
-      val version = head.version + 1
-      val (adds2, preLines, postLines) = rtRewriteLines(head, version,
-        () => recCounts, rt, adds)
-      val ict = ictLines(head.configuration, fs, logDir, head.version, "OPTIMIZE")
-      if (publishCommit(fs, logDir, version,
-          (ict ++ preLines ++ removes ++ adds2 ++ postLines)
-            .mkString("\n") + "\n")) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, version)
-        return version
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"DeltaWriter.optimize: lost the commit race $MaxCommitAttempts " +
-        s"times on $cleanUrl — giving up")
+    rewriteCommit(t, "optimize", snap, selected, newFiles, rt)
   }
 
   /** Bin-packing file compaction — the real-Delta side of
@@ -1544,12 +1412,8 @@ object DeltaWriter {
     * (coalesce, not repartition: compaction must not shuffle rows, it
     * merges task inputs). Driver work is file/partition-count
     * bounded. A thousand-commit append-stream table compacts one hot
-    * partition at a time without touching the rest.
-    *
-    * Race safety mirrors [[optimize]]: on a lost publish race every
-    * selected file must still be live with an UNCHANGED descriptor,
-    * else it raises loudly (the rewrite was materialized from our
-    * snapshot). The landed rewrite files stay valid across retries. */
+    * partition at a time without touching the rest. The commit is
+    * [[rewriteCommit]]'s. */
   def compact(url: String, targetFileBytes: Long = 128L * 1024 * 1024,
               minFiles: Int = 2)
              (implicit spark: SparkSession): Long = {
@@ -1568,14 +1432,7 @@ object DeltaWriter {
       .map(_.sortBy(_.path))
       .sortBy(_.head.path)
     if (groups.isEmpty) return snap.version
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    def relOrAbs(p: Path): String =
-      if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
-      else p.toUri.toString
+    val t = new TableRoot(cleanUrl)
     // one masked read + coalesce(bins) write per qualifying partition;
     // partition literals are injected by the assembler, so the
     // partitioned write lands each group back in its own directory
@@ -1584,52 +1441,10 @@ object DeltaWriter {
       val bins = math.max(1L,
         (g.map(_.size).sum + targetFileBytes - 1) / targetFileBytes).toInt
       val packed = rewriteSource(snap, g, rt).coalesce(bins)
-      landFiles(fs, qualifiedBase, cleanUrl, packed,
+      landFiles(t.fs, t.base, cleanUrl, packed,
         snap.partitionColumns, physC, physTypesFor(snap))
     }
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
-    val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
-      newFileAddLine(fs, p, relOrAbs(p), kvs, dataChange = false, st) }
-    // record counts for row-tracking stamping: resolved ONCE (stats
-    // parse, or one count job for a stats-less file), not per attempt
-    lazy val recCounts: Seq[Long] = newFiles.zip(newStats)
-      .map { case ((_, p), st) => numRecordsOf(st, p) }
-    val selected = groups.flatten
-    val byKey = selected.map(f => new Path(f.path).toUri.toString -> f).toMap
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val head = DeltaReader.snapshot(cleanUrl).getOrElse(
-        throw new IllegalStateException(
-          s"DeltaWriter.compact: table at $cleanUrl vanished mid-rewrite"))
-      val headByKey = head.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
-      byKey.keys.foreach { k =>
-        val now = headByKey.get(k)
-        require(now.exists(_.deletionVector == byKey(k).deletionVector),
-          s"DeltaWriter.compact: concurrent modification of $k — the " +
-            "rewrite was materialized from a stale snapshot; re-run")
-      }
-      val removes = selected.map { f =>
-        s"""{"remove":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-          s""""deletionTimestamp":${System.currentTimeMillis},""" +
-          """"dataChange":false}}"""
-      }
-      val version = head.version + 1
-      val (adds2, preLines, postLines) = rtRewriteLines(head, version,
-        () => recCounts, rt, adds)
-      val ict = ictLines(head.configuration, fs, logDir, head.version, "OPTIMIZE")
-      if (publishCommit(fs, logDir, version,
-          (ict ++ preLines ++ removes ++ adds2 ++ postLines)
-            .mkString("\n") + "\n")) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, version)
-        return version
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"DeltaWriter.compact: lost the commit race $MaxCommitAttempts " +
-        s"times on $cleanUrl — giving up")
+    rewriteCommit(t, "compact", snap, groups.flatten, newFiles, rt)
   }
 
   /** OPTIMIZE ZORDER BY: rewrite the table's live rows clustered
@@ -1657,9 +1472,7 @@ object DeltaWriter {
     *
     * Scale shape (100 TB): the quantile pass and the range-shuffled
     * rewrite are both fully distributed; driver work is file-count
-    * and (cols × buckets) bounded. Race safety mirrors [[compact]]:
-    * on a lost publish race every rewritten file must still be live
-    * with an unchanged descriptor, else this raises loudly. */
+    * and (cols × buckets) bounded. The commit is [[rewriteCommit]]'s. */
   def zorder(url: String, zCols: Seq[String],
              targetFileBytes: Long = 128L * 1024 * 1024,
              nBuckets: Int = 1024)
@@ -1738,57 +1551,44 @@ object DeltaWriter {
       .repartitionByRange(bins, rangeKeys: _*)
       .sortWithinPartitions(rangeKeys: _*)
       .drop(tmpCols :+ "__z": _*)
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    def relOrAbs(p: Path): String =
-      if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
-      else p.toUri.toString
-    val newFiles = landFiles(fs, qualifiedBase, cleanUrl, clustered,
+    val t = new TableRoot(cleanUrl)
+    val newFiles = landFiles(t.fs, t.base, cleanUrl, clustered,
       pcols, physZ, physTypesFor(snap))
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
-    val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
-      newFileAddLine(fs, p, relOrAbs(p), kvs, dataChange = false, st) }
+    rewriteCommit(t, "zorder", snap, snap.files, newFiles, rt)
+  }
+
+  /** Shared [[optimize]]/[[compact]]/[[zorder]] tail: footer stats
+    * and `dataChange = false` adds for the landed rewrite `newFiles`,
+    * then one OPTIMIZE commit removing `replaced` (also `dataChange =
+    * false`: logically identical table, streams see nothing) with the
+    * row-tracking lines of [[rtRewriteLines]].
+    *
+    * Race safety ([[commitLoop]]): every replaced file must still be
+    * live at the head with an IDENTICAL descriptor (path, deletion
+    * vector, stats, row ids) — the rewrite was materialized from
+    * `snap`; anything else raises loudly. */
+  private def rewriteCommit(t: TableRoot, verb: String,
+      snap: DeltaReader.DeltaSnapshot, replaced: Seq[DeltaReader.DeltaFile],
+      newFiles: Seq[(Seq[(String, String)], Path)],
+      rt: Option[(String, String, Map[String, String])])
+      (implicit spark: SparkSession): Long = {
+    val (adds, newStats) = landedAdds(t, newFiles,
+      snap.physicalSchema.getOrElse(snap.schema), dataChange = false)
     // record counts for row-tracking stamping: resolved ONCE (stats
     // parse, or one count job for a stats-less file), not per attempt
-    lazy val recCounts: Seq[Long] = newFiles.zip(newStats)
-      .map { case ((_, p), st) => numRecordsOf(st, p) }
-    val byKey = snap.files.map(f => new Path(f.path).toUri.toString -> f).toMap
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val head = DeltaReader.snapshot(cleanUrl).getOrElse(
-        throw new IllegalStateException(
-          s"DeltaWriter.zorder: table at $cleanUrl vanished mid-rewrite"))
-      val headByKey = head.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
-      byKey.foreach { case (k, f) =>
+    lazy val recCounts: Seq[Long] = recordCounts(newFiles, newStats)
+    commitOnHead(t, verb, "OPTIMIZE") { head =>
+      val headByKey = byFileKey(head.files)
+      byFileKey(replaced).foreach { case (k, f) =>
         require(headByKey.get(k).contains(f),
-          s"DeltaWriter.zorder: concurrent modification of $k — the " +
+          s"DeltaWriter.$verb: concurrent modification of $k — the " +
             "rewrite was materialized from a stale snapshot; re-run")
       }
-      val removes = snap.files.map { f =>
-        s"""{"remove":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-          s""""deletionTimestamp":${System.currentTimeMillis},""" +
-          """"dataChange":false}}"""
-      }
-      val version = head.version + 1
-      val (adds2, preLines, postLines) = rtRewriteLines(head, version,
-        () => recCounts, rt, adds)
-      val ict = ictLines(head.configuration, fs, logDir, head.version, "OPTIMIZE")
-      if (publishCommit(fs, logDir, version,
-          (ict ++ preLines ++ removes ++ adds2 ++ postLines)
-            .mkString("\n") + "\n")) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, version)
-        return version
-      }
-      attempt += 1
+      val (adds2, preLines, postLines) =
+        rtRewriteLines(head, () => recCounts, rt, adds)
+      Some(preLines ++ replaced.map(removeLine(t, _, dataChange = false)) ++
+        adds2 ++ postLines)
     }
-    throw new IllegalStateException(
-      s"DeltaWriter.zorder: lost the commit race $MaxCommitAttempts " +
-        s"times on $cleanUrl — giving up")
   }
 
   /** SHALLOW CLONE: create a new Delta table at `dstUrl` whose
@@ -1843,13 +1643,11 @@ object DeltaWriter {
                      partitionTypes: Map[String, DataType] = Map.empty)
                     (implicit spark: SparkSession): Long = {
     val cleanUrl = url.stripSuffix("/")
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    require(fs.exists(qualifiedBase),
+    val t = new TableRoot(cleanUrl)
+    val fs = t.fs
+    require(fs.exists(t.base),
       s"DeltaWriter.convertToDelta: no directory at $cleanUrl")
-    val logDir = new Path(qualifiedBase, "_delta_log")
-    require(!fs.exists(logDir),
+    require(!fs.exists(t.logDir),
       s"DeltaWriter.convertToDelta: $cleanUrl already has a _delta_log")
     // collect data files, partition values from the directory chain
     def walk(dir: Path, pv: Seq[(String, String)])
@@ -1876,7 +1674,7 @@ object DeltaWriter {
           Seq((st.getPath, pv))
         } else Seq.empty
       }
-    val found = walk(qualifiedBase, Seq.empty)
+    val found = walk(t.base, Seq.empty)
     require(found.nonEmpty,
       s"DeltaWriter.convertToDelta: no parquet files under $cleanUrl")
     // typed partition columns: declared types must cover only real
@@ -1921,17 +1719,16 @@ object DeltaWriter {
     val schema = StructType(dataSchema.fields ++
       partitionColumns.map(c => StructField(c,
         partitionTypes.getOrElse(c, StringType), nullable = true)))
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
     val adds = found.sortBy(_._1.toString).map { case (p, pv) =>
-      newFileAddLine(fs, p, relEncode(basePath, p), pv, dataChange = true,
+      newFileAddLine(fs, p, t.rel(p), pv, dataChange = true,
         statsJson(fs, p, dataSchema))
     }
     val lines = Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       metaDataLine(java.util.UUID.randomUUID.toString, schema,
         partitionColumns, Map.empty, System.currentTimeMillis)) ++ adds
-    val ict = ictLines(Map.empty, fs, logDir, -1L, "CONVERT")
-    require(publishCommit(fs, logDir, 0L,
+    val ict = ictLines(Map.empty, fs, t.logDir, -1L, "CONVERT")
+    require(publishCommit(fs, t.logDir, 0L,
       (ict ++ lines).mkString("\n") + "\n"),
       s"DeltaWriter.convertToDelta: lost a creation race on $cleanUrl")
     0L
@@ -1949,67 +1746,35 @@ object DeltaWriter {
         s"DeltaWriter.cloneShallow: no Delta table at $cleanSrc"))
     require(DeltaReader.snapshot(cleanDst).isEmpty,
       s"DeltaWriter.cloneShallow: a Delta table already exists at $cleanDst")
-    val dstBase = new Path(cleanDst)
-    val fs: FileSystem =
-      dstBase.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedDst = fs.makeQualified(dstBase)
-    val logDir = new Path(qualifiedDst, "_delta_log")
+    val t = new TableRoot(cleanDst)
     val srcRoot = new Path(snap.root)
-    def featArr(fs0: Option[Seq[String]]): String =
-      fs0.map(f => f.map(x => s""""${jsonEscape(x)}"""")
-        .mkString(""","readerFeatures":[""", ",", "]")).getOrElse("")
-    def wfeatArr(fs0: Option[Seq[String]]): String =
-      fs0.map(f => f.map(x => s""""${jsonEscape(x)}"""")
-        .mkString(""","writerFeatures":[""", ",", "]")).getOrElse("")
+    def featArr(key: String, features: Option[Seq[String]]): String =
+      features.map(_.map(x => s""""${jsonEscape(x)}"""")
+        .mkString(s""","$key":[""", ",", "]")).getOrElse("")
     val protocolLine =
       s"""{"protocol":{"minReaderVersion":${snap.protocol.minReaderVersion},""" +
         s""""minWriterVersion":${snap.protocol.minWriterVersion}""" +
-        featArr(snap.protocol.readerFeatures) +
-        wfeatArr(snap.protocol.writerFeatures) + "}}"
-    val confJson = snap.configuration.map { case (k, v) =>
-      s""""${jsonEscape(k)}":"${jsonEscape(v)}"""" }.mkString(",")
-    val metaLine =
-      s"""{"metaData":{"id":"${java.util.UUID.randomUUID}",""" +
-        """"format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":"${jsonEscape(snap.schema.json)}",""" +
-        s""""partitionColumns":[${snap.partitionColumns.map(c =>
-          s""""${jsonEscape(c)}"""").mkString(",")}],""" +
-        s""""configuration":{$confJson},""" +
-        s""""createdTime":${System.currentTimeMillis}}}"""
+        featArr("readerFeatures", snap.protocol.readerFeatures) +
+        featArr("writerFeatures", snap.protocol.writerFeatures) + "}}"
+    val metaLine = metaDataLine(java.util.UUID.randomUUID.toString, snap.schema,
+      snap.partitionColumns, snap.configuration, System.currentTimeMillis)
     def dvPortable(d: DeltaReader.DvDescriptor): DeltaReader.DvDescriptor =
       d.storageType match {
-        case "u" =>
-          // re-resolve against the SOURCE root, exactly the reader's
-          // 'u' path algebra, then pin as absolute 'p' storage
-          require(d.pathOrInlineDv.length >= 20,
-            s"DeltaWriter.cloneShallow: malformed 'u' DV id ${d.pathOrInlineDv}")
-          val prefix = d.pathOrInlineDv.dropRight(20)
-          val uuid = DeletionVectors.decodeUUID(d.pathOrInlineDv.takeRight(20))
-          val dir = if (prefix.isEmpty) srcRoot else new Path(srcRoot, prefix)
-          d.copy(storageType = "p",
-            pathOrInlineDv = new Path(dir, s"deletion_vector_$uuid.bin").toString,
-            offset = Some(d.offset.getOrElse(1)))
+        // re-resolve against the SOURCE root, then pin as absolute 'p'
+        case "u" => d.copy(storageType = "p",
+          pathOrInlineDv =
+            DeletionVectors.sidecarPath(srcRoot, d.pathOrInlineDv).toString,
+          offset = Some(d.offset.getOrElse(1)))
         case _ => d // 'i' inline and 'p' absolute are root-free already
       }
-    def dvJson(d: DeltaReader.DvDescriptor): String =
-      s""","deletionVector":{"storageType":"${jsonEscape(d.storageType)}",""" +
-        s""""pathOrInlineDv":"${jsonEscape(d.pathOrInlineDv)}"""" +
-        d.offset.map(o => s""","offset":$o""").getOrElse("") +
-        s""","sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
+    // clone adds carry no row-id assignment
     val adds = snap.files.map { f =>
-      val pv = f.partitionValues.map { case (k, v) =>
-        s""""${jsonEscape(k)}":${
-          if (v == null) "null" else s""""${jsonEscape(v)}""""}"""
-      }.mkString(",")
-      s"""{"add":{"path":"${jsonEscape(new Path(f.path).toUri.toString)}",""" +
-        s""""partitionValues":{$pv},"size":${f.size},""" +
-        s""""modificationTime":${f.modificationTime},"dataChange":true""" +
-        f.deletionVector.map(d => dvJson(dvPortable(d))).getOrElse("") +
-        f.stats.map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("") +
-        "}}"
+      liveAddLine(new Path(f.path).toUri.toString,
+        f.copy(baseRowId = None, defaultRowCommitVersion = None),
+        f.deletionVector.map(dvPortable))
     }
-    val ict = ictLines(snap.configuration, fs, logDir, -1L, "CLONE")
-    require(publishCommit(fs, logDir, 0L,
+    val ict = ictLines(snap.configuration, t.fs, t.logDir, -1L, "CLONE")
+    require(publishCommit(t.fs, t.logDir, 0L,
       (ict ++ Seq(protocolLine, metaLine) ++ adds).mkString("\n") + "\n"),
       s"DeltaWriter.cloneShallow: version 0 already exists at $cleanDst " +
         "— lost a creation race")
@@ -2019,8 +1784,9 @@ object DeltaWriter {
   /** RESTORE: commit the file-state diff head → target. Refuses when
     * the schema or partitioning changed between the two versions (a
     * restore across an evolution is a data rewrite, not a log diff).
-    * Per attempt the diff is recomputed against the FRESH head, so a
-    * lost commit race never restores against stale state. */
+    * Each [[commitLoop]] attempt recomputes the diff against the
+    * FRESH head, so a lost commit race never restores against stale
+    * state. */
   def restore(url: String, version: Long)
              (implicit spark: SparkSession): Long = {
     val cleanUrl = url.stripSuffix("/")
@@ -2028,99 +1794,50 @@ object DeltaWriter {
       throw new IllegalArgumentException(
         s"DeltaWriter.restore: no Delta table at $cleanUrl"))
     DeltaReader.snapshot(cleanUrl).foreach(enforceWritable(_, "restore"))
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
-    val logDir = new Path(qualifiedBase, "_delta_log")
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    def relOrAbs(p: Path): String =
-      if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
-      else p.toUri.toString
-    def dvJson(d: DeltaReader.DvDescriptor): String =
-      s""","deletionVector":{"storageType":"${jsonEscape(d.storageType)}",""" +
-        s""""pathOrInlineDv":"${jsonEscape(d.pathOrInlineDv)}"""" +
-        d.offset.map(o => s""","offset":$o""").getOrElse("") +
-        s""","sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
-    def addLine(f: DeltaReader.DeltaFile): String = {
-      val pv = f.partitionValues.map { case (k, v) =>
-        s""""${jsonEscape(k)}":${
-          if (v == null) "null" else s""""${jsonEscape(v)}""""}"""
-      }.mkString(",")
-      s"""{"add":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-        s""""partitionValues":{$pv},"size":${f.size},""" +
-        s""""modificationTime":${f.modificationTime},"dataChange":true""" +
-        f.deletionVector.map(dvJson).getOrElse("") +
-        f.stats.map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("") +
-        rowIdCarry(f) +
-        "}}"
-    }
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val head = DeltaReader.snapshot(cleanUrl).get
+    val t = new TableRoot(cleanUrl)
+    val targetByKey = byFileKey(target.files)
+    commitOnHead(t, "restore", "RESTORE") { head =>
       require(canonical(head.schema) == canonical(target.schema) &&
         head.partitionColumns == target.partitionColumns,
         s"DeltaWriter.restore: schema or partitioning changed since " +
           s"version $version — restore across an evolution is a data " +
           "rewrite, not a log diff")
-      val headByKey = head.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
-      val targetByKey = target.files
-        .map(f => new Path(f.path).toUri.toString -> f).toMap
-      val removes = head.files
+      val headByKey = byFileKey(head.files)
+      val removed = head.files
         .filter(f => !targetByKey.get(new Path(f.path).toUri.toString)
           .exists(_.deletionVector == f.deletionVector))
-        .map { f =>
-          s"""{"remove":{"path":"${jsonEscape(relOrAbs(new Path(f.path)))}",""" +
-            s""""deletionTimestamp":${System.currentTimeMillis},""" +
-            """"dataChange":true}}"""
-        }
       val addFiles = target.files
         .filter(f => !headByKey.get(new Path(f.path).toUri.toString)
           .exists(_.deletionVector == f.deletionVector))
-      val adds = addFiles.map(addLine)
-      if (removes.isEmpty && adds.isEmpty) return head.version
-      // an append-only table never loses rows; a restore that must
-      // retract files is a non-append dataChange commit — refused,
-      // matching delete()/overwrite (real Delta refuses these too)
-      require(removes.isEmpty ||
-        !head.configuration.get("delta.appendOnly").contains("true"),
-        s"DeltaWriter.restore: table at $cleanUrl is append-only " +
-          "(delta.appendOnly=true) — a restore that removes files is refused")
-      // re-added files must still exist on disk: restoring past a
-      // VACUUM would otherwise commit a head that fails at scan time
-      val missing = addFiles.flatMap { f =>
-        val data = Some(new Path(f.path)).filterNot(fs.exists)
-        val dv = f.deletionVector.flatMap { d =>
-          d.storageType match {
-            case "u" =>
-              val prefix = d.pathOrInlineDv.dropRight(20)
-              val uuid =
-                DeletionVectors.decodeUUID(d.pathOrInlineDv.takeRight(20))
-              val dir = if (prefix.isEmpty) qualifiedBase
-                        else new Path(qualifiedBase, prefix)
-              Some(new Path(dir, s"deletion_vector_$uuid.bin"))
-                .filterNot(fs.exists)
-            case "p" => Some(new Path(d.pathOrInlineDv)).filterNot(fs.exists)
-            case _ => None // "i" inline: lives in the log itself
+      if (removed.isEmpty && addFiles.isEmpty) None
+      else {
+        // an append-only table never loses rows; a restore that must
+        // retract files is a non-append dataChange commit — refused,
+        // matching delete()/overwrite (real Delta refuses these too)
+        require(removed.isEmpty ||
+          !head.configuration.get("delta.appendOnly").contains("true"),
+          s"DeltaWriter.restore: table at $cleanUrl is append-only " +
+            "(delta.appendOnly=true) — a restore that removes files is refused")
+        // re-added files must still exist on disk: restoring past a
+        // VACUUM would otherwise commit a head that fails at scan time
+        val missing = addFiles.flatMap { f =>
+          val dv = f.deletionVector.flatMap { d =>
+            d.storageType match {
+              case "u" => Some(DeletionVectors.sidecarPath(t.base, d.pathOrInlineDv))
+              case "p" => Some(new Path(d.pathOrInlineDv))
+              case _ => None // "i" inline: lives in the log itself
+            }
           }
+          (new Path(f.path) +: dv.toSeq).filterNot(t.fs.exists)
         }
-        data.toSeq ++ dv.toSeq
+        require(missing.isEmpty,
+          s"DeltaWriter.restore: version $version references vacuumed " +
+            s"files — ${missing.map(_.toString).sorted.mkString(", ")}")
+        Some(removed.map(removeLine(t, _, dataChange = true)) ++
+          addFiles.map(f =>
+            liveAddLine(t.relOrAbs(new Path(f.path)), f, f.deletionVector)))
       }
-      require(missing.isEmpty,
-        s"DeltaWriter.restore: version $version references vacuumed " +
-          s"files — ${missing.map(_.toString).sorted.mkString(", ")}")
-      val v = head.version + 1
-      val ict = ictLines(head.configuration, fs, logDir, head.version, "RESTORE")
-      if (publishCommit(fs, logDir, v,
-          (ict ++ removes ++ adds).mkString("\n") + "\n")) {
-        maybeCheckpoint(fs, cleanUrl, qualifiedBase, logDir, v)
-        return v
-      }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"DeltaWriter.restore: lost the commit race $MaxCommitAttempts " +
-        s"times on $cleanUrl — giving up")
   }
 
   /** Enforce the table's CHECK constraints (`delta.constraints.<name>`
@@ -2203,9 +1920,8 @@ object DeltaWriter {
     val snap = DeltaReader.snapshot(cleanUrl).getOrElse(
       throw new IllegalArgumentException(
         s"DeltaWriter.vacuum: no Delta table at $cleanUrl"))
-    val base = new Path(cleanUrl)
-    val fs: FileSystem = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualifiedBase = fs.makeQualified(base)
+    val t = new TableRoot(cleanUrl)
+    val fs = t.fs
     val cutoff = System.currentTimeMillis - retentionMillis
     // referenced = live data files + their sidecars. Keys are URI
     // PATHS (scheme/authority dropped): a table lives on one
@@ -2220,11 +1936,7 @@ object DeltaWriter {
       val sidecar = f.deletionVector.flatMap { d =>
         d.storageType match {
           case "u" =>
-            val prefix = d.pathOrInlineDv.dropRight(20)
-            val uuid = DeletionVectors.decodeUUID(d.pathOrInlineDv.takeRight(20))
-            val dir = if (prefix.isEmpty) qualifiedBase
-                      else new Path(qualifiedBase, prefix)
-            Some(new Path(dir, s"deletion_vector_$uuid.bin").toUri.getPath)
+            Some(DeletionVectors.sidecarPath(t.base, d.pathOrInlineDv).toUri.getPath)
           case "p" => Some(new Path(d.pathOrInlineDv).toUri.getPath)
           case _ => None
         }
@@ -2257,7 +1969,7 @@ object DeltaWriter {
         }
       }
     }
-    walk(qualifiedBase)
+    walk(t.base)
     deleted
   }
 
@@ -2558,11 +2270,9 @@ object DeltaWriter {
     * lacked the materialized column names — the metaData recording
     * them. Returns (adds, preLines, postLines). */
   private def rtRewriteLines(head: DeltaReader.DeltaSnapshot,
-      version: Long,
       recCounts: () => Seq[Long],
       rt: Option[(String, String, Map[String, String])],
-      plainAdds: Seq[String])
-      (implicit spark: SparkSession): (Seq[String], Seq[String], Seq[String]) =
+      plainAdds: Seq[String]): (Seq[String], Seq[String], Seq[String]) =
     if (!rowTrackingOn(head)) (plainAdds, Seq.empty, Seq.empty)
     else {
       // `rt` is the preservation plan resolved from the PLANNING
@@ -2594,13 +2304,7 @@ object DeltaWriter {
             "materialized row-tracking column names — re-run so the " +
             "rewrite materializes under the recorded names")
       }
-      var next = rowIdHighWaterMark(head) + 1
-      val stamped = plainAdds.zip(recCounts()).map { case (line, n) =>
-        val out = spliceAddFields(line,
-          s""","baseRowId":$next,"defaultRowCommitVersion":$version""")
-        next += n
-        out
-      }
+      val (stamped, domain) = stampRowIds(head, plainAdds, recCounts())
       val metaLine = rt.map(_._3).filter(_.nonEmpty)
         // additions recomputed against the HEAD's config: names the
         // head already records (necessarily equal, per the guard) are
@@ -2611,7 +2315,7 @@ object DeltaWriter {
           metaDataLine(head.tableId, head.schema, head.partitionColumns,
             head.configuration ++ extra,
             head.createdTime.getOrElse(System.currentTimeMillis))).toSeq
-      (stamped, metaLine, Seq(rowTrackingDomainLine(next - 1)))
+      (stamped, metaLine, domain)
     }
 
   /** Refuse to write a table whose protocol or schema demands writer
@@ -2727,15 +2431,14 @@ object DeltaWriter {
     * place. `encodedPath` is the final log-encoded path string. */
   private def newFileAddLine(fs: FileSystem, p: Path, encodedPath: String,
       kvs: Seq[(String, String)], dataChange: Boolean,
-      stats: Option[String], extraFields: String = ""): String = {
+      stats: Option[String]): String = {
     val st = fs.getFileStatus(p)
-    val pv = kvs.map { case (k, v) =>
-      s""""${jsonEscape(k)}":"${jsonEscape(v)}"""" }.mkString(",")
     val statsStr = stats
       .map(x => s""","stats":"${jsonEscape(x)}"""").getOrElse("")
-    s"""{"add":{"path":"${jsonEscape(encodedPath)}","partitionValues":{$pv},""" +
+    s"""{"add":{"path":"${jsonEscape(encodedPath)}",""" +
+      s""""partitionValues":${partitionValuesJson(kvs)},""" +
       s""""size":${st.getLen},"modificationTime":${st.getModificationTime},""" +
-      s""""dataChange":$dataChange$statsStr$extraFields}}"""
+      s""""dataChange":$dataChange$statsStr}}"""
   }
 
   /** The `,"baseRowId":…,"defaultRowCommitVersion":…` tail preserving
@@ -2804,8 +2507,7 @@ object DeltaWriter {
     * vacuum ages the files out like any unreferenced file, after
     * which CDF reads of that window fail loudly — the same contract
     * as a vacuumed time-travel read. No-op when the feed is off. */
-  private def cdcLandAndLines(fs: FileSystem, qualifiedBase: Path,
-      cleanUrl: String, conf: Map[String, String],
+  private def cdcLandAndLines(t: TableRoot, conf: Map[String, String],
       partitionColumns: Seq[String],
       phys: Map[String, (String, Option[Long])],
       changes: => Option[DataFrame],
@@ -2820,18 +2522,14 @@ object DeltaWriter {
         "tables is unsupported — _change_type carries no field id; " +
         "use name mode or disable delta.enableChangeDataFeed")
     val df = changes.getOrElse(return Seq.empty)
-    val cdcBase = new Path(qualifiedBase, "_change_data")
-    fs.mkdirs(cdcBase)
-    val landed = landFiles(fs, cdcBase, cleanUrl, df, partitionColumns,
+    val cdcBase = new Path(t.base, "_change_data")
+    t.fs.mkdirs(cdcBase)
+    val landed = landFiles(t.fs, cdcBase, t.cleanUrl, df, partitionColumns,
       phys, physTypes)
-    val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
     landed.map { case (kvs, p) =>
-      val st = fs.getFileStatus(p)
-      val pv = kvs.map { case (k, v) =>
-        s""""${jsonEscape(k)}":"${jsonEscape(v)}"""" }.mkString(",")
-      s"""{"cdc":{"path":"${jsonEscape(relEncode(basePath, p))}",""" +
-        s""""partitionValues":{$pv},"size":${st.getLen},""" +
-        """"dataChange":false}}"""
+      s"""{"cdc":{"path":"${jsonEscape(t.rel(p))}",""" +
+        s""""partitionValues":${partitionValuesJson(kvs)},""" +
+        s""""size":${t.fs.getFileStatus(p).getLen},"dataChange":false}}"""
     }
   }
 
@@ -2893,11 +2591,10 @@ object DeltaWriter {
     * names the checkpoint, so two writers can only contend when one
     * is re-checkpointing an existing version — first file wins,
     * the loser skips. */
-  private def maybeCheckpoint(fs: FileSystem, url: String, base: Path,
-                              logDir: Path, version: Long)
+  private def maybeCheckpoint(t: TableRoot, version: Long)
                              (implicit spark: SparkSession): Unit = try {
     if (version <= 0) return
-    val snap = DeltaReader.snapshotAt(url, Some(version)).getOrElse(return)
+    val snap = DeltaReader.snapshotAt(t.cleanUrl, Some(version)).getOrElse(return)
     val interval = snap.configuration.get("delta.checkpointInterval")
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .getOrElse(DefaultCheckpointInterval)
@@ -2908,15 +2605,15 @@ object DeltaWriter {
     if (useV2) {
       // idempotence: any manifest for this version counts
       val prefix = f"$version%020d.checkpoint."
-      val exists = fs.exists(logDir) && fs.listStatus(logDir).exists { s =>
+      val exists = t.fs.exists(t.logDir) && t.fs.listStatus(t.logDir).exists { s =>
         val n = s.getPath.getName
         n.startsWith(prefix) && n != s"${prefix}parquet"
       }
-      if (!exists) writeV2Checkpoint(fs, base, logDir, snap)
+      if (!exists) writeV2Checkpoint(t, snap)
     } else {
-      val target = new Path(logDir, f"$version%020d.checkpoint.parquet")
-      if (fs.exists(target)) return
-      writeCheckpoint(fs, base, logDir, snap, target)
+      val target = new Path(t.logDir, f"$version%020d.checkpoint.parquet")
+      if (t.fs.exists(target)) return
+      writeCheckpoint(t, snap, target)
     }
   } catch {
     // post-commit checkpointing is best-effort, like delta-spark's: the
@@ -2932,7 +2629,7 @@ object DeltaWriter {
 
   /** The checkpoint schema is [[DeltaReader]]'s action schema plus
     * the `txn` column third-party readers expect to find. */
-  private def checkpointRows(base: Path, snap: DeltaReader.DeltaSnapshot)
+  private def checkpointRows(t: TableRoot, snap: DeltaReader.DeltaSnapshot)
       : (Seq[org.apache.spark.sql.Row], StructType) = {
     import org.apache.spark.sql.Row
     val dvSchema = StructType(Seq(
@@ -2978,15 +2675,10 @@ object DeltaWriter {
         StructField("minWriterVersion", IntegerType),
         StructField("readerFeatures", ArrayType(StringType)),
         StructField("writerFeatures", ArrayType(StringType)))))))
-    val basePath = base.toUri.getPath.stripSuffix("/")
     // absolute paths OUTSIDE the table root are legal in the log
     // (shallow clones, `p`-mode imports); a checkpoint must carry them
     // through as absolute URIs, not refuse the whole checkpoint
-    def rel(p: String): String = {
-      val hp = new Path(p)
-      if (hp.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, hp)
-      else hp.toUri.toString
-    }
+    def rel(p: String): String = t.relOrAbs(new Path(p))
     val protoRow = Row(null, null, null, null, null, Row(
       snap.protocol.minReaderVersion, snap.protocol.minWriterVersion,
       snap.protocol.readerFeatures.orNull,
@@ -3058,12 +2750,12 @@ object DeltaWriter {
     finally out.close()
   }
 
-  private def writeCheckpoint(fs: FileSystem, base: Path, logDir: Path,
-                              snap: DeltaReader.DeltaSnapshot, target: Path)
+  private def writeCheckpoint(t: TableRoot, snap: DeltaReader.DeltaSnapshot,
+                              target: Path)
                              (implicit spark: SparkSession): Unit = {
-    val (rows, schema) = checkpointRows(base, snap)
-    if (landSingleParquet(fs, logDir, rows, schema, target))
-      writeLastCheckpoint(fs, logDir, snap.version, rows.size)
+    val (rows, schema) = checkpointRows(t, snap)
+    if (landSingleParquet(t.fs, t.logDir, rows, schema, target))
+      writeLastCheckpoint(t.fs, t.logDir, snap.version, rows.size)
   }
 
   /** Write a V2 checkpoint (PROTOCOL.md "V2 Spec Checkpoints"): the
@@ -3073,11 +2765,11 @@ object DeltaWriter {
     * pointer. Chosen by `delta.checkpointPolicy = "v2"` — and only
     * when the protocol already declares the `v2Checkpoint` feature
     * (writing one onto a classic table would strand old readers). */
-  private def writeV2Checkpoint(fs: FileSystem, base: Path, logDir: Path,
-                                snap: DeltaReader.DeltaSnapshot)
+  private def writeV2Checkpoint(t: TableRoot, snap: DeltaReader.DeltaSnapshot)
                                (implicit spark: SparkSession): Unit = {
     import org.apache.spark.sql.Row
-    val (rows, schema) = checkpointRows(base, snap)
+    val (fs, logDir) = (t.fs, t.logDir)
+    val (rows, schema) = checkpointRows(t, snap)
     // row layout: (txn, add, remove, domainMetadata, metaData,
     // protocol) — the file/non-file split below keys on add/remove at
     // positions 1/2; domainMetadata rows are manifest (non-file) state

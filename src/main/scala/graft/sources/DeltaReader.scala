@@ -1410,15 +1410,8 @@ object DeltaReader {
           (key, java.util.Arrays.copyOf(decoded, d.sizeInBytes), null, 0,
             d.sizeInBytes)
         case "u" =>
-          // `<optional random prefix><20-char Z85 uuid>`, resolved at
-          // the TABLE root: <root>/<prefix>/deletion_vector_<uuid>.bin
-          require(d.pathOrInlineDv.length >= 20,
-            s"DeltaReader: 'u' deletionVector id too short on ${f.path}")
-          val prefix = d.pathOrInlineDv.dropRight(20)
-          val uuid = DeletionVectors.decodeUUID(d.pathOrInlineDv.takeRight(20))
-          val root = new Path(snap.root)
-          val dir = if (prefix.isEmpty) root else new Path(root, prefix)
-          (key, null, new Path(dir, s"deletion_vector_$uuid.bin").toString,
+          (key, null,
+            DeletionVectors.sidecarPath(new Path(snap.root), d.pathOrInlineDv).toString,
             d.offset.getOrElse(1), d.sizeInBytes)
         case "p" =>
           (key, null, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes)

@@ -343,11 +343,20 @@ case class HiveDataset(
     *
     * The anti-join reads the very partitions the write replaces; the
     * staged write reads them in full before the publish deletes any
-    * of their fragments, so nothing is materialized first. */
+    * of their fragments, so the old rows need no copy. The incoming
+    * `df` feeds the partition pre-pass, the anti-join keys and the
+    * write, so it is pinned once: a nondeterministic input must not
+    * pick one set of partitions and then land rows in another. */
   def upsert(df: DataFrame, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     keyCols.foreach(k => require(df.columns.contains(k),
       s"upsert key column '$k' missing from the incoming frame"))
+    val pinned = df.localCheckpoint()
+    try upsertPinned(pinned, keyCols)
+    finally graft.util.Checkpoints.free(pinned, df)
+  }
+
+  private def upsertPinned(df: DataFrame, keyCols: Seq[String]): Unit = {
     val touched: Seq[ListMap[String, String]] =
       if (partitionColumns.isEmpty) partitions()
       else df.select(partitionColumns.map(col): _*).distinct().collect().toSeq

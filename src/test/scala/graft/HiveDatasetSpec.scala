@@ -526,6 +526,21 @@ class HiveDatasetSpec extends SparkSpec {
     }
   }
 
+  test("upsert evaluates a nondeterministic input once: no partition is overwritten unmerged") {
+    withTempDir { dir =>
+      val ds = HiveDataset(s"$dir/ds", Seq("p"))
+      ds.write(Seq(("a", 1L, 10L), ("b", 2L, 20L)).toDF("p", "k", "v"))
+      HiveDatasetSpec.evaluations.set(0)
+      // "a" on the first evaluation, "b" on every later one
+      val flip = udf(() => if (HiveDatasetSpec.evaluations.getAndIncrement() == 0) "a" else "b")
+        .asNondeterministic()
+      ds.upsert(Seq((9L, 90L)).toDF("k", "v").withColumn("p", flip()), Seq("k"))
+      val got = ds.scan().get.select($"p", $"k", $"v").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == Set(("a", 1L, 10L), ("a", 9L, 90L), ("b", 2L, 20L)))
+    }
+  }
+
   test("a write whose input fails mid-job leaves the dataset unchanged and no staging behind") {
     withTempDir { dir =>
       val ds = HiveDataset(s"$dir/ds", Seq("p1"))

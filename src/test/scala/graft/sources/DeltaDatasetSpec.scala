@@ -1331,4 +1331,70 @@ class DeltaDatasetSpec extends SparkSpec {
       assertSameData(DeltaReader.scan(table).get, Seq(3L).toDF("v"))
     }
   }
+
+  /** The top-level action key of every line of commit `v`, in order. */
+  private def actionKeys(table: String, v: Long): Seq[String] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    new String(Files.readAllBytes(Paths.get(table, "_delta_log", f"$v%020d.json")), "UTF-8")
+      .split("\n").toSeq.filter(_.nonEmpty).map(l => om.readTree(l).fieldNames().next())
+  }
+
+  test("every DML and rewrite verb publishes its pinned action sequence and job count") {
+    withTempDir { dir =>
+      import org.apache.spark.sql.functions.lit
+      val table = s"$dir/t"
+      val ds = new DeltaDataset(table, Seq("p"))
+      ds.write(Seq((1L, 10.0, "A"), (2L, 20.0, "A"), (3L, 30.0, "A"),
+        (5L, 50.0, "B"), (6L, 60.0, "B"), (7L, 70.0, "B")).toDF("k", "x", "p").coalesce(1))
+      ds.append(Seq((4L, 40.0, "A"), (8L, 80.0, "B")).toDF("k", "x", "p").coalesce(1))  // v1
+      def rm(n: Int) = Seq.fill(n)("remove")
+      def add(n: Int) = Seq.fill(n)("add")
+      // one touched file: the DV protocol upgrade, then remove + DV re-add
+      val (deleteJobs, v2) = jobsOf(ds.delete($"k" === 1L))
+      assert(v2 == 2L && deleteJobs == 4, s"delete ran $deleteJobs jobs")
+      assert(actionKeys(table, v2) == Seq("commitInfo", "protocol", "remove", "add"))
+      // two touched files re-added with DVs, then one new file per partition
+      val (mergeJobs, v3) = jobsOf(ds.merge(
+        Seq((2L, 22.0, "A"), (11L, 110.0, "B"), (6L, 0.0, "B")).toDF("k", "x", "p"),
+        Seq("k"), deleteWhen = Some($"x" === 0.0)))
+      assert(v3 == 3L && mergeJobs == 16, s"merge ran $mergeJobs jobs")
+      assert(actionKeys(table, v3) ==
+        Seq("commitInfo", "remove", "add", "remove", "add") ++ add(2))
+      val v4 = ds.update($"k" === 5L, Map("x" -> lit(55.0)))
+      assert(actionKeys(table, v4) == Seq("commitInfo", "remove", "add", "add"))
+      val v5 = ds.optimize(0.0)
+      assert(actionKeys(table, v5) == Seq("commitInfo") ++ rm(2) ++ add(2))
+      ds.append(Seq((12L, 120.0, "A")).toDF("k", "x", "p").coalesce(1))  // v6
+      val v7 = ds.compact()
+      assert(actionKeys(table, v7) == Seq("commitInfo") ++ rm(8) ++ add(2))
+      val v8 = ds.zorder(Seq("k", "x"), nBuckets = 4)
+      assert(actionKeys(table, v8) == Seq("commitInfo") ++ rm(2) ++ add(2))
+      val v9 = ds.restore(1L)
+      assert(v9 == 9L && actionKeys(table, v9) == Seq("commitInfo") ++ rm(2) ++ add(4))
+      assert(ds.restore(9L) == 9L, "restoring the head is a no-op")
+      assertSameData(ds.scan().get, Seq((1L, 10.0, "A"), (2L, 20.0, "A"), (3L, 30.0, "A"),
+        (4L, 40.0, "A"), (5L, 50.0, "B"), (6L, 60.0, "B"), (7L, 70.0, "B"),
+        (8L, 80.0, "B")).toDF("k", "x", "p"))
+    }
+  }
+
+  test("a merge without the change feed and a checkpoint-writing append keep their job counts") {
+    withTempDir { dir =>
+      val table = s"$dir/t"
+      val ds = new DeltaDataset(table, Seq("p"))
+      ds.write(Seq((1L, 10.0, "A"), (2L, 20.0, "B")).toDF("k", "x", "p").coalesce(1))
+      val (mergeJobs, _) = jobsOf(ds.merge(
+        Seq((2L, 22.0, "B"), (3L, 30.0, "A")).toDF("k", "x", "p"), Seq("k")))
+      assert(mergeJobs == 13, s"merge ran $mergeJobs jobs")
+      // a delete whose file already carries a DV also reads the old mask
+      val (deleteJobs, _) = jobsOf(ds.delete($"k" === 1L))
+      assert(deleteJobs == 7, s"delete ran $deleteJobs jobs")
+      val cp = s"$dir/cp"
+      val cpds = new DeltaDataset(cp, Seq("p"))
+      (0L until 10L).foreach(i => cpds.append(Seq((i, "A")).toDF("v", "p")))
+      val (appendJobs, v10) = jobsOf(cpds.append(Seq((10L, "B")).toDF("v", "p")))
+      assert(v10 == 10L && appendJobs == 2, s"checkpointing append ran $appendJobs jobs")
+      assert(Files.exists(Paths.get(cp, "_delta_log", f"${10L}%020d.checkpoint.parquet")))
+    }
+  }
 }

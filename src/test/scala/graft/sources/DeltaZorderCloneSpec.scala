@@ -213,6 +213,25 @@ class DeltaZorderCloneSpec extends SparkSpec {
     }
   }
 
+  test("clone: an overwrite of the clone removes the source's files by their absolute paths") {
+    withTempDir { dir =>
+      val src = s"$dir/src"
+      val dst = s"$dir/dst"
+      new DeltaDataset(src).write((0L until 10L).map(i => (i, s"s$i")).toDF("k", "v"))
+      DeltaWriter.cloneShallow(src, dst)
+      val srcFiles = DeltaReader.snapshot(src).get.files
+        .map(f => new org.apache.hadoop.fs.Path(f.path).toUri.toString)
+      assert(new DeltaDataset(dst).write(Seq((7L, "c7")).toDF("k", "v")) == 1L)
+      val removed = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dst, "_delta_log", "%020d.json".format(1))), "UTF-8")
+        .split("\n").filter(_.startsWith("{\"remove\"")).toSeq
+      assert(removed.size == srcFiles.size && srcFiles.forall(p => removed.exists(_.contains(p))))
+      assertSameData(DeltaReader.scan(dst).get, Seq((7L, "c7")).toDF("k", "v"))
+      assert(DeltaReader.scan(dst, Some(0L)).get.count() == 10L)
+      assert(DeltaReader.scan(src).get.count() == 10L)
+    }
+  }
+
   test("clone: time-travel clone pins the asked-for version; existing destination refused") {
     withTempDir { dir =>
       val src = s"$dir/src"
