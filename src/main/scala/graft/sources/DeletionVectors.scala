@@ -118,6 +118,40 @@ object DeletionVectors {
     new Path(dir, s"deletion_vector_$uuid.bin")
   }
 
+  /** The row indexes descriptor `d` masks: inline (`i`) payloads
+    * decode from the descriptor itself, sidecar (`u`, resolved at the
+    * table `root`) and absolute-path (`p`) ones are read through
+    * `conf`, format byte, size word and CRC checked. The one DV
+    * decode: the reader's mask frame and the DML writers' old-mask
+    * merge both call it on executors. */
+  def rowIndexes(d: DeltaReader.DvDescriptor, root: String,
+                 conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
+    val data = d.storageType match {
+      case "i" =>
+        // Z85 works in 4-byte groups; the descriptor's sizeInBytes
+        // is authoritative for the payload length under any padding
+        val decoded = z85Decode(d.pathOrInlineDv)
+        require(decoded.length >= d.sizeInBytes,
+          s"deletion vector: inline payload shorter than sizeInBytes ${d.sizeInBytes}")
+        java.util.Arrays.copyOf(decoded, d.sizeInBytes)
+      case "u" | "p" =>
+        val p =
+          if (d.storageType == "u") sidecarPath(new Path(root), d.pathOrInlineDv)
+          else new Path(d.pathOrInlineDv)
+        val fs = p.getFileSystem(conf)
+        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+        val in = fs.open(p)
+        try in.readFully(0L, bytes) finally in.close()
+        require(bytes.nonEmpty && bytes(0) == FileFormatVersion,
+          s"deletion vector: file $p has format version " +
+            s"${if (bytes.isEmpty) "<empty>" else bytes(0)} (want 1)")
+        unframe(bytes, d.offset.getOrElse(1), d.sizeInBytes)
+      case other => throw new UnsupportedOperationException(
+        s"deletion vector: storageType '$other' unknown (u/i/p only)")
+    }
+    deserialize(data)
+  }
+
   // ---- 64-bit RoaringBitmapArray, "portable" format ----------------
 
   /** Magic number heading the serialized form (PROTOCOL.md). */

@@ -852,20 +852,21 @@ object DeltaWriter {
     *     (`_metadata.file_path` / `row_index`, existing DVs already
     *     applied, partition literals injected so `cond` may reference
     *     partition columns);
-    *  2. per touched file, merge the surviving old mask with the new
-    *     matches and serialize ONE roaring sidecar ON AN EXECUTOR
-    *     (`deletion_vector_<uuid>.bin`, storage type `u`) — the
-    *     driver never holds a bitmap, and per-task memory is bounded
-    *     by one file's deleted-row count (the same bound every DV
-    *     writer carries);
+    *  2. in the same action, group the matches per touched file: the
+    *     file's task decodes its old mask from the snapshot's
+    *     descriptor, unions it with the new matches and serializes ONE
+    *     roaring sidecar ON AN EXECUTOR (`deletion_vector_<uuid>.bin`,
+    *     storage type `u`) — the driver never holds a bitmap, and
+    *     per-task memory is bounded by one file's deleted-row count
+    *     (the same bound every DV writer carries);
     *  3. one commit: a protocol upgrade to reader 3 / writer 7 with
     *     the `deletionVectors` feature when the table lacks it, then
     *     remove+re-add of each touched file with its new descriptor
     *     (same version — [[DeltaReader]] resolves the tie to the add).
     *
-    * Steps 2-3 are [[copyOnWriteCommit]] with no inserts, published
-    * through [[commitLoop]]; its race checks apply. No match = no
-    * commit. */
+    * Steps 1-3 are [[copyOnWriteCommit]] with no inserts, published
+    * through [[commitLoop]]; its race checks apply. The scan runs
+    * once. No match = no commit. */
   def delete(url: String, cond: org.apache.spark.sql.Column)
             (implicit spark: SparkSession): Long = {
     import org.apache.spark.sql.functions.col
@@ -885,7 +886,7 @@ object DeltaWriter {
       snap.configuration.get("delta.enableChangeDataFeed").contains("true")
     val matchedRows0 = DeltaReader.scanWithRowIndex(snap).where(cond)
     val matchedRows =
-      if (cdfOn) matchedRows0.localCheckpoint() else matchedRows0
+      if (cdfOn) matchedRows0.localCheckpoint(eager = false) else matchedRows0
     copyOnWriteCommit(cleanUrl, snap, matchedRows.select(col("__fp"), col("__ri")),
       None, "DELETE", cdcChanges =
         if (!cdfOn) None
@@ -923,17 +924,17 @@ object DeltaWriter {
     * fodder. Returns the committed version, or the current one when
     * the merge is a no-op.
     *
-    * Scale shape (100 TB): one key-keyed semi-join — source keys
-    * BROADCAST when the estimated key bytes fit under
-    * spark.sql.autoBroadcastJoinThreshold (the CDC-slice regime),
-    * plain shuffled equi-join above it (the multi-GB backfill
-    * regime; never cartesian either way) — per-file sidecars
-    * serialized ON EXECUTORS, driver work bounded by touched-file
-    * count. */
+    * Scale shape (100 TB): one pre-pass over the pinned source (row
+    * count, duplicate guard, key widths, identity extremes), then one
+    * key-keyed semi-join — source keys BROADCAST when the estimated
+    * key bytes fit under spark.sql.autoBroadcastJoinThreshold (the
+    * CDC-slice regime), plain shuffled equi-join above it (the
+    * multi-GB backfill regime; never cartesian either way) — per-file
+    * sidecars serialized ON EXECUTORS, driver work bounded by
+    * touched-file count. */
   def merge(url: String, source: DataFrame, keyCols: Seq[String],
             deleteWhen: Option[org.apache.spark.sql.Column] = None)
            (implicit spark: SparkSession): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     require(keyCols.nonEmpty, "DeltaWriter.merge: need >= 1 key column")
     val cleanUrl = url.stripSuffix("/")
     val snap = DeltaReader.snapshot(cleanUrl).getOrElse(
@@ -968,47 +969,60 @@ object DeltaWriter {
         .simpleString} in the table, ${f.dataType.simpleString} in the source"))
     keyCols.foreach(k => require(tblTypes.contains(k),
       s"DeltaWriter.merge: key column '$k' not in the table schema"))
-    // pin the source: it feeds the duplicate guard, the mask
-    // semi-join AND the insert write — a nondeterministic source must
-    // not produce three different slices
+    // pin the source: it feeds the pre-pass, the mask semi-join AND
+    // the insert write — a nondeterministic source must not produce
+    // three different slices. The checkpoint is lazy: the pre-pass is
+    // its first reader and materializes it.
     val src = sourceG.select(snap.schema.fieldNames.map(col).toSeq: _*)
-      .localCheckpoint()
-    val dupes = src.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .limit(1).collect()
-    require(dupes.isEmpty,
-      s"DeltaWriter.merge: source has duplicate keys (e.g. " +
-        s"${dupes.headOption.orNull}) — a key must resolve to one source row")
-    // Size-gated broadcast of the source keys: the checkpointed
-    // source has no catalog stats, so an unhinted plan risks a
-    // cartesian — but a FORCED broadcast OOMs the exchange on a
-    // multi-GB backfill source. Estimate the key projection's bytes
-    // from the (already-required) source row count and broadcast only
-    // under spark.sql.autoBroadcastJoinThreshold; above it the mask
-    // and CDC joins run as plain key equi-joins (shuffled hash /
-    // sort-merge under AQE — still never cartesian, they are
-    // equi-joins on the key columns).
-    // variable-width key columns (string/binary) are measured, not
-    // assumed: DataType.defaultSize is a 20-byte constant for strings,
-    // and a 200-byte URL key would defeat the gate 8x over. ONE job
-    // over the checkpointed source yields both the row count and the
-    // measured widths.
+      .localCheckpoint(eager = false)
+    // ONE pass over the pinned source yields all the driver plans
+    // with: the row count; the most repeated key, for the duplicate
+    // guard; the measured widths of the variable-width key columns
+    // (string/binary — DataType.defaultSize is a 20-byte constant for
+    // strings, and a 200-byte URL key would defeat the broadcast gate
+    // 8x over); and the explicit identity extremes the commit must
+    // advance the high watermark past. Per key in Spark, then folded
+    // per partition and merged on the driver, so the global step
+    // needs no second exchange.
     val (varKeys, fixedKeys) = keyCols.partition(k => tblTypes(k) match {
       case StringType | BinaryType => true
       case _ => false
     })
-    val gateRow = src.agg(
-      count(lit(1)).cast("bigint").as("__n"),
-      (if (varKeys.isEmpty) lit(0.0)
-       else varKeys.map(k => coalesce(avg(octet_length(col(k))), lit(0.0)))
-         .reduce(_ + _)).as("__w")).head()
-    val srcRows = gateRow.getLong(0)
-    val varBytes: Long = math.ceil(gateRow.getDouble(1)).toLong
+    val steps = mergeIdSpecs.map(_.step).toVector
+    val perKey = src.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("__n"), mergeIdSpecs.zipWithIndex.map { case (sp, i) =>
+        (if (sp.step > 0) max(col(sp.name)) else min(col(sp.name))).as(s"__id$i")
+      }: _*)
+      .select((struct(keyCols.map(col): _*) +: col("__n") +:
+        (varKeys.map(k => octet_length(col(k)).cast(LongType)) ++
+          steps.indices.map(i => col(s"__id$i")))): _*)
+    val nVar = varKeys.length
+    val pre = perKey.rdd.map(SourceStats.of(_, nVar, steps.length))
+      .fold(SourceStats.zero(nVar, steps.length))(_.merge(_, steps))
+    require(pre.topRows <= 1,
+      s"DeltaWriter.merge: source has duplicate keys (e.g. " +
+        keyCols.zipWithIndex.map { case (k, i) => s"$k=${pre.topKey.get(i)}" }
+          .mkString(", ") +
+        s" on ${pre.topRows} rows) — a key must resolve to one source row")
+    // per variable-width key: its average octet length over non-null rows
+    val varBytes: Long = math.ceil(pre.varBytes.zip(pre.varRows).map {
+      case (b, n) => if (n == 0) 0.0 else b.toDouble / n }.sum).toLong
+    val idObserved: Map[String, Long] = mergeIdSpecs.zip(pre.ids).collect {
+      case (sp, Some(v)) => sp.name -> v }.toMap
+    // Size-gated broadcast of the source keys: the checkpointed
+    // source has no catalog stats, so an unhinted plan risks a
+    // cartesian — but a FORCED broadcast OOMs the exchange on a
+    // multi-GB backfill source. Estimate the key projection's bytes
+    // from the source row count and broadcast only under
+    // spark.sql.autoBroadcastJoinThreshold; above it the mask and CDC
+    // joins run as plain key equi-joins (shuffled hash / sort-merge
+    // under AQE — still never cartesian, they are equi-joins on the
+    // key columns).
     val keyRowBytes = varBytes +
       fixedKeys.map(k => tblTypes(k).defaultSize.toLong).sum +
       keyCols.length * 8L + 16L
     val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val smallSource = bcThreshold > 0 && srcRows * keyRowBytes <= bcThreshold
+    val smallSource = bcThreshold > 0 && pre.rows * keyRowBytes <= bcThreshold
     def hinted(keys: DataFrame): DataFrame =
       if (smallSource) broadcast(keys) else keys
     val inserts = deleteWhen.map(c => src.filter(!c)).getOrElse(src)
@@ -1031,7 +1045,7 @@ object DeltaWriter {
     val matchedFull0 = scanBase
       .join(hinted(src.select(keyCols.map(col): _*)), keyCols, "left_semi")
     val matchedFull =
-      if (cdfOn) matchedFull0.localCheckpoint() else matchedFull0
+      if (cdfOn) matchedFull0.localCheckpoint(eager = false) else matchedFull0
     val matched = matchedFull.select(col("__fp"), col("__ri"))
     // precise CDF types, the shapes delta-spark's own MERGE records:
     // matched + delete clause -> delete; matched + replaced ->
@@ -1061,15 +1075,6 @@ object DeltaWriter {
             .withColumn("_change_type", lit("insert"))
         ).reduce(_ unionByName _))
       }
-    // explicit identity extremes from the PINNED source (one tiny agg
-    // on checkpointed data) — the commit advances the watermark past
-    // them so later allocations cannot collide
-    val idObserved: Map[String, Long] = mergeIdSpecs.flatMap { sp =>
-      val r = src.agg(
-        if (sp.step > 0) org.apache.spark.sql.functions.max(col(sp.name))
-        else org.apache.spark.sql.functions.min(col(sp.name))).head()
-      if (r.isNullAt(0)) None else Some(sp.name -> r.getLong(0))
-    }.toMap
     // preserve row identity on UPDATE-shaped rows: each insert joins
     // (left) the matched target's id by key into the materialized
     // columns — true inserts stay NULL there and read fresh ids from
@@ -1095,6 +1100,37 @@ object DeltaWriter {
     }
     copyOnWriteCommit(cleanUrl, snap, matched, Some(insertsOut), "MERGE",
       idObserved, cdc, rtm)
+  }
+
+  /** [[merge]]'s source pre-pass totals: the row count, the most
+    * repeated key and its row count, per variable-width key column its
+    * summed octet length and non-null row count, and per identity
+    * column its extreme in step direction. */
+  private final case class SourceStats(rows: Long, topRows: Long,
+      topKey: org.apache.spark.sql.Row, varBytes: Vector[Long],
+      varRows: Vector[Long], ids: Vector[Option[Long]]) {
+    def merge(o: SourceStats, steps: Vector[Long]): SourceStats = SourceStats(
+      rows + o.rows,
+      math.max(topRows, o.topRows),
+      if (o.topRows > topRows) o.topKey else topKey,
+      varBytes.zip(o.varBytes).map { case (a, b) => a + b },
+      varRows.zip(o.varRows).map { case (a, b) => a + b },
+      ids.zip(o.ids).zip(steps).map { case ((a, b), st) =>
+        (a ++ b).reduceOption((x, y) => if (st > 0) math.max(x, y) else math.min(x, y)) })
+  }
+
+  private object SourceStats {
+    def zero(nVar: Int, nIds: Int): SourceStats = SourceStats(0L, 0L, null,
+      Vector.fill(nVar)(0L), Vector.fill(nVar)(0L), Vector.fill(nIds)(None))
+
+    /** One per-key row: (key struct, rows, octet lengths…, extremes…). */
+    def of(r: org.apache.spark.sql.Row, nVar: Int, nIds: Int): SourceStats = {
+      val n = r.getLong(1)
+      val lens = (0 until nVar).map(j => Option(r.get(2 + j)).map(_.asInstanceOf[Long]))
+      SourceStats(n, n, r.getStruct(0), lens.map(_.fold(0L)(_ * n)).toVector,
+        lens.map(_.fold(0L)(_ => n)).toVector,
+        (0 until nIds).map(i => Option(r.get(2 + nVar + i)).map(_.asInstanceOf[Long])).toVector)
+    }
   }
 
   /** Row-level UPDATE — `SET col = expr, ...` over every row matching
@@ -1150,7 +1186,7 @@ object DeltaWriter {
     val matchedRows = (rtu match {
       case None => DeltaReader.scanWithRowIndex(snap)
       case Some(_) => DeltaReader.scanWithRowIndexAndIds(snap)
-    }).where(cond).localCheckpoint()
+    }).where(cond).localCheckpoint(eager = false)
     val mask = matchedRows.select(col("__fp"), col("__ri"))
     val updated = snap.schema.fields.foldLeft(matchedRows) { (df, f) =>
       set.get(f.name) match {
@@ -1182,7 +1218,7 @@ object DeltaWriter {
     val cdfOnU = snap.configuration
       .get("delta.enableChangeDataFeed").contains("true")
     val postimages =
-      if (cdfOnU) regenerated.localCheckpoint() else regenerated
+      if (cdfOnU) regenerated.localCheckpoint(eager = false) else regenerated
     val cdcU: Option[DataFrame] =
       if (!cdfOnU) None
       else Some(
@@ -1199,9 +1235,16 @@ object DeltaWriter {
     * (`__fp`, `__ri` against `snap`'s live files) behind per-file DV
     * sidecars, land `inserts` as new data files, and publish ONE
     * commit carrying the protocol upgrade (when needed), removes + DV
-    * re-adds and the new adds. No mask and no insert = no commit;
-    * `inserts = None` ([[delete]]) skips the insert machinery and its
-    * emptiness job altogether.
+    * re-adds and the new adds.
+    *
+    * Jobs: ONE action runs the mask plan — grouped per touched file,
+    * each task merges the file's old mask with the new rows and writes
+    * the sidecar, and the driver collects one descriptor per file —
+    * then ONE write lands `inserts`. Whether anything was inserted is
+    * read off the landed footers (zero-record files are deleted, never
+    * added). No mask and no insert = no commit; `inserts = None`
+    * ([[delete]]) lands nothing. The verbs pin their frames with lazy
+    * checkpoints, materialized by the first action that reads them.
     *
     * Race safety ([[commitLoop]]): every touched file must still be
     * live at the head with an UNCHANGED deletion vector (the masks were
@@ -1218,62 +1261,63 @@ object DeltaWriter {
                                 rtNames: Option[(String, String,
                                   Map[String, String])] = None)
                                (implicit spark: SparkSession): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     val verb = operation.toLowerCase
     val t = new TableRoot(cleanUrl)
-
-    val fileKeys: Seq[String] = maskRows.select(col("__fp")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val toInsert = inserts.filterNot(_.isEmpty)
-    if (fileKeys.isEmpty && toInsert.isEmpty) return snap.version
     val byKey = byFileKey(snap.files)
+
+    // the mask plan's one action: per touched file, a task unions the
+    // file's old mask (disjoint: the scan already applied it) with the
+    // new matches and writes one sidecar; per-task memory is one
+    // file's deleted-row count
+    val oldDvs = spark.sparkContext.broadcast(
+      byKey.flatMap { case (k, f) => f.deletionVector.map(k -> _) })
+    val conf = spark.sparkContext.broadcast(
+      new DeltaReader.SerializableConf(spark.sessionState.newHadoopConf()))
+    val (rootStr, snapRoot) = (t.base.toString, snap.root)
+    val descriptors: Map[String, DeltaReader.DvDescriptor] = maskRows
+      .as[(String, Long)]
+      .groupByKey(_._1)
+      .mapGroups { (fp, it) =>
+        val hadoop = conf.value.value
+        val old = oldDvs.value.get(fp)
+          .map(DeletionVectors.rowIndexes(_, snapRoot, hadoop))
+          .getOrElse(Array.emptyLongArray)
+        val idx = old ++ it.map(_._2)
+        val data = DeletionVectors.serialize(idx.toSeq)
+        val uuid = java.util.UUID.randomUUID()
+        val p = new Path(rootStr, s"deletion_vector_$uuid.bin")
+        val out = p.getFileSystem(hadoop).create(p, false)
+        try {
+          out.write(Array(DeletionVectors.FileFormatVersion))
+          out.write(DeletionVectors.frame(data))
+        } finally out.close()
+        (fp, DeletionVectors.encodeUUID(uuid), data.length, idx.length.toLong)
+      }
+      .collect() // file-count bounded: one descriptor per touched file
+      .map { case (fp, u, n, c) =>
+        fp -> DeltaReader.DvDescriptor("u", u, Some(1), n, c) }.toMap
+    val fileKeys: Seq[String] = descriptors.keys.toSeq.sorted
     fileKeys.foreach(k => require(byKey.contains(k),
       s"DeltaWriter.$verb: matched file $k missing from the snapshot"))
 
-    // merged masks = old ∪ new, disjoint (the scan already applied
-    // the old DVs) — one sidecar per touched file, serialized ON AN
-    // EXECUTOR; the driver only collects one descriptor per file
-    val descriptors: Map[String, DeltaReader.DvDescriptor] =
-      if (fileKeys.isEmpty) Map.empty
-      else {
-        val keyFrame = fileKeys.toDF("__fp")
-        val oldMasks = DeltaReader.deletedRowsFrame(snap)
-          .map(_.select(col("__dv_fp").as("__fp"), col("__dv_ri").as("__ri"))
-            .join(broadcast(keyFrame), Seq("__fp"), "left_semi"))
-        val all = oldMasks.map(maskRows.unionByName(_)).getOrElse(maskRows)
-        val conf = spark.sparkContext.broadcast(
-          new DeltaReader.SerializableConf(spark.sessionState.newHadoopConf()))
-        val rootStr = t.base.toString
-        all.as[(String, Long)]
-          .groupByKey(_._1)
-          .mapGroups { (fp, it) =>
-            val idx = it.map(_._2).toArray
-            val data = DeletionVectors.serialize(idx.toSeq)
-            val uuid = java.util.UUID.randomUUID()
-            val p = new Path(rootStr, s"deletion_vector_$uuid.bin")
-            val out = p.getFileSystem(conf.value.value).create(p, false)
-            try {
-              out.write(Array(DeletionVectors.FileFormatVersion))
-              out.write(DeletionVectors.frame(data))
-            } finally out.close()
-            (fp, DeletionVectors.encodeUUID(uuid), data.length, idx.length.toLong)
-          }
-          .collect() // file-count bounded: one descriptor per touched file
-          .map { case (fp, u, n, c) =>
-            fp -> DeltaReader.DvDescriptor("u", u, Some(1), n, c) }.toMap
-      }
-
+    // whether anything was inserted is read off the landed footers:
+    // an empty insert set lands zero-record files, deleted here and
+    // never added
     val physI = physColumnsFor(snap, verb)
-    val newFiles: Seq[(Seq[(String, String)], Path)] = toInsert.toSeq.flatMap(
+    val landed: Seq[(Seq[(String, String)], Path)] = inserts.toSeq.flatMap(
       landFiles(t.fs, t.base, cleanUrl, _, snap.partitionColumns, physI,
         physTypesFor(snap)))
+    val (landedLines, landedStats) = landedAdds(t, landed,
+      snap.physicalSchema.getOrElse(snap.schema), dataChange = true)
+    val (newAdds, newCounts) = landed.zip(landedLines)
+      .zip(recordCounts(landed, landedStats))
+      .flatMap { case (((_, p), line), n) =>
+        if (n > 0) Some((line, n)) else { t.fs.delete(p, false); None }
+      }.unzip
+    if (fileKeys.isEmpty && newAdds.isEmpty) return snap.version
     val cdcLines = cdcLandAndLines(t, snap.configuration, snap.partitionColumns,
       physI, cdcChanges, physTypesFor(snap))
-    val (newAdds, newStats) = landedAdds(t, newFiles,
-      snap.physicalSchema.getOrElse(snap.schema), dataChange = true)
-    // row-tracking stamping input, resolved once (not per retry)
-    lazy val cowRecCounts: Seq[Long] = recordCounts(newFiles, newStats)
 
     commitOnHead(t, verb, operation) { head =>
       if (inserts.isDefined)
@@ -1288,8 +1332,8 @@ object DeltaWriter {
             "row masks were computed against a stale snapshot; re-run")
       }
       // a constraint added concurrently must not be committed violated
-      if (checkConstraintsOf(head) != checkConstraintsOf(snap))
-        toInsert.foreach(enforceCheckConstraints(head, _))
+      if (newAdds.nonEmpty && checkConstraintsOf(head) != checkConstraintsOf(snap))
+        inserts.foreach(enforceCheckConstraints(head, _))
       val needsUpgrade = fileKeys.nonEmpty &&
         !(head.protocol.minReaderVersion >= 3 &&
           head.protocol.readerFeatures.exists(_.contains("deletionVectors")))
@@ -1343,8 +1387,8 @@ object DeltaWriter {
       // assignment through rowIdCarry; the replacement/insert files
       // get fresh ids above the head's watermark
       val (newAdds2, rtDomain) =
-        if (!rowTrackingOn(head) || newFiles.isEmpty) (newAdds, Seq.empty[String])
-        else stampRowIds(head, newAdds, cowRecCounts)
+        if (!rowTrackingOn(head) || newAdds.isEmpty) (newAdds, Seq.empty[String])
+        else stampRowIds(head, newAdds, newCounts)
       Some(protoLine ++ metaLine ++ cdcLines ++ dvLines ++ newAdds2 ++ rtDomain)
     }
   }
@@ -1767,15 +1811,19 @@ object DeltaWriter {
           offset = Some(d.offset.getOrElse(1)))
         case _ => d // 'i' inline and 'p' absolute are root-free already
       }
-    // clone adds carry no row-id assignment
+    // each add keeps its row-id assignment, and the clone carries the
+    // source's watermark, so ids read the same and later appends
+    // allocate above every id the source handed out
     val adds = snap.files.map { f =>
-      liveAddLine(new Path(f.path).toUri.toString,
-        f.copy(baseRowId = None, defaultRowCommitVersion = None),
+      liveAddLine(new Path(f.path).toUri.toString, f,
         f.deletionVector.map(dvPortable))
     }
+    val rowIdDomain =
+      if (!rowTrackingOn(snap) || !snap.domainMetadata.contains("delta.rowTracking")) Nil
+      else Seq(rowTrackingDomainLine(rowIdHighWaterMark(snap)))
     val ict = ictLines(snap.configuration, t.fs, t.logDir, -1L, "CLONE")
     require(publishCommit(t.fs, t.logDir, 0L,
-      (ict ++ Seq(protocolLine, metaLine) ++ adds).mkString("\n") + "\n"),
+      (ict ++ Seq(protocolLine, metaLine) ++ adds ++ rowIdDomain).mkString("\n") + "\n"),
       s"DeltaWriter.cloneShallow: version 0 already exists at $cleanDst " +
         "— lost a creation race")
     0L
@@ -2629,7 +2677,7 @@ object DeltaWriter {
 
   /** The checkpoint schema is [[DeltaReader]]'s action schema plus
     * the `txn` column third-party readers expect to find. */
-  private def checkpointRows(t: TableRoot, snap: DeltaReader.DeltaSnapshot)
+  private[sources] def checkpointRows(t: TableRoot, snap: DeltaReader.DeltaSnapshot)
       : (Seq[org.apache.spark.sql.Row], StructType) = {
     import org.apache.spark.sql.Row
     val dvSchema = StructType(Seq(
@@ -2718,27 +2766,33 @@ object DeltaWriter {
       removeRows, schema)
   }
 
-  /** Land `rows` as ONE parquet file at exactly `target` (write to a
-    * temp dir, rename the part file in). Returns false when `target`
-    * appeared concurrently. */
+  /** Land `rows` as ONE parquet file at exactly `target`, written on
+    * the driver (where the rows already live) through Spark's own
+    * parquet output writer, so the file carries the footer schema and
+    * metadata a `coalesce(1)` Spark write of the same rows would. No
+    * Spark job runs. Writes a temp file and renames it in; returns
+    * false when `target` appeared concurrently. */
   private def landSingleParquet(fs: FileSystem, logDir: Path,
                                 rows: Seq[org.apache.spark.sql.Row],
                                 schema: StructType, target: Path)
                                (implicit spark: SparkSession): Boolean = {
-    val tmp = new Path(logDir, s".tmp-cp-${java.util.UUID.randomUUID}")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val tmp = new Path(logDir, s".tmp-cp-${java.util.UUID.randomUUID}.parquet")
+    val sqlConf = spark.sessionState.conf
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(fs.getConf)
+    val writer = ParquetUtils.prepareWrite(sqlConf, job, schema,
+        new ParquetOptions(Map.empty[String, String], sqlConf))
+      .newInstance(tmp.toString, schema,
+        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     try {
-      val part = fs.listStatus(tmp)
-        .map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-        .headOption.getOrElse(throw new IllegalStateException(
-          s"DeltaWriter: checkpoint write produced no parquet in $tmp"))
+      try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+      finally writer.close()
       fs.mkdirs(target.getParent)
-      !fs.exists(target) && fs.rename(part, target)
-    } finally fs.delete(tmp, true)
+      !fs.exists(target) && fs.rename(tmp, target)
+    } finally fs.delete(tmp, false)
   }
 
   private def writeLastCheckpoint(fs: FileSystem, logDir: Path,
@@ -2767,7 +2821,6 @@ object DeltaWriter {
     * (writing one onto a classic table would strand old readers). */
   private def writeV2Checkpoint(t: TableRoot, snap: DeltaReader.DeltaSnapshot)
                                (implicit spark: SparkSession): Unit = {
-    import org.apache.spark.sql.Row
     val (fs, logDir) = (t.fs, t.logDir)
     val (rows, schema) = checkpointRows(t, snap)
     // row layout: (txn, add, remove, domainMetadata, metaData,
@@ -2779,20 +2832,8 @@ object DeltaWriter {
     val sidecarPath = new Path(new Path(logDir, "_sidecars"), sidecarName)
     if (!landSingleParquet(fs, logDir, fileRows, schema, sidecarPath)) return
     val st = fs.getFileStatus(sidecarPath)
-    val mSchema = StructType(schema.fields ++ Seq(
-      StructField("checkpointMetadata", StructType(Seq(
-        StructField("version", LongType)))),
-      StructField("sidecar", StructType(Seq(
-        StructField("path", StringType),
-        StructField("sizeInBytes", LongType),
-        StructField("modificationTime", LongType))))))
-    val pad = Seq(null, null)
-    val nBase = schema.fields.length
-    val mRows =
-      otherRows.map(r => Row.fromSeq(r.toSeq ++ pad)) ++ Seq(
-        Row.fromSeq(Seq.fill[Any](nBase)(null) :+ Row(snap.version) :+ null),
-        Row.fromSeq(Seq.fill[Any](nBase + 1)(null) :+
-          Row(sidecarName, st.getLen, st.getModificationTime)))
+    val (mRows, mSchema) = v2ManifestRows(otherRows, schema, snap.version,
+      sidecarName, st.getLen, st.getModificationTime)
     val manifest = new Path(logDir,
       f"${snap.version}%020d.checkpoint.${java.util.UUID.randomUUID}.parquet")
     landSingleParquet(fs, logDir, mRows, mSchema, manifest)
@@ -2801,6 +2842,27 @@ object DeltaWriter {
     // `<v>.checkpoint.parquet` that does not exist. Listing-based
     // discovery (what this reader and every v2-aware engine does)
     // finds the UUID manifest without it.
+  }
+
+  /** A v2 manifest's rows and schema: the checkpoint's non-file rows,
+    * then checkpointMetadata, then the pointer to the landed sidecar. */
+  private[sources] def v2ManifestRows(otherRows: Seq[org.apache.spark.sql.Row],
+      schema: StructType, version: Long, sidecarName: String,
+      sidecarBytes: Long, sidecarMtime: Long)
+      : (Seq[org.apache.spark.sql.Row], StructType) = {
+    import org.apache.spark.sql.Row
+    val mSchema = StructType(schema.fields ++ Seq(
+      StructField("checkpointMetadata", StructType(Seq(
+        StructField("version", LongType)))),
+      StructField("sidecar", StructType(Seq(
+        StructField("path", StringType),
+        StructField("sizeInBytes", LongType),
+        StructField("modificationTime", LongType))))))
+    val nBase = schema.fields.length
+    (otherRows.map(r => Row.fromSeq(r.toSeq ++ Seq(null, null))) ++ Seq(
+      Row.fromSeq(Seq.fill[Any](nBase)(null) :+ Row(version) :+ null),
+      Row.fromSeq(Seq.fill[Any](nBase + 1)(null) :+
+        Row(sidecarName, sidecarBytes, sidecarMtime))), mSchema)
   }
 
   /** Table-relative RFC-2396-percent-encoded path — the form the log

@@ -1396,48 +1396,12 @@ object DeltaReader {
     val dvFiles = snap.files.filter(_.deletionVector.isDefined)
     if (dvFiles.isEmpty) return None
     import spark.implicits._
-    // (dataFileKey, inlineBytesOrNull, sidecarPathOrNull, offset, size)
-    val work: Seq[(String, Array[Byte], String, Int, Int)] = dvFiles.map { f =>
-      val d = f.deletionVector.get
-      val key = new Path(f.path).toUri.toString
-      d.storageType match {
-        case "i" =>
-          // Z85 works in 4-byte groups; the descriptor's sizeInBytes
-          // is authoritative for the payload length under any padding
-          val decoded = DeletionVectors.z85Decode(d.pathOrInlineDv)
-          require(decoded.length >= d.sizeInBytes,
-            s"DeltaReader: inline DV shorter than sizeInBytes on ${f.path}")
-          (key, java.util.Arrays.copyOf(decoded, d.sizeInBytes), null, 0,
-            d.sizeInBytes)
-        case "u" =>
-          (key, null,
-            DeletionVectors.sidecarPath(new Path(snap.root), d.pathOrInlineDv).toString,
-            d.offset.getOrElse(1), d.sizeInBytes)
-        case "p" =>
-          (key, null, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes)
-        case other => throw new UnsupportedOperationException(
-          s"DeltaReader: deletionVector storageType '$other' unknown " +
-            "(u/i/p only)")
-      }
-    }
+    val work = dvFiles.map(f => (new Path(f.path).toUri.toString, f.deletionVector.get))
     val conf = spark.sparkContext.broadcast(
       new SerializableConf(spark.sessionState.newHadoopConf()))
-    val df = spark.createDataset(work).flatMap { case (key, inline, side, off, size) =>
-      val data =
-        if (inline != null) inline
-        else {
-          val p = new Path(side)
-          val fs = p.getFileSystem(conf.value.value)
-          val st = fs.getFileStatus(p)
-          val bytes = new Array[Byte](st.getLen.toInt)
-          val in = fs.open(p)
-          try in.readFully(0L, bytes) finally in.close()
-          require(bytes.nonEmpty && bytes(0) == DeletionVectors.FileFormatVersion,
-            s"DeltaReader: DV file $side has format version " +
-              s"${if (bytes.isEmpty) "<empty>" else bytes(0)} (want 1)")
-          DeletionVectors.unframe(bytes, off, size)
-        }
-      DeletionVectors.deserialize(data).iterator.map(ri => (key, ri))
+    val root = snap.root
+    val df = spark.createDataset(work).flatMap { case (key, d) =>
+      DeletionVectors.rowIndexes(d, root, conf.value.value).iterator.map(ri => (key, ri))
     }.toDF("__dv_fp", "__dv_ri")
     Some(df)
   }

@@ -357,6 +357,34 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
+  test("a delete on a DV'd file merges old and new masks; an untouched DV'd file is not re-added") {
+    withTempDir { dir =>
+      val table = s"$dir/t"
+      val ds = new DeltaDataset(table, Seq("p"))
+      ds.write((1L to 8L).map(i => (i, if (i <= 4) "A" else "B"))
+        .toDF("v", "p").coalesce(1))                     // v0: one file per partition
+      ds.delete(col("v") === 1L || col("v") === 5L)       // v1: a DV on both files
+      val before = DeltaReader.snapshot(table).get.files
+        .map(f => f.partitionValues("p") -> f).toMap
+      assert(before.values.forall(_.deletionVector.exists(_.cardinality == 1L)))
+      assert(ds.delete(col("v") === 2L || col("v") === 3L) == 2L)  // touches A only
+      val after = DeltaReader.snapshot(table).get.files
+        .map(f => f.partitionValues("p") -> f).toMap
+      val dvA = after("A").deletionVector.get
+      assert(dvA.cardinality == 3L, "old (1) + new (2) masked rows")
+      assert(rowIndexes(dvA, DeltaReader.snapshot(table).get.root,
+        spark.sessionState.newHadoopConf()).toSeq == Seq(0L, 1L, 2L))
+      assert(after("B") == before("B"), "the untouched file keeps its descriptor")
+      val v2 = new String(Files.readAllBytes(
+        Paths.get(table, "_delta_log", f"${2L}%020d.json")), "UTF-8")
+      assert(v2.split("\n").count(_.startsWith("{\"add\"")) == 1 &&
+        v2.split("\n").count(_.startsWith("{\"remove\"")) == 1 && !v2.contains("p=B"),
+        s"only the touched file is removed and re-added:\n$v2")
+      assertSameData(ds.scan().get,
+        Seq((4L, "A"), (6L, "B"), (7L, "B"), (8L, "B")).toDF("v", "p"))
+    }
+  }
+
   /** Z85 needs 4-byte alignment; inline payloads pad with trailing
     * zero bytes the deserializer never reads (bitmap count bounds
     * the parse). */

@@ -270,4 +270,34 @@ class DeltaZorderCloneSpec extends SparkSpec {
       assert(op == "CLONE")
     }
   }
+
+  test("clone: a row-tracked source's row ids and watermark carry over") {
+    withTempDir { dir =>
+      val src = s"$dir/src"
+      val dst = s"$dir/dst"
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
+      val logDir = java.nio.file.Paths.get(src, "_delta_log")
+      java.nio.file.Files.createDirectories(logDir)
+      java.nio.file.Files.write(logDir.resolve("%020d.json".format(0)), (Seq(
+        """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
+          """"writerFeatures":["rowTracking","domainMetadata"]}}""",
+        s"""{"metaData":{"id":"rt","format":{"provider":"parquet","options":{}},""" +
+          s""""schemaString":"${schema.json.replace("\"", "\\\"")}","partitionColumns":[],""" +
+          """"configuration":{"delta.enableRowTracking":"true"},"createdTime":1700000000000}}""")
+        .mkString("\n") + "\n").getBytes("UTF-8"))
+      new DeltaDataset(src).append(Seq(10L, 11L).toDF("v").coalesce(1))
+      def ids(table: String): Map[Long, java.lang.Long] =
+        DeltaReader.scanWithRowIds(table).get.select(col("v"), col("_row_id")).collect()
+          .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else Long.box(r.getLong(1)))).toMap
+      val srcIds = ids(src)
+      assert(srcIds.values.forall(_ != null) && srcIds.size == 2)
+      DeltaWriter.cloneShallow(src, dst)
+      assert(ids(dst) == srcIds, "clone rows keep their source row ids")
+      new DeltaDataset(dst).append(Seq(12L).toDF("v"))
+      val hwm = DeltaWriter.rowIdHighWaterMark(DeltaReader.snapshot(src).get)
+      assert(ids(dst)(12L) > hwm,
+        s"a row appended to the clone gets an id above the source's watermark $hwm")
+    }
+  }
 }
