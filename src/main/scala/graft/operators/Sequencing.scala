@@ -490,7 +490,8 @@ object Sequencing {
     * row order — the storage-layout diagnostic behind encoding
     * choices: a column whose values arrive in long runs RLE/dict-
     * encodes to almost nothing, a shuffled one doesn't; compare
-    * against the post-[[compactClustered]]-style layouts. For each
+    * against clustered layouts ([[graft.sources.DeltaDataset.zorder]]
+    * rewrites). For each
     * column: total rows, run count (`1 + adjacent-pairs-that-differ`,
     * null-safe equality), and mean run length
     * `avg_run_ppm = (1e6 · n_rows) div n_runs`. Output one row per

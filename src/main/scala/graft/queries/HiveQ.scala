@@ -159,14 +159,14 @@ object HiveQ {
           .orderBy("l_returnflag")
       }),
 
-    // ---- managed (Delta stand-in) time travel --------------------
+    // ---- managed (Delta view) time travel -------------------------
     // S15–S17 + the transaction log: write the 'O' orders slice
-    // (v1), append the 'F' slice (v2 = O∪F), overwrite with the 'P'
-    // slice (v3 = P alone — whole-table Delta overwrite semantics).
-    // readVersion(2) must still see O∪F AFTER the overwrite (old
-    // commit dirs are immutable; the manifest pins the snapshot),
-    // while scan() sees only P. Both snapshots aggregate per status
-    // against the ORIGINAL table's oracle.
+    // (v0), append the 'F' slice (v1 = O∪F), overwrite with the 'P'
+    // slice (v2 = P alone — whole-table Delta overwrite semantics).
+    // readVersion(1) must still see O∪F AFTER the overwrite (old data
+    // files are immutable; the log pins the snapshot), while scan()
+    // sees only P. Both snapshots aggregate per status against the
+    // ORIGINAL table's oracle; `ver` keeps the 1-based labels 2 and 3.
     Q("q238_managed_time_travel",
       Some("""SELECT 2::BIGINT AS ver, o_orderstatus, count(*)::BIGINT AS n
              |FROM orders WHERE o_orderstatus IN ('F', 'O') GROUP BY o_orderstatus
@@ -180,7 +180,7 @@ object HiveQ {
         ds.write(orders.where(col("o_orderstatus") === "O"))
         ds.append(orders.where(col("o_orderstatus") === "F"))
         ds.write(orders.where(col("o_orderstatus") === "P"))
-        val v2 = ds.readVersion(2).groupBy("o_orderstatus")
+        val v2 = ds.readVersion(1).groupBy("o_orderstatus")
           .agg(count(lit(1)).cast("bigint").as("n")).withColumn("ver", lit(2L))
         val v3 = ds.scan().get.groupBy("o_orderstatus")
           .agg(count(lit(1)).cast("bigint").as("n")).withColumn("ver", lit(3L))
@@ -189,14 +189,14 @@ object HiveQ {
           .orderBy("ver", "o_orderstatus")
       }),
 
-    // ---- manifest file-stats skip scan ---------------------------
+    // ---- file-stats skip scan -------------------------------------
     // The Delta data-skipping read: orders written range-clustered
     // on o_totalprice into 8 files with per-file min/max recorded in
-    // the commit manifest; scanPruned resolves the manifest, drops
-    // the files whose [min,max] misses [20000, 60000], scans ONLY
-    // the survivors, and must equal the plain filter (the oracle).
-    // Pruning-really-skips is pinned in ManagedDatasetSpec via the
-    // corrupted-file trick (IVF-index precedent).
+    // the log's add stats; scanPruned drops the files whose
+    // [min,max] misses [20000, 60000], scans ONLY the survivors, and
+    // must equal the plain filter (the oracle). Pruning-really-skips
+    // is pinned in ManagedDatasetSpec via the corrupted-file trick
+    // (IVF-index precedent).
     Q("q246_stats_skip_scan",
       Some("""SELECT count(*)::BIGINT AS n, sum(o_orderkey)::BIGINT AS sum_key
              |FROM orders
@@ -243,13 +243,13 @@ object HiveQ {
           .orderBy("r_regionkey")
       }),
 
-    // ---- manifest-bloom equality skip scan -----------------------
+    // ---- bloom equality skip scan ---------------------------------
     // Point lookup on a HASH-distributed (deliberately unclustered)
     // table: per-file min/max windows all overlap, but the per-file
-    // manifest blooms drop every file not carrying the probed key
-    // before any IO. Bloom-really-skips is pinned in
-    // ManagedDatasetSpec via the corrupted-file trick; here the
-    // oracle states plain-filter semantics.
+    // blooms in the log's add tags drop every file not carrying the
+    // probed key before any IO. Bloom-really-skips is pinned in
+    // ManagedDatasetSpec via the corrupted-file trick; here the oracle
+    // states plain-filter semantics.
     Q("q293_bloom_skip_scan",
       Some("""SELECT count(*)::BIGINT AS n,
              |  sum(CAST(floor(value * 1000000 + 0.5) AS BIGINT))::BIGINT AS sum_micro
@@ -264,10 +264,11 @@ object HiveQ {
               .cast("bigint").as("sum_micro"))
       }),
 
-    // ---- RESTORE + manifest row-count introspection --------------
-    // write -> append -> restore(v1): three versions whose logical
-    // row counts come straight from the manifest stats (no data IO);
-    // the oracle derives the same three counts from the source table.
+    // ---- RESTORE + log row-count introspection -------------------
+    // write -> append -> restore(v0): three versions whose logical
+    // row counts come straight from the log's file stats (no data
+    // IO); the oracle derives the same three counts from the source
+    // table and numbers the versions 1..3.
     Q("q294_version_report",
       Some("""WITH t AS (SELECT count(*)::BIGINT AS n FROM orders),
              |f AS (SELECT count(*)::BIGINT AS n FROM orders WHERE o_orderstatus = 'F')
@@ -282,12 +283,13 @@ object HiveQ {
         val orders = t(s, dir, "orders")
         ds.write(orders)
         ds.append(orders.where(col("o_orderstatus") === "F"))
-        ds.restore(1L)
-        ds.versionRowCounts().toDF("version", "n_rows")
+        ds.restore(0L)
+        ds.versionRowCounts().map { case (v, n) => (v + 1, n) }
+          .toDF("version", "n_rows")
           .orderBy("version")
       }),
 
-    // ---- MERGE INTO (upsert + delete) on the managed log ---------
+    // ---- MERGE INTO (upsert + delete) on the managed view --------
     // CDC-style merge: keys %10=3 update (+1000 price), the %30=3
     // subset deletes, keys %100=7 insert shifted clones; the oracle
     // states the expected final table directly.
@@ -460,7 +462,7 @@ object HiveQ {
           .withColumn("o_totalprice", lit(-1.0))
         val rejected =
           try { ds.append(poisoned); false }
-          catch { case e: IllegalStateException =>
+          catch { case e: IllegalArgumentException =>
             e.getMessage.contains("positive_price") }
         require(rejected, "q369: the poisoned batch must be rejected")
         ds.append(orders.where(col("o_orderstatus") === "F"))

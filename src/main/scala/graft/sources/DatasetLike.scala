@@ -19,8 +19,9 @@ trait DatasetLike {
     * reference's two backends: [[HiveDataset]] replaces only the
     * partitions present in `df` (untouched partitions survive —
     * hive_dataset.py's delete-matching-dirs pass), while
-    * [[ManagedDataset]] replaces the WHOLE table as one snapshot
-    * (Delta `mode="overwrite"`). The reference's own partial-rewrite
+    * [[ManagedDataset]], a view over one Delta table, replaces the
+    * WHOLE table as one snapshot (Delta `mode="overwrite"`). The
+    * reference's own partial-rewrite
     * test parametrizes over HiveDataset alone
     * (tests/test_dataset.py: test_write_back_a_partition). */
   def write(df: DataFrame): Unit

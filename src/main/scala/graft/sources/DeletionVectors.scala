@@ -118,6 +118,16 @@ object DeletionVectors {
     new Path(dir, s"deletion_vector_$uuid.bin")
   }
 
+  /** The file a descriptor's mask lives in: a `u` sidecar under
+    * `root`, a `p` absolute path; None for an inline (`i`) mask,
+    * which lives in the log itself. */
+  def sidecarFile(root: Path, d: DeltaReader.DvDescriptor): Option[Path] =
+    d.storageType match {
+      case "u" => Some(sidecarPath(root, d.pathOrInlineDv))
+      case "p" => Some(new Path(d.pathOrInlineDv))
+      case _ => None
+    }
+
   /** The row indexes descriptor `d` masks: inline (`i`) payloads
     * decode from the descriptor itself, sidecar (`u`, resolved at the
     * table `root`) and absolute-path (`p`) ones are read through

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *    touched partition directories — the [[HiveDataset]] fragment
   *    pattern, metadata cost proportional to the write;
   *  - the commit is a JSON line file `_delta_log/<v>.json` published
-  *    with the [[ManagedDataset]] first-writer-wins primitive
+  *    with the [[LogStores]] first-writer-wins primitive
   *    (POSIX link(2) on `file://`) by [[DeltaWriter.commitLoop]],
   *    the one retry loop of every verb: a lost race re-reads the
   *    head, re-validates, and retries with the SAME already-landed
@@ -179,7 +179,13 @@ final class DeltaDataset(url: String, partitionColumns: Seq[String] = Seq.empty)
 
 object DeltaWriter {
 
-  private val MaxCommitAttempts = 20
+  private val CommitRaceLimit = 20
+
+  /** Age past which a log temp (`_tmp-*.json` publish temp,
+    * `.tmp-cp-*.parquet` checkpoint temp) is a killed writer's orphan:
+    * a live writer's temp exists for the moment between create and
+    * publish. */
+  private[sources] val TmpRetentionMs = 60L * 60 * 1000
 
   /** Checkpoint cadence when the table sets no
     * `delta.checkpointInterval` property — the protocol's
@@ -335,15 +341,11 @@ object DeltaWriter {
   }
 
   /** The `inCommitTimestamp` of one commit file, when present. */
-  private[sources] def readIct(fs: FileSystem, p: Path): Option[Long] = {
-    if (!fs.exists(p)) return None
-    val st = fs.getFileStatus(p)
-    val bytes = new Array[Byte](st.getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0L, bytes) finally in.close()
-    """"inCommitTimestamp"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(new String(bytes, "UTF-8")).map(_.group(1).toLong)
-  }
+  private[sources] def readIct(fs: FileSystem, p: Path): Option[Long] =
+    if (!fs.exists(p)) None
+    else DeltaReader.commitRecords(fs, fs.getFileStatus(p))
+      .flatMap(n => Option(n.path("commitInfo").get("inCommitTimestamp")))
+      .headOption.map(_.asLong)
 
   /** A table's filesystem, qualified root and log directory, plus the
     * log's path encoders — resolved once per verb. */
@@ -374,29 +376,38 @@ object DeltaWriter {
     * prepends the `commitInfo` line, publishes `<head + 1>.json` and
     * checkpoints on the interval. A lost publish re-reads the head and
     * tries again; data files landed before the loop stay valid across
-    * attempts, only the log lines are recomputed. */
+    * attempts, only the log lines are recomputed. Returns the version
+    * this call published, or the head's when there was nothing to
+    * commit ([[commitOutcome]] tells the two apart). */
   private[sources] def commitLoop(t: TableRoot, verb: String, operation: String)
       (render: Option[DeltaReader.DeltaSnapshot] => Option[Seq[String]])
-      (implicit spark: SparkSession): Long = {
+      (implicit spark: SparkSession): Long =
+    commitOutcome(t, verb, operation)(render).merge
+
+  /** [[commitLoop]]: `Right(version)` when this call published it,
+    * `Left(head version)` (-1 for no table) when `render` declined. */
+  private[sources] def commitOutcome(t: TableRoot, verb: String, operation: String)
+      (render: Option[DeltaReader.DeltaSnapshot] => Option[Seq[String]])
+      (implicit spark: SparkSession): Either[Long, Long] = {
     var attempt = 0
-    while (attempt < MaxCommitAttempts) {
+    while (attempt < CommitRaceLimit) {
       val head = DeltaReader.snapshot(t.cleanUrl)
       val version = head.map(_.version + 1).getOrElse(0L)
       render(head) match {
-        case None => return head.map(_.version).getOrElse(-1L)
+        case None => return Left(head.map(_.version).getOrElse(-1L))
         case Some(actions) =>
           val ict = ictLines(head.map(_.configuration).getOrElse(Map.empty),
             t.fs, t.logDir, version - 1, operation)
           if (publishCommit(t.fs, t.logDir, version,
               (ict ++ actions).mkString("\n") + "\n")) {
             maybeCheckpoint(t, version)
-            return version
+            return Right(version)
           }
       }
       attempt += 1
     }
     throw new IllegalStateException(
-      s"DeltaWriter.$verb: lost the commit race $MaxCommitAttempts times " +
+      s"DeltaWriter.$verb: lost the commit race $CommitRaceLimit times " +
         s"on ${t.cleanUrl} — giving up")
   }
 
@@ -406,7 +417,7 @@ object DeltaWriter {
       (implicit spark: SparkSession): Long =
     commitLoop(t, verb, operation)(head => render(head.getOrElse(
       throw new IllegalStateException(
-        s"DeltaWriter.$verb: table at ${t.cleanUrl} vanished mid-commit"))))
+        s"DeltaWriter.$verb: no Delta table at ${t.cleanUrl}"))))
 
   /** Live files keyed the way scans name them (`_metadata.file_path`). */
   private def byFileKey(files: Seq[DeltaReader.DeltaFile])
@@ -420,9 +431,10 @@ object DeltaWriter {
       s""""deletionTimestamp":${System.currentTimeMillis},""" +
       s""""dataChange":$dataChange}}"""
 
-  /** A log `partitionValues` object; a null VALUE ({"p":null} = the
-    * null partition) is legal and renders as a JSON null. */
-  private def partitionValuesJson(kvs: Iterable[(String, String)]): String =
+  /** A log string map (`partitionValues`, `tags`); a null VALUE
+    * ({"p":null} = the null partition) is legal and renders as a JSON
+    * null. */
+  private def stringMapJson(kvs: Iterable[(String, String)]): String =
     kvs.map { case (k, v) =>
       s""""${jsonEscape(k)}":${
         if (v == null) "null" else s""""${jsonEscape(v)}""""}"""
@@ -434,26 +446,33 @@ object DeltaWriter {
       d.offset.map(o => s""","offset":$o""").getOrElse("") +
       s""","sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
 
+  /** The `,"tags":{…}` field of an add line; empty when `tags` is. */
+  private def tagsJson(tags: Map[String, String]): String =
+    if (tags.isEmpty) "" else s""","tags":${stringMapJson(tags)}"""
+
   /** The `add` action re-stating a live file under `path` with
     * deletion vector `dv`: size, mtime, stats (file content is
-    * untouched, and Delta treats a DV'd file's bounds as sound
-    * supersets) and its row-id assignment carry through. */
+    * untouched, and Delta treats a DV'd file's bounds and blooms as
+    * sound supersets), tags and its row-id assignment carry through. */
   private def liveAddLine(path: String, f: DeltaReader.DeltaFile,
                           dv: Option[DeltaReader.DvDescriptor]): String =
     s"""{"add":{"path":"${jsonEscape(path)}",""" +
-      s""""partitionValues":${partitionValuesJson(f.partitionValues)},""" +
+      s""""partitionValues":${stringMapJson(f.partitionValues)},""" +
       s""""size":${f.size},"modificationTime":${f.modificationTime},""" +
       s""""dataChange":true${dv.map(dvJson).getOrElse("")}""" +
       f.stats.map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("") +
-      rowIdCarry(f) + "}}"
+      tagsJson(f.tags) + rowIdCarry(f) + "}}"
 
-  /** Footer stats and `add` lines for freshly landed files. */
+  /** Footer stats and `add` lines for freshly landed files; `tags`
+    * keyed by `Path.toUri.toString`. */
   private def landedAdds(t: TableRoot, files: Seq[(Seq[(String, String)], Path)],
-                         statsSchema: StructType, dataChange: Boolean)
+                         statsSchema: StructType, dataChange: Boolean,
+                         tags: Map[String, Map[String, String]] = Map.empty)
       : (Seq[String], Seq[Option[String]]) = {
     val stats = files.map { case (_, p) => statsJson(t.fs, p, statsSchema) }
     (files.zip(stats).map { case ((kvs, p), st) =>
-      newFileAddLine(t.fs, p, t.rel(p), kvs, dataChange, st) }, stats)
+      newFileAddLine(t.fs, p, t.rel(p), kvs, dataChange, st,
+        tags.getOrElse(p.toUri.toString, Map.empty)) }, stats)
   }
 
   /** Record counts of landed files, for row-id stamping. */
@@ -494,14 +513,26 @@ object DeltaWriter {
   def write(url: String, dfIn: DataFrame, partitionColumns: Seq[String],
             overwrite: Boolean, txn: Option[(String, Long)] = None,
             mergeSchema: Boolean = false)
-           (implicit spark: SparkSession): Long = {
+           (implicit spark: SparkSession): Long =
+    writeOutcome(url, dfIn, partitionColumns, overwrite, txn, mergeSchema).merge
+
+  /** [[write]], telling `Right(version)` — this call published the
+    * commit — from `Left(head version)` — `txn` was already recorded.
+    * `creationConf` is the configuration a CREATING commit records
+    * (e.g. [[BloomTags.ColumnsKey]]); an existing table keeps its own.
+    * Files land with the bloom tags the table's configuration names. */
+  private[sources] def writeOutcome(url: String, dfIn: DataFrame,
+      partitionColumns: Seq[String], overwrite: Boolean,
+      txn: Option[(String, Long)], mergeSchema: Boolean,
+      creationConf: Map[String, String] = Map.empty)
+     (implicit spark: SparkSession): Either[Long, Long] = {
     val cleanUrl = url.stripSuffix("/")
     val snapGen = DeltaReader.snapshot(cleanUrl)
     // idempotence gate BEFORE any data lands: a replayed batch that
     // is already in the log must not even write files
     txn.foreach { case (app, v) =>
       snapGen.foreach { s =>
-        if (s.txns.get(app).exists(_ >= v)) return s.version
+        if (s.txns.get(app).exists(_ >= v)) return Left(s.version)
       }
     }
     // GENERATED columns materialize before any shape validation: the
@@ -658,7 +689,12 @@ object DeltaWriter {
     val newFiles = landFiles(t.fs, t.base, cleanUrl, df,
       partitionColumns, physW,
       snapGen.map(physTypesFor).getOrElse(Map.empty) ++ allocPhysTypes)
-    val (adds, fileStats) = landedAdds(t, newFiles, statsSchema, dataChange = true)
+    val bloomTags = BloomTags.tagsFor(newFiles.map(_._2),
+      BloomTags.columnsOf(snapGen.map(_.configuration).getOrElse(creationConf))
+        .flatMap(c => df.schema.find(_.name == c)).map(f =>
+          (f.name, physW.get(f.name).map(_._1).getOrElse(f.name), f.dataType)))
+    val (adds, fileStats) =
+      landedAdds(t, newFiles, statsSchema, dataChange = true, bloomTags)
     // row-tracking stamping input, resolved once (not per retry)
     lazy val writeRecCounts: Seq[Long] = recordCounts(newFiles, fileStats)
 
@@ -712,7 +748,7 @@ object DeltaWriter {
             n -> sp.highWaterMark.fold(obs)(h =>
               if (sp.step > 0) math.max(h, obs) else math.min(h, obs))
           }),
-        partitionColumns, Map.empty, System.currentTimeMillis))
+        partitionColumns, creationConf, System.currentTimeMillis))
 
     // the commit body against one head: the landed files stay valid,
     // only these lines are recomputed per attempt
@@ -828,7 +864,7 @@ object DeltaWriter {
       head ++ evolution ++ txnLine ++ removes ++ adds2 ++ rtDomain
     }
 
-    commitLoop(t, "write", "WRITE") { snap =>
+    commitOutcome(t, "write", "WRITE") { snap =>
       snap.foreach(validateAgainst)
       // a constraint added concurrently between the first snapshot and
       // publish must not be committed violated: re-enforce on change
@@ -896,10 +932,10 @@ object DeltaWriter {
 
   /** MERGE INTO on a real `_delta_log` table — keyed whole-row
     * upsert with an optional delete clause, the verb every CDC-ingest
-    * pipeline needs, with [[ManagedDataset.merge]]'s exact semantics
-    * (ManagedDataset.scala — whole-row update, delete, loud
-    * duplicate-source guard; reference scope stops at write/append,
-    * delta_dataset.py:20-39, so this is north-star surface):
+    * pipeline needs (whole-row update, delete, loud duplicate-source
+    * guard; [[ManagedDataset.merge]] forwards here; reference scope
+    * stops at write/append, delta_dataset.py:20-39, so this is
+    * north-star surface):
     *
     *  - a target row whose key matches a source row is REPLACED by it
     *    (whole-row), or DROPPED when that source row satisfies
@@ -1353,9 +1389,7 @@ object DeltaWriter {
             "deletionVectors").distinct.sorted
           val wf = (head.protocol.writerFeatures.getOrElse(impliedWriter) :+
             "deletionVectors").distinct.sorted
-          Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":[${rf.map(x => s""""$x"""").mkString(",")}],""" +
-            s""""writerFeatures":[${wf.map(x => s""""$x"""").mkString(",")}]}}""")
+          Seq(protocolLine(DeltaReader.DeltaProtocol(3, 7, Some(rf), Some(wf))))
         }
       // each new descriptor's cardinality counts the MERGED mask
       val dvLines = fileKeys.flatMap { k =>
@@ -1440,8 +1474,7 @@ object DeltaWriter {
     rewriteCommit(t, "optimize", snap, selected, newFiles, rt)
   }
 
-  /** Bin-packing file compaction — the real-Delta side of
-    * [[ManagedDataset.compact]] (ManagedDataset.scala): every
+  /** Bin-packing file compaction: every
     * partition whose live file set holds at least `minFiles` data
     * files smaller than `targetFileBytes` gets those files rewritten
     * into ~`ceil(bytes/target)` fresh files (deletion-vector masks
@@ -1792,14 +1825,6 @@ object DeltaWriter {
       s"DeltaWriter.cloneShallow: a Delta table already exists at $cleanDst")
     val t = new TableRoot(cleanDst)
     val srcRoot = new Path(snap.root)
-    def featArr(key: String, features: Option[Seq[String]]): String =
-      features.map(_.map(x => s""""${jsonEscape(x)}"""")
-        .mkString(s""","$key":[""", ",", "]")).getOrElse("")
-    val protocolLine =
-      s"""{"protocol":{"minReaderVersion":${snap.protocol.minReaderVersion},""" +
-        s""""minWriterVersion":${snap.protocol.minWriterVersion}""" +
-        featArr("readerFeatures", snap.protocol.readerFeatures) +
-        featArr("writerFeatures", snap.protocol.writerFeatures) + "}}"
     val metaLine = metaDataLine(java.util.UUID.randomUUID.toString, snap.schema,
       snap.partitionColumns, snap.configuration, System.currentTimeMillis)
     def dvPortable(d: DeltaReader.DvDescriptor): DeltaReader.DvDescriptor =
@@ -1823,7 +1848,7 @@ object DeltaWriter {
       else Seq(rowTrackingDomainLine(rowIdHighWaterMark(snap)))
     val ict = ictLines(snap.configuration, t.fs, t.logDir, -1L, "CLONE")
     require(publishCommit(t.fs, t.logDir, 0L,
-      (ict ++ Seq(protocolLine, metaLine) ++ adds ++ rowIdDomain).mkString("\n") + "\n"),
+      (ict ++ Seq(protocolLine(snap.protocol), metaLine) ++ adds ++ rowIdDomain).mkString("\n") + "\n"),
       s"DeltaWriter.cloneShallow: version 0 already exists at $cleanDst " +
         "— lost a creation race")
     0L
@@ -1869,13 +1894,7 @@ object DeltaWriter {
         // re-added files must still exist on disk: restoring past a
         // VACUUM would otherwise commit a head that fails at scan time
         val missing = addFiles.flatMap { f =>
-          val dv = f.deletionVector.flatMap { d =>
-            d.storageType match {
-              case "u" => Some(DeletionVectors.sidecarPath(t.base, d.pathOrInlineDv))
-              case "p" => Some(new Path(d.pathOrInlineDv))
-              case _ => None // "i" inline: lives in the log itself
-            }
-          }
+          val dv = f.deletionVector.flatMap(DeletionVectors.sidecarFile(t.base, _))
           (new Path(f.path) +: dv.toSeq).filterNot(t.fs.exists)
         }
         require(missing.isEmpty,
@@ -1897,10 +1916,14 @@ object DeltaWriter {
     * path. */
   private def checkConstraintsOf(
       snap: DeltaReader.DeltaSnapshot): Seq[(String, String)] =
-    snap.configuration.collect {
-      case (k, v) if k.startsWith("delta.constraints.") =>
-        k.stripPrefix("delta.constraints.") -> v
-    }.toSeq.sortBy(_._1) ++ invariantsOf(snap.schema)
+    constraintsIn(snap.configuration) ++ invariantsOf(snap.schema)
+
+  /** The `delta.constraints.<name>` properties of `conf`, by name. */
+  private[sources] def constraintsIn(
+      conf: Map[String, String]): Seq[(String, String)] =
+    conf.collect { case (k, v) if k.startsWith("delta.constraints.") =>
+      k.stripPrefix("delta.constraints.") -> v
+    }.toSeq.sortBy(_._1)
 
   /** Column INVARIANTS (`delta.invariants` field metadata, the legacy
     * writer-version-2 obligation): each is a row predicate this
@@ -1936,6 +1959,59 @@ object DeltaWriter {
                                       df: DataFrame): Unit =
     enforceRowPredicates(checkConstraintsOf(snap), df)
 
+  /** ALTER TABLE … ADD CONSTRAINT `name` CHECK (`predicateSql`): one
+    * metadata-only commit setting `delta.constraints.<name>` once the
+    * head's rows pass the predicate (a constraint the data already
+    * violates is refused; a head that moves before the publish is
+    * checked again). Every later row-creating verb enforces it — NULL
+    * passes, SQL CHECK semantics — and the protocol gains the
+    * `checkConstraints` writer requirement when it lacks it. */
+  def addConstraint(url: String, name: String, predicateSql: String)
+                   (implicit spark: SparkSession): Long = {
+    require(name.nonEmpty && predicateSql.nonEmpty,
+      "DeltaWriter.addConstraint: name and predicate must be non-empty")
+    var checked = -1L
+    commitOnHead(new TableRoot(url.stripSuffix("/")), "addConstraint",
+        "ADD CONSTRAINT") { head =>
+      enforceWritable(head, "addConstraint")
+      if (head.version != checked) {
+        enforceRowPredicates(Seq(name -> predicateSql),
+          DeltaReader.assembleSnapshot(head))
+        checked = head.version
+      }
+      val p = head.protocol
+      val upgrade =
+        if (p.minWriterVersion < 3) Some(p.copy(minWriterVersion = 3))
+        else if (p.minWriterVersion >= 7 &&
+            !p.writerFeatures.exists(_.contains("checkConstraints")))
+          Some(p.copy(writerFeatures =
+            Some(p.writerFeatures.getOrElse(Nil) :+ "checkConstraints")))
+        else None
+      Some(upgrade.map(protocolLine).toSeq :+ configurationLine(head,
+        head.configuration + (s"delta.constraints.$name" -> predicateSql)))
+    }
+  }
+
+  /** ALTER TABLE … DROP CONSTRAINT: one metadata-only commit removing
+    * `delta.constraints.<name>`; no commit when the table has no such
+    * constraint (or no table exists). Returns the head version. */
+  def dropConstraint(url: String, name: String)
+                    (implicit spark: SparkSession): Long = {
+    val key = s"delta.constraints.$name"
+    commitLoop(new TableRoot(url.stripSuffix("/")), "dropConstraint",
+        "DROP CONSTRAINT") { head =>
+      head.foreach(enforceWritable(_, "dropConstraint"))
+      head.filter(_.configuration.contains(key))
+        .map(h => Seq(configurationLine(h, h.configuration - key)))
+    }
+  }
+
+  /** The `metaData` action restating `head` with `conf`. */
+  private def configurationLine(head: DeltaReader.DeltaSnapshot,
+                                conf: Map[String, String]): String =
+    metaDataLine(head.tableId, head.schema, head.partitionColumns, conf,
+      head.createdTime.getOrElse(System.currentTimeMillis))
+
   private[sources] def enforceRowPredicates(
       constraints: Seq[(String, String)], df: DataFrame): Unit = {
     if (constraints.isEmpty) return
@@ -1943,9 +2019,10 @@ object DeltaWriter {
       .map { case (_, sql) => expr(sql) === lit(false) }
       .reduce(_ || _)
     if (!df.where(anyViolated).isEmpty) {
-      val broken = constraints.filter { case (_, sql) =>
-        !df.where(expr(sql) === lit(false)).isEmpty
-      }.map { case (n, sql) => s"$n ($sql)" }
+      val broken = constraints.flatMap { case (n, sql) =>
+        val bad = df.where(expr(sql) === lit(false)).count()
+        if (bad == 0) None else Some(s"$n ($sql): $bad row(s)")
+      }
       throw new IllegalArgumentException(
         s"DeltaWriter: CHECK constraint violation — ${broken.mkString("; ")}")
     }
@@ -1981,14 +2058,8 @@ object DeltaWriter {
       // is an absolute path that may also land inside the walk — both
       // are live while the HEAD references them ("i" is inline, no
       // file exists)
-      val sidecar = f.deletionVector.flatMap { d =>
-        d.storageType match {
-          case "u" =>
-            Some(DeletionVectors.sidecarPath(t.base, d.pathOrInlineDv).toUri.getPath)
-          case "p" => Some(new Path(d.pathOrInlineDv).toUri.getPath)
-          case _ => None
-        }
-      }
+      val sidecar = f.deletionVector
+        .flatMap(DeletionVectors.sidecarFile(t.base, _)).map(_.toUri.getPath)
       Seq(data) ++ sidecar
     }.toSet
     val tombstoneAge: Map[String, Long] = snap.tombstones.map {
@@ -2032,7 +2103,9 @@ object DeltaWriter {
     * retained manifest, each deleted only when its mtime crosses
     * `retentionMillis`; a `_last_checkpoint` pointer left naming a
     * reclaimed checkpoint is dropped so pointer-trusting readers
-    * are not sent to a nonexistent file. The head (checkpoint anchor
+    * are not sent to a nonexistent file. Publish and checkpoint
+    * temps a killed writer left are swept once older than
+    * [[TmpRetentionMs]], checkpoint or not. The head (checkpoint anchor
     * + commit tail)
     * replays identically afterwards; time travel to cleaned versions
     * raises the reader's loud truncation error — the standard
@@ -2050,7 +2123,13 @@ object DeltaWriter {
     val logDir = new Path(cleanUrl, "_delta_log")
     val fs: FileSystem = logDir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(logDir)) return 0
-    val entries = fs.listStatus(logDir).filter(_.isFile)
+    val (temps, entries) = fs.listStatus(logDir).filter(_.isFile).partition { st =>
+      val n = st.getPath.getName
+      n.startsWith("_tmp-") || n.startsWith(".tmp-cp-")
+    }
+    val tmpCutoff = System.currentTimeMillis - TmpRetentionMs
+    var deleted = temps.count(st =>
+      st.getModificationTime < tmpCutoff && fs.delete(st.getPath, false))
     val sidecarDir = new Path(logDir, "_sidecars")
     val presentSidecars: Set[String] =
       if (!fs.exists(sidecarDir)) Set.empty
@@ -2090,11 +2169,10 @@ object DeltaWriter {
       case (v, _, refs) if refs.forall(presentSidecars.contains) => v
     }.toSet
     val verified = completeClassic ++ completeV2
-    if (verified.isEmpty) return 0 // nothing verifiably anchors a replay
+    if (verified.isEmpty) return deleted // nothing verifiably anchors a replay
     val cp = verified.max
 
     val cutoff = System.currentTimeMillis - retentionMillis
-    var deleted = 0
     val deletedPaths = scala.collection.mutable.Set.empty[String]
     def reclaim(st: org.apache.hadoop.fs.FileStatus): Unit =
       if (st.getModificationTime < cutoff && fs.delete(st.getPath, false)) {
@@ -2128,11 +2206,8 @@ object DeltaWriter {
     // readers (ours) are unaffected
     val lcPath = new Path(logDir, "_last_checkpoint")
     if (fs.exists(lcPath)) {
-      val in = fs.open(lcPath)
-      val bytes = new Array[Byte](fs.getFileStatus(lcPath).getLen.toInt)
-      try in.readFully(0L, bytes) finally in.close()
-      val pointed = """"version"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(new String(bytes, "UTF-8")).map(_.group(1).toLong)
+      val pointed = DeltaReader.commitRecords(fs, fs.getFileStatus(lcPath))
+        .headOption.flatMap(n => Option(n.get("version"))).map(_.asLong)
       val stillThere = pointed.exists { pv =>
         entries.exists { st =>
           !deletedPaths.contains(st.getPath.toUri.getPath) &&
@@ -2479,14 +2554,14 @@ object DeltaWriter {
     * place. `encodedPath` is the final log-encoded path string. */
   private def newFileAddLine(fs: FileSystem, p: Path, encodedPath: String,
       kvs: Seq[(String, String)], dataChange: Boolean,
-      stats: Option[String]): String = {
+      stats: Option[String], tags: Map[String, String] = Map.empty): String = {
     val st = fs.getFileStatus(p)
     val statsStr = stats
       .map(x => s""","stats":"${jsonEscape(x)}"""").getOrElse("")
     s"""{"add":{"path":"${jsonEscape(encodedPath)}",""" +
-      s""""partitionValues":${partitionValuesJson(kvs)},""" +
+      s""""partitionValues":${stringMapJson(kvs)},""" +
       s""""size":${st.getLen},"modificationTime":${st.getModificationTime},""" +
-      s""""dataChange":$dataChange$statsStr}}"""
+      s""""dataChange":$dataChange$statsStr${tagsJson(tags)}}}"""
   }
 
   /** The `,"baseRowId":…,"defaultRowCommitVersion":…` tail preserving
@@ -2504,6 +2579,17 @@ object DeltaWriter {
     require(addLine.endsWith("}}"),
       s"DeltaWriter: cannot splice into non-add line: $addLine")
     addLine.dropRight(2) + extra + "}}"
+  }
+
+  /** A `protocol` action stating `p`. */
+  private def protocolLine(p: DeltaReader.DeltaProtocol): String = {
+    def featArr(key: String, features: Option[Seq[String]]): String =
+      features.map(_.map(x => s""""${jsonEscape(x)}"""")
+        .mkString(s""","$key":[""", ",", "]")).getOrElse("")
+    s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},""" +
+      s""""minWriterVersion":${p.minWriterVersion}""" +
+      featArr("readerFeatures", p.readerFeatures) +
+      featArr("writerFeatures", p.writerFeatures) + "}}"
   }
 
   /** The one shared `metaData` action renderer. */
@@ -2576,7 +2662,7 @@ object DeltaWriter {
       phys, physTypes)
     landed.map { case (kvs, p) =>
       s"""{"cdc":{"path":"${jsonEscape(t.rel(p))}",""" +
-        s""""partitionValues":${partitionValuesJson(kvs)},""" +
+        s""""partitionValues":${stringMapJson(kvs)},""" +
         s""""size":${t.fs.getFileStatus(p).getLen},"dataChange":false}}"""
     }
   }
@@ -2675,54 +2761,12 @@ object DeltaWriter {
           s"(commit is safe; will retry at the next interval): $e")
   }
 
-  /** The checkpoint schema is [[DeltaReader]]'s action schema plus
-    * the `txn` column third-party readers expect to find. */
+  /** The checkpoint rows of `snap`, in [[DeltaReader]]'s action
+    * schema (whose `txn` column third-party readers expect to find). */
   private[sources] def checkpointRows(t: TableRoot, snap: DeltaReader.DeltaSnapshot)
       : (Seq[org.apache.spark.sql.Row], StructType) = {
     import org.apache.spark.sql.Row
-    val dvSchema = StructType(Seq(
-      StructField("storageType", StringType),
-      StructField("pathOrInlineDv", StringType),
-      StructField("offset", IntegerType),
-      StructField("sizeInBytes", IntegerType),
-      StructField("cardinality", LongType)))
-    val schema = StructType(Seq(
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType),
-        StructField("lastUpdated", LongType)))),
-      StructField("add", StructType(Seq(
-        StructField("path", StringType),
-        StructField("partitionValues", MapType(StringType, StringType)),
-        StructField("size", LongType),
-        StructField("modificationTime", LongType),
-        StructField("dataChange", BooleanType),
-        StructField("deletionVector", dvSchema),
-        StructField("stats", StringType),
-        StructField("baseRowId", LongType),
-        StructField("defaultRowCommitVersion", LongType)))),
-      StructField("remove", StructType(Seq(
-        StructField("path", StringType),
-        StructField("deletionTimestamp", LongType),
-        StructField("dataChange", BooleanType)))),
-      StructField("domainMetadata", StructType(Seq(
-        StructField("domain", StringType),
-        StructField("configuration", StringType),
-        StructField("removed", BooleanType)))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(
-          StructField("provider", StringType),
-          StructField("options", MapType(StringType, StringType))))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("configuration", MapType(StringType, StringType)),
-        StructField("createdTime", LongType)))),
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType)))))))
+    val schema = DeltaReader.actionSchema
     // absolute paths OUTSIDE the table root are legal in the log
     // (shallow clones, `p`-mode imports); a checkpoint must carry them
     // through as absolute URIs, not refuse the whole checkpoint
@@ -2744,7 +2788,8 @@ object DeltaWriter {
           d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality))
           .orNull, f.stats.orNull,
         f.baseRowId.map(Long.box).orNull,
-        f.defaultRowCommitVersion.map(Long.box).orNull),
+        f.defaultRowCommitVersion.map(Long.box).orNull,
+        if (f.tags.isEmpty) null else f.tags),
         null, null, null, null)
     }
     val removeRows = snap.tombstones.map { case (p, ts) =>
@@ -3048,7 +3093,7 @@ object DeltaWriter {
 
   /** Atomic exclusive publish of `_delta_log/<v>.json` — POSIX
     * link(2) on `file://`, exists-check + rename elsewhere (the
-    * LogStore seam, same as [[ManagedDataset]]). */
+    * [[LogStores]] seam). */
   private def publishCommit(fs: FileSystem, logDir: Path, version: Long,
                             body: String): Boolean = {
     fs.mkdirs(logDir)

@@ -12,11 +12,11 @@ import org.apache.spark.sql.types._
   * The reference's `DeltaDataset` reads real Delta tables
   * (/root/reference/polario/delta_dataset.py:41-62: `read_partition`
   * via partition filters, `scan` returning None for a missing table).
-  * [[ManagedDataset]] reproduces that OBSERVABLE surface with its own
-  * manifest protocol; this object closes the interop gap for tables
-  * someone else already wrote with a real Delta writer: it replays
-  * `_delta_log/` into a snapshot file list and hands the files to the
-  * ordinary parquet reader.
+  * This object is the read half of the repo's one transaction log
+  * ([[DeltaWriter]] is the write half, [[ManagedDataset]] a
+  * dataset view over both), and reads tables other Delta writers
+  * wrote just the same: it replays `_delta_log/` into a snapshot
+  * file list and hands the files to the ordinary parquet reader.
   *
   * Protocol subset implemented (all public, from PROTOCOL.md):
   *  - commit files `_delta_log/<20-digit version>.json`, one action
@@ -96,13 +96,15 @@ object DeltaReader {
     * a present `deletionVector` masks row indexes at scan time;
     * `stats` is the add action's per-file statistics JSON
     * (`numRecords`/`minValues`/`maxValues`/`nullCount`) verbatim —
-    * the data-skipping input [[scanPruned]] consumes. */
+    * the data-skipping input [[scanPruned]] consumes; `tags` the add
+    * action's string tags (e.g. [[BloomTags]]), carried verbatim. */
   final case class DeltaFile(path: String, partitionValues: Map[String, String],
       size: Long = 0L, modificationTime: Long = 0L,
       deletionVector: Option[DvDescriptor] = None,
       stats: Option[String] = None,
       baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
+      defaultRowCommitVersion: Option[Long] = None,
+      tags: Map[String, String] = Map.empty)
 
   /** The newest protocol action's content (defaults = a pre-features
     * protocol-1 table). Carried so checkpoint writers reproduce the
@@ -252,8 +254,9 @@ object DeltaReader {
       else None
     }
 
-  /** Actions parsed from commit JSON — explicit schema: inference
-    * over a long log would cost a pre-pass and could widen types. */
+  /** The action schema commit JSON is parsed with and checkpoints
+    * are written in — explicit: inference over a long log would cost
+    * a pre-pass and could widen types. */
   private val dvSchema = StructType(Seq(
     StructField("storageType", StringType),
     StructField("pathOrInlineDv", StringType),
@@ -261,10 +264,11 @@ object DeltaReader {
     StructField("sizeInBytes", IntegerType),
     StructField("cardinality", LongType)))
 
-  private val actionSchema = StructType(Seq(
+  private[sources] val actionSchema = StructType(Seq(
     StructField("txn", StructType(Seq(
       StructField("appId", StringType),
-      StructField("version", LongType)))),
+      StructField("version", LongType),
+      StructField("lastUpdated", LongType)))),
     StructField("add", StructType(Seq(
       StructField("path", StringType),
       StructField("partitionValues", MapType(StringType, StringType)),
@@ -274,7 +278,8 @@ object DeltaReader {
       StructField("deletionVector", dvSchema),
       StructField("stats", StringType),
       StructField("baseRowId", LongType),
-      StructField("defaultRowCommitVersion", LongType)))),
+      StructField("defaultRowCommitVersion", LongType),
+      StructField("tags", MapType(StringType, StringType))))),
     StructField("remove", StructType(Seq(
       StructField("path", StringType),
       StructField("deletionTimestamp", LongType),
@@ -286,7 +291,8 @@ object DeltaReader {
     StructField("metaData", StructType(Seq(
       StructField("id", StringType),
       StructField("format", StructType(Seq(
-        StructField("provider", StringType)))),
+        StructField("provider", StringType),
+        StructField("options", MapType(StringType, StringType))))),
       StructField("schemaString", StringType),
       StructField("partitionColumns", ArrayType(StringType)),
       StructField("configuration", MapType(StringType, StringType)),
@@ -310,6 +316,7 @@ object DeltaReader {
     col("add.stats").as("__add_stats"),
     col("add.baseRowId").as("__add_brid"),
     col("add.defaultRowCommitVersion").as("__add_drcv"),
+    col("add.tags").as("__add_tags"),
     col("remove.path").as("__rm_path"),
     col("remove.deletionTimestamp").as("__rm_ts"),
     col("domainMetadata.domain").as("__dm_domain"),
@@ -389,7 +396,8 @@ object DeltaReader {
   private final case class LatestPath(path: String, isAdd: Boolean,
       pv: Map[String, String], size: Long, mt: Long,
       dv: Option[DvDescriptor], rmTs: Long, stats: Option[String],
-      baseRowId: Option[Long] = None, drcv: Option[Long] = None)
+      baseRowId: Option[Long] = None, drcv: Option[Long] = None,
+      tags: Map[String, String] = Map.empty)
 
   private final case class MetaVals(schemaJson: String, pcols: Seq[String],
       provider: String, conf: Map[String, String], id: String,
@@ -460,7 +468,7 @@ object DeltaReader {
           s"DeltaReader: malformed deletionVector descriptor on ${l.path}")
       }
       DeltaFile(absPath(l.path), l.pv, l.size, l.mt, l.dv, l.stats,
-        l.baseRowId, l.drcv)
+        l.baseRowId, l.drcv, l.tags)
     }.sortBy(_.path)
     val tombstones = latest.filterNot(_.isAdd)
       .map(l => (absPath(l.path), l.rmTs)).sortBy(_._1)
@@ -610,7 +618,7 @@ object DeltaReader {
         col("__add_path").isNotNull.as("__is_add"),
         col("__add_pv"), col("__add_size"), col("__add_mt"),
         col("__add_dv"), col("__rm_ts"), col("__add_stats"),
-        col("__add_brid"), col("__add_drcv"))
+        col("__add_brid"), col("__add_drcv"), col("__add_tags"))
       .where(col("__path").isNotNull)
     val w = Window.partitionBy(col("__path"))
       .orderBy(col("__v").desc, col("__is_add").desc)
@@ -619,13 +627,14 @@ object DeltaReader {
       .where(col("__rn") === 1)
       .select(col("__path"), col("__is_add"), col("__add_pv"),
         col("__add_size"), col("__add_mt"), col("__add_dv"), col("__rm_ts"),
-        col("__add_stats"), col("__add_brid"), col("__add_drcv"))
+        col("__add_stats"), col("__add_brid"), col("__add_drcv"),
+        col("__add_tags"))
       .collect()
 
     val latestPaths: Seq[LatestPath] = latest.toSeq.map { r =>
-      val pv: Map[String, String] =
-        if (r.isNullAt(2)) Map.empty
-        else r.getMap[String, String](2).toMap
+      def strMap(i: Int): Map[String, String] =
+        if (r.isNullAt(i)) Map.empty else r.getMap[String, String](i).toMap
+      val pv = strMap(2)
       val dv = Option(r.getStruct(5)).map { d =>
         require(!d.isNullAt(0) && !d.isNullAt(1) && !d.isNullAt(3),
           s"DeltaReader: malformed deletionVector descriptor on " +
@@ -640,7 +649,7 @@ object DeltaReader {
         if (r.isNullAt(6)) 0L else r.getLong(6),
         Option(r.getString(7)),
         if (r.isNullAt(8)) None else Some(r.getLong(8)),
-        if (r.isNullAt(9)) None else Some(r.getLong(9)))
+        if (r.isNullAt(9)) None else Some(r.getLong(9)), strMap(10))
     }
     // domainMetadata: per domain the newest action wins; removed=true
     // drops the domain from the snapshot (PROTOCOL.md "Domain
@@ -671,7 +680,7 @@ object DeltaReader {
   private val actionMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** One commit file's action lines, Jackson-parsed, in file order. */
-  private def commitRecords(fs: FileSystem, st: FileStatus): Seq[JsonNode] = {
+  private[sources] def commitRecords(fs: FileSystem, st: FileStatus): Seq[JsonNode] = {
     val bytes = new Array[Byte](st.getLen.toInt)
     val in = fs.open(st.getPath)
     try in.readFully(0L, bytes) finally in.close()
@@ -757,6 +766,12 @@ object DeltaReader {
       Option(n.get(f)).filterNot(_.isNull).map(_.asText).orNull
     def lng(n: JsonNode, f: String, dflt: Long): Long =
       Option(n.get(f)).filterNot(_.isNull).map(_.asLong).getOrElse(dflt)
+    def strMap(n: JsonNode, f: String): Map[String, String] =
+      Option(n.get(f)).filterNot(_.isNull).map { m =>
+        import scala.jdk.CollectionConverters._
+        m.fields().asScala.map(e => e.getKey ->
+          (if (e.getValue.isNull) null else e.getValue.asText)).toMap
+      }.getOrElse(Map.empty)
     def newest(field: String) = lines.reverseIterator
       .map { case (v, n) => (v, Option(n.get(field)).filterNot(_.isNull)) }
       .collectFirst { case (v, Some(n)) => (v, n) }
@@ -773,15 +788,9 @@ object DeltaReader {
       val pcols = Option(m.get("partitionColumns")).filterNot(_.isNull)
         .map(arr => (0 until arr.size).map(i => arr.get(i).asText))
         .getOrElse(Seq.empty)
-      val conf = Option(m.get("configuration")).filterNot(_.isNull)
-        .map { c =>
-          import scala.jdk.CollectionConverters._
-          c.fields().asScala.map(e => e.getKey ->
-            (if (e.getValue.isNull) null else e.getValue.asText)).toMap
-        }.getOrElse(Map.empty[String, String])
       MetaVals(txt(m, "schemaString"), pcols.toSeq,
         Option(txt(m.path("format"), "provider")).getOrElse("parquet"),
-        conf, Option(txt(m, "id")).getOrElse(""),
+        strMap(m, "configuration"), Option(txt(m, "id")).getOrElse(""),
         Option(m.get("createdTime")).filterNot(_.isNull).map(_.asLong))
     }
     // per-path latest action; lexicographic (version, isAdd) — the add
@@ -798,12 +807,7 @@ object DeltaReader {
     }
     lines.foreach { case (v, n) =>
       Option(n.get("add")).filterNot(_.isNull).foreach { a =>
-        val pv = Option(a.get("partitionValues")).filterNot(_.isNull)
-          .map { m =>
-            import scala.jdk.CollectionConverters._
-            m.fields().asScala.map(e => e.getKey ->
-              (if (e.getValue.isNull) null else e.getValue.asText)).toMap
-          }.getOrElse(Map.empty[String, String])
+        val pv = strMap(a, "partitionValues")
         val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
           require(txt(d, "storageType") != null &&
             txt(d, "pathOrInlineDv") != null && d.get("sizeInBytes") != null,
@@ -818,7 +822,7 @@ object DeltaReader {
           Option(txt(a, "stats")),
           Option(a.get("baseRowId")).filterNot(_.isNull).map(_.asLong),
           Option(a.get("defaultRowCommitVersion")).filterNot(_.isNull)
-            .map(_.asLong)))
+            .map(_.asLong), strMap(a, "tags")))
       }
       Option(n.get("remove")).filterNot(_.isNull).foreach { r =>
         consider(txt(r, "path"), v, LatestPath(txt(r, "path"), isAdd = false,
@@ -859,6 +863,20 @@ object DeltaReader {
       txns.map { case (k, v) => k -> v._2 }.toMap, domains)
   }
 
+  /** The retained JSON commit files of `url`'s log by ascending
+    * version, with the log's filesystem; none when there is no table. */
+  private[sources] def commitFiles(url: String)(implicit spark: SparkSession)
+      : (FileSystem, Seq[(Long, FileStatus)]) = {
+    val logDir = new Path(url.stripSuffix("/"), "_delta_log")
+    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
+    (fs, if (!fs.exists(logDir)) Nil else fs.listStatus(logDir).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case CommitName(v) => Some(v.toLong -> st)
+        case _ => None
+      }
+    }.sortBy(_._1))
+  }
+
   /** Snapshot as of a WALL-CLOCK timestamp: the newest version whose
     * commit timestamp is `<= timestampMillis` — the protocol's
     * timestamp time travel, resolved from the commit files'
@@ -872,15 +890,7 @@ object DeltaReader {
   def snapshotAsOf(url: String, timestampMillis: Long)
                   (implicit spark: SparkSession): Option[DeltaSnapshot] = {
     val cleanUrl = url.stripSuffix("/")
-    val logDir = new Path(cleanUrl, "_delta_log")
-    val fs: FileSystem = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logDir)) return None
-    val commits = fs.listStatus(logDir).flatMap { st =>
-      st.getPath.getName match {
-        case CommitName(v) => Some(v.toLong -> st.getModificationTime)
-        case _ => None
-      }
-    }.sortBy(_._1)
+    val (fs, commits) = commitFiles(cleanUrl)
     if (commits.isEmpty) return None
     // when the table writes in-commit timestamps, the LOG is the
     // clock: each commit's commitInfo.inCommitTimestamp overrides its
@@ -888,12 +898,10 @@ object DeltaReader {
     // mixed-history rule)
     val ictOn = snapshot(cleanUrl).exists(
       _.configuration.get("delta.enableInCommitTimestamps").contains("true"))
-    val stamped =
-      if (!ictOn) commits
-      else commits.map { case (v, mt) =>
-        v -> DeltaWriter.readIct(fs, new Path(logDir, f"$v%020d.json"))
-          .getOrElse(mt)
-      }
+    val stamped = commits.map { case (v, st) =>
+      v -> (if (!ictOn) None else DeltaWriter.readIct(fs, st.getPath))
+        .getOrElse(st.getModificationTime)
+    }
     val effective = stamped.scanLeft((-1L, Long.MinValue)) {
       case ((_, prevTs), (v, t)) => (v, math.max(prevTs, t))
     }.drop(1)
@@ -919,24 +927,10 @@ object DeltaReader {
     * cleanup reclaimed no longer appear — history is as deep as the
     * retained log, exactly delta-spark's contract. */
   def history(url: String)(implicit spark: SparkSession): Option[DataFrame] = {
-    val cleanUrl = url.stripSuffix("/")
-    val logDir = new Path(cleanUrl, "_delta_log")
-    val fs: FileSystem = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logDir)) return None
-    val commits = fs.listStatus(logDir).flatMap { st =>
-      st.getPath.getName match {
-        case CommitName(v) => Some((v.toLong, st))
-        case _ => None
-      }
-    }.sortBy(-_._1)
+    val (fs, commits) = commitFiles(url)
     if (commits.isEmpty) return None
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows: Seq[org.apache.spark.sql.Row] = commits.toSeq.map { case (v, st) =>
-      val bytes = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(st.getPath)
-      try in.readFully(0L, bytes) finally in.close()
-      val nodes = new String(bytes, "UTF-8").split("\n").iterator
-        .map(_.trim).filter(_.nonEmpty).map(om.readTree).toSeq
+    val rows: Seq[org.apache.spark.sql.Row] = commits.reverse.map { case (v, st) =>
+      val nodes = commitRecords(fs, st)
       def opt(n: com.fasterxml.jackson.databind.JsonNode, f: String) =
         Option(n.get(f)).filterNot(_.isNull)
       val ci = nodes.flatMap(opt(_, "commitInfo")).headOption
@@ -971,17 +965,6 @@ object DeltaReader {
           (implicit spark: SparkSession): Option[DataFrame] =
     snapshotAt(url, asOfVersion).map(assemble)
 
-  /** The snapshot with every data file DROPPED whose recorded bounds
-    * prove no row can satisfy the conjunction of `ranges` (`(column,
-    * lo, hi)` inclusive, string-typed like [[ManagedDataset
-    * .scanPrunedRanges]]): bounds come from the add action's `stats`
-    * JSON (`minValues`/`maxValues` — what [[DeltaWriter]] now records
-    * from parquet footers, and every delta-spark writer records by
-    * default), or for a PARTITION column from the file's literal
-    * value (min = max = value; a null partition value never matches a
-    * range). Files with no usable bound are conservatively kept, so
-    * pruning is always sound; possibly-truncated string bounds from
-    * other engines remain valid supersets. */
   /** The monotone base column of a GENERATED partition column's
     * expression, when the shape is one this reader can SOUNDLY derive
     * partition ranges through: `CAST(c AS DATE)` / `to_date(c)`,
@@ -1079,65 +1062,95 @@ object DeltaReader {
     }
   }
 
+  /** The snapshot with every data file DROPPED whose recorded bounds
+    * prove no row can satisfy the conjunction of `ranges` (`(column,
+    * lo, hi)` inclusive, string-typed): bounds come from the add
+    * action's `stats` JSON (`minValues`/`maxValues` — what
+    * [[DeltaWriter]] records from parquet footers, and every
+    * delta-spark writer records by default), or for a PARTITION
+    * column from the file's literal value (min = max = value; a null
+    * partition value never matches a range). An equality range
+    * (`lo == hi`) also consults the file's [[BloomTags]] bloom for
+    * the column, probed with the value's canonical rendering. Files
+    * with no usable bound are conservatively kept, so pruning is
+    * always sound; possibly-truncated string bounds from other
+    * engines remain valid supersets. */
   def prunedSnapshot(url: String, ranges: Seq[(String, String, String)],
                      asOfVersion: Option[Long] = None)
-                    (implicit spark: SparkSession): Option[DeltaSnapshot] = {
+                    (implicit spark: SparkSession): Option[DeltaSnapshot] =
+    snapshotAt(url, asOfVersion).map(prune(_, ranges))
+
+  /** [[prunedSnapshot]] over an already-resolved snapshot. */
+  private[sources] def prune(snap: DeltaSnapshot,
+                             ranges: Seq[(String, String, String)])
+                            (implicit spark: SparkSession): DeltaSnapshot = {
     require(ranges.nonEmpty, "DeltaReader.prunedSnapshot: need >= 1 range")
-    snapshotAt(url, asOfVersion).map { snap =>
-      val derived = deriveGeneratedRanges(snap, ranges)
-      val typed = (ranges ++ derived).map { case (c, lo, hi) =>
-        val dt = snap.schema.find(_.name == c).map(_.dataType).getOrElse(
-          throw new IllegalArgumentException(
-            s"DeltaReader.prunedSnapshot: column '$c' not in the table schema"))
-        (c, dt, lo, hi)
-      }
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      def bound(node: com.fasterxml.jackson.databind.JsonNode,
-                section: String, c: String): Option[String] =
-        Option(node.get(section)).flatMap(s => Option(s.get(c)))
-          .filterNot(_.isNull).map(_.asText)
-      def longAt(node: com.fasterxml.jackson.databind.JsonNode,
-                 path: String*): Option[Long] = {
-        val n = path.foldLeft(Option(node))((acc, p) =>
-          acc.flatMap(x => Option(x.get(p))))
-        n.filter(_.isIntegralNumber).map(_.asLong)
-      }
-      val kept = snap.files.filter { f =>
-        lazy val statsNode = f.stats.flatMap(s =>
-          scala.util.Try(om.readTree(s)).toOption)
-        // a zero-row file matches nothing (empty appends land these)
-        statsNode.flatMap(longAt(_, "numRecords")).forall(_ > 0L) &&
-        typed.forall { case (c, dt, lo, hi) =>
-          if (snap.partitionColumns.contains(c)) {
-            partitionValueOf(snap, f, c) match {
-              case Some(null) | None => false // the null partition: no match
-              case Some(v) => mayOverlapDelta(dt, Some(v), Some(v), lo, hi)
-            }
-          } else statsNode match {
-            case None => true // no stats: unprunable, keep
-            case Some(n) =>
-              // an all-NULL column never satisfies a range predicate
-              val allNull = (longAt(n, "nullCount", c), longAt(n, "numRecords"))
-                match {
-                  case (Some(nc), Some(nr)) => nr > 0L && nc == nr
-                  case _ => false
-                }
-              !allNull && mayOverlapDelta(dt,
-                bound(n, "minValues", c), bound(n, "maxValues", c), lo, hi)
-          }
-        }
-      }
-      snap.copy(files = kept)
+    val derived = deriveGeneratedRanges(snap, ranges)
+    val typed = (ranges ++ derived).map { case (c, lo, hi) =>
+      val dt = snap.schema.find(_.name == c).map(_.dataType).getOrElse(
+        throw new IllegalArgumentException(
+          s"DeltaReader.prunedSnapshot: column '$c' not in the table schema"))
+      // resolved on the first file carrying a bloom for `c`
+      lazy val probe = BloomTags.canonical(dt, lo)
+      (c, dt, lo, hi, () => probe)
     }
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    def bound(node: com.fasterxml.jackson.databind.JsonNode,
+              section: String, c: String): Option[String] =
+      Option(node.get(section)).flatMap(s => Option(s.get(c)))
+        .filterNot(_.isNull).map(_.asText)
+    def longAt(node: com.fasterxml.jackson.databind.JsonNode,
+               path: String*): Option[Long] = {
+      val n = path.foldLeft(Option(node))((acc, p) =>
+        acc.flatMap(x => Option(x.get(p))))
+      n.filter(_.isIntegralNumber).map(_.asLong)
+    }
+    val kept = snap.files.filter { f =>
+      lazy val statsNode = f.stats.flatMap(s =>
+        scala.util.Try(om.readTree(s)).toOption)
+      // a zero-row file matches nothing (empty appends land these)
+      statsNode.flatMap(longAt(_, "numRecords")).forall(_ > 0L) &&
+      typed.forall { case (c, dt, lo, hi, probe) =>
+        if (snap.partitionColumns.contains(c)) {
+          partitionValueOf(snap, f, c) match {
+            case Some(null) | None => false // the null partition: no match
+            case Some(v) => mayOverlap(dt, Some(v), Some(v), lo, hi)
+          }
+        } else (statsNode match {
+          case None => true // no stats: unprunable, keep
+          case Some(n) =>
+            // an all-NULL column never satisfies a range predicate
+            val allNull = (longAt(n, "nullCount", c), longAt(n, "numRecords"))
+              match {
+                case (Some(nc), Some(nr)) => nr > 0L && nc == nr
+                case _ => false
+              }
+            !allNull && mayOverlap(dt,
+              bound(n, "minValues", c), bound(n, "maxValues", c), lo, hi)
+        }) && (lo != hi || f.tags.get(BloomTags.TagPrefix + c)
+          .forall(BloomTags.mayContain(_, probe())))
+      }
+    }
+    snap.copy(files = kept)
   }
 
-  /** [[ManagedDataset.mayOverlap]] semantics plus DATE columns, whose
-    * `yyyy-MM-dd` stats rendering compares correctly as strings. */
-  private def mayOverlapDelta(dt: DataType, mn: Option[String],
-                              mx: Option[String], lo: String,
-                              hi: String): Boolean = dt match {
-    case DateType => mn.forall(_ <= hi) && mx.forall(_ >= lo)
-    case other => ManagedDataset.mayOverlap(other, mn, mx, lo, hi)
+  /** Can a file with bounds `[mn, mx]` (either side absent = open)
+    * contain a value in `[lo, hi]`? Numeric types compare as
+    * BigDecimal (the stats are exact decimal renderings); strings and
+    * `yyyy-MM-dd` dates compare lexically — the same total order
+    * parquet min/max uses. Conservative: unknown bound or other type
+    * → true. */
+  private[sources] def mayOverlap(dt: DataType, mn: Option[String],
+                                  mx: Option[String], lo: String,
+                                  hi: String): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | _: DecimalType =>
+      val l = new java.math.BigDecimal(lo)
+      val h = new java.math.BigDecimal(hi)
+      mn.forall(m => new java.math.BigDecimal(m).compareTo(h) <= 0) &&
+        mx.forall(m => new java.math.BigDecimal(m).compareTo(l) >= 0)
+    case StringType | DateType => mn.forall(_ <= hi) && mx.forall(_ >= lo)
+    case _ => true
   }
 
   /** Range-predicate scan with file-level DATA SKIPPING over the add
@@ -1151,13 +1164,18 @@ object DeltaReader {
   def scanPruned(url: String, ranges: Seq[(String, String, String)],
                  asOfVersion: Option[Long] = None)
                 (implicit spark: SparkSession): Option[DataFrame] =
-    prunedSnapshot(url, ranges, asOfVersion).map { snap =>
-      val fieldType = snap.schema.fields.map(f => f.name -> f.dataType).toMap
-      ranges.foldLeft(assemble(snap)) { case (df, (c, lo, hi)) =>
-        df.where(col(c) >= lit(lo).cast(fieldType(c)) &&
-          col(c) <= lit(hi).cast(fieldType(c)))
-      }
+    snapshotAt(url, asOfVersion).map(scanRanges(_, ranges))
+
+  /** [[scanPruned]] over an already-resolved snapshot. */
+  private[sources] def scanRanges(snap: DeltaSnapshot,
+                                  ranges: Seq[(String, String, String)])
+                                 (implicit spark: SparkSession): DataFrame = {
+    val fieldType = snap.schema.fields.map(f => f.name -> f.dataType).toMap
+    ranges.foldLeft(assemble(prune(snap, ranges))) { case (df, (c, lo, hi)) =>
+      df.where(col(c) >= lit(lo).cast(fieldType(c)) &&
+        col(c) <= lit(hi).cast(fieldType(c)))
     }
+  }
 
   /** Targeted partition read, mirroring delta_dataset.py:41-54: the
     * key set must equal the table's partition columns (raise

@@ -3,10 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Options, Path}
 
 /** The LogStore seam: publish a fully-written temp file at `target`
-  * IFF no file exists there — the one primitive every log-structured
-  * commit in this repo rides on ([[ManagedDataset]] manifests,
-  * [[DeltaWriter]] commit JSONs). First writer wins; the loser gets
-  * `false` and RETRIES AT THE NEXT VERSION — it must never clobber
+  * IFF no file exists there — the one primitive the repo's
+  * transaction log rides on ([[DeltaWriter]] commit JSONs). First
+  * writer wins; the loser gets `false` and RETRIES AT THE NEXT
+  * VERSION — it must never clobber
   * the winner, because a clobbered commit is silent data loss for
   * every reader that already saw it.
   *
@@ -29,7 +29,8 @@ import org.apache.hadoop.fs.{FileSystem, Options, Path}
   * fault-injection spec lands an interloper (or crashes) inside the
   * window to pin the loser-raises-not-clobbers contract. The temp is
   * always deleted, crash paths excepted (stale `_tmp-*` temps are
-  * vacuum fodder, never visible to readers). */
+  * never visible to readers; [[DeltaWriter.cleanupLog]] sweeps them
+  * once they are an hour old). */
 object LogStores {
 
   def putIfAbsent(fs: FileSystem, tmp: Path, target: Path,

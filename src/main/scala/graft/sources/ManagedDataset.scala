@@ -1,63 +1,23 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StringType
 
-/** Log-backed stand-in for the reference's Delta backend.
+/** The reference's Delta-backed dataset (polario's
+  * delta_dataset.py:10-62) as a [[DatasetLike]] view over ONE Delta
+  * table: every call forwards to [[DeltaWriter]] / [[DeltaReader]],
+  * so atomic versioned commits (0-based), reader isolation, races,
+  * CHECK constraints, time travel, merge and restore are the Delta
+  * log's own. The view adds only the dataset contract:
   *
-  * The reference's DeltaDataset (/root/reference/polario/
-  * delta_dataset.py:10-62) rides Delta Lake: versioned atomic commits,
-  * reader isolation under concurrent writes, whole-table overwrite
-  * semantics. No Delta jars ship in this environment, so this class
-  * reproduces that observable surface with a minimal public-protocol
-  * transaction log over plain parquet (the Delta/Iceberg recipe:
-  * immutable data files + a versioned manifest committed by an atomic
-  * filesystem primitive):
-  *
-  *   - every write/append lands its parquet in a FRESH commit
-  *     directory `_c<version-20d>-<uuid8>/` under the table root —
-  *     data files are immutable once written, never rewritten in
-  *     place (underscore prefix keeps them invisible to naive
-  *     directory-listing readers);
-  *   - a snapshot is a JSON manifest `_graft_log/<version-20d>.json`
-  *     listing the commit directories that compose it (overwrite = the
-  *     new directory alone — full-table replace, exactly the
-  *     reference's Delta `mode="overwrite"`; append = parent snapshot
-  *     + the new directory);
-  *   - manifests become visible ATOMICALLY: written to a temp name,
-  *     then published with an exclusive-create primitive (POSIX
-  *     `link(2)` on `file://`, exists-check + rename elsewhere — the
-  *     Delta LogStore seam: object stores without atomic
-  *     rename-if-absent need a store-specific primitive slotted in
-  *     [[publishManifest]]);
-  *   - a loser of a concurrent commit race RETRIES against the new
-  *     latest version (appends re-base on the winner's snapshot), so
-  *     no committed write is ever lost;
-  *   - readers resolve the latest manifest ONCE and only ever open the
-  *     files it lists — a reader never lists data directories, so an
-  *     in-flight writer's files are invisible until its manifest
-  *     publishes, and a snapshot resolved before an overwrite keeps
-  *     reading the old (immutable) files afterwards. Old-or-new,
-  *     never a mix.
-  *
-  * Time travel: [[readVersion]] / [[versions]] mirror Delta's
-  * `versionAsOf`. [[vacuum]] drops history; [[compact]] rewrites the
-  * current snapshot as one commit so scan cost stays O(1) directories
-  * after many appends (the plan unions one parquet scan per live
-  * commit directory — linear in appends since the last overwrite).
-  *
-  * At 100 TB the metadata path stays driver-cheap: commits move one
-  * manifest (KBs) regardless of data size, and snapshot resolution is
-  * one `_graft_log` listing + one JSON read; per-commit-dir partition
-  * discovery is the same bounded listing Spark does for any parquet
-  * table, and `compact`/`vacuum` bound the directory count.
-  *
-  * Unlike [[HiveDataset]] it does not reorder columns or cap fragment
-  * rows: layout within a commit directory is whatever Spark's writer
-  * produces, as Delta's would be.
+  *   - `write` replaces the WHOLE table (Delta `mode="overwrite"`);
+  *     `write` and `append` add new columns, old rows null-fill them;
+  *   - a missing partition reads as None, decided from the snapshot's
+  *     partition values with no IO;
+  *   - `statsColumns` name the data columns whose per-file blooms
+  *     ([[BloomTags]]) feed [[scanPrunedEquality]], recorded as a
+  *     table property by the creating commit. Range pruning needs no
+  *     setting: every landed file carries footer min/max stats.
   */
 case class ManagedDataset(
     url: String,
@@ -69,257 +29,28 @@ case class ManagedDataset(
     "statsColumns must be data columns — partition columns are pruned by path, not stats")
 
   private val cleanUrl = url.stripSuffix("/")
-  @transient private lazy val fs =
-    new Path(cleanUrl).getFileSystem(spark.sessionState.newHadoopConf())
-  private lazy val qualifiedBase = fs.makeQualified(new Path(cleanUrl))
-  private lazy val logDir = new Path(qualifiedBase, ManagedDataset.LogDirName)
 
-  override def write(df: DataFrame): Unit = { commit(df, "overwrite", None); () }
-  override def append(df: DataFrame): Unit = { commit(df, "append", None); () }
+  override def write(df: DataFrame): Unit = { commit(df, overwrite = true, None); () }
+  override def append(df: DataFrame): Unit = { commit(df, overwrite = false, None); () }
 
-  /** Idempotent transactional append — the public Delta streaming-sink
-    * recipe (`txnAppId`/`txnVersion`): commit `df` tagged with
-    * `(appId, batchId)`, and make any batch at or below the app's
-    * last committed id a NO-OP. Structured Streaming's `foreachBatch`
-    * REDELIVERS a batch when a query restarts from its checkpoint
-    * mid-commit; with the tag recorded in the same atomic manifest
-    * publish as the data, redelivery cannot double-append — the
-    * exactly-once sink contract. The duplicate check re-runs inside
-    * the commit-race retry loop, so two racing deliveries of one
-    * batch land it exactly once. Returns true when this call
-    * committed, false when the batch was already in the log. */
+  /** Idempotent transactional append — the Delta streaming-sink
+    * recipe: commit `df` with the SetTransaction `(appId, batchId)`,
+    * and make any batch at or below the app's recorded id a no-op.
+    * Structured Streaming's `foreachBatch` redelivers a batch when a
+    * query restarts mid-commit; the tag rides the same atomic commit
+    * as the data, and a redelivered batch returns before any data
+    * lands. Two racing deliveries of one batch land it once. Returns
+    * true only when THIS call published the commit. */
   def appendBatch(df: DataFrame, appId: String, batchId: Long): Boolean =
-    commit(df, "append", Some((appId, batchId)))
+    commit(df, overwrite = false, Some((appId, batchId))).isRight
 
-  /** The newest `batchId` committed for `appId`, scanning manifests
-    * newest-first; None when the app never committed. */
+  /** The newest `batchId` committed for `appId`; None when the app
+    * never committed. */
   def lastCommittedBatch(appId: String): Option[Long] =
-    versions().reverseIterator
-      .map(readManifest)
-      .collectFirst { case m if m.txnAppId.contains(appId) => m.txnBatchId.get }
+    DeltaReader.snapshot(cleanUrl).flatMap(_.txns.get(appId))
 
-  // ---- write path ------------------------------------------------
-
-  private def commit(df: DataFrame, mode: String,
-                     txn: Option[(String, Long)]): Boolean = {
-    validate(df)
-    fs.mkdirs(logDir)
-    // CHECK constraints gate the batch BEFORE any data lands: a
-    // violating frame writes NOTHING (no data dir, no manifest) —
-    // the atomicity Delta's constraint enforcement promises. SQL
-    // semantics: a row violates when the predicate is FALSE; NULL
-    // passes (add an IS NOT NULL conjunct to forbid nulls).
-    var enforced = constraints()
-    enforceConstraints(df, enforced)
-    if (txn.exists { case (app, id) => lastCommittedBatch(app).exists(_ >= id) })
-      return false // redelivered batch — already durable, skip
-    val firstTarget = latestVersion().map(_ + 1).getOrElse(1L)
-    val dataDir = f"_c$firstTarget%020d-${java.util.UUID.randomUUID.toString.take(8)}"
-    val writer = df.write.mode("overwrite")
-    (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
-      .parquet(new Path(qualifiedBase, dataDir).toString)
-    val newStats = collectStats(dataDir, df)
-    // Commit loop: losers of the version race re-base and retry. The
-    // data directory is already durable and version-agnostic — only
-    // the manifest contends.
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      require(attempts <= ManagedDataset.MaxCommitAttempts,
-        s"commit to $cleanUrl lost ${ManagedDataset.MaxCommitAttempts} consecutive version races")
-      val parent = latestVersion()
-      if (txn.exists { case (app, id) => lastCommittedBatch(app).exists(_ >= id) }) {
-        // the race we just lost WAS this batch (concurrent delivery)
-        fs.delete(new Path(qualifiedBase, dataDir), true)
-        return false
-      }
-      val version = parent.map(_ + 1).getOrElse(1L)
-      val parentAny = parent.map(readManifest)
-      val parentM = if (mode == "append") parentAny else None
-      val dirs = parentM.map(_.commitDirs).getOrElse(Nil) :+ dataDir
-      val stats = parentM.map(_.stats).getOrElse(Map.empty) ++
-        (if (newStats.nonEmpty) Map(dataDir -> newStats) else Map.empty)
-      // constraints survive overwrite too (Delta semantics: table
-      // metadata, not data). Close the add-constraint race: if a
-      // concurrent addConstraint landed AFTER the entry check, the
-      // parent manifest now carries constraints this batch was never
-      // validated against — enforce exactly the new ones before
-      // publishing under them (the violating batch leaves only its
-      // orphaned data dir, reclaimable by vacuum; never a manifest).
-      val current = parentAny.map(_.constraints).getOrElse(Map.empty)
-      val unseen = current -- enforced.keys
-      if (unseen.nonEmpty) {
-        enforceConstraints(df, unseen)
-        enforced = enforced ++ unseen
-      }
-      committed = publishManifest(version,
-        ManagedDataset.renderManifest(version, mode, dirs, df.schema, txn,
-          stats, current))
-    }
-    true
-  }
-
-  // ---- CHECK constraints -----------------------------------------
-
-  /** The table's active CHECK constraints (name → SQL predicate). */
-  def constraints(): Map[String, String] =
-    latestVersion().map(readManifest(_).constraints).getOrElse(Map.empty)
-
-  /** Register a CHECK constraint: every future write/append batch
-    * must satisfy `predicateSql` on every row or the WHOLE batch is
-    * rejected before any data lands (nothing partial, ever). The
-    * existing table contents are validated first — a constraint that
-    * the current data already violates is refused, exactly like
-    * `ALTER TABLE … ADD CONSTRAINT CHECK` on Delta. NULL predicate
-    * results pass (SQL CHECK semantics); conjoin `IS NOT NULL` to
-    * forbid nulls. The constraint is table METADATA: it rides the
-    * manifest, survives overwrites, restarts, and time travel. */
-  def addConstraint(name: String, predicateSql: String): Unit = {
-    require(name.nonEmpty && predicateSql.nonEmpty,
-      "constraint name and predicate must be non-empty")
-    val parent = latestVersion().getOrElse(throw new IllegalStateException(
-      s"addConstraint: $cleanUrl has no committed version yet — write first"))
-    scan().foreach(existing =>
-      enforceConstraints(existing, Map(name -> predicateSql)))
-    publishMetadataChange(parent) { m =>
-      m.copy(constraints = m.constraints + (name -> predicateSql))
-    }
-  }
-
-  /** Remove a CHECK constraint (no-op if absent). */
-  def dropConstraint(name: String): Unit =
-    latestVersion().foreach(parent =>
-      publishMetadataChange(parent)(m =>
-        m.copy(constraints = m.constraints - name)))
-
-  /** Commit a metadata-only manifest derived from the latest one —
-    * same data dirs/stats/schema, new version; losers of the version
-    * race re-base and retry like [[commit]]. */
-  private def publishMetadataChange(firstParent: Long)(
-      f: ManagedDataset.Manifest => ManagedDataset.Manifest): Unit = {
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      require(attempts <= ManagedDataset.MaxCommitAttempts,
-        s"metadata commit to $cleanUrl lost " +
-          s"${ManagedDataset.MaxCommitAttempts} consecutive version races")
-      val parent = latestVersion().getOrElse(firstParent)
-      val m = f(readManifest(parent))
-      committed = publishManifest(parent + 1,
-        ManagedDataset.renderManifest(parent + 1, "metadata", m.commitDirs,
-          m.schema, None, m.stats, m.constraints))
-    }
-  }
-
-  /** One-pass violation census: a single aggregation counts FALSE
-    * rows per constraint; any non-zero count rejects the batch with
-    * every violated constraint named. */
-  private def enforceConstraints(df: DataFrame,
-                                 cs: Map[String, String]): Unit = {
-    if (cs.isEmpty) return
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val names = cs.keys.toSeq.sorted
-    val aggs = names.map { n =>
-      sum(when(coalesce(expr(cs(n)).cast("boolean"), lit(true)) === false, 1L)
-        .otherwise(0L)).as(s"__viol_$n")
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val violated = names.zipWithIndex.collect {
-      case (n, i) if !row.isNullAt(i) && row.getLong(i) > 0 =>
-        s"'$n' (${cs(n)}): ${row.getLong(i)} row(s)"
-    }
-    if (violated.nonEmpty)
-      throw new IllegalStateException(
-        s"CHECK constraint violation on $cleanUrl — batch rejected, " +
-          s"nothing written: ${violated.mkString("; ")}")
-  }
-
-  /** Per-file min/max/rowcount for [[statsColumns]] over a freshly
-    * written commit directory — the Delta/Iceberg stats-collection
-    * step that makes manifest-level FILE SKIPPING possible
-    * ([[scanPruned]]). One column-pruned scan of only the stat
-    * columns, grouped by file (map-side combined; the result is
-    * file-count-sized metadata, which is what a manifest IS — the
-    * one deliberate driver collect in this class). Columns absent
-    * from this commit's frame (schema evolution) are skipped; a
-    * file whose stat value is all-NULL records no bound and is
-    * never pruned. */
-  private def collectStats(dataDir: String,
-                           df: DataFrame): Seq[ManagedDataset.FileStat] = {
-    import org.apache.spark.sql.functions.{count, input_file_name, lit, max, min}
-    val cols = statsColumns.filter(df.columns.contains)
-    if (cols.isEmpty) return Nil
-    val dir = new Path(qualifiedBase, dataDir)
-    if (!hasParquet(dir)) return Nil
-    // per-file, per-column 1024-bit bloom of the portable hash of the
-    // value's STRING rendering — the equality complement of min/max
-    // (collect_set of bit positions; <= 1024 distinct, skips NULLs;
-    // registration-free HOF hash so specs need no function setup)
-    def bloomAgg(c: String, s: Int) = {
-      val (a, b) = ManagedDataset.BloomSeeds(s)
-      // native codegen hash when the session has graft functions
-      // registered (Verify/Bench do); HOF fallback keeps bare-session
-      // specs working — both renderings are bitwise-equal
-      val hh =
-        if (spark.catalog.functionExists("graft_rolling_hash"))
-          graft.functions.TextHash.spark.rollingHash(s"CAST(`$c` AS STRING)")
-        else
-          graft.functions.TextHash.spark.rollingHashHof(s"CAST(`$c` AS STRING)")
-      org.apache.spark.sql.functions.collect_set(
-        org.apache.spark.sql.functions.expr(
-        s"(($a * ($hh) + $b) % ${graft.functions.TextHash.P}L) % ${ManagedDataset.BloomBits}L"))
-        .as(s"__bl_${s}_$c")
-    }
-    val aggs = (cols.flatMap(c =>
-      Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c"))) :+
-      count(lit(1)).as("__rows")) ++
-      cols.flatMap(c => (0 until ManagedDataset.BloomSeeds.size).map(s => bloomAgg(c, s)))
-    spark.read.option("basePath", dir.toString).parquet(dir.toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .toSeq
-      .map { r =>
-        val full = r.getString(0)
-        val i = full.indexOf(dataDir)
-        require(i >= 0, s"stats file path $full does not contain $dataDir")
-        val rel = java.net.URLDecoder.decode(
-          full.substring(i + dataDir.length + 1), "UTF-8")
-        val mins = cols.zipWithIndex.flatMap { case (c, j) =>
-          Option(r.get(1 + 2 * j)).map(v => c -> String.valueOf(v))
-        }.toMap
-        val maxs = cols.zipWithIndex.flatMap { case (c, j) =>
-          Option(r.get(2 + 2 * j)).map(v => c -> String.valueOf(v))
-        }.toMap
-        val nSeeds = ManagedDataset.BloomSeeds.size
-        val bloomBase = 2 + 2 * cols.size
-        val blooms = cols.zipWithIndex.map { case (c, j) =>
-          val positions = (0 until nSeeds).flatMap { s =>
-            r.getSeq[Long](bloomBase + nSeeds * j + s)
-          }
-          c -> ManagedDataset.bitmapHex(positions)
-        }.toMap
-        ManagedDataset.FileStat(rel, r.getLong(1 + 2 * cols.size), mins, maxs,
-          blooms)
-      }
-  }
-
-  /** Publish `body` as the manifest for `version`, atomically failing
-    * if that version already exists (first writer wins). On `file://`
-    * this is POSIX link(2) — a true atomic exclusive create; on other
-    * schemes it degrades to exists-check + rename (the LogStore seam:
-    * swap in a conditional-put primitive for object stores). */
-  private def publishManifest(version: Long, body: String): Boolean = {
-    val target = new Path(logDir, ManagedDataset.manifestName(version))
-    val tmp = new Path(logDir, s"_tmp-${java.util.UUID.randomUUID}.json")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    LogStores.putIfAbsent(fs, tmp, target)
-  }
-
-  private def validate(df: DataFrame): Unit = {
+  private def commit(df: DataFrame, overwrite: Boolean,
+                     txn: Option[(String, Long)]): Either[Long, Long] = {
     val cols = df.columns.toSet
     require(partitionColumns.forall(cols.contains),
       s"Partition columns $partitionColumns not found in ${df.columns.toSeq}")
@@ -329,645 +60,116 @@ case class ManagedDataset(
       require(df.schema(c).dataType == StringType,
         s"Partition column '$c' must be a string")
     }
+    val creation =
+      if (statsColumns.isEmpty) Map.empty[String, String]
+      else Map(BloomTags.ColumnsKey -> statsColumns.mkString(","))
+    DeltaWriter.writeOutcome(cleanUrl, df, partitionColumns, overwrite, txn,
+      mergeSchema = true, creation)
   }
 
-  // ---- log resolution --------------------------------------------
+  // ---- CHECK constraints -----------------------------------------
 
-  /** All committed versions, ascending; empty when the table does not
-    * exist (or history was fully vacuumed). */
-  def versions(): Seq[Long] = {
-    if (!fs.exists(logDir)) return Nil
-    fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case ManagedDataset.ManifestRe(d) => d.toLong }.sorted
-  }
+  /** The table's CHECK constraints (name → SQL predicate). */
+  def constraints(): Map[String, String] = DeltaReader.snapshot(cleanUrl)
+    .toSeq.flatMap(s => DeltaWriter.constraintsIn(s.configuration)).toMap
 
-  private def latestVersion(): Option[Long] = versions().lastOption
+  /** Register a CHECK constraint ([[DeltaWriter.addConstraint]]): the
+    * current rows must pass it, and every later batch that has a row
+    * where `predicateSql` is FALSE is rejected whole, before any data
+    * lands. NULL passes; conjoin `IS NOT NULL` to forbid nulls. The
+    * constraint is table metadata: it survives overwrites. */
+  def addConstraint(name: String, predicateSql: String): Unit =
+    { DeltaWriter.addConstraint(cleanUrl, name, predicateSql); () }
 
-  /** Spark's own string rendering of `value` read as `dt` — the same
-    * `CAST(col AS STRING)` path the commit-time blooms hash. Probing
-    * with the caller's raw spelling would make a non-canonical but
-    * equal rendering (e.g. "20000" for a double column whose bloom
-    * recorded "20000.0") hash to different bits and silently declare
-    * the value definitively-absent — wrong results, not just missed
-    * pruning. A value that does not parse as `dt` raises loudly (the
-    * same outcome ANSI Spark gives `filter(col = CAST(value))`) —
-    * never a silent skip. Constant-folded single-row job; runs once
-    * per scan, never per file. */
-  private def canonicalRendering(
-      dt: org.apache.spark.sql.types.DataType, value: String): String = {
-    val r = spark.range(1).select(
-      org.apache.spark.sql.functions.lit(value).try_cast(dt)
-        .cast(StringType).as("v"))
-      .head()
-    if (r.isNullAt(0))
-      throw new IllegalArgumentException(
-        s"equality probe value '$value' does not parse as ${dt.simpleString}")
-    r.getString(0)
-  }
+  /** Remove a CHECK constraint (no-op if absent). */
+  def dropConstraint(name: String): Unit =
+    { DeltaWriter.dropConstraint(cleanUrl, name); () }
 
-  private def readManifest(version: Long): ManagedDataset.Manifest = {
-    val p = new Path(logDir, ManagedDataset.manifestName(version))
-    val in = fs.open(p)
-    val body =
-      try {
-        val bs = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bs.write(buf, 0, n); n = in.read(buf) }
-        bs.toString("UTF-8")
-      } finally in.close()
-    ManagedDataset.parseManifest(body)
-  }
+  // ---- reads -----------------------------------------------------
 
-  // ---- read path -------------------------------------------------
+  /** The committed versions still in the log, ascending; empty when
+    * the table does not exist. */
+  def versions(): Seq[Long] = DeltaReader.commitFiles(cleanUrl)._2.map(_._1)
 
-  private def snapshot(m: ManagedDataset.Manifest): DataFrame = {
-    // One parquet scan per commit directory (each with its own
-    // basePath so partition columns derive from its subtree), unioned
-    // by name with null-fill — commit-level schema evolution. A
-    // directory with no data files (empty-frame commit) contributes
-    // nothing; an all-empty snapshot reconstructs from the manifest's
-    // recorded schema.
-    val parts = m.commitDirs.flatMap { d =>
-      val dir = new Path(qualifiedBase, d)
-      if (hasParquet(dir))
-        Some(spark.read.option("basePath", dir.toString).parquet(dir.toString))
-      else None
-    }
-    val df =
-      if (parts.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    partitionColumns.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(StringType)))
-  }
+  /** Scan the latest snapshot, or None when the table has never been
+    * committed (delta_dataset.py:56-62). */
+  override def scan(): Option[DataFrame] = DeltaReader.scan(cleanUrl)
 
-  private def hasParquet(dir: Path): Boolean = {
-    if (!fs.exists(dir)) return false
-    val it = fs.listFiles(dir, true)
-    var found = false
-    while (!found && it.hasNext)
-      if (it.next().getPath.getName.endsWith(".parquet")) found = true
-    found
-  }
+  /** Time travel: the snapshot exactly as of `version`; raises when
+    * that version was never committed. */
+  def readVersion(version: Long): DataFrame =
+    DeltaReader.scan(cleanUrl, Some(version)).getOrElse(
+      throw new IllegalArgumentException(s"version $version: no table at $cleanUrl"))
 
-  /** Scan the LATEST snapshot, or None when the table has never been
-    * committed — the reference catches TableNotFoundError
-    * (delta_dataset.py:56-62). */
-  override def scan(): Option[DataFrame] =
-    latestVersion().map(v => snapshot(readManifest(v)))
-
-  /** Time travel: the snapshot exactly as of `version` (Delta's
-    * `versionAsOf`). Throws when that version was never committed or
-    * its manifest has been [[vacuum]]ed away. */
-  def readVersion(version: Long): DataFrame = {
-    require(versions().contains(version),
-      s"version $version does not exist in $cleanUrl (have ${versions()})")
-    snapshot(readManifest(version))
-  }
-
-  /** Range-predicate scan with manifest-level FILE SKIPPING — the
-    * Delta data-skipping read: resolve the latest snapshot, drop
-    * every data file whose recorded `[min, max]` for `colName`
-    * cannot intersect `[lo, hi]`, and scan ONLY the survivors (the
-    * residual filter still applies, so the result is exactly
-    * `scan().filter(colName between lo and hi)`). Files with no
-    * recorded bound for the column — pre-stats commits, schema
-    * evolution, all-NULL files — are conservatively kept; NULL
-    * values never match a range predicate in either path.
-    *
-    * This is the layout lever that matters at 100 TB: with data
-    * range-clustered on `colName` at write time (repartitionByRange
-    * / Z-order upstream), a selective range touches a handful of
-    * files and the scan cost is proportional to the MATCH, not the
-    * table — metadata-only pruning before Spark ever lists a
-    * directory. None when the table was never committed. */
+  /** Range scan with file skipping: exactly
+    * `scan().filter(colName BETWEEN lo AND hi)`, reading only files
+    * whose recorded bounds may overlap ([[DeltaReader.scanPruned]]). */
   def scanPruned(colName: String, lo: String, hi: String): Option[DataFrame] =
-    scanPrunedRanges(Seq((colName, lo, hi)))
+    DeltaReader.scanPruned(cleanUrl, Seq((colName, lo, hi)))
 
-  /** Multi-predicate skip scan: conjunction of range predicates, each
-    * pruning on its own recorded per-file bounds — the read that pays
-    * off a MULTI-dimensional clustering key ([[graft.operators
-    * .Sequencing.withHilbertValue]]/`withZValue` layouts make every
-    * file a compact blob in ALL clustered dimensions, so each
-    * predicate independently knocks out most files; a linear sort
-    * only serves its leading column). Semantics: exactly
-    * `scan().filter(AND of col BETWEEN lo AND hi)`. */
-  def scanPrunedRanges(ranges: Seq[(String, String, String)]): Option[DataFrame] = {
-    require(ranges.nonEmpty, "need at least one range predicate")
-    latestVersion().map { v =>
-      val m = readManifest(v)
-      val typed = ranges.map { case (c, lo, hi) =>
-        val dt = m.schema.find(_.name == c).map(_.dataType)
-          .getOrElse(throw new IllegalArgumentException(
-            s"scanPruned: column $c not in snapshot schema"))
-        (c, dt, lo, hi)
-      }
-      val parts = m.commitDirs.flatMap { d =>
-        val dir = new Path(qualifiedBase, d)
-        m.stats.get(d) match {
-          case Some(fileStats) =>
-            val keep = fileStats.filter(f => typed.forall { case (c, dt, lo, hi) =>
-              ManagedDataset.mayOverlap(dt, f.mins.get(c), f.maxs.get(c), lo, hi)
-            })
-            if (keep.isEmpty) None
-            else Some(spark.read.option("basePath", dir.toString)
-              .parquet(keep.map(f => new Path(dir, f.file).toString): _*))
-          case None =>
-            if (hasParquet(dir))
-              Some(spark.read.option("basePath", dir.toString).parquet(dir.toString))
-            else None
-        }
-      }
-      val df =
-        if (parts.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-        else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      val cast = partitionColumns.foldLeft(df)((d, c) =>
-        d.withColumn(c, col(c).cast(StringType)))
-      typed.foldLeft(cast) { case (acc, (c, dt, lo, hi)) =>
-        acc.filter(col(c) >= org.apache.spark.sql.functions.lit(lo).cast(dt) &&
-          col(c) <= org.apache.spark.sql.functions.lit(hi).cast(dt))
-      }
-    }
-  }
-
-  /** Equality skip scan with manifest BLOOM filters: semantics
-    * exactly `scan().filter(colName = value)`, but every data file
-    * whose per-file 1024-bit bloom (recorded at commit, over the
-    * portable hash of each value's string rendering) definitively
-    * excludes `value` is dropped before any IO — the point-lookup
-    * complement of [[scanPruned]]'s min/max windows, which cannot
-    * skip on a high-cardinality column whose per-file ranges all
-    * overlap (the id-lookup-in-an-unclustered-table case). False
-    * positives only (a ~1% rate at 1024 bits / 3 hashes / ≤100
-    * distinct values per file) — a false positive costs one extra
-    * file read, never a wrong answer; files from pre-bloom commits
-    * are conservatively kept via the min/max window. `value` may be
-    * ANY spelling that parses as the column's type — it is
-    * re-rendered through Spark's own CAST-to-string path before
-    * probing, so "20000" and "20000.0" probe the same bits on a
-    * double column (the blooms hash that canonical rendering). */
+  /** Equality scan with bloom skipping: exactly
+    * `scan().filter(colName = value)`, reading only files whose bloom
+    * and bounds may hold `value`. `value` may be any spelling that
+    * parses as the column's type ("20000" finds the double 20000.0);
+    * one that does not parse raises. Building the frame runs no
+    * Spark job. */
   def scanPrunedEquality(colName: String, value: String): Option[DataFrame] =
-    latestVersion().map { v =>
-      val m = readManifest(v)
-      val dt = m.schema.find(_.name == colName).map(_.dataType)
-        .getOrElse(throw new IllegalArgumentException(
-          s"scanPrunedEquality: column $colName not in snapshot schema"))
-      val probe = canonicalRendering(dt, value)
-      val parts = m.commitDirs.flatMap { d =>
-        val dir = new Path(qualifiedBase, d)
-        m.stats.get(d) match {
-          case Some(fileStats) =>
-            val keep = fileStats.filter(f =>
-              ManagedDataset.mayContainEquality(dt, f, colName, probe))
-            if (keep.isEmpty) None
-            else Some(spark.read.option("basePath", dir.toString)
-              .parquet(keep.map(f => new Path(dir, f.file).toString): _*))
-          case None =>
-            if (hasParquet(dir))
-              Some(spark.read.option("basePath", dir.toString).parquet(dir.toString))
-            else None
-        }
-      }
-      val df =
-        if (parts.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-        else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      val cast = partitionColumns.foldLeft(df)((d, c) =>
-        d.withColumn(c, col(c).cast(StringType)))
-      cast.filter(col(colName) ===
-        org.apache.spark.sql.functions.lit(value).cast(dt))
-    }
+    equality(colName, value).map { case (snap, r) => DeltaReader.scanRanges(snap, r) }
 
-  /** The file count [[scanPrunedEquality]] would read — bloom-skip
-    * diagnostics without IO (pre-bloom commits count every file,
-    * like the read itself). */
+  /** The file count [[scanPrunedEquality]] would read, without IO. */
   def prunedFileCountEquality(colName: String, value: String): Option[Long] =
-    latestVersion().map { v =>
-      val m = readManifest(v)
-      val dt = m.schema.find(_.name == colName).map(_.dataType)
-        .getOrElse(throw new IllegalArgumentException(
-          s"prunedFileCountEquality: column $colName not in snapshot schema"))
-      val probe = canonicalRendering(dt, value)
-      m.commitDirs.map { d =>
-        m.stats.get(d) match {
-          case Some(fileStats) =>
-            fileStats.count(f =>
-              ManagedDataset.mayContainEquality(dt, f, colName, probe)).toLong
-          case None =>
-            val dir = new Path(qualifiedBase, d)
-            if (!fs.exists(dir)) 0L
-            else {
-              val it = fs.listFiles(dir, true)
-              var n = 0L
-              while (it.hasNext)
-                if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-              n
-            }
-        }
-      }.sum
+    equality(colName, value).map { case (snap, r) =>
+      DeltaReader.prune(snap, r).files.size.toLong }
+
+  private def equality(colName: String, value: String) =
+    DeltaReader.snapshot(cleanUrl).map { snap =>
+      val dt = snap.schema.find(_.name == colName).map(_.dataType).getOrElse(
+        throw new IllegalArgumentException(
+          s"scanPrunedEquality: column $colName not in snapshot schema"))
+      val probe = BloomTags.canonical(dt, value)
+      (snap, Seq((colName, probe, probe)))
     }
 
-  /** The file count [[scanPrunedRanges]] would read for `ranges` —
-    * layout diagnostics (how well does the clustering key serve this
-    * query shape?) without any data IO. Counts every file of a
-    * stats-free commit (conservatively kept, like the read itself). */
-  def prunedFileCount(ranges: Seq[(String, String, String)]): Option[Long] =
-    latestVersion().map { v =>
-      val m = readManifest(v)
-      val typed = ranges.map { case (c, lo, hi) =>
-        (c, m.schema.find(_.name == c).map(_.dataType)
-          .getOrElse(throw new IllegalArgumentException(
-            s"prunedFileCount: column $c not in snapshot schema")), lo, hi)
-      }
-      m.commitDirs.map { d =>
-        m.stats.get(d) match {
-          case Some(fileStats) =>
-            fileStats.count(f => typed.forall { case (c, dt, lo, hi) =>
-              ManagedDataset.mayOverlap(dt, f.mins.get(c), f.maxs.get(c), lo, hi)
-            }).toLong
-          case None =>
-            val dir = new Path(qualifiedBase, d)
-            if (!fs.exists(dir)) 0L
-            else {
-              val it = fs.listFiles(dir, true)
-              var n = 0L
-              while (it.hasNext)
-                if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-              n
-            }
-        }
-      }.sum
-    }
-
-  /** Partition-filtered read (delta_dataset.py:41-54) on the latest
-    * snapshot: a filter on partition columns — partition pruning
-    * turns it into per-commit single-directory scans. None when no
-    * live commit directory carries the partition. */
+  /** Partition-filtered read of the latest snapshot; None when no
+    * live file carries the partition (delta_dataset.py:41-54). */
   override def readPartition(values: Map[String, String]): Option[DataFrame] = {
     require(values.keySet == partitionColumns.toSet,
       s"Partition column value keys ${values.keySet} do not match partition columns $partitionColumns")
-    val rel = graft.util.PathUtils.partitionPath(partitionColumns.map(k => k -> values(k)))
-    latestVersion().flatMap { v =>
-      val m = readManifest(v)
-      if (!m.commitDirs.exists(d => fs.exists(new Path(new Path(qualifiedBase, d), rel))))
-        None
-      else
-        Some(values.foldLeft(snapshot(m)) { case (d, (k, vv)) => d.filter(col(k) === vv) })
+    DeltaReader.snapshot(cleanUrl).flatMap { snap =>
+      val files = snap.files.filter(f => values.forall { case (k, v) =>
+        DeltaReader.partitionValueOf(snap, f, k).contains(v) })
+      if (files.isEmpty) None
+      else Some(DeltaReader.assembleSnapshot(snap.copy(files = files)))
     }
   }
 
-  /** MERGE INTO (upsert with optional delete) against the latest
-    * snapshot, as one atomic versioned commit — the lakehouse
-    * operator that turns CDC feeds into table state:
-    *
-    *   - a target row whose key matches a source row is REPLACED by
-    *     it (whole-row update), or DROPPED when the source row
-    *     satisfies `deleteWhen`;
-    *   - a source row with no target match INSERTS (unless it
-    *     satisfies `deleteWhen` — deleting a non-existent key is a
-    *     no-op, per MERGE convention);
-    *   - unmatched target rows pass through untouched.
-    *
-    * Source keys must be unique (two source rows for one key is the
-    * ambiguous-merge error every engine raises on). Schemas align by
-    * name. Returns the new version.
-    *
-    * Scale shape: ONE key-keyed anti-join (target vs source keys —
-    * the source is CDC-sized, so it broadcasts under AQE) plus a
-    * union, committed through the same atomic manifest publish as
-    * any write; no per-row driver work. The rewrite is
-    * snapshot-sized — at 100 TB you bound it by partition-scoping
-    * the merge upstream (the same discipline as Delta without
-    * deletion vectors).
-    */
+  // ---- DML -------------------------------------------------------
+
+  /** MERGE INTO against the latest snapshot as one commit
+    * ([[DeltaWriter.merge]]): a matched target row is replaced by its
+    * source row, or dropped when that row satisfies `deleteWhen`;
+    * unmatched source rows insert unless they satisfy `deleteWhen`;
+    * source keys must be unique. Returns the new version. */
   def merge(source: DataFrame, keyCols: Seq[String],
-            deleteWhen: Option[org.apache.spark.sql.Column] = None): Long = {
-    require(keyCols.nonEmpty, "need at least one merge key column")
-    val target = scan().getOrElse(throw new IllegalStateException(
-      s"merge: table $cleanUrl has no committed version"))
-    val dupes = source.groupBy(keyCols.map(col): _*)
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).collect()
-    require(dupes.isEmpty,
-      s"merge: source has duplicate keys (e.g. ${dupes.headOption.orNull}) — " +
-        "a key must resolve to one source row")
-    val survivors = deleteWhen.map(c => source.filter(!c)).getOrElse(source)
-    val untouched = target.join(
-      source.select(keyCols.map(col): _*), keyCols, "left_anti")
-    write(untouched.unionByName(survivors, allowMissingColumns = true))
-    latestVersion().get
-  }
+            deleteWhen: Option[Column] = None): Long =
+    DeltaWriter.merge(cleanUrl, source, keyCols, deleteWhen)
 
-  // ---- maintenance -----------------------------------------------
+  /** Roll the table back to `version` as a NEW commit (RESTORE);
+    * history is kept. Returns the new version. */
+  def restore(version: Long): Long = DeltaWriter.restore(cleanUrl, version)
 
-  /** Roll the table BACK to how it looked at `version`, as a NEW
-    * overwrite commit (Delta's RESTORE): history is preserved — the
-    * bad commits stay in the log for audit, the restore is itself
-    * versioned and vacuum-able, and concurrent readers see an atomic
-    * flip like any other commit. Throws when `version` is unknown or
-    * already vacuumed. */
-  def restore(version: Long): Long = {
-    write(readVersion(version))
-    latestVersion().get
-  }
-
-  /** Per-version logical row counts straight from the manifest's
-    * recorded file stats — log introspection with ZERO data IO
-    * (growth auditing, quota checks, "did that backfill land?").
-    * Versions whose commits predate stats (or carry stats-free
-    * schema evolution) fall back to counting the snapshot. */
-  def versionRowCounts(): Seq[(Long, Long)] =
+  /** Per-version logical row counts from the log's file stats, net of
+    * deletion vectors — no data IO unless a file lacks stats. */
+  def versionRowCounts(): Seq[(Long, Long)] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     versions().map { v =>
-      val m = readManifest(v)
-      val statted = m.commitDirs.flatMap(m.stats.get)
-      if (statted.size == m.commitDirs.size && m.commitDirs.nonEmpty)
-        v -> statted.flatten.map(_.rows).sum
-      else v -> readVersion(v).count()
+      val snap = DeltaReader.snapshotAt(cleanUrl, Some(v)).get
+      val counts = snap.files.map(f => f.stats
+        .map(s => om.readTree(s).path("numRecords"))
+        .filter(_.isIntegralNumber)
+        .map(_.asLong - f.deletionVector.map(_.cardinality).getOrElse(0L)))
+      v -> (if (counts.forall(_.isDefined)) counts.flatten.sum
+            else DeltaReader.assembleSnapshot(snap).count())
     }
-
-  /** Rewrite the current snapshot as ONE overwrite commit, collapsing
-    * the union-of-N-directories plan that accumulates under appends.
-    * No-op (false) when the table is empty or already one directory. */
-  def compact(): Boolean =
-    latestVersion().exists { v =>
-      val m = readManifest(v)
-      if (m.commitDirs.size <= 1) false
-      else {
-        // materialize BEFORE overwriting: the new commit must not
-        // read the directories a concurrent vacuum could then drop
-        write(snapshot(m).localCheckpoint())
-        true
-      }
-    }
-
-  /** [[compact]] with a LAYOUT rewrite: the snapshot is
-    * range-clustered on `clusterCol` into `nFiles` files before the
-    * overwrite commit — the OPTIMIZE-with-clustering maintenance
-    * verb. Pointed at a [[graft.operators.Sequencing
-    * .withHilbertValue]]/`withZValue` key (computed, clustered on,
-    * dropped), every rewritten file becomes a compact blob in the
-    * key's dimensions, which is exactly what [[scanPrunedRanges]]'
-    * per-file bounds then prune against — write-side layout and
-    * read-side skipping meeting in the manifest stats. Unlike
-    * [[compact]] this rewrites even a single-directory table (the
-    * point is the ORDER, not the directory count); no-op only on an
-    * empty table. */
-  def compactClustered(clusterCol: String, nFiles: Int): Boolean = {
-    require(nFiles >= 1, "nFiles must be positive")
-    latestVersion().exists { v =>
-      val snap = snapshot(readManifest(v))
-      write(snap
-        .repartitionByRange(nFiles, col(clusterCol))
-        .localCheckpoint())
-      true
-    }
-  }
-
-  /** Row-level diff between two committed versions on a content
-    * column — time travel composed with [[graft.operators.Inspect
-    * .diffSnapshots]]: what was added/removed/changed between v1 and
-    * v2, answered from the log's immutable snapshots with no copies
-    * of the table kept around. */
-  def diffVersions(v1: Long, v2: Long, idCol: String,
-                   contentCol: String): DataFrame =
-    graft.operators.Inspect.diffSnapshots(
-      readVersion(v1), readVersion(v2), idCol, contentCol)
-
-  /** Drop history: keep the newest `retainVersions` manifests, delete
-    * older ones plus any commit directory no retained manifest
-    * references. In-flight commit directories are protected by their
-    * version prefix (strictly greater than the latest committed
-    * version), but like Delta's `VACUUM` with zero retention this
-    * must not run concurrently with writers that started BEFORE the
-    * retained window. Returns the number of commit dirs removed. */
-  def vacuum(retainVersions: Int = 1): Int = {
-    require(retainVersions >= 1, "must retain at least the latest version")
-    val vs = versions()
-    if (vs.isEmpty) return 0
-    val latest = vs.last
-    val keep = vs.takeRight(retainVersions)
-    val referenced = keep.flatMap(v => readManifest(v).commitDirs).toSet
-    vs.dropRight(retainVersions).foreach { v =>
-      fs.delete(new Path(logDir, ManagedDataset.manifestName(v)), false)
-    }
-    // Stale publish temps from hard-crashed writers (publishManifest
-    // deletes its temp in finally, so these only survive a kill).
-    // Age-guarded: a LIVE writer's temp exists for milliseconds
-    // between create and link — an hour-old one is orphaned.
-    val cutoff = System.currentTimeMillis() - ManagedDataset.TmpRetentionMs
-    fs.listStatus(logDir).toSeq
-      .filter(s => s.getPath.getName.startsWith("_tmp-") &&
-        s.getModificationTime < cutoff)
-      .foreach(s => fs.delete(s.getPath, false))
-    val dead = fs.listStatus(qualifiedBase).toSeq.map(_.getPath.getName)
-      .filter { n =>
-        n match {
-          case ManagedDataset.CommitDirRe(d) =>
-            !referenced.contains(n) && d.toLong <= latest
-          case _ => false
-        }
-      }
-    dead.foreach(n => fs.delete(new Path(qualifiedBase, n), true))
-    dead.size
-  }
-}
-
-object ManagedDataset {
-  private[sources] val LogDirName = "_graft_log"
-  private[sources] val MaxCommitAttempts = 20
-  private[sources] val TmpRetentionMs = 60L * 60 * 1000
-  private val ManifestRe = """(\d{20})\.json""".r
-  private val CommitDirRe = """_c(\d{20})-[0-9a-f]{8}""".r
-
-  /** Per-file stats entry: path relative to its commit directory,
-    * row count, and per-stat-column min/max rendered as strings
-    * (absent key = no bound recorded — never pruned). */
-  private[sources] case class FileStat(
-      file: String, rows: Long,
-      mins: Map[String, String], maxs: Map[String, String],
-      blooms: Map[String, String] = Map.empty)
-
-  /** Bloom sizing: 1024 bits (128 bytes, 256 hex chars per column per
-    * file in the manifest), 3 portable hash functions. */
-  private[sources] val BloomBits = 1024
-  private[sources] val BloomSeeds: Seq[(Long, Long)] =
-    graft.functions.TextHash.Seeds.slice(1, 4)
-
-  /** The repo's portable polynomial rolling hash, in plain Scala —
-    * bitwise-equal to TextHash.spark/duck renderings for BMP text
-    * (the stats strings here are numeric/ASCII renderings). */
-  private[sources] def portableHash(s: String): Long = {
-    val P = graft.functions.TextHash.P
-    var h = 0L
-    var i = 0
-    while (i < s.length) { h = (h * 31 + s.charAt(i).toInt) % P; i += 1 }
-    h
-  }
-
-  private[sources] def bloomPositions(value: String): Seq[Int] = {
-    val P = graft.functions.TextHash.P
-    val h = portableHash(value)
-    BloomSeeds.map { case (a, b) => (((a * h + b) % P) % BloomBits).toInt }
-  }
-
-  private[sources] def bitmapHex(positions: Iterable[Long]): String = {
-    val bytes = Array.fill[Byte](BloomBits / 8)(0)
-    positions.foreach { p =>
-      val i = p.toInt
-      bytes(i / 8) = (bytes(i / 8) | (1 << (i % 8))).toByte
-    }
-    bytes.map(b => f"${b & 0xff}%02x").mkString
-  }
-
-  private[sources] def bitSet(hex: String, pos: Int): Boolean = {
-    val byte = Integer.parseInt(hex.substring(2 * (pos / 8), 2 * (pos / 8) + 2), 16)
-    (byte & (1 << (pos % 8))) != 0
-  }
-
-  /** Equality skip test: bloom says definitively-absent, else fall
-    * back to the min/max window. Absent bloom (pre-bloom manifests)
-    * → conservative min/max only. */
-  private[sources] def mayContainEquality(
-      dt: org.apache.spark.sql.types.DataType, f: FileStat,
-      c: String, value: String): Boolean = {
-    val rangeOk = mayOverlap(dt, f.mins.get(c), f.maxs.get(c), value, value)
-    f.blooms.get(c) match {
-      case Some(hex) if hex.length == BloomBits / 4 =>
-        rangeOk && bloomPositions(value).forall(bitSet(hex, _))
-      case _ => rangeOk
-    }
-  }
-
-  private[sources] case class Manifest(
-      version: Long, mode: String, commitDirs: Seq[String], schema: StructType,
-      txnAppId: Option[String] = None, txnBatchId: Option[Long] = None,
-      stats: Map[String, Seq[FileStat]] = Map.empty,
-      constraints: Map[String, String] = Map.empty)
-
-  /** Can a file with bounds `[mn, mx]` (either side absent = open)
-    * contain a value in `[lo, hi]`? Numeric types compare as
-    * BigDecimal (the stats are exact decimal renderings); strings
-    * compare lexically — the same total order parquet min/max uses.
-    * Conservative: unknown bound or exotic type → true. */
-  private[sources] def mayOverlap(
-      dt: org.apache.spark.sql.types.DataType,
-      mn: Option[String], mx: Option[String],
-      lo: String, hi: String): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | _: DecimalType =>
-        val l = new java.math.BigDecimal(lo)
-        val h = new java.math.BigDecimal(hi)
-        mn.forall(m => new java.math.BigDecimal(m).compareTo(h) <= 0) &&
-          mx.forall(m => new java.math.BigDecimal(m).compareTo(l) >= 0)
-      case StringType =>
-        mn.forall(_ <= hi) && mx.forall(_ >= lo)
-      case _ => true
-    }
-  }
-
-  private[sources] def manifestName(version: Long): String = f"$version%020d.json"
-
-  private[sources] def renderManifest(
-      version: Long, mode: String, dirs: Seq[String], schema: StructType,
-      txn: Option[(String, Long)] = None,
-      stats: Map[String, Seq[FileStat]] = Map.empty,
-      constraints: Map[String, String] = Map.empty): String = {
-    val om = new ObjectMapper()
-    val node = om.createObjectNode()
-    node.put("version", version)
-    node.put("mode", mode)
-    node.put("schema", schema.json)
-    val arr = node.putArray("commitDirs")
-    dirs.foreach(arr.add)
-    txn.foreach { case (app, id) =>
-      node.put("txnAppId", app)
-      node.put("txnBatchId", id)
-    }
-    if (constraints.nonEmpty) {
-      val cn = node.putObject("constraints")
-      constraints.foreach { case (k, v) => cn.put(k, v) }
-    }
-    if (stats.nonEmpty) {
-      val st = node.putObject("stats")
-      stats.foreach { case (dir, files) =>
-        val fa = st.putArray(dir)
-        files.foreach { f =>
-          val fn = fa.addObject()
-          fn.put("file", f.file)
-          fn.put("rows", f.rows)
-          val mnN = fn.putObject("min")
-          f.mins.foreach { case (k, v) => mnN.put(k, v) }
-          val mxN = fn.putObject("max")
-          f.maxs.foreach { case (k, v) => mxN.put(k, v) }
-          if (f.blooms.nonEmpty) {
-            val blN = fn.putObject("bloom")
-            f.blooms.foreach { case (k, v) => blN.put(k, v) }
-          }
-        }
-      }
-    }
-    om.writeValueAsString(node)
-  }
-
-  private[sources] def parseManifest(body: String): Manifest = {
-    val om = new ObjectMapper()
-    val node = om.readTree(body)
-    val dirs = {
-      val it = node.get("commitDirs").elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }
-    val stats = Option(node.get("stats")).map { st =>
-      val b = Map.newBuilder[String, Seq[FileStat]]
-      val dirIt = st.fields()
-      while (dirIt.hasNext) {
-        val e = dirIt.next()
-        val files = Seq.newBuilder[FileStat]
-        val fIt = e.getValue.elements()
-        while (fIt.hasNext) {
-          val fn = fIt.next()
-          def strMap(name: String): Map[String, String] = {
-            val mb = Map.newBuilder[String, String]
-            Option(fn.get(name)).foreach { n =>
-              val it2 = n.fields()
-              while (it2.hasNext) {
-                val kv = it2.next()
-                mb += kv.getKey -> kv.getValue.asText()
-              }
-            }
-            mb.result()
-          }
-          files += FileStat(fn.get("file").asText(), fn.get("rows").asLong(),
-            strMap("min"), strMap("max"), strMap("bloom"))
-        }
-        b += e.getKey -> files.result()
-      }
-      b.result()
-    }.getOrElse(Map.empty[String, Seq[FileStat]])
-    Manifest(
-      node.get("version").asLong(),
-      node.get("mode").asText(),
-      dirs,
-      org.apache.spark.sql.types.DataType.fromJson(node.get("schema").asText())
-        .asInstanceOf[StructType],
-      Option(node.get("txnAppId")).map(_.asText()),
-      Option(node.get("txnBatchId")).map(_.asLong()),
-      stats,
-      Option(node.get("constraints")).map { cn =>
-        val b = Map.newBuilder[String, String]
-        val it = cn.fields()
-        while (it.hasNext) {
-          val kv = it.next()
-          b += kv.getKey -> kv.getValue.asText()
-        }
-        b.result()
-      }.getOrElse(Map.empty))
   }
 }

@@ -297,11 +297,12 @@ object EventStream {
     * each micro-batch commits through [[graft.sources.ManagedDataset.appendBatch]]
     * tagged `(appId, batchId)`, so the redelivery `foreachBatch`
     * performs after a checkpoint restart (the at-least-once caveat
-    * [[appendTo]] documents) is detected in the transaction log and
-    * skipped — the batch tag rides the SAME atomic manifest publish
-    * as the data, the public Delta `txnAppId`/`txnVersion` sink
-    * recipe. `appId` must be unique per logical query (two queries
-    * sharing an id would suppress each other's batches). */
+    * [[appendTo]] documents) is detected in the Delta log and
+    * skipped before any data lands — the batch tag rides the SAME
+    * atomic commit as the data as a SetTransaction action, the
+    * public Delta `txnAppId`/`txnVersion` sink recipe. `appId` must
+    * be unique per logical query (two queries sharing an id would
+    * suppress each other's batches). */
   def appendToExactlyOnce(events: org.apache.spark.sql.DataFrame,
                           dataset: graft.sources.ManagedDataset,
                           appId: String,

@@ -491,12 +491,12 @@ class EventStreamSpec extends SparkSpec {
         assert(ds.scan().get.count() == 3)
         assert(ds.scan().get.where(col("event_type") === "click").count() == 2)
         // CHECK constraints gate the STREAMING path too: appendBatch
-        // goes through the same commit(), so a poisoned microbatch is
-        // rejected wholesale (no version, no rows) and the exactly-
+        // goes through the same Delta write, so a poisoned microbatch
+        // is rejected wholesale (no version, no rows) and the exactly-
         // once log is untouched — the next clean delivery of a NEW
         // batch id still lands
         ds.addConstraint("positive_value", "value > 0")
-        val e = intercept[IllegalStateException](ds.appendBatch(
+        val e = intercept[IllegalArgumentException](ds.appendBatch(
           Seq((3L, "click", -1.0)).toDF("event_id", "event_type", "value"),
           "ingest", lastBatch + 1))
         assert(e.getMessage.contains("positive_value"))

@@ -1,44 +1,50 @@
 package graft
 
-import graft.sources.ManagedDataset
+import graft.sources.{DeltaReader, DeltaWriter, ManagedDataset}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Transaction-log semantics for the Delta stand-in: versioned atomic
-  * commits, snapshot (reader) isolation, time travel, concurrent
-  * writers, vacuum/compact maintenance. Reference surface:
-  * /root/reference/polario/delta_dataset.py:10-62 (the log itself is
-  * the public Delta protocol re-expressed minimally — the reference
-  * delegates it to delta-rs). */
+/** The dataset contract of [[ManagedDataset]], a view over one Delta
+  * table: versioned atomic commits, snapshot (reader) isolation, time
+  * travel, concurrent writers, skip scans, merge/restore and CHECK
+  * constraints, all served by the Delta log. Reference surface:
+  * polario's delta_dataset.py:10-62. */
 class ManagedDatasetSpec extends SparkSpec {
   import spark.implicits._
 
   private def df(rows: (String, Long)*): DataFrame = rows.toDF("p1", "v")
 
-  test("every write/append lands a new version; versions ascend from 1") {
+  /** Every data file under `url`, log excluded. */
+  private def dataFiles(url: String): List[java.nio.file.Path] =
+    Files.walk(Paths.get(url)).iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .filterNot(_.toString.contains("_delta_log")).toList
+
+  test("every write/append lands a new version; versions ascend from 0") {
     withTempDir { dir =>
       val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
       assert(ds.versions().isEmpty)
       ds.write(df("1" -> 1L))
       ds.append(df("1" -> 2L))
       ds.write(df("2" -> 3L))
-      assert(ds.versions() == Seq(1L, 2L, 3L))
+      assert(ds.versions() == Seq(0L, 1L, 2L))
     }
   }
 
   test("readVersion time-travels: overwrite replaces, append accumulates") {
     withTempDir { dir =>
       val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
-      ds.write(df("1" -> 1L))                       // v1 = {1}
-      ds.append(df("2" -> 2L))                      // v2 = {1,2}
-      ds.write(df("3" -> 3L))                       // v3 = {3}  (full replace)
-      assertSameData(ds.readVersion(1), df("1" -> 1L))
-      assertSameData(ds.readVersion(2), df("1" -> 1L, "2" -> 2L))
-      assertSameData(ds.readVersion(3), df("3" -> 3L))
-      assertSameData(ds.scan().get, ds.readVersion(3))
-      // overwrite is whole-table (Delta semantics): v1's partition is
-      // gone from the latest snapshot even though v3 never wrote p1=1
+      ds.write(df("1" -> 1L))                       // v0 = {1}
+      ds.append(df("2" -> 2L))                      // v1 = {1,2}
+      ds.write(df("3" -> 3L))                       // v2 = {3}  (full replace)
+      assertSameData(ds.readVersion(0), df("1" -> 1L))
+      assertSameData(ds.readVersion(1), df("1" -> 1L, "2" -> 2L))
+      assertSameData(ds.readVersion(2), df("3" -> 3L))
+      assertSameData(ds.scan().get, ds.readVersion(2))
+      // overwrite is whole-table (Delta semantics): v0's partition is
+      // gone from the latest snapshot even though v2 never wrote p1=1
       assert(ds.readPartition(Map("p1" -> "1")).isEmpty)
       intercept[IllegalArgumentException](ds.readVersion(99))
     }
@@ -48,9 +54,9 @@ class ManagedDatasetSpec extends SparkSpec {
     withTempDir { dir =>
       val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
       ds.write(df("1" -> 1L, "2" -> 2L))
-      val pinned = ds.scan().get // lazy — resolves v1's file list now
-      ds.write(df("1" -> 99L))   // v2 rewrites the table, p1=1 included
-      // the pinned plan still reads v1's (immutable) files: old
+      val pinned = ds.scan().get // lazy — resolves v0's file list now
+      ds.write(df("1" -> 99L))   // v1 rewrites the table, p1=1 included
+      // the pinned plan still reads v0's (immutable) files: old
       // snapshot, not the new one, and NEVER a mix
       assertSameData(pinned, df("1" -> 1L, "2" -> 2L))
       assertSameData(ds.scan().get, df("1" -> 99L))
@@ -62,13 +68,15 @@ class ManagedDatasetSpec extends SparkSpec {
       val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
       ds.write(df("1" -> 1L))
       // simulate a writer that crashed after its data landed but
-      // before its manifest published: a commit-shaped directory with
-      // real parquet in it
-      val stray = Paths.get(dir, "ds", f"_c${2L}%020d-deadbeef", "p1=9")
+      // before its commit published: real parquet in a partition
+      // directory and in a leftover staging tree, in no log entry
+      val stray = Paths.get(dir, "ds", "p1=9")
       Files.createDirectories(stray)
       df("9" -> 9L).drop("p1").write.parquet(stray.toString + "/data.parquet")
+      df("8" -> 8L).write.partitionBy("p1")
+        .parquet(Paths.get(dir, "ds", "staging-deadbeef").toString)
       assertSameData(ds.scan().get, df("1" -> 1L))
-      assert(ds.versions() == Seq(1L))
+      assert(ds.versions() == Seq(0L))
       assert(ds.readPartition(Map("p1" -> "9")).isEmpty)
     }
   }
@@ -91,61 +99,29 @@ class ManagedDatasetSpec extends SparkSpec {
       } finally pool.shutdown()
       val ds = ManagedDataset(url, Seq("p1"))
       // 9 committed versions (1 write + 8 appends), every row present:
-      // losers of a manifest race re-based and retried, so no append
+      // losers of a commit race re-based and retried, so no append
       // overwrote another's commit
-      assert(ds.versions() == (1L to 9L))
+      assert(ds.versions() == (0L to 8L))
       assertSameData(ds.scan().get, (0 to 8).map(i => (i.toString, i.toLong)).toDF("p1", "v"))
-    }
-  }
-
-  test("vacuum drops old versions and their unreferenced data; latest survives") {
-    withTempDir { dir =>
-      val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
-      ds.write(df("1" -> 1L))   // v1 — its commit dir dies with vacuum
-      ds.write(df("2" -> 2L))   // v2 — latest, survives
-      def commitDirs: Seq[String] =
-        Files.list(Paths.get(dir, "ds")).toArray.map(_.toString)
-          .map(p => Paths.get(p).getFileName.toString).filter(_.startsWith("_c")).sorted.toSeq
-      assert(commitDirs.size == 2)
-      assert(ds.vacuum(retainVersions = 1) == 1)
-      assert(commitDirs.size == 1)
-      assert(ds.versions() == Seq(2L))
-      assertSameData(ds.scan().get, df("2" -> 2L))
-      intercept[IllegalArgumentException](ds.readVersion(1))
-      // append commit dirs referenced by the retained manifest survive
-      ds.append(df("3" -> 3L))
-      assert(ds.vacuum(retainVersions = 1) == 0)
-      assertSameData(ds.scan().get, df("2" -> 2L, "3" -> 3L))
-      // an ORPHANED publish temp (hard-crashed writer) is swept once
-      // stale; a fresh one — possibly a live writer mid-publish — is
-      // left alone
-      val log = Paths.get(dir, "ds", "_graft_log")
-      val stale = log.resolve("_tmp-deadbeef.json")
-      Files.write(stale, "{}".getBytes)
-      Files.setLastModifiedTime(stale, java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 2L * 60 * 60 * 1000))
-      val fresh = log.resolve("_tmp-cafebabe.json")
-      Files.write(fresh, "{}".getBytes)
-      ds.vacuum(retainVersions = 1)
-      assert(!Files.exists(stale), "hour-old orphan temp must be swept")
-      assert(Files.exists(fresh), "fresh temp (possible live writer) must survive")
-      assertSameData(ds.scan().get, df("2" -> 2L, "3" -> 3L))
     }
   }
 
   test("compact collapses an append chain into one commit, same data") {
     withTempDir { dir =>
-      val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
+      val url = s"$dir/ds"
+      val ds = ManagedDataset(url, Seq("p1"))
       ds.write(df("1" -> 1L))
-      (2 to 5).foreach(i => ds.append(df(i.toString -> i.toLong)))
-      val expect = (1 to 5).map(i => (i.toString, i.toLong)).toDF("p1", "v")
-      assert(ds.compact())
+      (2 to 5).foreach(i => ds.append(df("1" -> i.toLong)))
+      val expect = (1 to 5).map(i => ("1", i.toLong)).toDF("p1", "v")
+      // the view owns no maintenance: the table's own compaction
+      // rewrites the five small files of p1=1 in one commit
+      assert(DeltaReader.snapshot(url).get.files.size == 5)
+      assert(DeltaWriter.compact(url) == 5L)
+      assert(DeltaReader.snapshot(url).get.files.size == 1)
       assertSameData(ds.scan().get, expect)
-      // compacted snapshot is a single commit dir; a second compact is
-      // a no-op and vacuum can now drop the whole pre-compact history
-      assert(!ds.compact())
-      assert(ds.vacuum(retainVersions = 1) == 5)
-      assertSameData(ds.scan().get, expect)
+      // a second compact is a no-op; the pre-compact history still reads
+      assert(DeltaWriter.compact(url) == 5L)
+      assertSameData(ds.readVersion(4), expect)
     }
   }
 
@@ -204,6 +180,48 @@ class ManagedDatasetSpec extends SparkSpec {
     }
   }
 
+  test("writes through the view leave only _delta_log and non-hidden data paths") {
+    withTempDir { dir =>
+      val url = s"$dir/ds"
+      val ds = ManagedDataset(url, Seq("p1"), Seq("v"))
+      ds.write(df("1" -> 1L, "2" -> 2L))
+      ds.append(df("3" -> 3L))
+      assert(ds.appendBatch(df("4" -> 4L), "ingest", 0L))
+      ds.merge(df("1" -> 10L), Seq("p1"))
+      ds.restore(1L)
+      // Hadoop's listing hides its own .crc side files
+      val root = new org.apache.hadoop.fs.Path(url)
+      val names = root.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(root).map(_.getPath.getName).toSeq.sorted
+      assert(names.head == "_delta_log" &&
+        names.tail.forall(n => !n.startsWith("_") && !n.startsWith(".")),
+        s"unexpected entries under the table root: $names")
+      // partition directories, and the merge's deletion-vector sidecar
+      assert(names.tail.forall(n =>
+        n.startsWith("p1=") || n.startsWith("deletion_vector_")), names)
+    }
+  }
+
+  test("appendBatch job counts: a committed batch lands in 3 jobs, a redelivered one in none") {
+    withTempDir { dir =>
+      val ds = ManagedDataset(s"$dir/ds", Nil, Seq("k"))
+      def batch(lo: Long) = (lo until lo + 40L).map(i => (i % 7, s"p$i")).toDF("k", "payload")
+      assert(ds.appendBatch(batch(0L), "app", 0L))
+      // the write and the two jobs of the one bloom aggregate over the
+      // landed files (explicit read schema: no inference job)
+      val (committed, ok) = jobsOf(ds.appendBatch(batch(40L), "app", 1L))
+      assert(ok && committed == 3, s"committed batch ran $committed jobs")
+      // the txn gate returns before any data lands
+      val (redelivered, again) = jobsOf(ds.appendBatch(batch(40L), "app", 1L))
+      assert(!again && redelivered == 0, s"redelivered batch ran $redelivered jobs")
+      // the equality probe is canonicalized on the driver: building the
+      // frame runs nothing
+      val (built, frame) = jobsOf(ds.scanPrunedEquality("k", "3").get)
+      assert(built == 0, s"building the equality scan ran $built jobs")
+      assert(frame.count() == 11L)
+    }
+  }
+
   test("empty-frame commit is a real version with schema, not table-absence") {
     withTempDir { dir =>
       val ds = ManagedDataset(s"$dir/ds", Seq("p1"))
@@ -214,7 +232,7 @@ class ManagedDatasetSpec extends SparkSpec {
     }
   }
 
-  // ---- manifest file-stats skip scan -----------------------------
+  // ---- file-stats skip scan --------------------------------------
 
   private def rangeTable(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
@@ -225,10 +243,7 @@ class ManagedDatasetSpec extends SparkSpec {
   /** Overwrite every parquet file under `root` whose recorded k-range
     * satisfies `pred` with garbage bytes — any later read of it fails. */
   private def corruptFilesWhere(url: String, pred: Long => Boolean): Int = {
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(url)
-    val victims = Files.walk(root).iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+    val victims = dataFiles(url)
       .filter { p =>
         // recover this file's range by reading it directly first
         val mn = spark.read.parquet(p.toString)
@@ -251,7 +266,7 @@ class ManagedDatasetSpec extends SparkSpec {
       assert(expected == (50L to 120L))
       // corrupt every file whose data sits entirely ABOVE the probe
       // range — a reader that opens them dies, so a green result
-      // proves the manifest pruned them before any IO
+      // proves the log's stats pruned them before any IO
       val n = corruptFilesWhere(url, mn => mn > 200L)
       assert(n >= 1, "the 400-row range table must have a high file to corrupt")
       val got = ds.scanPruned("k", "50", "120").get
@@ -285,10 +300,17 @@ class ManagedDatasetSpec extends SparkSpec {
     withTempDir { dir =>
       val url = s"$dir/ds"
       ManagedDataset(url, Nil).write(rangeTable(spark)) // no statsColumns
+      // the creating commit recorded no bloom columns, so a later view
+      // naming some adds none: equality skipping falls back to the
+      // footer min/max windows, range skipping needs no setting
       val ds = ManagedDataset(url, Nil, Seq("k"))
+      ds.append(Seq((401L, "row401")).toDF("k", "payload"))
+      assert(DeltaReader.snapshot(url).get.files.forall(_.tags.isEmpty))
       val got = ds.scanPruned("k", "50", "120").get
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(got == (50L to 120L))
+      assert(ds.scanPrunedEquality("k", "60").get.count() == 1L)
+      assert(ds.prunedFileCountEquality("k", "60").contains(1L))
       intercept[IllegalArgumentException](ds.scanPruned("nope", "0", "1"))
     }
   }
@@ -301,70 +323,27 @@ class ManagedDatasetSpec extends SparkSpec {
     val withH = graft.operators.Sequencing
       .withHilbertValue(grid, "x", "y", bits = 5)
     withTempDir { dir =>
-      val linear = ManagedDataset(s"$dir/linear", Nil, Seq("x", "y"))
-      linear.write(grid.repartitionByRange(16, col("x"), col("y")))
-      val hilbert = ManagedDataset(s"$dir/hilbert", Nil, Seq("x", "y"))
-      hilbert.write(withH.repartitionByRange(16, col("hval")).drop("hval"))
+      val (linear, hilbert) = (s"$dir/linear", s"$dir/hilbert")
+      ManagedDataset(linear, Nil).write(grid.repartitionByRange(16, col("x"), col("y")))
+      ManagedDataset(hilbert, Nil)
+        .write(withH.repartitionByRange(16, col("hval")).drop("hval"))
       // a thin y-band across the full x range: x-leading linear sort
       // keeps every file (its y bounds all span the grid); the
       // Hilbert layout keeps only the blobs the band crosses
       val ranges = Seq(("x", "0", "31"), ("y", "8", "11"))
-      val nLin = linear.prunedFileCount(ranges).get
-      val nHil = hilbert.prunedFileCount(ranges).get
+      def kept(url: String) = DeltaReader.prunedSnapshot(url, ranges).get.files.size
+      val nLin = kept(linear)
+      val nHil = kept(hilbert)
       assert(nLin == 16L, s"x-sorted layout cannot prune a y-band (got $nLin)")
       assert(nHil < nLin / 2,
         s"Hilbert blobs must prune most files for a thin band (got $nHil of $nLin)")
       // both reads return exactly the band
       val expected = (0L until 32L).flatMap(x => (8L to 11L).map(x -> _)).toSet
-      for (ds <- Seq(linear, hilbert)) {
-        val got = ds.scanPrunedRanges(ranges).get
+      for (url <- Seq(linear, hilbert)) {
+        val got = DeltaReader.scanPruned(url, ranges).get
           .select("x", "y").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(got == expected)
       }
-    }
-  }
-
-  test("compactClustered rewrites the layout so skip-scans prune; diffVersions reads the log") {
-    import spark.implicits._
-    val grid = (for (x <- 0L until 32L; y <- 0L until 32L) yield (x, y))
-      .toDF("x", "y")
-    withTempDir { dir =>
-      val ds = ManagedDataset(s"$dir/ds", Nil, Seq("x", "y"))
-      // ingest in shuffled order: every file spans the whole grid
-      ds.write(grid.orderBy(org.apache.spark.sql.functions.xxhash64(col("x"), col("y")))
-        .repartition(16))
-      val ranges = Seq(("x", "0", "31"), ("y", "8", "11"))
-      val before = ds.prunedFileCount(ranges).get
-      assert(before == 16L, s"shuffled ingest should defeat pruning (got $before)")
-      // OPTIMIZE with a Hilbert clustering key
-      val withH = graft.operators.Sequencing.withHilbertValue(
-        ds.scan().get, "x", "y", bits = 5)
-      // cluster on hval: recompute it inside via a staging write —
-      // compactClustered clusters on an EXISTING column, so stage the
-      // keyed frame as the new snapshot first
-      ds.write(withH)
-      assert(ds.compactClustered("hval", 16))
-      val after = ManagedDataset(s"$dir/ds", Nil, Seq("x", "y"))
-        .prunedFileCount(ranges).get
-      assert(after < before / 2,
-        s"clustered rewrite must restore pruning (got $after of $before)")
-      // the data survived both rewrites
-      val got = ds.scanPrunedRanges(ranges).get.select("x", "y")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == (0L until 32L).flatMap(x => (8L to 11L).map(x -> _)).toSet)
-    }
-  }
-
-  test("diffVersions: added/removed/changed between log snapshots") {
-    import spark.implicits._
-    withTempDir { dir =>
-      val ds = ManagedDataset(s"$dir/ds", Nil)
-      ds.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "txt"))
-      ds.write(Seq((2L, "b"), (3L, "C2"), (4L, "d")).toDF("id", "txt"))
-      val d = ds.diffVersions(1L, 2L, "id", "txt")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(d == Map(1L -> "removed", 2L -> "unchanged",
-        3L -> "changed", 4L -> "added"))
     }
   }
 
@@ -395,9 +374,7 @@ class ManagedDatasetSpec extends SparkSpec {
       assert(expected == 20L)
       // corrupt every file that does NOT contain k=7 — a reader that
       // opens one dies, so a green result proves bloom-skipping
-      import scala.jdk.CollectionConverters._
-      val victims = Files.walk(Paths.get(url)).iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      val victims = dataFiles(url)
         .filter { p =>
           spark.read.parquet(p.toString)
             .filter(col("k") === 7L).isEmpty
@@ -464,14 +441,14 @@ class ManagedDatasetSpec extends SparkSpec {
       import spark.implicits._
       ds.write((1L to 10L).map(i => (i, s"v$i")).toDF("k", "p"))
       ds.append((11L to 15L).map(i => (i, s"v$i")).toDF("k", "p"))
-      val restored = ds.restore(1L)
-      assert(restored == 3L)
-      // the restore is a real commit: history intact, snapshot = v1
-      assert(ds.versions() == Seq(1L, 2L, 3L))
+      val restored = ds.restore(0L)
+      assert(restored == 2L)
+      // the restore is a real commit: history intact, snapshot = v0
+      assert(ds.versions() == Seq(0L, 1L, 2L))
       assert(ds.scan().get.count() == 10L)
-      assert(ds.readVersion(2L).count() == 15L) // audit trail preserved
-      // manifest-derived row counts, no data IO needed
-      assert(ds.versionRowCounts() == Seq(1L -> 10L, 2L -> 15L, 3L -> 10L))
+      assert(ds.readVersion(1L).count() == 15L) // audit trail preserved
+      // row counts from the log's file stats, no data IO needed
+      assert(ds.versionRowCounts() == Seq(0L -> 10L, 1L -> 15L, 2L -> 10L))
       intercept[Exception](ds.restore(99L))
     }
   }
@@ -485,13 +462,13 @@ class ManagedDatasetSpec extends SparkSpec {
         .toDF("k", "p")
       val v = ds.merge(source, Seq("k"),
         deleteWhen = Some(col("p") === "whatever" || col("p") === "gone"))
-      assert(v == 2L)
+      assert(v == 1L)
       val got = ds.scan().get.collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       // 1 untouched, 2 replaced, 3 deleted, 4 inserted, 5 delete-noop
       assert(got == Map(1L -> "a", 2L -> "B2", 4L -> "d"))
       // pre-merge state still readable (audit)
-      assert(ds.readVersion(1L).count() == 3L)
+      assert(ds.readVersion(0L).count() == 3L)
     }
   }
 
@@ -516,11 +493,11 @@ class ManagedDatasetSpec extends SparkSpec {
       assert(ds.constraints() == Map("positive_v" -> "v > 0"))
       val versionsBefore = ds.versions()
       val dirsBefore = Files.list(Paths.get(url)).count()
-      val e = intercept[IllegalStateException](
+      val e = intercept[IllegalArgumentException](
         ds.append(Seq((3L, -5L), (4L, 40L)).toDF("k", "v")))
       assert(e.getMessage.contains("positive_v") &&
         e.getMessage.contains("1 row(s)"))
-      // NOTHING landed: no new version, no stray data dir, same rows
+      // NOTHING landed: no new version, no stray data file, same rows
       assert(ds.versions() == versionsBefore)
       assert(Files.list(Paths.get(url)).count() == dirsBefore)
       assert(ds.scan().get.count() == 2L)
@@ -537,7 +514,7 @@ class ManagedDatasetSpec extends SparkSpec {
       import spark.implicits._
       ds.write(Seq((1L, Some(10L)), (2L, None)).toDF("k", "v"))
       // current data already violates -> refused, not registered
-      val e = intercept[IllegalStateException](
+      val e = intercept[IllegalArgumentException](
         ds.addConstraint("big", "v > 100"))
       assert(e.getMessage.contains("big"))
       assert(ds.constraints().isEmpty)
@@ -546,7 +523,7 @@ class ManagedDatasetSpec extends SparkSpec {
       ds.append(Seq((3L, Option.empty[Long])).toDF("k", "v"))
       // ... and the IS NOT NULL conjunct forbids it
       ds.dropConstraint("pos")
-      val e2 = intercept[IllegalStateException] {
+      val e2 = intercept[IllegalArgumentException] {
         ds.addConstraint("pos_nn", "v IS NOT NULL AND v > 0")
       }
       assert(e2.getMessage.contains("pos_nn"))
@@ -556,7 +533,7 @@ class ManagedDatasetSpec extends SparkSpec {
       ds.write(Seq((9L, Some(90L))).toDF("k", "v"))
       val fresh = ManagedDataset(url, Nil)
       assert(fresh.constraints() == Map("k_pos" -> "k > 0"))
-      val e3 = intercept[IllegalStateException](
+      val e3 = intercept[IllegalArgumentException](
         fresh.append(Seq((-1L, Some(1L))).toDF("k", "v")))
       assert(e3.getMessage.contains("k_pos"))
       // dropConstraint reopens the gate

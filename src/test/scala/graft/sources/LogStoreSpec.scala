@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * correctness line — the LOSER of a publish race returns false (and
   * retries at the next version); it NEVER clobbers the winner's
   * committed bytes; a crash inside the window leaves only an
-  * invisible temp that vacuum reclaims. */
+  * invisible temp that the log cleanup reclaims. */
 class LogStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,7 +61,7 @@ class LogStoreSpec extends SparkSpec {
       assert(new String(Files.readAllBytes(
         Paths.get(target.toUri.getPath)), "UTF-8") == "attempt-2")
       // only stale temps remain — invisible to any version listing,
-      // reclaimed by the age-guarded vacuum sweep
+      // reclaimed by the age-guarded log cleanup
       assert(Files.exists(Paths.get(tmp.toUri.getPath)))
     }
   }
@@ -83,7 +83,8 @@ class LogStoreSpec extends SparkSpec {
 
   test("interleaved ManagedDataset writers: every commit lands exactly once, versions contiguous") {
     withTempDir { dir =>
-      val ds = new ManagedDataset(s"$dir/t", Seq.empty)
+      val url = s"$dir/t"
+      val ds = new ManagedDataset(url, Seq.empty)
       ds.write(Seq((0L, "seed")).toDF("k", "s"))
       val writers = (1 to 3).map { w =>
         new Thread(() => {
@@ -96,25 +97,28 @@ class LogStoreSpec extends SparkSpec {
       writers.foreach(_.join())
       // 1 seed + 12 appends, first-writer-wins retries: no commit
       // lost, no version skipped, no row clobbered
-      assert(ds.versions() == (1L to 13L))
+      assert(ds.versions() == (0L to 12L))
       val rows = ds.scan().get.collect().map(_.getLong(0)).toSet
       assert(rows.size == 13)
       assert((1 to 3).forall(w =>
         (0 until 4).forall(i => rows.contains(w * 100L + i))))
-      // crash leftovers: an orphaned temp never surfaces in
-      // versions() and the age-guarded vacuum leaves YOUNG temps
-      // (a live writer's window) alone
-      val stale = Paths.get(s"$dir/t/_graft_log",
-        s"_tmp-${java.util.UUID.randomUUID}.json")
-      Files.write(stale, "orphan".getBytes("UTF-8"))
-      assert(ds.versions() == (1L to 13L))
-      ds.vacuum()
-      assert(Files.exists(stale), "a young temp may be a live writer's")
-      Files.setLastModifiedTime(stale,
+      // crash leftovers: orphaned publish and checkpoint temps never
+      // surface as versions, and the age-guarded log cleanup leaves
+      // YOUNG temps (a live writer's window) alone
+      val log = Paths.get(url, "_delta_log")
+      val temps = Seq(s"_tmp-${java.util.UUID.randomUUID}.json",
+        s".tmp-cp-${java.util.UUID.randomUUID}.parquet").map(log.resolve)
+      temps.foreach(Files.write(_, "orphan".getBytes("UTF-8")))
+      assert(ds.versions() == (0L to 12L))
+      DeltaWriter.cleanupLog(url, DeltaWriter.TmpRetentionMs)
+      assert(temps.forall(Files.exists(_)), "a young temp may be a live writer's")
+      temps.foreach(Files.setLastModifiedTime(_,
         java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis - 2 * ManagedDataset.TmpRetentionMs))
-      ds.vacuum()
-      assert(!Files.exists(stale), "an hour-old temp is orphaned junk")
+          System.currentTimeMillis - 2 * DeltaWriter.TmpRetentionMs)))
+      DeltaWriter.cleanupLog(url, DeltaWriter.TmpRetentionMs)
+      assert(temps.forall(!Files.exists(_)), "an hour-old temp is orphaned junk")
+      assert(ds.versions() == (0L to 12L))
+      assert(ds.scan().get.count() == 13L)
     }
   }
 }
