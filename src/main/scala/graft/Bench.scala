@@ -1,42 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    // ERROR, not WARN: releasing localCheckpoint blocks after every
-    // query (below) emits a benign "cannot be recomputed after
-    // unpersisting" WARN per block — hundreds of lines that would
-    // flood the driver's ~2000-char output tail and push the final
-    // JSON line out of capture.
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.catalyst.GraftFunctions.register(spark)
+    val spark = GraftSession.harness(defaultCpus = 4)
     // Warm up the session (scheduler, codegen, parquet reader paths)
     // so the first measured query doesn't absorb one-time JVM costs.
     spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.range(1000000).selectExpr("sum(id)").collect()
-    // Stable order + cache hygiene: operators may persist() or
-    // localCheckpoint() reused subtrees; drop them after each query so
-    // cached blocks never accumulate across the run. clearCache() only
-    // releases DataFrame cache entries — localCheckpoint/persist'd RDD
-    // blocks live in getPersistentRDDs and must be unpersisted
-    // explicitly, or across a 377-query sweep they pile up in the
-    // BlockManager and GC pressure inflates late heavy queries 4-6x.
-    // blocking = true: an async unpersist hands the block-removal work
-    // to daemon threads that then compete with the NEXT query's tasks —
-    // measured as multi-second inflation of whatever query follows a
-    // persist-heavy one in sweep order (q28_semi_anti 0.4s -> 4.1s
-    // right after the q279-q287 graph block). Synchronous release puts
-    // that cost in the unmeasured gap between queries.
-    def releaseAllBlocks(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
       case ((name, fn), idx) =>
       val t0 = System.nanoTime()
@@ -48,7 +18,7 @@ object Bench {
           false
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      releaseAllBlocks()
+      GraftSession.releaseAllBlocks(spark)
       // Sweep-order memory telemetry (stderr only, never in the JSON):
       // makes block-accumulation regressions visible in the artifact.
       if ((idx + 1) % 50 == 0) {

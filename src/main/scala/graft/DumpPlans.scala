@@ -1,6 +1,4 @@
 package graft
-
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-only plan dumper: writes `.explain("formatted")` of the named
@@ -17,14 +15,7 @@ object DumpPlans {
     val (outDir, suffix) = (args(0), args(1))
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.catalyst.GraftFunctions.register(spark)
+    val spark = GraftSession.harness(defaultCpus = 32)
     new java.io.File(outDir).mkdirs()
     val qs = SparkEntry.queries
     names.foreach { name =>
@@ -34,8 +25,7 @@ object DumpPlans {
         catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
       // iterative operators may have checkpointed during plan build
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.releaseAllBlocks(spark)
       println(s"[plans] wrote $outDir/${name}_$suffix.txt")
     }
     spark.stop()

@@ -44,18 +44,50 @@ object GraftSession {
     // 3-10x) for no shuffle saving worth having.
 
   /** Local-mode session for tests and ad-hoc runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
-    val spark = configure(
-      SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName("graft")
-        .config("spark.sql.shuffle.partitions", cores.toString)
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-        .config("spark.ui.enabled", "false"))
+  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession =
+    start(SparkSession.builder()
+      .appName("graft")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString),
+      cores.toString, "WARN")
+
+  /** The session of the harness mains (`Bench`, `Verify`,
+    * `TimeQueries`, `ProfileQuery`, `DumpPlans`): `local[N]` with N =
+    * `SPARK_GRAFT_CPUS` (default `defaultCpus`) and N shuffle
+    * partitions. Log level ERROR: [[releaseAllBlocks]] after every
+    * query emits a benign "cannot be recomputed after unpersisting"
+    * WARN per block, hundreds of lines that would push Bench's final
+    * JSON line out of the captured output tail. */
+  def harness(defaultCpus: Int): SparkSession =
+    start(SparkSession.builder(),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString), "ERROR")
+
+  private def start(b: SparkSession.Builder, cores: String,
+                    logLevel: String): SparkSession = {
+    val spark = configure(b
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel(logLevel)
     graft.functions.catalyst.GraftFunctions.register(spark)
     spark
+  }
+
+  /** Drop every cached frame and every persisted RDD, between the
+    * queries of a harness run. Operators may `persist()` or
+    * `localCheckpoint()` reused subtrees; `clearCache()` only releases
+    * DataFrame cache entries, while localCheckpoint/persist'd RDD
+    * blocks live in `getPersistentRDDs` and must be unpersisted
+    * explicitly, or across a full sweep they pile up in the
+    * BlockManager and GC pressure inflates late heavy queries 4-6x.
+    * Blocking: an async unpersist hands the block removal to daemon
+    * threads that then compete with the NEXT query's tasks — measured
+    * as multi-second inflation of whatever query follows a
+    * persist-heavy one (q28_semi_anti 0.4 s -> 4.1 s right after the
+    * q279-q287 graph block). */
+  def releaseAllBlocks(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only job-level profiler: run the named queries once each and
   * print every Spark job the run triggered — start offset, duration,
@@ -11,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.catalyst.GraftFunctions.register(spark)
+    val spark = GraftSession.harness(defaultCpus = 32)
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     case class Job(id: Int, t0: Long, desc: String, var site: String,
@@ -62,8 +56,7 @@ object ProfileQuery {
               f"tasks=${j.nTasks}%4d  ${j.site}  ${j.desc.take(60)}")
           }
         }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        GraftSession.releaseAllBlocks(spark)
       }
     }
     spark.stop()

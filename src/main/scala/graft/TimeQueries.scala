@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only micro-bench: time the named queries 3× each — for chasing
   * per-query regressions without a full Bench sweep. Not part of the
   * driver contract. Defaults to the gate config (sf0.1, local[4],
@@ -13,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.catalyst.GraftFunctions.register(spark)
+    val spark = GraftSession.harness(defaultCpus = 4)
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val qs = SparkEntry.queries
     args.foreach { name =>
@@ -28,8 +21,7 @@ object TimeQueries {
         val t1 = System.nanoTime()
         df.count()
         val t2 = System.nanoTime()
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        GraftSession.releaseAllBlocks(spark)
         println(f"$name run$i total ${(t2 - t0) / 1e9}%.2f s " +
           f"(build ${(t1 - t0) / 1e9}%.2f, exec ${(t2 - t1) / 1e9}%.2f)")
       }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.catalyst.GraftFunctions.register(spark)
+    val spark = GraftSession.harness(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -27,12 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Operators may persist() or localCheckpoint() reused subtrees;
-      // don't let blocks accumulate across queries — clearCache() alone
-      // misses RDD-level blocks (localCheckpoint), which must be dropped
-      // via getPersistentRDDs.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.releaseAllBlocks(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-import org.apache.spark.sql.functions.{col, collect_set, expr}
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Per-file equality blooms carried in Delta `add.tags`: on a table
@@ -74,30 +74,42 @@ private[sources] object BloomTags {
   }
 
   /** The bloom tags of landed `files` for `columns` (logical name,
-    * parquet name, type), keyed by `Path.toUri.toString`: ONE
-    * aggregate collecting each hash's bit positions per file. */
+    * parquet name, type), keyed by `Path.toUri.toString`: ONE job, a
+    * plain RDD pass over the files that ORs each row's bit positions
+    * into a bitmap per file and column within each partition; the
+    * driver ORs the partitions' bitmaps. No aggregate, so no shuffle
+    * stage for adaptive execution to run as a job of its own. */
   def tagsFor(files: Seq[Path], columns: Seq[(String, String, DataType)])
              (implicit spark: SparkSession): Map[String, Map[String, String]] = {
     if (files.isEmpty || columns.isEmpty) return Map.empty
     // the HOF rendering is bitwise-equal to the native one
     val native = spark.catalog.functionExists("graft_rolling_hash")
-    val aggs = for ((_, phys, _) <- columns; (a, b) <- Seeds) yield {
+    val bits = for ((_, phys, _) <- columns; (a, b) <- Seeds) yield {
       val v = s"CAST(`$phys` AS STRING)"
       val h = if (native) graft.functions.TextHash.spark.rollingHash(v)
               else graft.functions.TextHash.spark.rollingHashHof(v)
-      collect_set(expr(s"(($a * ($h) + $b) % ${graft.functions.TextHash.P}L) % ${Bits}L"))
+      expr(s"(($a * ($h) + $b) % ${graft.functions.TextHash.P}L) % ${Bits}L")
     }
-    spark.read
+    val rows = spark.read
       .schema(StructType(columns.map { case (_, p, dt) => StructField(p, dt) }))
       .parquet(files.map(_.toString): _*)
-      .groupBy(col("_metadata.file_path"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        r.getString(0) -> columns.zipWithIndex.map { case ((c, _, _), j) =>
-          TagPrefix + c -> bitmapHex(Seeds.indices.flatMap(s =>
-            r.getSeq[Long](1 + j * Seeds.size + s)))
-        }.toMap
-      }.toMap
+      .select(col("_metadata.file_path") +: bits: _*)
+      .queryExecution.toRdd
+    val perCol = Seeds.size
+    rows.mapPartitions { it =>
+      val acc = scala.collection.mutable.HashMap.empty[(String, Int), java.util.BitSet]
+      it.foreach { r =>
+        val file = r.getUTF8String(0).toString
+        (1 until r.numFields).foreach { i =>
+          val set = acc.getOrElseUpdate((file, (i - 1) / perCol), new java.util.BitSet(Bits))
+          // a null value hashes to null and sets no bit
+          if (!r.isNullAt(i)) set.set(r.getLong(i).toInt)
+        }
+      }
+      acc.iterator
+    }.collect().groupMapReduce(_._1)(_._2) { (a, b) => a.or(b); a }
+      .groupMap(_._1._1) { case ((_, c), set) =>
+        TagPrefix + columns(c)._1 -> bitmapHex(set.stream().toArray.map(_.toLong)) }
+      .map { case (file, tags) => file -> tags.toMap }
   }
 }

@@ -132,8 +132,9 @@ object DeletionVectors {
     * decode from the descriptor itself, sidecar (`u`, resolved at the
     * table `root`) and absolute-path (`p`) ones are read through
     * `conf`, format byte, size word and CRC checked. The one DV
-    * decode: the reader's mask frame and the DML writers' old-mask
-    * merge both call it on executors. */
+    * decode: the reader's per-task mask ([[DeltaReader.FileLookup]],
+    * also behind the change feed's mask diffs) and the DML writers'
+    * old-mask merge both call it on executors. */
   def rowIndexes(d: DeltaReader.DvDescriptor, root: String,
                  conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
     val data = d.storageType match {

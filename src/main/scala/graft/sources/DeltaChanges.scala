@@ -45,7 +45,7 @@ import org.apache.spark.sql.types._
   * in-memory file map — so a full-history read of a V-commit table
   * costs O(log), not O(V × log). Driver state is commit-action /
   * file-count sized; row-level work (new-file reads, DV-diff
-  * anti-joins, survivor scans) runs as distributed scans batched per
+  * filters, survivor scans) runs as distributed scans batched per
   * version. A window vacuumed past its commits raises loudly.
   */
 object DeltaChanges {
@@ -213,7 +213,6 @@ object DeltaChanges {
     var pcols: Seq[String] = seed.map(_.partitionColumns).getOrElse(Seq.empty)
     var conf: Map[String, String] = seed.map(_.configuration).getOrElse(Map.empty)
 
-    val maskKeys = Seq("__dv_fp", "__dv_ri")
     window.toSeq.map { v =>
       val actions = byVersion.getOrElse(v, CdfCommit(Seq.empty, Map.empty, None))
       // rows read out of a dropped file carry the PRE-commit shape
@@ -288,23 +287,24 @@ object DeltaChanges {
           prevFiles(k)
       }.toSeq.sortBy(_.path)
 
+      // one content scan of the re-added files (masks lifted): rows
+      // the new descriptor masks and the old one did not are deletes,
+      // the reverse are restorations
       val (dvDeletes, dvRestores) =
         if (dvPairs.isEmpty) (None, None)
         else {
-          val newMask = DeltaReader.deletedRowsFrame(snapV.copy(
-            files = dvPairs.map(_._2).filter(_.deletionVector.isDefined)))
-          val oldMask = DeltaReader.deletedRowsFrame(snapV.copy(
-            files = dvPairs.map(_._1).filter(_.deletionVector.isDefined)))
           val content = DeltaReader.scanWithRowIndex(snapV.copy(
             files = dvPairs.map(_._2.copy(deletionVector = None))))
-          def byContent(mask: DataFrame): DataFrame = content.join(
-            mask.select(col("__dv_fp").as("__fp"), col("__dv_ri").as("__ri")),
-            Seq("__fp", "__ri"), "left_semi").drop("__fp", "__ri")
-          val newlyMasked = newMask.map(nm => oldMask
-            .map(om => nm.join(om, maskKeys, "left_anti")).getOrElse(nm))
-          val unMasked = oldMask.map(om => newMask
-            .map(nm => om.join(nm, maskKeys, "left_anti")).getOrElse(om))
-          (newlyMasked.map(byContent), unMasked.map(byContent))
+          val oldMask = DeltaReader.fileLookup(snapV.copy(files = dvPairs.map(_._1)))
+          val newMask = DeltaReader.fileLookup(snapV.copy(files = dvPairs.map(_._2)))
+          def maskedBy(now: DeltaReader.FileLookup, before: DeltaReader.FileLookup) =
+            content.where(udf((p: String, i: Long) =>
+              now.isDeleted(p, i) && !before.isDeleted(p, i)).apply(col("__fp"), col("__ri")))
+              .drop("__fp", "__ri")
+          (Option.when(dvPairs.exists(_._2.deletionVector.isDefined))(
+            maskedBy(newMask, oldMask)),
+            Option.when(dvPairs.exists(_._1.deletionVector.isDefined))(
+              maskedBy(oldMask, newMask)))
         }
       // file-level removes: the file's surviving rows as of v-1
       val dropDeletes =

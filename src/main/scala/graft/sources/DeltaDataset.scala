@@ -886,8 +886,9 @@ object DeltaWriter {
     *
     *  1. scan the CURRENT snapshot with row provenance
     *     (`_metadata.file_path` / `row_index`, existing DVs already
-    *     applied, partition literals injected so `cond` may reference
-    *     partition columns);
+    *     applied, partition values attached so `cond` may reference
+    *     partition columns), skipping the files `cond`'s partition
+    *     conjuncts rule out ([[DeltaReader.prunePartitions]]);
     *  2. in the same action, group the matches per touched file: the
     *     file's task decodes its old mask from the snapshot's
     *     descriptor, unions it with the new matches and serializes ONE
@@ -920,7 +921,8 @@ object DeltaWriter {
     // and the cdc files: pin them so the two cannot diverge
     val cdfOn =
       snap.configuration.get("delta.enableChangeDataFeed").contains("true")
-    val matchedRows0 = DeltaReader.scanWithRowIndex(snap).where(cond)
+    val matchedRows0 =
+      DeltaReader.scanWithRowIndex(DeltaReader.prunePartitions(snap, cond)).where(cond)
     val matchedRows =
       if (cdfOn) matchedRows0.localCheckpoint(eager = false) else matchedRows0
     copyOnWriteCommit(cleanUrl, snap, matchedRows.select(col("__fp"), col("__ri")),
@@ -1219,9 +1221,10 @@ object DeltaWriter {
     // identity, carried into the updated images as the materialized
     // columns — an UPDATE must not reassign row ids.
     val rtu = rewriteRowTracking(snap)
+    val touched = DeltaReader.prunePartitions(snap, cond)
     val matchedRows = (rtu match {
-      case None => DeltaReader.scanWithRowIndex(snap)
-      case Some(_) => DeltaReader.scanWithRowIndexAndIds(snap)
+      case None => DeltaReader.scanWithRowIndex(touched)
+      case Some(_) => DeltaReader.scanWithRowIndexAndIds(touched)
     }).where(cond).localCheckpoint(eager = false)
     val mask = matchedRows.select(col("__fp"), col("__ri"))
     val updated = snap.schema.fields.foldLeft(matchedRows) { (df, f) =>
@@ -1305,25 +1308,19 @@ object DeltaWriter {
     // the mask plan's one action: per touched file, a task unions the
     // file's old mask (disjoint: the scan already applied it) with the
     // new matches and writes one sidecar; per-task memory is one
-    // file's deleted-row count
-    val oldDvs = spark.sparkContext.broadcast(
-      byKey.flatMap { case (k, f) => f.deletionVector.map(k -> _) })
-    val conf = spark.sparkContext.broadcast(
-      new DeltaReader.SerializableConf(spark.sessionState.newHadoopConf()))
-    val (rootStr, snapRoot) = (t.base.toString, snap.root)
+    // file's deleted-row count. A file missing from the snapshot
+    // raises in the lookup.
+    val files = DeltaReader.fileLookup(snap)
+    val rootStr = t.base.toString
     val descriptors: Map[String, DeltaReader.DvDescriptor] = maskRows
       .as[(String, Long)]
       .groupByKey(_._1)
       .mapGroups { (fp, it) =>
-        val hadoop = conf.value.value
-        val old = oldDvs.value.get(fp)
-          .map(DeletionVectors.rowIndexes(_, snapRoot, hadoop))
-          .getOrElse(Array.emptyLongArray)
-        val idx = old ++ it.map(_._2)
+        val idx = files.deleted(fp) ++ it.map(_._2)
         val data = DeletionVectors.serialize(idx.toSeq)
         val uuid = java.util.UUID.randomUUID()
         val p = new Path(rootStr, s"deletion_vector_$uuid.bin")
-        val out = p.getFileSystem(hadoop).create(p, false)
+        val out = p.getFileSystem(files.hadoopConf).create(p, false)
         try {
           out.write(Array(DeletionVectors.FileFormatVersion))
           out.write(DeletionVectors.frame(data))
@@ -1334,8 +1331,6 @@ object DeltaWriter {
       .map { case (fp, u, n, c) =>
         fp -> DeltaReader.DvDescriptor("u", u, Some(1), n, c) }.toMap
     val fileKeys: Seq[String] = descriptors.keys.toSeq.sorted
-    fileKeys.foreach(k => require(byKey.contains(k),
-      s"DeltaWriter.$verb: matched file $k missing from the snapshot"))
 
     // whether anything was inserted is read off the landed footers:
     // an empty insert set lands zero-record files, deleted here and
@@ -1465,8 +1460,8 @@ object DeltaWriter {
     }
     if (selected.isEmpty) return snap.version
     val t = new TableRoot(cleanUrl)
-    // masked survivors of ONLY the selected files, partition literals
-    // injected so the partitioned rewrite lands in the right dirs
+    // masked survivors of ONLY the selected files, partition values
+    // attached so the partitioned rewrite lands in the right dirs
     val rt = rewriteRowTracking(snap)
     val survivors = rewriteSource(snap, selected, rt)
     val newFiles = landFiles(t.fs, t.base, cleanUrl, survivors,
@@ -1511,7 +1506,7 @@ object DeltaWriter {
     if (groups.isEmpty) return snap.version
     val t = new TableRoot(cleanUrl)
     // one masked read + coalesce(bins) write per qualifying partition;
-    // partition literals are injected by the assembler, so the
+    // partition values are attached by the assembler, so the
     // partitioned write lands each group back in its own directory
     val rt = rewriteRowTracking(snap)
     val newFiles: Seq[(Seq[(String, String)], Path)] = groups.flatMap { g =>

@@ -2,9 +2,11 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Read-only reader for Delta Lake tables via the PUBLIC transaction-
   * log protocol (delta.io PROTOCOL.md) — no delta jars required.
@@ -37,7 +39,7 @@ import org.apache.spark.sql.types._
   *  - the latest `metaData` supplies the logical schema
   *    (`schemaString` is Spark's own StructType JSON — public spec)
   *    and the partition columns, whose values live ONLY in the log
-  *    (injected as typed literal columns at read, like
+  *    (cast to the schema's types per row at read, like
   *    [[HiveDataset]] P4);
   *  - column mapping in `name` mode (reader protocol 2, or 3 with
   *    the `columnMapping` reader feature): the logical schema's
@@ -52,8 +54,9 @@ import org.apache.spark.sql.types._
   *  - deletion vectors (the `deletionVectors` reader feature, on by
   *    default on Databricks-written tables): `add.deletionVector`
   *    descriptors in all three storage modes (`u` sidecar by Z85
-  *    UUID, `p` absolute path, `i` inline) decode through
-  *    [[DeletionVectors]] on EXECUTORS and anti-join the scan on
+  *    UUID, `p` absolute path, `i` inline; any other storage type
+  *    fails the replay) decode through [[DeletionVectors]] on
+  *    EXECUTORS and filter the scan on
   *    `(_metadata.file_path, _metadata.row_index)` — deleted rows
   *    never reach the caller, and a corrupt bitmap raises (CRC)
   *    instead of resurrecting rows;
@@ -71,9 +74,10 @@ import org.apache.spark.sql.types._
   * of commits replays as a single shuffle on file-count-sized data.
   * Only the surviving file LIST collects to the driver (every Delta
   * reader materializes this to plan a scan — it is metadata, bounded
-  * by file count, never row count). The data read itself is plain
-  * parquet scans grouped by partition, so Catalyst pushdown/pruning
-  * apply downstream untouched.
+  * by file count, never row count). The data read itself is ONE
+  * parquet scan per snapshot, so Catalyst pushdown applies
+  * downstream untouched; per-file values from the log ride in a
+  * broadcast map keyed by `_metadata.file_path`.
   */
 object DeltaReader {
 
@@ -89,6 +93,9 @@ object DeltaReader {
       offset: Option[Int],
       sizeInBytes: Int,
       cardinality: Long)
+
+  /** The deletion-vector storage types a replay accepts: `u`, `i`, `p`. */
+  private val DvStorageTypes = Set("u", "i", "p")
 
   /** One surviving data file: absolute path + its partition values
     * (string-encoded, as the log stores them; null = null value).
@@ -464,8 +471,9 @@ object DeltaReader {
     }
     val files = latest.filter(_.isAdd).map { l =>
       l.dv.foreach { d =>
-        require(d.storageType != null && d.pathOrInlineDv != null,
-          s"DeltaReader: malformed deletionVector descriptor on ${l.path}")
+        require(DvStorageTypes.contains(d.storageType) && d.pathOrInlineDv != null,
+          s"DeltaReader: malformed deletionVector descriptor on ${l.path} " +
+            s"(storageType '${d.storageType}', u/i/p only)")
       }
       DeltaFile(absPath(l.path), l.pv, l.size, l.mt, l.dv, l.stats,
         l.baseRowId, l.drcv, l.tags)
@@ -809,10 +817,10 @@ object DeltaReader {
       Option(n.get("add")).filterNot(_.isNull).foreach { a =>
         val pv = strMap(a, "partitionValues")
         val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
-          require(txt(d, "storageType") != null &&
+          require(DvStorageTypes.contains(txt(d, "storageType")) &&
             txt(d, "pathOrInlineDv") != null && d.get("sizeInBytes") != null,
             s"DeltaReader: malformed deletionVector descriptor on " +
-              s"${txt(a, "path")}")
+              s"${txt(a, "path")} (storageType '${txt(d, "storageType")}', u/i/p only)")
           DvDescriptor(txt(d, "storageType"), txt(d, "pathOrInlineDv"),
             Option(d.get("offset")).filterNot(_.isNull).map(_.asInt),
             lng(d, "sizeInBytes", 0L).toInt, lng(d, "cardinality", 0L))
@@ -954,16 +962,18 @@ object DeltaReader {
   /** Timestamp time-travel scan (see [[snapshotAsOf]]). */
   def scanAsOf(url: String, timestampMillis: Long)
               (implicit spark: SparkSession): Option[DataFrame] =
-    snapshotAsOf(url, timestampMillis).map(assemble)
+    snapshotAsOf(url, timestampMillis).map(assembleSnapshot)
 
-  /** Full-table scan at the latest (or a time-travel) version: data
-    * files read with the log's logical schema, partition columns
-    * injected as typed literals, columns in schema order. None when
+  /** Full-table scan at the latest (or a time-travel) version: ONE
+    * parquet read with the log's logical schema, partition values cast
+    * to the schema's types, columns in schema order. Filtering the
+    * result on a partition column still reads every file; use
+    * [[readPartition]] or [[scanPruned]] to skip files. None when
     * the table does not exist; an EMPTY table yields an empty frame
     * with the right schema (matching `pl.scan_delta` semantics). */
   def scan(url: String, asOfVersion: Option[Long] = None)
           (implicit spark: SparkSession): Option[DataFrame] =
-    snapshotAt(url, asOfVersion).map(assemble)
+    snapshotAt(url, asOfVersion).map(assembleSnapshot)
 
   /** The monotone base column of a GENERATED partition column's
     * expression, when the shape is one this reader can SOUNDLY derive
@@ -1171,7 +1181,7 @@ object DeltaReader {
                                   ranges: Seq[(String, String, String)])
                                  (implicit spark: SparkSession): DataFrame = {
     val fieldType = snap.schema.fields.map(f => f.name -> f.dataType).toMap
-    ranges.foldLeft(assemble(prune(snap, ranges))) { case (df, (c, lo, hi)) =>
+    ranges.foldLeft(assembleSnapshot(prune(snap, ranges))) { case (df, (c, lo, hi)) =>
       df.where(col(c) >= lit(lo).cast(fieldType(c)) &&
         col(c) <= lit(hi).cast(fieldType(c)))
     }
@@ -1187,7 +1197,7 @@ object DeltaReader {
       require(values.keySet == snap.partitionColumns.toSet,
         s"Partition column value keys ${values.keySet} do not match " +
           s"partition columns ${snap.partitionColumns}")
-      assemble(snap.copy(files = snap.files.filter(f =>
+      assembleSnapshot(snap.copy(files = snap.files.filter(f =>
         values.forall { case (k, v) =>
           partitionValueOf(snap, f, k).contains(v) })))
     }
@@ -1204,20 +1214,40 @@ object DeltaReader {
     phys.flatMap(f.partitionValues.get).orElse(f.partitionValues.get(c))
   }
 
-  /** Build the snapshot DataFrame: one parquet read per distinct
-    * partition-value tuple (bounded by partition count, each a plain
-    * multi-file scan with pushdown intact), literals injected with
-    * the SCHEMA's types, then one union. Files carrying a deletion
-    * vector scan WITH `_metadata.row_index` and anti-join the decoded
-    * masks; DV-free files keep the untouched plain scan. */
-  private def assemble(snap: DeltaSnapshot)
-                      (implicit spark: SparkSession): DataFrame =
-    assembleInternal(snap, keepMeta = false)
+  /** `snap` without the files whose partition values make a
+    * partition-only conjunct of `cond` false or null: such a file holds
+    * no row `cond` keeps. The conjuncts are evaluated on the driver
+    * against the log's values, cast with the schema's types, so a
+    * DELETE or UPDATE scoped to some partitions scans only their files. */
+  private[sources] def prunePartitions(snap: DeltaSnapshot, cond: Column)
+                                      (implicit spark: SparkSession): DeltaSnapshot = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val filter = spark.createDataFrame(java.util.List.of[Row](), snap.schema)
+      .where(cond).queryExecution.analyzed.collectFirst { case f: Filter => f }.get
+    val parts = filter.child.output.filter(a => snap.partitionColumns.contains(a.name))
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val onParts = conjuncts(filter.condition).filter(e => e.deterministic &&
+        e.references.subsetOf(AttributeSet(parts)) && !SubqueryExpression.hasSubquery(e))
+      .map(BindReferences.bindReference(_, parts))
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    if (onParts.isEmpty) snap
+    else snap.copy(files = snap.files.filter { f =>
+      val row = InternalRow.fromSeq(parts.map(a => Cast(Literal.create(
+        partitionValueOf(snap, f, a.name).orNull, StringType), a.dataType, tz).eval()))
+      onParts.forall(_.eval(row) == true)
+    })
+  }
 
   /** The snapshot frame PLUS `__fp` (= `_metadata.file_path`) and
     * `__ri` (= `_metadata.row_index`) provenance columns, existing
     * deletion vectors already applied — what a DV-writing DELETE
-    * needs to turn a predicate into per-file row-index masks. */
+    * needs to turn a predicate into per-file row-index masks. Same
+    * single scan as [[assembleSnapshot]]. */
   private[sources] def scanWithRowIndex(snap: DeltaSnapshot)
                                        (implicit spark: SparkSession): DataFrame =
     assembleInternal(snap, keepMeta = true)
@@ -1229,9 +1259,10 @@ object DeltaReader {
                                              (implicit spark: SparkSession): DataFrame =
     assembleInternal(snap, keepMeta = true, keepRowIds = true)
 
-  /** Assemble an arbitrary (possibly file-filtered) snapshot — the
-    * OPTIMIZE rewrite path reads just the heavily-masked files this
-    * way, masks applied, partition literals injected. */
+  /** The frame of an arbitrary (possibly file-filtered) snapshot,
+    * masks applied and partition values attached — what [[scan]],
+    * [[readPartition]] and [[scanPruned]] return, and how the OPTIMIZE
+    * rewrite reads just the heavily-masked files. */
   private[sources] def assembleSnapshot(snap: DeltaSnapshot)
                                        (implicit spark: SparkSession): DataFrame =
     assembleInternal(snap, keepMeta = false)
@@ -1247,7 +1278,7 @@ object DeltaReader {
                     (implicit spark: SparkSession): Option[DataFrame] =
     snapshotAt(url.stripSuffix("/"), asOfVersion)
       .filter(_.files.nonEmpty)
-      .map(assembleInternal(_, keepMeta = false, keepRowIds = true))
+      .map(assembleWithRowIds)
 
   /** [[scanWithRowIds]] over an already-resolved (possibly
     * file-filtered) snapshot — the rewrite verbs' input when they
@@ -1256,6 +1287,16 @@ object DeltaReader {
                                          (implicit spark: SparkSession): DataFrame =
     assembleInternal(snap, keepMeta = false, keepRowIds = true)
 
+  /** ONE parquet read over every file of `snap`. What the log knows
+    * per file — partition values, deletion vector, row-id base and
+    * commit version — comes from one broadcast map ([[fileLookup]])
+    * read per row against `_metadata.file_path`: partition values are
+    * cast to the SCHEMA's types, rows a deletion vector masks are
+    * filtered out (each task decodes a file's mask once), and row ids
+    * are `baseRowId + _metadata.row_index` unless materialized. A
+    * frame that needs no per-file value (unpartitioned, DV-free, no
+    * row ids) is the plain read. `keepMeta` adds `__fp`/`__ri`,
+    * `keepRowIds` `_row_id`/`_row_commit_version`. */
   private def assembleInternal(snap: DeltaSnapshot, keepMeta: Boolean,
                                keepRowIds: Boolean = false)
                               (implicit spark: SparkSession): DataFrame = {
@@ -1291,136 +1332,120 @@ object DeltaReader {
           .mkString(", ")} collide with the row-tracking output/" +
           "materialized column names — rename them or read without row ids")
     }
-    val needMeta = keepMeta || keepRowIds
-    val dataSchema = StructType(dataPairs.map(_._2) ++ matFields)
-    val metaCols = if (needMeta) Seq(col("__fp"), col("__ri")) else Seq.empty
-    val matCols = matFields.map(f => col(f.name))
-    val ordered = snap.schema.fieldNames.map(col).toSeq ++ metaCols ++ matCols
-    def empty = spark.createDataFrame(
+    if (snap.files.isEmpty) return spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(snap.schema.fields ++
         (if (keepMeta) Seq(StructField("__fp", StringType),
           StructField("__ri", LongType)) else Seq.empty) ++
         (if (keepRowIds) Seq(StructField("_row_id", LongType),
           StructField("_row_commit_version", LongType)) else Seq.empty)))
-    if (snap.files.isEmpty) return empty
-    val deleted = deletedRowsFrame(snap) // built once, shared by groups
-    val groups = snap.files
-      .groupBy(f => snap.partitionColumns.map(c =>
-        partitionValueOf(snap, f, c).orNull))
-      .toSeq.sortBy(_._1.mkString("/"))
-    groups.map { case (pvals, fs) =>
-      val (dvFiles, plainFiles) = fs.partition(_.deletionVector.isDefined)
-      def readFiles(paths: Seq[String], withMask: Boolean): DataFrame = {
-        val read = spark.read.schema(dataSchema).parquet(paths: _*)
-        val masked =
-          if (!withMask && !needMeta) read
-          else {
-            // _metadata.file_path IS Path.toUri.toString (spec-pinned
-            // in DeletionVectorSpec), so the join key matches the
-            // driver-side descriptor frame exactly — no normalization
-            val withM = read
-              .withColumn("__fp", col("_metadata.file_path"))
-              .withColumn("__ri", col("_metadata.row_index"))
-            val anti =
-              if (!withMask) withM
-              else withM.join(
-                deleted.get.select(col("__dv_fp").as("__fp"),
-                  col("__dv_ri").as("__ri")),
-                Seq("__fp", "__ri"), "left_anti")
-            if (needMeta) anti else anti.drop("__fp", "__ri")
-          }
-        // physical→logical rename; nested names ride a struct cast
-        // (positional, so shape is preserved exactly). The cast
-        // target is nullability-RELAXED: the parquet scan's output is
-        // always nullable, and Spark refuses a nullable→non-nullable
-        // container cast — a foreign mapped table declaring a NOT
-        // NULL inner field would otherwise be unreadable.
-        val dataSel = snap.physicalSchema match {
-          case Some(_) => dataPairs.map { case (lf, pf) =>
-            col(pf.name).cast(relaxNullability(lf.dataType)).as(lf.name) }
-          case None => dataPairs.map(_._2.name).map(col)
-        }
-        masked.select(dataSel ++ metaCols ++ matCols: _*)
-      }
-      val parts =
-        (if (plainFiles.nonEmpty)
-          Seq(readFiles(plainFiles.map(_.path), withMask = false)) else Nil) ++
-        (if (dvFiles.nonEmpty)
-          Seq(readFiles(dvFiles.map(_.path), withMask = true)) else Nil)
-      val base = parts.reduce(_ unionByName _)
-      snap.partitionColumns.zip(pvals).foldLeft(base) { case (d, (c, v)) =>
-        // log partition values are strings ("2024-01-02", "42", null);
-        // ANSI cast raises on garbage — corrupt logs fail loudly
-        d.withColumn(c, lit(v).cast(StringType).cast(fieldType(c)))
-      }.select(ordered: _*)
-    }.reduce(_ unionByName _) match {
-      case assembled if !keepRowIds => assembled
-      case assembled =>
-        // resolve _row_id / _row_commit_version: one broadcast join
-        // against the (file-count bounded) per-add assignment frame
-        import spark.implicits._
-        val bm = snap.files.map(f =>
-          (new Path(f.path).toUri.toString,
-            f.baseRowId.map(Long.box).map(_.toLong),
-            f.defaultRowCommitVersion.map(Long.box).map(_.toLong)))
-          .toDF("__bm_fp", "__bm_base", "__bm_rcv")
-        val fromBase = (col("__bm_base") + col("__ri")).cast(LongType)
-        val rid = matIdName.map(n => coalesce(col(n), fromBase))
-          .getOrElse(fromBase)
-        val rcv = matRcvName.map(n => coalesce(col(n), col("__bm_rcv")))
-          .getOrElse(col("__bm_rcv"))
-        assembled
-          .join(broadcast(bm), col("__fp") === col("__bm_fp"), "left")
-          .withColumn("_row_id", rid)
-          .withColumn("_row_commit_version", rcv.cast(LongType))
-          .drop((Seq("__bm_fp", "__bm_base", "__bm_rcv") ++
-            matIdName.toSeq ++ matRcvName.toSeq ++
-            (if (keepMeta) Seq.empty else Seq("__fp", "__ri"))): _*)
+
+    val read = spark.read.schema(StructType(dataPairs.map(_._2) ++ matFields))
+      .parquet(snap.files.map(_.path): _*)
+    // _metadata.file_path IS Path.toUri.toString (spec-pinned in
+    // DeletionVectorSpec): the lookup's keys match it exactly
+    val fp = col("_metadata.file_path")
+    val ri = col("_metadata.row_index")
+    val hasDvs = snap.files.exists(_.deletionVector.isDefined)
+    // one broadcast, made only when a column below reads it (a plain
+    // val: the row functions must not capture the snapshot or session)
+    val files =
+      if (snap.partitionColumns.isEmpty && !hasDvs && !keepRowIds) null
+      else fileLookup(snap)
+    val live =
+      if (!hasDvs) read
+      else read.where(!udf((p: String, i: Long) => files.isDeleted(p, i)).apply(fp, ri))
+    // physical→logical rename; nested names ride a struct cast
+    // (positional, so shape is preserved exactly). The cast target is
+    // nullability-RELAXED: the parquet scan's output is always
+    // nullable, and Spark refuses a nullable→non-nullable container
+    // cast — a foreign mapped table declaring a NOT NULL inner field
+    // would otherwise be unreadable.
+    val dataCols = dataPairs.map { case (lf, pf) => lf.name ->
+      (if (snap.physicalSchema.isEmpty) col(pf.name)
+       else col(pf.name).cast(relaxNullability(lf.dataType)).as(lf.name))
+    }.toMap
+    // log partition values are strings ("2024-01-02", "42", null);
+    // ANSI cast raises on garbage — corrupt logs fail loudly
+    val partCols = snap.partitionColumns.zipWithIndex.map { case (c, i) =>
+      c -> udf((p: String) => files(p).partitionValues(i)).apply(fp)
+        .cast(fieldType(c)).as(c)
+    }.toMap
+    val metaCols = if (keepMeta) Seq(fp.as("__fp"), ri.as("__ri")) else Nil
+    val rowIdCols = if (!keepRowIds) Nil else {
+      val fromBase = udf((p: String) => files(p).baseRowId).apply(fp) + ri
+      val rcv = udf((p: String) => files(p).rowCommitVersion).apply(fp)
+      Seq(matIdName.map(n => coalesce(col(n), fromBase)).getOrElse(fromBase)
+          .as("_row_id"),
+        matRcvName.map(n => coalesce(col(n), rcv)).getOrElse(rcv)
+          .as("_row_commit_version"))
     }
+    live.select(snap.schema.fieldNames.toSeq.map(n =>
+      dataCols.getOrElse(n, partCols(n))) ++ metaCols ++ rowIdCols: _*)
   }
 
-  /** Hadoop Configuration with Java serialization — lets the DV
-    * decode task open the sidecar on the executor with the SESSION's
-    * filesystem config (credentials, schemes), not a blank one. */
-  private[sources] final class SerializableConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
+  /** What the log says about one data file that a scan attaches to
+    * its rows: the partition values (log strings, in partition-column
+    * order), the deletion vector, and the row-tracking base id and
+    * commit version (null when the add carries none). */
+  private[sources] final case class FileValues(partitionValues: Seq[String],
+      dv: Option[DvDescriptor], baseRowId: java.lang.Long,
+      rowCommitVersion: java.lang.Long)
+
+  /** `snap`'s [[FileValues]] keyed by `Path.toUri.toString` (what
+    * `_metadata.file_path` returns for the file), shipped once with
+    * `sparkContext.broadcast`: a broadcast variable runs no job,
+    * unlike a broadcast join. */
+  private[sources] def fileLookup(snap: DeltaSnapshot)
+                                 (implicit spark: SparkSession): FileLookup = {
+    val values = snap.files.map(f => new Path(f.path).toUri.toString -> FileValues(
+      snap.partitionColumns.map(partitionValueOf(snap, f, _).orNull),
+      f.deletionVector,
+      f.baseRowId.map(Long.box).orNull,
+      f.defaultRowCommitVersion.map(Long.box).orNull)).toMap
+    val sc = spark.sparkContext
+    new FileLookup(sc.broadcast(values), snap.root,
+      sc.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+  }
+
+  /** The executor side of a [[fileLookup]]: each task deserializes its
+    * own copy, and a task reads its files one after another, so the
+    * current file's values and its decoded mask are kept until the
+    * path changes. A mask is decoded at most once per file and task
+    * through [[DeletionVectors.rowIndexes]]; it holds that file's
+    * deleted-row count. A path missing from the map raises: silently
+    * unmasked rows or null partition values would be wrong answers. */
+  private[sources] final class FileLookup(
+      values: Broadcast[Map[String, FileValues]],
+      root: String,
+      conf: Broadcast[SerializableConfiguration])
       extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
+    @transient private var path: String = _
+    @transient private var current: FileValues = _
+    @transient private var mask: Array[Long] = _
 
-  /** The decoded deletion masks as a DataFrame of
-    * `(__dv_fp = data-file Path.toUri.toString, __dv_ri = row index)`.
-    * None when no file carries a DV.
-    *
-    * Scale shape (100 TB): the INPUT is one row per DV-carrying file
-    * (metadata-sized); sidecars are opened and bitmaps decoded ON
-    * EXECUTORS, so the driver never holds a bitmap (inline `i`
-    * payloads are the exception — those bytes already live in the
-    * log the driver replayed). The flatMap fan-out is
-    * `cardinality`-bounded = total deleted rows, distributed. This is
-    * a documented imperative seam (§2.9): a roaring bitmap has no
-    * Catalyst rendering, and the per-FILE input frame means the seam
-    * never touches row-count-sized data on the way in. */
-  private[sources] def deletedRowsFrame(snap: DeltaSnapshot)
-                              (implicit spark: SparkSession): Option[DataFrame] = {
-    val dvFiles = snap.files.filter(_.deletionVector.isDefined)
-    if (dvFiles.isEmpty) return None
-    import spark.implicits._
-    val work = dvFiles.map(f => (new Path(f.path).toUri.toString, f.deletionVector.get))
-    val conf = spark.sparkContext.broadcast(
-      new SerializableConf(spark.sessionState.newHadoopConf()))
-    val root = snap.root
-    val df = spark.createDataset(work).flatMap { case (key, d) =>
-      DeletionVectors.rowIndexes(d, root, conf.value.value).iterator.map(ri => (key, ri))
-    }.toDF("__dv_fp", "__dv_ri")
-    Some(df)
+    def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value.value
+
+    def apply(p: String): FileValues = {
+      if (p != path) {
+        current = values.value.getOrElse(p, throw new IllegalStateException(
+          s"DeltaReader: scanned file $p is not in the snapshot"))
+        path = p
+        mask = null
+      }
+      current
+    }
+
+    /** The ascending row indexes `p`'s deletion vector masks. */
+    def deleted(p: String): Array[Long] = {
+      val v = apply(p)
+      if (mask == null) mask = v.dv
+        .map(DeletionVectors.rowIndexes(_, root, hadoopConf).sorted)
+        .getOrElse(Array.emptyLongArray)
+      mask
+    }
+
+    def isDeleted(p: String, rowIndex: Long): Boolean =
+      java.util.Arrays.binarySearch(deleted(p), rowIndex) >= 0
   }
 }

@@ -49,6 +49,13 @@ class BloomCodecSpec extends graft.SparkSpec {
       assert(Files.exists(log.resolve(f"${10L}%020d.checkpoint.parquet")))
       val head = DeltaReader.snapshot(table).get
       assert(head.files.nonEmpty && head.files.forall(_.tags.contains("graft.bloom.k")))
+      // each tag is the bitmap of its file's values, hashed on the driver
+      head.files.foreach { f =>
+        val ks = spark.read.parquet(f.path).select("k").as[Long].collect()
+        assert(f.tags("graft.bloom.k") == BloomTags.bitmapHex(
+          ks.toSeq.flatMap(k => BloomTags.positions(k.toString)).map(_.toLong)),
+          s"tag of ${f.path}")
+      }
       (0L to 11L).foreach { v =>
         assert(DeltaReader.snapshotAt(table, Some(v)) ==
           DeltaReader.snapshotAtImpl(table, Some(v), forceDistributed = true),

@@ -1357,7 +1357,7 @@ class DeltaDatasetSpec extends SparkSpec {
       val (mergeJobs, v3) = jobsOf(ds.merge(
         Seq((2L, 22.0, "A"), (11L, 110.0, "B"), (6L, 0.0, "B")).toDF("k", "x", "p"),
         Seq("k"), deleteWhen = Some($"x" === 0.0)))
-      assert(v3 == 3L && mergeJobs == 7, s"merge ran $mergeJobs jobs")
+      assert(v3 == 3L && mergeJobs == 6, s"merge ran $mergeJobs jobs")
       assert(actionKeys(table, v3) ==
         Seq("commitInfo", "remove", "add", "remove", "add") ++ add(2))
       val v4 = ds.update($"k" === 5L, Map("x" -> lit(55.0)))
@@ -1386,10 +1386,8 @@ class DeltaDatasetSpec extends SparkSpec {
       val (mergeJobs, _) = jobsOf(ds.merge(
         Seq((2L, 22.0, "B"), (3L, 30.0, "A")).toDF("k", "x", "p"), Seq("k")))
       assert(mergeJobs == 6, s"merge ran $mergeJobs jobs")
-      // a delete whose file already carries a DV also broadcasts the old
-      // mask into its scan
       val (deleteJobs, _) = jobsOf(ds.delete($"k" === 1L))
-      assert(deleteJobs == 3, s"delete ran $deleteJobs jobs")
+      assert(deleteJobs == 2, s"delete ran $deleteJobs jobs")
       val cp = s"$dir/cp"
       val cpds = new DeltaDataset(cp, Seq("p"))
       (0L until 10L).foreach(i => cpds.append(Seq((i, "A")).toDF("v", "p")))
@@ -1407,6 +1405,16 @@ class DeltaDatasetSpec extends SparkSpec {
       ds.write(Seq((1L, 10.0, "A"), (2L, 20.0, "B")).toDF("k", "x", "p").coalesce(1))
       val (updateJobs, _) = jobsOf(ds.update($"k" === 1L, Map("x" -> lit(11.0))))
       assert(updateJobs == 3, s"update ran $updateJobs jobs")
+      // the touched file already carries a DV: its scan reads the mask
+      // in the tasks, no extra job
+      val dvt = new DeltaDataset(s"$dir/dv", Seq("p"))
+      dvt.write(Seq((1L, 10.0, "A"), (3L, 30.0, "A"), (2L, 20.0, "B")).toDF("k", "x", "p")
+        .coalesce(1))
+      dvt.update($"k" === 1L, Map("x" -> lit(11.0)))
+      val (dvUpdateJobs, _) = jobsOf(dvt.update($"k" === 3L, Map("x" -> lit(33.0))))
+      assert(dvUpdateJobs == 3, s"update of a DV'd file ran $dvUpdateJobs jobs")
+      assertSameData(dvt.scan().get,
+        Seq((1L, 11.0, "A"), (3L, 33.0, "A"), (2L, 20.0, "B")).toDF("k", "x", "p"))
       val v2t = s"$dir/v2"
       writeV2Log(v2t)
       val v2ds = new DeltaDataset(v2t)

@@ -620,4 +620,117 @@ class DeltaReaderSpec extends SparkSpec {
       assert(prunedJobs == 0, s"prunedSnapshot ran $prunedJobs jobs")
     }
   }
+
+  test("an unknown deletion-vector storage type fails both replays, naming the file") {
+    withTempDir { dir =>
+      val table = s"$dir/t"
+      writeDataFile(Seq(1L, 2L).toDF("v"), table, "p=A/f1.parquet")
+      val dv = """{"storageType":"x","pathOrInlineDv":"abcde","sizeInBytes":4,"cardinality":1}"""
+      writeCommit(table, 0L, Seq(
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+          """"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+        metaJson,
+        addJson("p=A/f1.parquet", "p" -> "A").replace(
+          ""","dataChange":true}""", s""","dataChange":true,"deletionVector":$dv}""")))
+      Seq(false, true).foreach { distributed =>
+        val e = intercept[IllegalArgumentException](
+          DeltaReader.snapshotAtImpl(table, None, forceDistributed = distributed))
+        assert(e.getMessage.contains("p=A/f1.parquet") &&
+          e.getMessage.contains("storageType 'x'"),
+          s"distributed=$distributed: ${e.getMessage}")
+      }
+    }
+  }
+
+  /** A name-mapped, row-tracked table partitioned on `(a STRING, b
+    * INT)` with one file per partition value — `(x,1)`, `(x,2)`,
+    * `(y,1)`, base row ids 0, 10, 20 — the `(y,1)` file's first row
+    * masked by an inline (`i`) deletion vector when `inlineDv`.
+    * Returns the written rows `(v, a, b, row index, row id)`. */
+  private def buildTwoKeyTable(table: String, inlineDv: Boolean)
+      : Seq[(Long, String, Int, Long, Long)] = {
+    def field(name: String, dt: DataType, id: Long) = StructField(name, dt,
+      metadata = new MetadataBuilder().putLong("delta.columnMapping.id", id)
+        .putString("delta.columnMapping.physicalName", s"col-$name$id").build())
+    val sch = StructType(Seq(field("v", LongType, 1), field("a", StringType, 2),
+      field("b", IntegerType, 3)))
+    val files = Seq((("x", 1), Seq(1L, 2L, 3L), 0L), (("x", 2), Seq(4L, 5L), 10L),
+      (("y", 1), Seq(6L, 7L, 8L), 20L))
+    val inline = {
+      val data = DeletionVectors.serialize(Seq(0L))
+      val padded = java.util.Arrays.copyOf(data, (data.length + 3) / 4 * 4)
+      s""","deletionVector":{"storageType":"i","pathOrInlineDv":""" +
+        s""""${DeletionVectors.z85Encode(padded)}","sizeInBytes":${data.length},""" +
+        """"cardinality":1}"""
+    }
+    val adds = files.map { case ((a, b), vs, base) =>
+      val rel = s"col-a2=$a/col-b3=$b/part-$a$b.parquet"
+      writeDataFile(vs.toDF("col-v1"), table, rel)
+      s"""{"add":{"path":"$rel","partitionValues":{"col-a2":"$a","col-b3":"$b"},""" +
+        s""""size":${Files.size(Paths.get(table, rel))},"modificationTime":1700000000000,""" +
+        s""""dataChange":true,"baseRowId":$base,"defaultRowCommitVersion":0""" +
+        (if (inlineDv && a == "y") inline else "") + "}}"
+    }
+    writeCommit(table, 0L, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+        """"readerFeatures":["columnMapping","deletionVectors"],""" +
+        """"writerFeatures":["columnMapping","deletionVectors","rowTracking",""" +
+        """"domainMetadata"]}}""",
+      s"""{"metaData":{"id":"two-key","format":{"provider":"parquet","options":{}},""" +
+        s""""schemaString":"${esc(sch.json)}","partitionColumns":["a","b"],""" +
+        """"configuration":{"delta.columnMapping.mode":"name",""" +
+        """"delta.columnMapping.maxColumnId":"3","delta.enableRowTracking":"true",""" +
+        """"delta.enableDeletionVectors":"true"},"createdTime":1700000000000}}""") ++
+      adds :+
+      """{"domainMetadata":{"domain":"delta.rowTracking",""" +
+        """"configuration":"{\"rowIdHighWaterMark\":29}","removed":false}}""")
+    files.flatMap { case ((a, b), vs, base) =>
+      vs.zipWithIndex.map { case (v, i) => (v, a, b, i.toLong, base + i) } }
+  }
+
+  /** File scans and broadcast exchanges in `df`'s executed plan. */
+  private def scanShape(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    object Plans extends AdaptiveSparkPlanHelper
+    (Plans.collect(plan) { case s: FileSourceScanExec => s }.size,
+      Plans.collect(plan) { case b: BroadcastExchangeExec => b }.size)
+  }
+
+  test("one scan per snapshot: two partition columns, name mapping, row ids, 'u' and 'i' masks") {
+    withTempDir { dir =>
+      import org.apache.spark.sql.functions.col
+      val table = s"$dir/t"
+      val written = buildTwoKeyTable(table, inlineDv = true)
+      // a sidecar ('u') mask on the (x,1) file, next to the inline one on (y,1)
+      new DeltaDataset(table, Seq("a", "b")).delete(col("v") === 2L)
+      val snap = DeltaReader.snapshot(table).get
+      val dvTypes = snap.files.flatMap(f => f.deletionVector.map(d =>
+        DeltaReader.partitionValueOf(snap, f, "a").get -> d.storageType)).toMap
+      assert(dvTypes == Map("x" -> "u", "y" -> "i"), s"masks: $dvTypes")
+      val live = written.filterNot { case (v, _, _, _, _) => v == 2L || v == 6L }
+      val scan = DeltaReader.scan(table).get
+      val withIds = DeltaReader.scanWithRowIds(table).get
+      val withIndex = DeltaReader.scanWithRowIndex(snap)
+      assert(scan.schema.fieldNames.toSeq == Seq("v", "a", "b"))
+      assertSameData(scan, live.map { case (v, a, b, _, _) => (v, a, b) }.toDF("v", "a", "b"))
+      assertSameData(withIds, live.map { case (v, a, b, _, id) => (v, a, b, id, 0L) }
+        .toDF("v", "a", "b", "_row_id", "_row_commit_version"))
+      assertSameData(withIndex.drop("__fp"), live.map { case (v, a, b, ri, _) =>
+        (v, a, b, ri) }.toDF("v", "a", "b", "__ri"))
+      Seq(scan, withIds, withIndex).foreach { df =>
+        assert(scanShape(df) == (1, 0), s"file scans and broadcasts: ${scanShape(df)}")
+      }
+      // a DV-free table of the same shape counts in as many jobs
+      val plain = s"$dir/plain"
+      buildTwoKeyTable(plain, inlineDv = false)
+      val (maskedJobs, n) = jobsOf(DeltaReader.scan(table).get.count())
+      val (plainJobs, m) = jobsOf(DeltaReader.scan(plain).get.count())
+      assert(n == 6L && m == 8L)
+      assert(maskedJobs == plainJobs, s"masked count ran $maskedJobs jobs, plain $plainJobs")
+    }
+  }
 }
