@@ -1,5 +1,10 @@
 package graft
 object Bench {
+  /** One query's record: wall seconds, success, and the Janino
+    * compiles it started with their time in ms. */
+  private final case class Run(name: String, secs: Double, ok: Boolean,
+                               compiles: Long, compileMs: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.harness(defaultCpus = 4)
@@ -7,8 +12,10 @@ object Bench {
     // so the first measured query doesn't absorb one-time JVM costs.
     spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.range(1000000).selectExpr("sum(id)").collect()
+    val compileTime = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
       case ((name, fn), idx) =>
+      val compiles0 = compileTime.getCount
       val t0 = System.nanoTime()
       // A failed query must not masquerade as a fast one: keep its
       // time-to-fail but record the name under "errors".
@@ -18,6 +25,11 @@ object Bench {
           false
       }
       val dt = (System.nanoTime() - t0) / 1e9
+      // Janino compiles the query started, and their time: the
+      // histogram keeps no running sum, so the time is the count
+      // times the mean of its (recent-weighted) sample.
+      val compiles = compileTime.getCount - compiles0
+      val compileMs = compiles * compileTime.getSnapshot.getMean
       GraftSession.releaseAllBlocks(spark)
       // Sweep-order memory telemetry (stderr only, never in the JSON):
       // makes block-accumulation regressions visible in the artifact.
@@ -29,16 +41,18 @@ object Bench {
           f"[bench] storage after ${idx + 1}%d queries: " +
           f"${storageUsed / 1048576.0}%.1f MiB cached, $nPersistent%d persistent RDDs")
       }
-      (name, dt, ok)
+      Run(name, dt, ok, compiles, compileMs)
     }
     def fmt(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + fmt(v) }
+    val qs = results.map(r => s"\"" + r.name + "\":" + fmt(r.secs))
       .mkString("{", ",", "}")
-    val errors = results.collect { case (k, _, false) => s"\"" + k + "\"" }
+    val errors = results.filterNot(_.ok).map(r => s"\"" + r.name + "\"")
       .mkString("[", ",", "]")
-    val total = results.map(_._2).sum
+    val codegen = results.map(r => s"\"" + r.name + "\":{\"compiles\":" + r.compiles +
+      ",\"compile_ms\":" + fmt(r.compileMs) + "}").mkString("{", ",", "}")
+    val total = results.map(_.secs).sum
     val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,"codegen":$codegen,"sf":"$sfDir"}"""
     // The driver captures only a ~2000-char tail of stdout (rounds 5
     // and 6 both recorded `parsed: null` because the 343-query map is
     // ~12 KB). Print a COMPACT line that is guaranteed to fit: total
@@ -47,8 +61,8 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT file.
     val headline = new StringBuilder
     var used = 0
-    results.sortBy(-_._2).foreach { case (k, v, _) =>
-      val entry = s"\"" + k + "\":" + fmt(v)
+    results.sortBy(-_.secs).foreach { r =>
+      val entry = s"\"" + r.name + "\":" + fmt(r.secs)
       if (used + entry.length + 1 <= 1300) {
         if (headline.nonEmpty) headline.append(',')
         headline.append(entry)

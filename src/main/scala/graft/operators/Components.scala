@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.util.Checkpoints
+import graft.util.{Checkpoints, DriverBudget}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -45,10 +45,14 @@ import scala.jdk.CollectionConverters._
   */
 object Components {
 
+  /** Bytes of one canonical `(u, v)` long edge on the driver. */
+  private[operators] val EdgeBytes: Long = 16
+
   /** Canonical edge count at or below which [[connectedComponents]]
-    * runs its rounds on the driver: 2^18 (u, v) long pairs are 4 MiB,
-    * the same budget as the driver-side Delta log replay. */
-  val DriverMaxEdges: Long = 1L << 18
+    * runs its rounds on the driver: 2^18 (u, v) long pairs are
+    * [[DriverBudget.MaxBytes]], the budget the driver-side Delta log
+    * replay and near-duplicate removal share. */
+  val DriverMaxEdges: Long = DriverBudget.MaxBytes / EdgeBytes
 
   /** Cluster assignment for every id that appears in `pairs`:
     * one row per node, `(id, cluster_id)` with `cluster_id` = the
@@ -139,10 +143,18 @@ object Components {
     * `schema` of the distributed path's result. */
   private def driverComponents(first: Set[(Long, Long)], maxRounds: Int, schema: StructType,
                                spark: SparkSession): DataFrame = {
-    val rows = driverAssignments(driverRounds(first, maxRounds))
+    val rows = driverClusters(first, maxRounds)
       .iterator.map { case (id, root) => Row(id, root) }.toSeq
     spark.createDataFrame(rows.asJava, schema)
   }
+
+  /** Cluster root (the component's minimum id) of every node of a
+    * driver-side canonical edge set (`u > v`, no self-loops, no
+    * duplicates): the distributed loop's rounds and round budget,
+    * run in memory. */
+  private[operators] def driverClusters(first: Set[(Long, Long)],
+                                        maxRounds: Int): Map[Long, Long] =
+    driverAssignments(driverRounds(first, maxRounds))
 
   /** The distributed loop's rounds on a driver-side edge set: the same
     * [[largeStar]]/[[smallStar]] steps, with exact set equality as the
@@ -908,24 +920,24 @@ object Components {
     * order-insensitive fingerprint `(edge count, sum of per-edge
     * xxhash64 mod 2^64)`, and the edges themselves when the frame holds
     * at most `keepUpTo` of them and every partition at most its even
-    * share of that. Partitions ship before the total is known, so a
-    * graph over the budget can still send up to `keepUpTo` edges that
-    * are dropped. A plain RDD pass, so unlike a SQL aggregate it adds
-    * no shuffle stage, which adaptive execution would run as a job of
-    * its own. */
+    * share of that ([[DriverBudget.share]], in bytes). Partitions ship
+    * before the total is known, so a graph over the budget can still
+    * send up to `keepUpTo` edges that are dropped. A plain RDD pass, so
+    * unlike a SQL aggregate it adds no shuffle stage, which adaptive
+    * execution would run as a job of its own. */
   private def scan(e: DataFrame, keepUpTo: Long): ((Long, Long), Option[Seq[(Long, Long)]]) = {
     val rows = e.select(col("u"), col("v"), xxhash64(col("u"), col("v"))).queryExecution.toRdd
-    val share = keepUpTo / math.max(1, rows.getNumPartitions)
+    val share = DriverBudget.share(keepUpTo * EdgeBytes, rows.getNumPartitions)
     val parts = rows.mapPartitions { it =>
       var n = 0L
       var h = 0L
-      val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val ship = new DriverBudget.Shipment[(Long, Long)](share)
       it.foreach { r =>
         n += 1
         h += r.getLong(2)
-        if (n <= share) kept += ((r.getLong(0), r.getLong(1)))
+        if (!ship.full) ship.offer((r.getLong(0), r.getLong(1)), EdgeBytes)
       }
-      Iterator((n, h, if (n <= share) Some(kept.toSeq) else None))
+      Iterator((n, h, ship.kept))
     }.collect()
     // every partition within its share puts the total within keepUpTo
     val edges = if (parts.forall(_._3.isDefined)) Some(parts.flatMap(_._3.get).toSeq) else None

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextHash
-import graft.util.Checkpoints
+import graft.util.{Checkpoints, DriverBudget}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -634,12 +634,16 @@ object DedupOps {
     verifiedPairs(df, idCol, textCol, pairs, minJaccard).orderBy("a_id", "b_id")
 
   /** Exact Jaccard verification over [[pairShingleStats]], filtered
-    * at `minJaccard`, unordered. Shared by every near-dup generator. */
+    * at `minJaccard`, unordered. Shared by every near-dup generator.
+    * The division sits behind its own `n_common > 0` guard: the
+    * optimizer may evaluate the Jaccard filter before the stats'
+    * `n_common > 0` filter, and two NULL-text docs (empty sets) would
+    * then divide 0 by 0, which fails under ANSI. */
   private def verifiedPairs(df: DataFrame, idCol: String, textCol: String,
                             pairs: DataFrame, minJaccard: Double): DataFrame =
     pairShingleStats(df, idCol, textCol, pairs)
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
+      .withColumn("jaccard", when(col("n_common") > 0,
+        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common"))))
       .where(col("jaccard") >= minJaccard)
       .select(col("a_id"), col("b_id"), col("jaccard"))
 
@@ -785,33 +789,88 @@ object DedupOps {
     * near-duplicates, keep the highest-quality copy", the policy a
     * real curation pass wants once a quality score exists.
     *
-    * Scale shape: all the work is the [[lshNearDupPairs]] pipeline,
-    * its pairs consumed UNORDERED (no sort job), + CC (node-id
-    * shuffles — see the component scaladocs); the final step is one
-    * id-only anti-join against the member list,
-    * so the corpus is scanned once more and never shuffled on
-    * anything wider than the id. The keep-best variant adds one
-    * id-keyed join of the (small) member list against the corpus
-    * scores and two chained PARTIAL-AGGREGATED picks (min id per
-    * cluster and score, then max score per cluster) — map-side
-    * combined, so a boilerplate-heavy corpus whose capped LSH pairs
-    * chain into one giant transitive cluster spreads over its scores
-    * and collapses to one row per map partition before the
-    * cluster-keyed shuffle, where a rank window would funnel every
-    * member through a single reducer's sort. */
+    * Scale shape, in two tiers split by the shared driver budget
+    * ([[graft.util.DriverBudget.MaxBytes]], 4 MiB — the Delta log
+    * replay's and [[Components.DriverMaxEdges]]'s):
+    *
+    *  - Driver tier. A zero-job pre-check on the optimized plan's size
+    *    estimate of `(id, text[, score])`, then ONE scan that ships
+    *    those columns to the driver while each partition stays within
+    *    its share of the budget. The driver runs signatures, banding,
+    *    the hot-bucket sub-block, exact Jaccard verification,
+    *    connected components and the keep-best pick with the kernels
+    *    and semantics of the Spark plan ([[DriverNearDups]]), and the
+    *    result is `df` filtered by a null-safe NOT IN of the dropped
+    *    ids: one Spark job, no Exchange. It applies to integral ids,
+    *    string text and an orderable score, and only while the
+    *    candidate pairs fit the same budget as `(long, long)` pairs
+    *    (at most [[Components.DriverMaxEdges]]).
+    *  - Distributed tier, above the budget (the scan then ships
+    *    nothing, at most one job more): the [[lshNearDupPairs]]
+    *    pipeline, its pairs consumed UNORDERED (no sort job), + CC
+    *    (node-id shuffles — see the component scaladocs); the final
+    *    step is one id-only anti-join against the member list, so the
+    *    corpus is scanned once more and never shuffled on anything
+    *    wider than the id. The keep-best variant adds one id-keyed
+    *    join of the (small) member list against the corpus scores and
+    *    two chained PARTIAL-AGGREGATED picks (min id per cluster and
+    *    score, then max score per cluster) — map-side combined, so a
+    *    boilerplate-heavy corpus whose capped LSH pairs chain into one
+    *    giant transitive cluster spreads over its scores and collapses
+    *    to one row per map partition before the cluster-keyed
+    *    shuffle, where a rank window would funnel every member through
+    *    a single reducer's sort. */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                          bands: Int = 2, rowsPerBand: Int = 4,
                          minJaccard: Double = 0.5,
-                         keepBestBy: Option[String] = None): DataFrame = {
+                         keepBestBy: Option[String] = None): DataFrame =
+    dropNearDuplicatesImpl(df, idCol, textCol, bands, rowsPerBand, minJaccard, keepBestBy,
+      DriverBudget.MaxBytes)
+
+  /** [[dropNearDuplicates]] with the driver budget as a parameter:
+    * specs pass 0 to force the distributed tier, the parity reference
+    * for the driver tier, and a small `maxBucketSize` to reach the
+    * hot-bucket sub-block on small inputs. */
+  private[graft] def dropNearDuplicatesImpl(df: DataFrame, idCol: String, textCol: String,
+                                            bands: Int, rowsPerBand: Int, minJaccard: Double,
+                                            keepBestBy: Option[String], driverMaxBytes: Long,
+                                            maxBucketSize: Int = DefaultMaxBucketSize
+                                           ): DataFrame = {
     val reserved = Set("__toks", "__cand_id", "__drop_id", "__cluster", "__score",
       "__m", "__keep_id")
     val collisions = df.columns.toSet.intersect(reserved)
     require(collisions.isEmpty,
       s"dropNearDuplicates reserves column names ${reserved.mkString(", ")}; " +
         s"rename the colliding input columns: ${collisions.mkString(", ")}")
+    val shipped = df.select((Seq(idCol, textCol) ++ keepBestBy).map(col): _*)
+    val types = shipped.schema.fields.map(_.dataType)
+    val local =
+      if (!DriverNearDups.supports(types(0), types(1), types.lift(2))) None
+      else DriverBudget.collectWithin(shipped, driverMaxBytes).flatMap(rows =>
+        DriverNearDups.dropIds(rows, types(0), types.lift(2), bands, rowsPerBand, minJaccard,
+          maxBucketSize, ClusterRounds, driverMaxBytes / Components.EdgeBytes))
+    local match {
+      case Some(drops) if drops.isEmpty => df
+      case Some(drops) =>
+        // a null id never pairs, and the anti-join keeps it
+        df.where(col(idCol).isNull || !col(idCol).isin(drops.map(lit(_).cast(types(0))): _*))
+      case None =>
+        distributedDropNearDuplicates(df, idCol, textCol, bands, rowsPerBand, minJaccard,
+          keepBestBy, maxBucketSize)
+    }
+  }
+
+  /** Round budget of [[dropNearDuplicates]]' clustering, on either tier. */
+  private val ClusterRounds = 25
+
+  /** [[dropNearDuplicates]]' distributed tier. */
+  private def distributedDropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
+                                            bands: Int, rowsPerBand: Int, minJaccard: Double,
+                                            keepBestBy: Option[String],
+                                            maxBucketSize: Int): DataFrame = {
     val pairs = verifiedPairs(df, idCol, textCol,
-      lshCandidatePairs(df, idCol, textCol, bands, rowsPerBand), minJaccard)
-    val clusters = Components.connectedComponents(pairs, "a_id", "b_id")
+      lshCandidatePairs(df, idCol, textCol, bands, rowsPerBand, maxBucketSize), minJaccard)
+    val clusters = Components.connectedComponents(pairs, "a_id", "b_id", ClusterRounds)
     // The clustering has materialized its own edges, so nothing reads
     // the candidate-pair checkpoint again; the caller's corpus keeps
     // any checkpoint of its own.

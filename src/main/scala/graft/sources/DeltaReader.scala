@@ -493,8 +493,8 @@ object DeltaReader {
     * this size the log is far smaller than one task's scheduling
     * overhead. The distributed path remains the one a multi-MiB or
     * v2-checkpoint-anchored log takes — and the parity spec pins the
-    * two paths field-identical. */
-  private[sources] val FastReplayMaxBytes: Long = 4L * 1024 * 1024
+    * two paths field-identical. The shared [[graft.util.DriverBudget]]. */
+  private[sources] val FastReplayMaxBytes: Long = graft.util.DriverBudget.MaxBytes
 
   /** Snapshot as of `version` (time travel); None when the table does
     * not exist, loud error when the requested version is unreachable

@@ -185,13 +185,122 @@ class LshPipelineSpec extends SparkSpec {
     assert(dropped.size >= 200 && kept == all -- dropped)
   }
 
-  // 16 or 17 jobs, as AQE folds a stage into a concurrently submitted
-  // job or not; the per-band pipeline with the join-based pick ran 28.
-  test("dropNearDuplicates(keepBestBy) runs in at most 17 Spark jobs") {
+  /** Both tiers of `dropNearDuplicates` on `df`, row for row: the
+    * driver tier (the default budget) against budget 0, the
+    * distributed pipeline. Each side must have taken its own tier:
+    * the driver tier runs its one scan and answers with a filter, the
+    * distributed one runs at least the candidate checkpoint and the
+    * clustering's scan. */
+  private def assertTiersAgree(df: DataFrame, what: String, idCol: String = "doc_id",
+                               keepBestBy: Option[String] = None, minJaccard: Double = 0.3,
+                               maxBucketSize: Int = DedupOps.DefaultMaxBucketSize): Unit = {
+    def run(budget: Long) = DedupOps.dropNearDuplicatesImpl(df, idCol, "text", 2, 4,
+      minJaccard, keepBestBy, budget, maxBucketSize)
+    val (driverJobs, driver) = jobsOf(run(graft.util.DriverBudget.MaxBytes))
+    val (distJobs, dist) = jobsOf(run(0L))
+    val driverPlan = driver.queryExecution.executedPlan.toString
+    assert(driverJobs == 1 && !driverPlan.contains("Join") && !driverPlan.contains("Exchange"),
+      s"$what: the driver tier must scan once and answer with a filter ($driverJobs jobs):\n" +
+        driverPlan)
+    // (an empty corpus leaves the distributed tier a single job)
+    assert(distJobs >= 2 || df.isEmpty,
+      s"$what: budget 0 must run the distributed tier ($distJobs jobs)")
+    assert(driver.schema == dist.schema, s"$what: schema")
+    // rendered, so that a NaN score equals itself
+    def rows(d: DataFrame) = d.collect().map(_.toString).toSeq.sorted
+    assert(rows(driver) == rows(dist),
+      s"$what: rows differ:\n  driver      ${rows(driver)}\n  distributed ${rows(dist)}")
+  }
+
+  test("dropNearDuplicates' driver tier equals the distributed tier on the corpora") {
+    val docs = sfDocs.localCheckpoint()
+    assertTiersAgree(docs, "sf0.001", minJaccard = 0.2)
+    assertTiersAgree(docs, "sf0.001 keepBestBy", keepBestBy = Some("n_chars"), minJaccard = 0.2)
+    assertTiersAgree(edgeCorpus, "edge corpus")
+    // a bucket cap of 2 sub-blocks most buckets: the salted split must agree
+    assertTiersAgree(edgeCorpus, "edge corpus, cap 2", maxBucketSize = 2)
+    val boiler = spark.range(40).selectExpr("id AS doc_id",
+      "'the same boilerplate wrapper text repeated verbatim' AS text", "id % 3 AS q")
+    assertTiersAgree(boiler, "boilerplate, cap 8", keepBestBy = Some("q"), maxBucketSize = 8)
+  }
+
+  test("dropNearDuplicates' driver tier equals the distributed tier on edge inputs") {
+    import spark.implicits._
+    val a = "the quick brown fox jumps over the lazy dog again and again"
+    val b = "pack my box with five dozen liquor jugs every single day now"
+    val c = "sphinx of black quartz judge my vow and then judge it once more"
+    assertTiersAgree(Seq.empty[(Long, String)].toDF("doc_id", "text"), "empty corpus")
+    assertTiersAgree(Seq[(Long, Option[String])]((1L, None), (2L, None), (3L, None))
+      .toDF("doc_id", "text"), "all-null text")
+    // a null id never pairs, and the anti-join keeps it
+    val nullId = Seq[(Option[Long], String)]((None, a), (Some(1L), a), (Some(2L), a),
+      (None, b)).toDF("doc_id", "text")
+    assertTiersAgree(nullId, "null id")
+    assert(DedupOps.dropNearDuplicates(nullId, "doc_id", "text", minJaccard = 0.3)
+      .where(col("doc_id").isNull).count() == 2, "null-id rows survive")
+    val scored = Seq[(Long, String, Option[Long])](
+      (0L, a, None), (1L, a, None), (2L, a, None),        // an all-null-score cluster
+      (10L, b, Some(7L)), (11L, b, Some(9L)), (12L, b, Some(9L)), (13L, b, None), // a tie
+      (20L, c, Some(1L)), (21L, "unrelated words entirely on their own here", Some(3L)))
+      .toDF("doc_id", "text", "q")
+    assertTiersAgree(scored, "null scores and ties", keepBestBy = Some("q"))
+    assertTiersAgree(scored.withColumnRenamed("q", "id"), "score named id", keepBestBy = Some("id"))
+    assertTiersAgree(scored.withColumnRenamed("q", "cluster_id"), "score named cluster_id",
+      keepBestBy = Some("cluster_id"))
+    assertTiersAgree(scored.drop("q").withColumnRenamed("doc_id", "id"), "the id as the score",
+      idCol = "id", keepBestBy = Some("id"))
+    // NaN is the greatest double and equals itself; -0.0 groups with 0.0
+    val doubles = Seq[(Int, String, Option[Double])](
+      (0, a, Some(Double.NaN)), (1, a, Some(5.0)), (2, a, Some(Double.NaN)),
+      (10, b, Some(-0.0)), (11, b, Some(0.0)), (12, b, None),
+      (20, c, Some(-1.0)), (21, c, Some(-0.0)))
+      .toDF("doc_id", "text", "q")
+    assertTiersAgree(doubles, "int ids, NaN and -0.0 scores", keepBestBy = Some("q"))
+    assertTiersAgree(doubles.withColumn("q", col("q").cast("string")), "string scores",
+      keepBestBy = Some("q"))
+    // an id on several rows competes with each of its rows
+    val dupIds = Seq((1L, a, 5L), (1L, b, 1L), (2L, a, 3L), (3L, b, 4L), (4L, b, 4L))
+      .toDF("doc_id", "text", "q")
+    assertTiersAgree(dupIds, "duplicate ids", keepBestBy = Some("q"))
+    assertTiersAgree(dupIds, "duplicate ids, min id")
+    val ansi = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(ansi)
+    spark.conf.set(ansi, "false")
+    try {
+      assertTiersAgree(scored, "ansi off", keepBestBy = Some("q"))
+      assertTiersAgree(nullId, "ansi off, null id")
+    } finally spark.conf.set(ansi, before)
+  }
+
+  test("dropNearDuplicates runs the distributed tier when the candidate pairs outgrow the budget") {
+    // 30 copies: 435 candidate pairs, over the 256 a 4 KiB budget holds
+    // as (long, long) pairs, while the rows themselves fit
+    val copies = spark.range(30).selectExpr("id AS doc_id",
+      "'the same boilerplate wrapper text repeated verbatim' AS text")
+    val (jobs, kept) = jobsOf(DedupOps.dropNearDuplicatesImpl(copies, "doc_id", "text", 2, 4,
+      0.3, None, 4096L).collect().map(_.getLong(0)).toSeq)
+    assert(kept == Seq(0L))
+    assert(jobs > 2, s"expected the distributed tier after the scan, ran $jobs jobs")
+  }
+
+  // The driver tier's one scan plus the collect of its result. The
+  // per-band pipeline with the join-based pick ran 28 jobs, the
+  // distributed tier 16–17.
+  test("dropNearDuplicates(keepBestBy) on sf0.001 runs 2 Spark jobs") {
     val docs = sfDocs.localCheckpoint()
     val (jobs, kept) = jobsOf(DedupOps.dropNearDuplicates(docs, "doc_id", "text",
       bands = 2, rowsPerBand = 4, minJaccard = 0.2, keepBestBy = Some("n_chars")).collect())
     assert(kept.nonEmpty)
-    assert(jobs <= 17, s"dropNearDuplicates(keepBestBy) ran $jobs jobs")
+    assert(jobs == 2, s"dropNearDuplicates(keepBestBy) and its collect ran $jobs jobs")
+  }
+
+  // 16 or 17 jobs, as AQE folds a stage into a concurrently submitted
+  // job or not; the per-band pipeline with the join-based pick ran 28.
+  test("dropNearDuplicates(keepBestBy) at budget 0: at most 17 jobs") {
+    val docs = sfDocs.localCheckpoint()
+    val (jobs, kept) = jobsOf(DedupOps.dropNearDuplicatesImpl(docs, "doc_id", "text",
+      2, 4, 0.2, Some("n_chars"), 0L).collect())
+    assert(kept.nonEmpty)
+    assert(jobs <= 17, s"dropNearDuplicates(keepBestBy) at budget 0 ran $jobs jobs")
   }
 }

@@ -728,10 +728,13 @@ class ScaleShapeSpec extends SparkSpec {
     // map-side combined — never a single reducer's sort.
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
       .limit(300).localCheckpoint()
-    // 1. dropNearDuplicates(keepBestBy): cluster-representative pick
-    val dnd = graft.operators.DedupOps.dropNearDuplicates(
-      docs, "doc_id", "text", minJaccard = 0.3, keepBestBy = Some("n_chars"))
+    // 1. dropNearDuplicates(keepBestBy): cluster-representative pick,
+    // on the distributed tier (budget 0) — the driver tier's plan is a
+    // filter, which would pass this check without testing the pick
+    val dnd = graft.operators.DedupOps.dropNearDuplicatesImpl(
+      docs, "doc_id", "text", 2, 4, 0.3, Some("n_chars"), driverMaxBytes = 0L)
       .queryExecution.executedPlan.toString
+    assert(dnd.contains("LeftAnti"), s"budget 0 must plan the distributed tier:\n$dnd")
     assert(!dnd.contains("Window"),
       s"keepBestBy pick must be max-score/min-id aggregates, not a rank window:\n$dnd")
     // 2. CurationPipeline digest pick
