@@ -2,8 +2,11 @@ package graft.operators
 
 import graft.functions.TextHash
 import graft.util.{Checkpoints, DriverBudget}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators (exact + near-dup) for document corpora.
   *
@@ -186,25 +189,68 @@ object DedupOps {
     * document keeps its row with `n_spans = 0` — it does NOT silently
     * vanish).
     *
-    * Scale shape: one explode (span rows bounded by corpus token
-    * count / spanTokens), one PARTIAL-AGGREGATED min per span (the
-    * map-side combine collapses repeated boilerplate spans before
-    * the shuffle — no span-keyed rank window, no per-reducer sort),
-    * one groupBy on the doc id whose collect_list is bounded by
-    * document length. `hashKeys = true` prepends `xxhash64(span)` to
-    * the group key so the aggregate hashes/compares an 8-byte prefix
-    * before the raw string — IDENTICAL results (the span stays in
-    * the key, so a hash collision can never merge two distinct
-    * spans; spec-pinned mode agreement). Default off only to keep
-    * the oracle-witnessed plan minimal. */
+    * Scale shape, in two tiers split by the shared driver budget
+    * ([[graft.util.DriverBudget.MaxBytes]]), as for
+    * [[dropNearDuplicates]]:
+    *
+    *  - Driver tier, for integral ids and string text. A zero-job
+    *    pre-check on the size estimate of `(id, text)`, then ONE scan
+    *    that ships those columns to the driver, which tokenizes, owns
+    *    and rebuilds the spans with the plan's semantics
+    *    ([[DriverText.dedupSpans]]) and answers with a local relation
+    *    of the distributed tier's schema: one Spark job, no Exchange.
+    *  - Distributed tier, above the budget (the scan then ships
+    *    nothing, at most one job more): one explode (span rows bounded
+    *    by corpus token count / spanTokens), one PARTIAL-AGGREGATED min
+    *    per span (the map-side combine collapses repeated boilerplate
+    *    spans before the shuffle — no span-keyed rank window, no
+    *    per-reducer sort), one groupBy on the doc id whose
+    *    collect_list is bounded by document length. `hashKeys = true`
+    *    prepends `xxhash64(span)` to the group key so the aggregate
+    *    hashes/compares an 8-byte prefix before the raw string —
+    *    IDENTICAL results (the span stays in the key, so a hash
+    *    collision can never merge two distinct spans; spec-pinned mode
+    *    agreement). Default off only to keep the oracle-witnessed plan
+    *    minimal; the driver tier has no use for it. */
   def dedupSpans(df: DataFrame, idCol: String, textCol: String,
-                 spanTokens: Int = 8, hashKeys: Boolean = false): DataFrame = {
+                 spanTokens: Int = 8, hashKeys: Boolean = false): DataFrame =
+    dedupSpansImpl(df, idCol, textCol, spanTokens, hashKeys, DriverBudget.MaxBytes)
+
+  /** [[dedupSpans]] with the driver budget as a parameter: specs pass
+    * 0 to force the distributed tier, the parity reference for the
+    * driver tier. */
+  private[graft] def dedupSpansImpl(df: DataFrame, idCol: String, textCol: String,
+                                    spanTokens: Int, hashKeys: Boolean,
+                                    driverMaxBytes: Long): DataFrame = {
     require(spanTokens >= 1, "spanTokens must be positive")
     val reserved = Set("__toks", "span_idx", "span", "__rn", "n_spans", "n_kept", "kept_text")
     val collisions = df.columns.toSet.intersect(reserved)
     require(collisions.isEmpty,
       s"dedupSpans reserves column names ${reserved.mkString(", ")}; " +
         s"rename the colliding input columns: ${collisions.mkString(", ")}")
+    val shipped = df.select(col(idCol), col(textCol))
+    val Array(id, text) = shipped.schema.fields
+    val local =
+      if (!DriverText.supports(id.dataType, text.dataType)) None
+      else DriverBudget.collectWithin(shipped, driverMaxBytes)
+    local match {
+      case Some(rows) =>
+        // the distributed tier's schema: the input id, non-null counts and text
+        val schema = StructType(Seq(id, StructField("n_spans", LongType, nullable = false),
+          StructField("n_kept", LongType, nullable = false),
+          StructField("kept_text", StringType, nullable = false)))
+        localFrame(df, DriverText.dedupSpans(rows, id.dataType, spanTokens), schema)
+      case None => distributedDedupSpans(df, idCol, textCol, spanTokens, hashKeys)
+    }
+  }
+
+  /** `rows` as a local relation of `schema` in `like`'s session. */
+  private def localFrame(like: DataFrame, rows: Seq[Row], schema: StructType): DataFrame =
+    like.sparkSession.createDataFrame(rows.asJava, schema)
+
+  /** [[dedupSpans]]' distributed tier. */
+  private def distributedDedupSpans(df: DataFrame, idCol: String, textCol: String,
+                                    spanTokens: Int, hashKeys: Boolean): DataFrame = {
     val spans = explodeSpans(df, idCol, textCol, spanTokens)
     val spanKey: Seq[org.apache.spark.sql.Column] =
       if (hashKeys) Seq(xxhash64(col("span")), col("span")) else Seq(col("span"))
@@ -328,14 +374,42 @@ object DedupOps {
     * exact integer compare `tDen·|∩| ≥ tNum·|∪|` — no floats
     * anywhere; `jac_ppm` is the scaled-integer Jaccard.
     *
-    * Scale shape: df table = one token-keyed count; ordering = one
-    * doc-keyed sort-collect; candidates = equi-join on prefix tokens,
-    * whose fan-out the rarest-first order actively minimizes (a
-    * stop-word lands in a prefix only for docs where nothing rarer
-    * exists); verification joins move (id, ordered-set) pairs for
-    * CANDIDATES only. Null-text docs have no tokens and never pair. */
+    * Scale shape, in two tiers split by the shared driver budget
+    * ([[graft.util.DriverBudget.MaxBytes]]), as for
+    * [[dropNearDuplicates]]:
+    *
+    *  - Driver tier, for integral ids and string text. A zero-job
+    *    pre-check on the size estimate of `(id, text)`, then ONE scan
+    *    that ships those columns to the driver, which runs the df
+    *    count, the ordering, the prefix index and the exact
+    *    verification with the plan's semantics
+    *    ([[DriverText.prefixJaccardPairs]]) and answers with a local
+    *    relation of the distributed tier's schema: one Spark job, no
+    *    Exchange. It applies only while the prefix lists' fan-out,
+    *    Σ C(n, 2) over prefix tokens, fits the budget as `(long, long)`
+    *    pairs (at most [[Components.DriverMaxEdges]]).
+    *  - Distributed tier, above the budget or the fan-out (the scan
+    *    then ships nothing, or its rows are dropped: at most one job
+    *    more). df table = one token-keyed count; ordering = one
+    *    doc-keyed sort-collect; candidates = equi-join on prefix
+    *    tokens, whose fan-out the rarest-first order actively
+    *    minimizes (a stop-word lands in a prefix only for docs where
+    *    nothing rarer exists); verification joins move (id,
+    *    ordered-set) pairs for CANDIDATES only. PPJoin's length and
+    *    position filters would prune these candidates further.
+    *
+    * Null-text docs have no tokens and never pair. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         tNum: Int, tDen: Int): DataFrame = {
+                         tNum: Int, tDen: Int): DataFrame =
+    prefixJaccardPairsImpl(df, idCol, textCol, tNum, tDen, DriverBudget.MaxBytes)
+
+  /** [[prefixJaccardPairs]] with the driver budget as a parameter:
+    * specs pass 0 to force the distributed tier, the parity reference
+    * for the driver tier, and a small budget to reach the fan-out
+    * guard. */
+  private[graft] def prefixJaccardPairsImpl(df: DataFrame, idCol: String, textCol: String,
+                                            tNum: Int, tDen: Int,
+                                            driverMaxBytes: Long): DataFrame = {
     require(tNum >= 1 && tDen >= 1 && tNum <= tDen,
       s"threshold tNum/tDen must be in (0, 1], got $tNum/$tDen")
     val reserved = Set("__tk", "__df", "__ord", "__n", "__plen", "__ptk",
@@ -344,8 +418,30 @@ object DedupOps {
     require(collisions.isEmpty,
       s"prefixJaccardPairs reserves column names ${reserved.mkString(", ")}; " +
         s"rename the colliding input columns: ${collisions.mkString(", ")}")
-    val toks = TextOps.withTokens(df.select(col(idCol), col(textCol)),
-        textCol, "__toks")
+    val shipped = df.select(col(idCol), col(textCol))
+    val Array(id, text) = shipped.schema.fields
+    val local =
+      if (!DriverText.supports(id.dataType, text.dataType)) None
+      else DriverBudget.collectWithin(shipped, driverMaxBytes).flatMap(rows =>
+        DriverText.prefixJaccardPairs(rows, id.dataType, tNum, tDen,
+          driverMaxBytes / Components.EdgeBytes))
+    local match {
+      case Some(pairs) =>
+        // the distributed tier's schema: `jac_ppm`, a decimal division
+        // cast back to bigint, is nullable under either ANSI setting
+        val schema = StructType(Seq(id.copy(name = "a_id"), id.copy(name = "b_id"),
+          StructField("n_inter", LongType, nullable = false),
+          StructField("n_union", LongType, nullable = false),
+          StructField("jac_ppm", LongType, nullable = true)))
+        localFrame(df, pairs, schema)
+      case None => distributedPrefixJaccardPairs(shipped, idCol, textCol, tNum, tDen)
+    }
+  }
+
+  /** [[prefixJaccardPairs]]' distributed tier over `(id, text)`. */
+  private def distributedPrefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                                            tNum: Int, tDen: Int): DataFrame = {
+    val toks = TextOps.withTokens(df, textCol, "__toks")
       .select(col(idCol), explode(array_distinct(col("__toks"))).as("__tk"))
     val freq = toks.groupBy(col("__tk"))
       .agg(count(lit(1)).cast("bigint").as("__df"))
@@ -845,7 +941,7 @@ object DedupOps {
     val shipped = df.select((Seq(idCol, textCol) ++ keepBestBy).map(col): _*)
     val types = shipped.schema.fields.map(_.dataType)
     val local =
-      if (!DriverNearDups.supports(types(0), types(1), types.lift(2))) None
+      if (!DriverText.supports(types(0), types(1), types.lift(2))) None
       else DriverBudget.collectWithin(shipped, driverMaxBytes).flatMap(rows =>
         DriverNearDups.dropIds(rows, types(0), types.lift(2), bands, rowsPerBand, minJaccard,
           maxBucketSize, ClusterRounds, driverMaxBytes / Components.EdgeBytes))
@@ -853,7 +949,8 @@ object DedupOps {
       case Some(drops) if drops.isEmpty => df
       case Some(drops) =>
         // a null id never pairs, and the anti-join keeps it
-        df.where(col(idCol).isNull || !col(idCol).isin(drops.map(lit(_).cast(types(0))): _*))
+        df.where(col(idCol).isNull ||
+          !col(idCol).isin(drops.map(d => lit(DriverText.idValue(d, types(0)))): _*))
       case None =>
         distributedDropNearDuplicates(df, idCol, textCol, bands, rowsPerBand, minJaccard,
           keepBestBy, maxBucketSize)

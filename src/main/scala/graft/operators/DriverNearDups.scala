@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.TextHash
 import graft.functions.catalyst.HashOps
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, Literal, RowOrdering, SortOrder, StringSplit, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, XxHash64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,7 +15,8 @@ import scala.collection.mutable
   * very kernels and semantics the Spark plan uses, so both tiers drop
   * the same ids:
   *
-  *  - tokens: Catalyst's own `split(text, ' ')` (limit −1);
+  *  - tokens: Catalyst's own `split(text, ' ')` (limit −1), through
+  *    [[DriverText.tokens]];
   *  - shingles, base hashes and signature components:
   *    `HashOps.shingles3`/`hashArray`/`seededMin`, band keys rendered
   *    as `concat_ws('|', …)` renders them;
@@ -29,13 +30,6 @@ import scala.collection.mutable
   *    pick, NaN and −0.0 included. */
 private[operators] object DriverNearDups {
 
-  /** Whether the tier evaluates these column types exactly: integral
-    * ids (the clustering casts ids to long), binary-collated string
-    * text, and an orderable score. */
-  def supports(idType: DataType, textType: DataType, scoreType: Option[DataType]): Boolean =
-    Set[DataType](ByteType, ShortType, IntegerType, LongType).contains(idType) &&
-      textType == StringType && scoreType.forall(RowOrdering.isOrderable)
-
   /** The ids the distributed pipeline drops, from `(id, text)` or
     * `(id, text, score)` rows; None when the candidate pairs could
     * exceed `maxPairs`, in which case the caller runs that pipeline. */
@@ -44,7 +38,7 @@ private[operators] object DriverNearDups {
               maxRounds: Int, maxPairs: Long): Option[Seq[Long]] = {
     require(bands * rowsPerBand <= TextHash.Seeds.size,
       s"at most ${TextHash.Seeds.size} seeds defined")
-    val ids = rows.map(r => if (r.isNullAt(0)) None else Some(idOf(r, idType)))
+    val ids = DriverText.idsOf(rows, idType)
     val texts = rows.map(r => if (r.isNullAt(1)) null else r.getUTF8String(1))
     val seeds = TextHash.Seeds.take(bands * rowsPerBand)
     // every (band, band key) bucket's rows, and which rows can pair at
@@ -100,19 +94,9 @@ private[operators] object DriverNearDups {
     }
   }
 
-  private def idOf(r: InternalRow, idType: DataType): Long = idType match {
-    case ByteType => r.getByte(0).toLong
-    case ShortType => r.getShort(0).toLong
-    case IntegerType => r.getInt(0).toLong
-    case LongType => r.getLong(0)
-  }
-
-  private val splitOnSpace =
-    StringSplit(BoundReference(0, StringType, nullable = true), Literal(" "), Literal(-1))
-
   /** `graft_shingles3(split(text, ' '), text)`. */
   private def shingles(text: UTF8String): ArrayData =
-    HashOps.shingles3(splitOnSpace.eval(InternalRow(text)).asInstanceOf[ArrayData], text)
+    HashOps.shingles3(DriverText.tokens(text), text)
 
   /** `array_except(shingles, array(NULL))` as a set. */
   private def shingleSet(text: UTF8String): Set[UTF8String] = {

@@ -9,8 +9,10 @@ import scala.collection.mutable.ArrayBuffer
 /** The one driver-side data budget. Work whose input fits in it runs
   * on the driver instead of as Spark jobs: the Delta log replay
   * (`DeltaReader`), connected components' star rounds
-  * (`Components.DriverMaxEdges`) and near-duplicate removal
-  * (`DedupOps.dropNearDuplicates`). Above it the distributed path
+  * (`Components.DriverMaxEdges`), near-duplicate removal
+  * (`DedupOps.dropNearDuplicates`), span-level dedup
+  * (`DedupOps.dedupSpans`) and the exact prefix-filter Jaccard join
+  * (`DedupOps.prefixJaccardPairs`). Above it the distributed path
   * runs, and specs pass a budget of 0 to force that path as the
   * parity reference. */
 object DriverBudget {

@@ -593,9 +593,13 @@ class OperatorsSpec extends SparkSpec {
       (4L, null.asInstanceOf[String]), // must NOT vanish from the output
       (5L, "p q r")
     ).toDF("doc_id", "text")
-    val raw = DedupOps.dedupSpans(df, "doc_id", "text", spanTokens = 2, hashKeys = false)
-    val hashed = DedupOps.dedupSpans(df, "doc_id", "text", spanTokens = 2, hashKeys = true)
+    // budget 0: the two modes are two distributed plans; the driver
+    // tier has no key mode and must equal both
+    val raw = DedupOps.dedupSpansImpl(df, "doc_id", "text", 2, hashKeys = false, 0L)
+    val hashed = DedupOps.dedupSpansImpl(df, "doc_id", "text", 2, hashKeys = true, 0L)
+    assert(raw.queryExecution.executedPlan.toString.contains("Exchange"))
     assertSameData(raw, hashed)
+    assertSameData(DedupOps.dedupSpans(df, "doc_id", "text", spanTokens = 2), raw)
     val r4 = raw.where(col("doc_id") === 4).collect()
     assert(r4.length == 1)
     assert(r4(0).getLong(1) == 0L && r4(0).getLong(2) == 0L && r4(0).getString(3) == "")

@@ -282,10 +282,17 @@ class ScaleShapeSpec extends SparkSpec {
   test("prefixJaccardPairs plan: equi-joins only — no cartesian/nested-loop anywhere") {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
       .where(col("doc_id") < 200)
-    val plan = DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 9, 10)
+    // budget 0: the distributed tier, whose joins this pins
+    val plan = DedupOps.prefixJaccardPairsImpl(docs, "doc_id", "text", 9, 10, 0L)
       .queryExecution.executedPlan.toString
+    assert(plan.contains("Join"), s"expected the distributed tier's joins:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"prefix filtering must candidate via token equi-joins, never all-pairs:\n$plan")
+    // below the budget, the driver tier answers with a local relation
+    val local = DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 9, 10)
+      .queryExecution.executedPlan.toString
+    assert(local.contains("LocalTableScan") && !local.contains("Exchange") &&
+      !local.contains("Join"), s"expected the driver tier's local relation:\n$local")
   }
 
   test("zvalue clustering keys: range partitioning on the curve gives tight per-file envelopes on BOTH columns") {
