@@ -385,10 +385,11 @@ object DedupOps {
     *    verification with the plan's semantics
     *    ([[DriverText.prefixJaccardPairs]]) and answers with a local
     *    relation of the distributed tier's schema: one Spark job, no
-    *    Exchange. It applies only while the prefix lists' fan-out,
-    *    Σ C(n, 2) over prefix tokens, fits the budget as `(long, long)`
-    *    pairs (at most [[Components.DriverMaxEdges]]).
-    *  - Distributed tier, above the budget or the fan-out (the scan
+    *    Exchange. It applies only while the distinct candidate pairs
+    *    fit the budget as `(long, long)` pairs (at most
+    *    [[Components.DriverMaxEdges]]) and counting them takes at most
+    *    four probes per pair allowed.
+    *  - Distributed tier, above the budget or the candidate guard (the scan
     *    then ships nothing, or its rows are dropped: at most one job
     *    more). df table = one token-keyed count; ordering = one
     *    doc-keyed sort-collect; candidates = equi-join on prefix
@@ -405,7 +406,7 @@ object DedupOps {
 
   /** [[prefixJaccardPairs]] with the driver budget as a parameter:
     * specs pass 0 to force the distributed tier, the parity reference
-    * for the driver tier, and a small budget to reach the fan-out
+    * for the driver tier, and a small budget to reach the candidate
     * guard. */
   private[graft] def prefixJaccardPairsImpl(df: DataFrame, idCol: String, textCol: String,
                                             tNum: Int, tDen: Int,

@@ -99,9 +99,11 @@ private[operators] object DriverText {
   }
 
   /** [[DedupOps.prefixJaccardPairs]]' rows `(a_id, b_id, n_inter,
-    * n_union, jac_ppm)` in `(a_id, b_id)` order; None when the prefix
-    * lists' fan-out could exceed `maxPairs` candidates, in which case
-    * the caller runs the distributed plan.
+    * n_union, jac_ppm)` in `(a_id, b_id)` order; None when there are
+    * more than `maxPairs` distinct candidate pairs, or when finding
+    * them takes more than `4 · maxPairs` probes (a pair is probed once
+    * per prefix token it shares, so near-identical documents probe
+    * theirs many times). The caller then runs the distributed plan.
     *
     * Token document frequency counts the distinct tokens of every
     * row, null ids included. An id's token list is all its rows'
@@ -117,35 +119,58 @@ private[operators] object DriverText {
     val sets = rows.map(r => tokensOf(r).distinct)
     val freq = mutable.HashMap.empty[UTF8String, Long].withDefaultValue(0L)
     sets.foreach(_.foreach(t => freq(t) += 1))
-    val byFreq: Ordering[UTF8String] = (a, b) => {
-      val c = java.lang.Long.compare(freq(a), freq(b))
-      if (c != 0) c else a.binaryCompare(b)
-    }
-    // a null id never pairs (`a_id < b_id` is null), so it has no list
-    val lists = rows.indices.collect { case k if ids(k).isDefined && sets(k).nonEmpty =>
-      ids(k).get -> sets(k)
-    }.groupMap(_._1)(_._2).map { case (id, s) => id -> s.flatten.sorted(byFreq) }
-    val posting = mutable.HashMap.empty[UTF8String, mutable.Set[Long]]
-    lists.foreach { case (id, l) =>
-      val n = l.size.toLong
+    // each distinct token's place in the (df, token bytes) order, so
+    // lists sort as ints
+    val rankOf = freq.toSeq
+      .sorted(Ordering.by[(UTF8String, Long), (Long, UTF8String)](_.swap)(
+        Ordering.Tuple2(Ordering.Long, byBytes)))
+      .iterator.map(_._1).zipWithIndex.toMap
+    // a null id never pairs (`a_id < b_id` is null), so it has no list;
+    // lists are in id order, so their indices order as the ids do
+    val lists: IndexedSeq[(Long, Array[Int])] = rows.indices
+      .collect { case k if ids(k).isDefined && sets(k).nonEmpty => ids(k).get -> sets(k) }
+      .groupMap(_._1)(_._2).toIndexedSeq.sortBy(_._1)
+      .map { case (id, s) => id -> s.flatten.map(rankOf).toArray.sorted }
+    val posting = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
+    lists.indices.foreach { i =>
+      val n = lists(i)._2.length.toLong
       val plen = n - (tNum * n + tDen - 1) / tDen + 1
-      l.take(plen.toInt).foreach(t => posting.getOrElseUpdate(t, mutable.Set.empty) += id)
+      lists(i)._2.iterator.take(plen.toInt).distinct
+        .foreach(t => posting.getOrElseUpdate(t, mutable.ArrayBuffer.empty) += i)
     }
-    if (posting.valuesIterator.map(p => p.size.toLong * (p.size - 1) / 2).sum > maxPairs) None
+    // candidate (a, b) list indices packed as a << 32 | b, probed once
+    // per shared prefix token, until either limit is passed
+    val probes = posting.valuesIterator.flatMap(p => p.indices.iterator.flatMap(x =>
+      (x + 1 until p.size).iterator.map(y => p(x).toLong << 32 | p(y))))
+    val candidates = mutable.LongMap.empty[Unit]
+    var probed = 0L
+    def within = candidates.size <= maxPairs && probed <= 4 * maxPairs
+    probes.takeWhile(_ => within).foreach { key =>
+      candidates(key) = ()
+      probed += 1
+    }
+    if (!within) None
     else {
-      val candidates = posting.valuesIterator.flatMap { p =>
-        val s = p.toIndexedSeq.sorted
-        for (i <- s.indices.iterator; j <- i + 1 until s.size) yield (s(i), s(j))
-      }.toSet
-      val distinct = lists.view.mapValues(_.toSet).toMap
-      Some(candidates.toSeq.sorted.flatMap { case (a, b) =>
-        val (da, db) = (distinct(a), distinct(b))
-        val inter = (if (da.size <= db.size) da.count(db) else db.count(da)).toLong
-        val union = lists(a).size + lists(b).size - inter
+      val distinct = lists.map(_._2.distinct)
+      Some(candidates.keys.toArray.sorted.toSeq.flatMap { key =>
+        val (a, b) = ((key >>> 32).toInt, key.toInt)
+        val inter = sortedIntersection(distinct(a), distinct(b)).toLong
+        val union = lists(a)._2.length + lists(b)._2.length - inter
         if (tDen.toLong * inter < tNum.toLong * union) None
-        else Some(Row(idValue(a, idType), idValue(b, idType), inter, union,
+        else Some(Row(idValue(lists(a)._1, idType), idValue(lists(b)._1, idType), inter, union,
           1000000L * inter / union))
       })
     }
+  }
+
+  /** The size of the intersection of two ascending distinct arrays. */
+  private def sortedIntersection(a: Array[Int], b: Array[Int]): Int = {
+    var (i, j, n) = (0, 0, 0)
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
   }
 }

@@ -1,16 +1,25 @@
 package graft.operators
 
 import graft.functions.VectorSql
+import graft.util.DriverBudget
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Approximate/exact nearest-neighbor search over embedding columns
   * (`array<float>`).
   *
   * Scale design (100 TB):
-  *  - the query/centroid side is always tiny → `broadcast()` it, so
-  *    scoring is a broadcast nested-loop with NO shuffle of the big
-  *    side;
+  *  - below the shared driver budget ([[graft.util.DriverBudget]]) and
+  *    [[Components.DriverMaxEdges]] scored pairs, [[knnJoin]] ships
+  *    both sides to the driver in one job and scores them there with
+  *    the plan's own expressions ([[DriverKnn]]): no cross join, no
+  *    Exchange. Every kNN audit built on it inherits that tier;
+  *  - above it, the query/centroid side is always tiny → `broadcast()`
+  *    it, so scoring is a broadcast nested-loop with NO shuffle of the
+  *    big side;
   *  - L2 norms are materialized once per VECTOR, so each scored pair
   *    costs one array fold (the dot product), not three — bitwise
   *    identical to inline cosine (see VectorSql.cosineWithNorms);
@@ -47,19 +56,98 @@ object SimilarityOps {
   }
 
   /** kNN join: top-k cosine neighbors from `corpus` for EVERY row of
-    * (small, broadcast) `queries`. Ranking via the bounded
-    * [[graft.functions.catalyst.BottomK]] aggregate: a k-heap per map
-    * partition per query, merged — only k rows per query per
-    * partition ever shuffle, where the previous rank window funneled
-    * the ENTIRE scored corpus for one query through a single
-    * reducer's sort (corpus-sized at 100 TB; corpus×queries rows
-    * locally). The heap key `(isnan gate, -sim, c_id)` reproduces the
-    * window's (sim DESC NaN-first, id ASC) order exactly for every
-    * double — Spark sorts NaN above +Inf, so plain `-sim` alone would
-    * demote NaN instead of promoting it. */
+    * `queries`, as rows `(q_id, c_id, rank, sim)` in `(q_id, rank)`
+    * order. Ranking is sim descending with NaN first, then `c_id`;
+    * duplicate query ids merge into one group, a null id is its own.
+    *
+    * Scale shape, in two tiers split by the shared driver budget
+    * ([[graft.util.DriverBudget.MaxBytes]]), as for
+    * [[DedupOps.dropNearDuplicates]]:
+    *
+    *  - Driver tier, for `array<float>` vectors and orderable ids. A
+    *    zero-job pre-check on the size estimate of the corpus
+    *    `(id, vec)`, then ONE job, a union of two scans, ships the
+    *    corpus and the query `(id, vec)` rows to the driver. The query
+    *    side skips the pre-check: the distributed tier broadcasts it
+    *    anyway, and each partition still ships only within its share
+    *    of the budget. When corpus rows × query rows is at most
+    *    [[Components.DriverMaxEdges]] scored pairs, the driver scores
+    *    and ranks every pair with the plan's own expressions
+    *    ([[DriverKnn.knnJoin]]) and answers with a local relation of
+    *    the distributed tier's schema: no cross join, no Exchange.
+    *  - Distributed tier, above either limit (the scan then ships
+    *    nothing, or its rows are dropped: at most one job more). The
+    *    queries are broadcast and the corpus streams through a
+    *    nested-loop join; each vector's L2 norm is computed once, so a
+    *    scored pair costs one dot product. The bounded
+    *    [[graft.functions.catalyst.BottomK]] aggregate keeps a k-heap
+    *    per query per map partition, so only k rows per query per
+    *    partition shuffle, never the scored corpus. Its heap key
+    *    `(isnan gate, -sim, c_id)` gives the (sim DESC NaN-first, id
+    *    ASC) order for every double: Spark sorts NaN above +Inf, so
+    *    plain `-sim` alone would demote NaN instead of promoting it.
+    *    REPOSE-style pivot partitioning is the planned replacement
+    *    for this tier (ROADMAP direction 7). */
   def knnJoin(corpus: DataFrame, corpusId: String, corpusVec: String,
               queries: DataFrame, queryId: String, queryVec: String,
-              k: Int): DataFrame = {
+              k: Int): DataFrame =
+    knnJoinImpl(corpus, corpusId, corpusVec, queries, queryId, queryVec, k,
+      DriverBudget.MaxBytes)
+
+  /** [[knnJoin]] with the driver budget as a parameter: specs pass 0
+    * to force the distributed tier, the parity reference for the
+    * driver tier. */
+  private[graft] def knnJoinImpl(corpus: DataFrame, corpusId: String, corpusVec: String,
+                                 queries: DataFrame, queryId: String, queryVec: String,
+                                 k: Int, driverMaxBytes: Long): DataFrame = {
+    val local =
+      if (!driverTierApplies(corpus, corpusId, corpusVec, queries, queryId, queryVec, k)) None
+      else {
+        val c = corpus.select(col(corpusId), col(corpusVec))
+        val q = queries.select(col(queryId), col(queryVec))
+        val Seq(cid, cvec) = c.schema.fields.toSeq
+        val Seq(qid, qvec) = q.schema.fields.toSeq
+        if (!DriverKnn.supports(cid.dataType, cvec.dataType, qid.dataType, qvec.dataType)) None
+        else DriverBudget.collectAllWithin(Seq(c), Seq(q), driverMaxBytes).collect {
+          case Seq(cRows, qRows)
+              if cRows.size.toLong * qRows.size <= Components.DriverMaxEdges =>
+            // the distributed tier's schema: the grouped query id as
+            // given, the ranked corpus id without its metadata, a
+            // non-null rank and a nullable sim
+            val schema = StructType(Seq(qid.copy(name = "q_id"),
+              StructField("c_id", cid.dataType, cid.nullable),
+              StructField("rank", IntegerType, nullable = false),
+              StructField("sim", DoubleType, nullable = true)))
+            corpus.sparkSession.createDataFrame(
+              DriverKnn.knnJoin(cRows, qRows, cid.dataType, qid.dataType, k,
+                corpus.sparkSession.sessionState.conf).asJava, schema)
+        }
+      }
+    local.getOrElse(distributedKnnJoin(corpus, corpusId, corpusVec, queries, queryId, queryVec, k))
+  }
+
+  /** Whether [[knnJoin]]'s driver tier can answer for these arguments
+    * exactly as its plan would: `k` within [[graft.functions.catalyst.BottomK]]'s
+    * range, and plain column names that resolve the same way in each
+    * input alone as in their cross join — present, not shared by the
+    * two inputs, and not one of the columns the plan adds. Anything
+    * else runs the plan, so its analysis errors are unchanged. */
+  private def driverTierApplies(corpus: DataFrame, corpusId: String, corpusVec: String,
+                                queries: DataFrame, queryId: String, queryVec: String,
+                                k: Int): Boolean = {
+    val same = corpus.sparkSession.sessionState.conf.resolver
+    def plain(name: String, in: DataFrame) = name.matches("[A-Za-z_][A-Za-z0-9_]*") &&
+      in.columns.count(same(_, name)) == 1 && !Seq("sim", "__cnrm", "__qnrm").exists(same(_, name))
+    k >= 1 && k <= (1 << 22) &&
+      plain(corpusId, corpus) && plain(corpusVec, corpus) &&
+      plain(queryId, queries) && plain(queryVec, queries) &&
+      !corpus.columns.exists(c => queries.columns.exists(same(c, _)))
+  }
+
+  /** [[knnJoin]]'s distributed tier. */
+  private def distributedKnnJoin(corpus: DataFrame, corpusId: String, corpusVec: String,
+                                 queries: DataFrame, queryId: String, queryVec: String,
+                                 k: Int): DataFrame = {
     val corpusN = corpus.withColumn("__cnrm", expr(V.norm(corpusVec)))
     val queriesN = queries.withColumn("__qnrm", expr(V.norm(queryVec)))
     val scored = corpusN.crossJoin(broadcast(queriesN))

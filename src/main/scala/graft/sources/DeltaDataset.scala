@@ -234,10 +234,13 @@ object DeltaWriter {
     * unprunable, so omission is always sound. */
   private def statsJson(fs: FileSystem, p: Path,
                         schema: StructType): Option[String] = try {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(p, fs.getConf))
+    // read options over the table's conf: the one-argument `open`
+    // builds a fresh Hadoop `Configuration` per file
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf),
+      HadoopReadOptions.builder(fs.getConf, p).build())
     val blocks = try {
       import scala.jdk.CollectionConverters._
       reader.getFooter.getBlocks.asScala.toSeq

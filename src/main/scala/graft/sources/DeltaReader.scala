@@ -752,9 +752,12 @@ object DeltaReader {
         }
       }
     }
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), part)
-      .withConf(conf).build()
+    // built from an input file over `conf`: `ParquetReader.builder`
+    // builds a fresh Hadoop `Configuration` before `withConf` replaces it
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, conf)) {
+      override protected def getReadSupport = new org.apache.parquet.hadoop.example.GroupReadSupport()
+    }.build()
     try Iterator.continually(reader.read()).takeWhile(_ != null).map(obj).toVector
     finally reader.close()
   }

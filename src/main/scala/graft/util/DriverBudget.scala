@@ -11,8 +11,9 @@ import scala.collection.mutable.ArrayBuffer
   * (`DeltaReader`), connected components' star rounds
   * (`Components.DriverMaxEdges`), near-duplicate removal
   * (`DedupOps.dropNearDuplicates`), span-level dedup
-  * (`DedupOps.dedupSpans`) and the exact prefix-filter Jaccard join
-  * (`DedupOps.prefixJaccardPairs`). Above it the distributed path
+  * (`DedupOps.dedupSpans`), the exact prefix-filter Jaccard join
+  * (`DedupOps.prefixJaccardPairs`) and the exact kNN join
+  * (`SimilarityOps.knnJoin`). Above it the distributed path
   * runs, and specs pass a budget of 0 to force that path as the
   * parity reference. */
 object DriverBudget {
@@ -52,22 +53,47 @@ object DriverBudget {
     * partition stops reading as soon as it is over. A plain RDD pass,
     * so it adds no shuffle stage of its own. A budget of 0 ships
     * nothing and runs no job. */
-  def collectWithin(df: DataFrame, budget: Long): Option[IndexedSeq[InternalRow]] = {
-    if (budget <= 0 || df.queryExecution.optimizedPlan.stats.sizeInBytes > budget) None
+  def collectWithin(df: DataFrame, budget: Long): Option[IndexedSeq[InternalRow]] =
+    collectAllWithin(Seq(df), Nil, budget).map(_.head)
+
+  /** [[collectWithin]] for several frames in ONE job, a union of their
+    * shipments: the rows of each of `estimated ++ unestimated`, in that
+    * order, when all of them fit in `budget` bytes together, else None.
+    * Every partition of every frame ships within its [[share]] of the
+    * budget over all their partitions. Only `estimated` frames take
+    * the zero-job size pre-check (their estimates summed): a frame
+    * whose estimate is Spark's unknown default, such as one built
+    * from a local RDD, would fail it whatever its size, and the shares
+    * alone bound it. */
+  def collectAllWithin(estimated: Seq[DataFrame], unestimated: Seq[DataFrame],
+                       budget: Long): Option[Seq[IndexedSeq[InternalRow]]] = {
+    if (budget <= 0 ||
+        estimated.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum > budget) None
     else {
-      val rows = df.queryExecution.toRdd
-      val schema = df.schema
-      val partShare = share(budget, rows.getNumPartitions)
-      val parts = rows.mapPartitions { it =>
-        val toUnsafe = UnsafeProjection.create(schema)
-        val ship = new Shipment[UnsafeRow](partShare)
-        while (it.hasNext && !ship.full) {
-          val r = toUnsafe(it.next()).copy()
-          ship.offer(r, r.getSizeInBytes)
+      val dfs = estimated ++ unestimated
+      val rdds = dfs.map(_.queryExecution.toRdd)
+      val partShare = share(budget, rdds.map(_.getNumPartitions).sum)
+      val shipments = dfs.zip(rdds).map { case (df, rows) =>
+        val schema = df.schema
+        rows.mapPartitions { it =>
+          val toUnsafe = UnsafeProjection.create(schema)
+          val ship = new Shipment[UnsafeRow](partShare)
+          while (it.hasNext && !ship.full) {
+            val r = toUnsafe(it.next()).copy()
+            ship.offer(r, r.getSizeInBytes)
+          }
+          Iterator(ship.kept)
         }
-        Iterator(ship.kept)
-      }.collect()
-      if (parts.forall(_.isDefined)) Some(parts.toIndexedSeq.flatMap(_.get)) else None
+      }
+      // one job: the union's partitions are each frame's, in order
+      val parts = shipments.head.sparkContext.union(shipments).collect()
+      if (!parts.forall(_.isDefined)) None
+      else {
+        val bounds = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
+        Some(bounds.zip(bounds.tail).map { case (from, until) =>
+          parts.slice(from, until).toIndexedSeq.flatMap(_.get)
+        })
+      }
     }
   }
 }

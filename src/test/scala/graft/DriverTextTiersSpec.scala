@@ -20,13 +20,12 @@ class DriverTextTiersSpec extends SparkSpec {
     * relation, the second the distributed plan, and both give the same
     * schema and rows. */
   private def assertTiersAgree(what: String, df: DataFrame, run: Long => DataFrame): Unit = {
-    def rows(d: DataFrame) = d.collect().map(_.toString).toSeq.sorted
-    val (driverJobs, (driver, driverRows)) = jobsOf {
+    val (driverJobs, driver) = jobsOf {
       val d = run(DriverBudget.MaxBytes)
-      (d, rows(d))
+      d.collect()
+      d
     }
     val dist = run(0L)
-    val distRows = rows(dist)
     val driverPlan = driver.queryExecution.executedPlan.toString
     assert(driverJobs <= 1 && driverPlan.contains("LocalTableScan") &&
       !driverPlan.contains("Exchange") && !driverPlan.contains("Join"),
@@ -35,10 +34,7 @@ class DriverTextTiersSpec extends SparkSpec {
     // (the optimizer folds an empty local input's plan to an empty relation)
     assert(dist.queryExecution.executedPlan.toString.contains("Exchange") || df.isEmpty,
       s"$what: budget 0 must run the distributed tier")
-    assert(driver.schema == dist.schema,
-      s"$what: schema\n  driver      ${driver.schema}\n  distributed ${dist.schema}")
-    assert(driverRows == distRows,
-      s"$what: rows differ:\n  driver      ${driverRows}\n  distributed $distRows")
+    assertSameAnswer(what, driver, dist, sorted = true)
   }
 
   private def spansAgree(df: DataFrame, what: String, spanTokens: Int = 2): Unit =
@@ -128,9 +124,8 @@ class DriverTextTiersSpec extends SparkSpec {
   }
 
   test("prefixJaccardPairs runs the distributed tier when the prefix fan-out outgrows the budget") {
-    // 30 copies: every prefix token lists all 30 ids, 435 pairs each,
-    // over the 256 a 4 KiB budget holds as (long, long) pairs, while
-    // the rows themselves fit
+    // 30 copies: 435 distinct pairs, over the 256 a 4 KiB budget holds
+    // as (long, long) pairs, while the rows themselves fit
     val copies = spark.range(30).selectExpr("id AS doc_id", "'a b c d' AS text")
     val (jobs, pairs) = jobsOf(DedupOps.prefixJaccardPairsImpl(copies, "doc_id", "text", 1, 2,
       4096L).collect().map(_.toString).toSeq.sorted)
@@ -138,15 +133,16 @@ class DriverTextTiersSpec extends SparkSpec {
     assert(jobs > 2, s"expected the distributed tier after the scan, ran $jobs jobs")
     assert(pairs == DedupOps.prefixJaccardPairsImpl(copies, "doc_id", "text", 1, 2, 0L)
       .collect().map(_.toString).toSeq.sorted)
-    // sf0.001's clusters of near-identical documents overflow the
-    // default budget at 7/10: Σ C(n, 2) over the prefix lists is above
-    // the 262,144 pairs it holds
+  }
+
+  // sf0.001's clusters of near-identical documents share whole prefixes:
+  // at 7/10 the prefix lists probe 666,050 pairs, over the 262,144 the
+  // default budget holds, but only 123,811 of them are distinct
+  test("prefixJaccardPairs on sf0.001 at 7/10 counts distinct candidates and stays on the driver") {
     val docs = sfDocs.select("doc_id", "text").localCheckpoint()
-    val (sfJobs, sfPairs) = jobsOf(DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 7, 10)
-      .collect().map(_.toString).toSeq.sorted)
-    assert(sfJobs > 2, s"expected the distributed tier after the scan, ran $sfJobs jobs")
-    assert(sfPairs == DedupOps.prefixJaccardPairsImpl(docs, "doc_id", "text", 7, 10, 0L)
-      .collect().map(_.toString).toSeq.sorted)
+    val (jobs, _) = jobsOf(DedupOps.prefixJaccardPairs(docs, "doc_id", "text", 7, 10).collect())
+    assert(jobs == 1, s"prefixJaccardPairs(7/10) and its collect ran $jobs jobs")
+    pairsAgree(docs, "sf0.001", 7, 10)
   }
 
   // The driver tier's one scan; collecting its local relation runs no

@@ -76,12 +76,6 @@ class LshPipelineSpec extends SparkSpec {
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
-    assert(got.schema == want.schema, s"$what schema: ${got.schema} vs ${want.schema}")
-    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
-    assert(g == w, s"$what rows differ:\n  got  ${g.take(20)}\n  want ${w.take(20)}")
-  }
-
   test("multi-band candidate join equals the per-band union, salted sub-block splits included") {
     val boiler = spark.range(600).selectExpr("id AS doc_id",
       "'the same boilerplate wrapper text repeated verbatim' AS text")
@@ -101,9 +95,10 @@ class LshPipelineSpec extends SparkSpec {
     val docs = edgeCorpus
     val cands = DedupOps.lshCandidatePairs(docs, "doc_id", "text", 2, 4)
     val ref = explodedStats(docs, cands).localCheckpoint()
-    assertSame(DedupOps.pairShingleStats(docs, "doc_id", "text", cands)
-      .select("a_id", "b_id", "n_common", "n_a", "n_b").orderBy("a_id", "b_id"),
-      ref.orderBy("a_id", "b_id"), "pairShingleStats")
+    assertSameAnswer("pairShingleStats",
+      DedupOps.pairShingleStats(docs, "doc_id", "text", cands)
+        .select("a_id", "b_id", "n_common", "n_a", "n_b").orderBy("a_id", "b_id"),
+      ref.orderBy("a_id", "b_id"))
     val ids = pairSet(ref).flatMap { case (a, b) => Seq(a, b) }
     assert(!ids.exists(i => i >= 9001L && i <= 9003L), "a NULL text never pairs")
     assert(pairSet(ref).contains((9010L, 9011L)) && pairSet(ref).contains((9020L, 9021L)) &&
@@ -111,24 +106,27 @@ class LshPipelineSpec extends SparkSpec {
       "empty, whitespace, short and verbatim copies pair")
 
     val union = col("n_a") + col("n_b") - col("n_common")
-    assertSame(DedupOps.lshNearDupPairs(docs, "doc_id", "text", minJaccard = 0.2),
+    assertSameAnswer("lshNearDupPairs",
+      DedupOps.lshNearDupPairs(docs, "doc_id", "text", minJaccard = 0.2),
       ref.withColumn("jaccard", col("n_common").cast("double") / union)
-        .where(col("jaccard") >= 0.2).select("a_id", "b_id", "jaccard").orderBy("a_id", "b_id"),
-      "lshNearDupPairs")
-    assertSame(DedupOps.containmentPairs(docs, "doc_id", "text", minContainment = 0.3),
+        .where(col("jaccard") >= 0.2).select("a_id", "b_id", "jaccard").orderBy("a_id", "b_id"))
+    assertSameAnswer("containmentPairs",
+      DedupOps.containmentPairs(docs, "doc_id", "text", minContainment = 0.3),
       ref.select(col("a_id"), col("b_id"),
         (col("n_common").cast("double") / col("n_a")).as("containment_a"),
         (col("n_common").cast("double") / col("n_b")).as("containment_b"))
         .where(col("containment_a") >= 0.3 || col("containment_b") >= 0.3)
-        .orderBy("a_id", "b_id"), "containmentPairs")
-    assertSame(DedupOps.contrastivePairs(docs, "doc_id", "text"),
+        .orderBy("a_id", "b_id"))
+    assertSameAnswer("contrastivePairs",
+      DedupOps.contrastivePairs(docs, "doc_id", "text"),
       ref.withColumn("label", when(col("n_common") * 2 >= union, lit("pos"))
         .when(col("n_common") * 5 <= union, lit("neg")))
-        .where(col("label").isNotNull).orderBy("a_id", "b_id"), "contrastivePairs")
+        .where(col("label").isNotNull).orderBy("a_id", "b_id"))
     val sigs = DedupOps.signatures(docs, "doc_id", "text", 2, 4)
     def side(id: String, p: String) =
       sigs.select(col("doc_id").as(id) +: (0 until 8).map(i => col(s"m$i").as(s"$p$i")): _*)
-    assertSame(DedupOps.minhashCalibration(docs, "doc_id", "text"),
+    assertSameAnswer("minhashCalibration",
+      DedupOps.minhashCalibration(docs, "doc_id", "text"),
       ref.join(side("a_id", "x"), "a_id").join(side("b_id", "y"), "b_id")
         .withColumn("n_matched",
           (0 until 8).map(i => when(col(s"x$i") === col(s"y$i"), 1).otherwise(0)).reduce(_ + _))
@@ -136,7 +134,7 @@ class LshPipelineSpec extends SparkSpec {
         .agg(count(lit(1)).cast("bigint").as("n_pairs"),
           sum(when(col("n_common") * 2 >= union, 1L).otherwise(0L)).cast("bigint").as("n_true"))
         .withColumn("precision_ppm", expr("CAST((1000000 * n_true) div n_pairs AS BIGINT)"))
-        .orderBy("n_matched"), "minhashCalibration")
+        .orderBy("n_matched"))
     val dropped = ref.where(col("n_common") * 3 >= col("n_a") * 2 && (col("n_a") < col("n_b") ||
         (col("n_a") === col("n_b") && col("a_id") > col("b_id")))).select(col("a_id").as("id"))
       .unionAll(ref.where(col("n_common") * 3 >= col("n_b") * 2 && (col("n_b") < col("n_a") ||
@@ -205,11 +203,7 @@ class LshPipelineSpec extends SparkSpec {
     // (an empty corpus leaves the distributed tier a single job)
     assert(distJobs >= 2 || df.isEmpty,
       s"$what: budget 0 must run the distributed tier ($distJobs jobs)")
-    assert(driver.schema == dist.schema, s"$what: schema")
-    // rendered, so that a NaN score equals itself
-    def rows(d: DataFrame) = d.collect().map(_.toString).toSeq.sorted
-    assert(rows(driver) == rows(dist),
-      s"$what: rows differ:\n  driver      ${rows(driver)}\n  distributed ${rows(dist)}")
+    assertSameAnswer(what, driver, dist, sorted = true)
   }
 
   test("dropNearDuplicates' driver tier equals the distributed tier on the corpora") {

@@ -40,6 +40,27 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Two renderings of one operator (a driver tier and its budget-0
+    * distributed tier) give the same answer: the same schema,
+    * nullability and metadata included, and the same rows in order.
+    * Rows compare as rendered, so a NaN equals itself and `-0.0`
+    * differs from `0.0`. `sorted` sorts both sides' rendered rows
+    * first, for operators whose row order is unspecified. A failure
+    * names the first differing row. */
+  def assertSameAnswer(what: String, actual: DataFrame, expected: DataFrame,
+                       sorted: Boolean = false): Unit = {
+    assert(actual.schema == expected.schema,
+      s"$what: schema\n  actual   ${actual.schema}\n  expected ${expected.schema}")
+    def rows(d: DataFrame) = {
+      val r = d.collect().map(_.toString).toSeq
+      if (sorted) r.sorted else r
+    }
+    val (a, e) = (rows(actual), rows(expected))
+    val at = a.zipAll(e, "(none)", "(none)").indexWhere { case (x, y) => x != y }
+    assert(at < 0, s"$what: row $at of ${a.size} vs ${e.size} differs:\n" +
+      s"  actual   ${a.lift(at).getOrElse("(none)")}\n  expected ${e.lift(at).getOrElse("(none)")}")
+  }
+
   /** Canonical-form equality, mirroring the reference's assert_equal
     * (/root/reference/tests/test_hive_dataset.py:15-40): same column
     * set, same schema, same rows ignoring row and column order. */
